@@ -358,6 +358,10 @@ object Bench {
     // sides (min of before/after), so a spike that ended before the
     // query ran does not flag it; sustained whole-sweep slowness raises
     // the median itself and is calib_drift's job, not this field's.
+    // Blind spot: the probes run only at query boundaries, so a stall
+    // that starts and ends inside one long query touches neither probe
+    // and is never flagged (a q56 run once read 17.2 s, 16x its clean
+    // cost, with an empty list).
     val probeMedian = {
       val s = boundaryProbes.toSeq.sorted
       if (s.isEmpty) -1.0 else s(s.length / 2)

@@ -2,6 +2,7 @@ package graft
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, pmod}
+import scala.util.control.NonFatal
 
 import graft.operators.Dedup
 
@@ -52,7 +53,13 @@ object Kernels {
     try build finally buildNanos.addAndGet(System.nanoTime() - t0)
   }
 
-  private def cached(s: SparkSession, key: Any)(build: => DataFrame): DataFrame =
+  /** Build a store once per (application, `key`) and checkpoint it
+    * once. `key` must encode EVERY input the frame derives from. Also
+    * the entry point for store builders that live next to their
+    * consumers (the q235/q248 BM25 store,
+    * [[graft.queries.Evals.bm25TopRanked]]). */
+  private[graft] def cached(s: SparkSession, key: Any)(
+      build: => DataFrame): DataFrame =
     memo.getOrElseUpdate((s.sparkContext.applicationId, key), timed {
       val built = build
       // eager checkpoint: the frame is small by kernel contract, and
@@ -71,7 +78,7 @@ object Kernels {
   def liveRddIds: Set[Int] =
     memo.values.flatMap { df =>
       try org.apache.spark.sql.GraftSqlBridge.checkpointRdds(df).map(_.id)
-      catch { case _: Throwable => Nil }
+      catch { case NonFatal(_) => Nil }
     }.toSet
 
   /** Drop all memoized kernels, releasing their blocks. The frames are
@@ -84,7 +91,7 @@ object Kernels {
     val frames = memo.values.toList
     memo.clear()
     frames.foreach { df =>
-      try df.unpersist(blocking = false) catch { case _: Throwable => () }
+      try df.unpersist(blocking = false) catch { case NonFatal(_) => () }
       graft.operators.Exec.releaseScratch(df)
     }
   }
@@ -299,25 +306,6 @@ object Kernels {
         docs.filter(pmod(col("doc_id"), lit(20)) =!= 0),
         docs.filter(pmod(col("doc_id"), lit(20)) === 0),
         "doc_id", "text", n)
-    }
-
-  /** Generic memoized SMALL derived frame for an engine kernel whose
-    * builder lives next to its consumers (the [[cappedShingleIndexOf]]
-    * pattern): `key` must encode EVERY input the frame derives from.
-    * `build` returns the frame plus the persisted intermediate handles
-    * to release once the memoized copy is materialized — the reduct is
-    * checkpointed FIRST (while the intermediates still back it), then
-    * the handles are dropped. Used by the q235/q248 BM25 store. */
-  def derivedFrame(s: SparkSession, key: Any)
-      (build: => (DataFrame, Seq[DataFrame])): DataFrame =
-    cached(s, key) {
-      val (out, handles) = build
-      val mat = out.localCheckpoint(true)
-      handles.foreach { h =>
-        try h.unpersist(blocking = false) catch { case _: Throwable => () }
-        graft.operators.Exec.releaseScratch(h)
-      }
-      mat
     }
 
   /** Support-thresholded part co-occurrence graph of lineitem —

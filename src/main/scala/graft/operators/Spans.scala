@@ -93,8 +93,8 @@ object Spans {
     * containing at least one repeated passage.
     *
     * Scale posture (100 TB): window TEXT never leaves the scan
-    * projection — only 60-bit hashes shuffle (k× word-count hash
-    * rows, each 8 bytes + id/pos). Two shuffles: hash-partitioned
+    * projection — only signed 64-bit xxhash64 window hashes shuffle
+    * (k× word-count hash rows, each 8 bytes + id/pos). Two shuffles: hash-partitioned
     * occurrence count (map-side combine collapses boilerplate
     * floods), then per-document position merge. The flagged-hash set
     * broadcasts (repeated windows are rare in a mostly-clean corpus —

@@ -1471,84 +1471,27 @@ object Evals {
        FROM per ORDER BY source"""
 
   // --------------------------------------------------------------- q235
+  /** Shared BM25 self-retrieval store for q235/q248 —
+    * [[graft.operators.Rank.bm25SelfRetrieval]] `(qid, doc_id, score,
+    * rnk)` over the documents of `d`, queries `doc_id % 40 = 0`: the
+    * `rnk ≤ 10` head q248 grades plus each query's ORIGIN row q235
+    * grades, ≤ 11 rows per query, ranks assigned over every document
+    * sharing a query term. Built once per (session, dir) through the
+    * [[graft.Kernels]] memo; both evals read the store. */
+  private[graft] def bm25TopRanked(s: SparkSession, d: String): DataFrame =
+    graft.Kernels.cached(s, ("bm25TopRanked", d)) {
+      graft.operators.Rank.bm25SelfRetrieval(Tables.documents(s, d),
+        "doc_id", "text", isQuery = pmod(col("doc_id"), lit(40)) === 0)
+    }
+
   /** Retrieval-quality harness (MRR / hit@10) — the IR eval next to
     * q218's ANN recall: every 40th document becomes a query (its
     * first 8 distinct words), multi-query BM25 scores the corpus, and
     * the ORIGIN document's rank grades the retriever (self-retrieval:
     * the one relevance label a synthetic corpus provides for free).
-    * Unlike q97's single static term list, term frequencies restrict
-    * to the query-term UNION via a semi-join (terms aren't known at
-    * plan time), and scoring is a (query-term × doc-term) equi-join —
-    * candidate volume is bounded by term document frequency, never
-    * queries × corpus. Scores round to 4 dp BEFORE ranking (the q97
-    * total-order contract); reciprocal ranks quantize to 6 dp.
+    * Scores round to 4 dp BEFORE ranking (the q97 total-order
+    * contract); reciprocal ranks quantize to 6 dp.
     */
-  /** Shared engine kernel for q235/q248: multi-query BM25
-    * self-retrieval, every corpus doc sharing ≥1 query term scored
-    * and ranked per query (score 4-dp-rounded BEFORE the rank — the
-    * q97 total-order contract). Returns the ranked candidate frame
-    * `(qid, doc_id, score, rnk)` plus the persisted handles the
-    * caller must release via [[graft.operators.Exec.owned]].
-    */
-  private[graft] def bm25Ranked(s: SparkSession, d: String)
-      : (DataFrame, Seq[DataFrame]) = {
-    val k1 = 1.2
-    val b = 0.75
-    val toks = Tables.documents(s, d)
-      .select(col("doc_id"), words(col("text")).as("w"))
-      .persist(sl)
-    val dl = toks.select(col("doc_id"),
-      size(col("w")).cast("double").as("dl"))
-    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
-      avg(col("dl")).as("avgdl"))
-    val qterms = toks.filter(pmod(col("doc_id"), lit(40)) === 0)
-      .select(col("doc_id").as("qid"),
-        explode(array_distinct(slice(col("w"), 1, 8))).as("tok"))
-      .persist(sl)
-    val terms = qterms.select("tok").distinct()
-    val tf = toks.select(col("doc_id"), explode(col("w")).as("tok"))
-      .join(terms, Seq("tok"), "left_semi")
-      .groupBy("doc_id", "tok")
-      .agg(count(lit(1)).cast("double").as("tf"))
-      .persist(sl)
-    val idf = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
-      .crossJoin(broadcast(stats.select("n_docs")))
-      .select(col("tok"),
-        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
-          (col("df") + 0.5)).as("idf"))
-    val scored = qterms
-      .join(tf, "tok")
-      .join(broadcast(idf), "tok")
-      .join(dl, "doc_id")
-      .crossJoin(broadcast(stats.select("avgdl")))
-      .withColumn("contrib",
-        col("idf") * (col("tf") * (k1 + 1.0)) /
-          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") /
-            col("avgdl"))))
-      .groupBy("qid", "doc_id")
-      .agg(round(sum(col("contrib")), 4).as("score"))
-    val wr = Window.partitionBy("qid")
-      .orderBy(col("score").desc, col("doc_id").asc)
-    (scored.withColumn("rnk", row_number().over(wr)),
-      Seq(toks, qterms, tf))
-  }
-
-  /** The SMALL shared reduct of [[bm25Ranked]] both its consumers
-    * actually read (r16): q235 needs each query's ORIGIN row (its
-    * rank, wherever it landed), q248 the rnk ≤ 10 head — ≤ 11 rows
-    * per query either way, while the full candidate ranking is
-    * (query, every doc sharing a term) sized. Ranks are assigned over
-    * the FULL candidate set inside the build, so filtering rows
-    * afterwards changes nothing either consumer sees (row_number is
-    * per-row once assigned). Session-memoized: a pure function of
-    * (dir), built once, both evals read the store. */
-  private[graft] def bm25TopRanked(s: SparkSession, d: String): DataFrame =
-    graft.Kernels.derivedFrame(s, ("bm25TopRanked", d)) {
-      val (ranked, handles) = bm25Ranked(s, d)
-      (ranked.filter(col("rnk") <= 10 || col("doc_id") === col("qid")),
-        handles)
-    }
-
   private def q235(s: SparkSession, d: String): DataFrame =
     bm25TopRanked(s, d)
       .filter(col("doc_id") === col("qid"))
@@ -2344,7 +2287,7 @@ object Evals {
     * perfect hit (rel 2), but any document from the origin's SOURCE
     * is partially relevant (rel 1), so a retriever that surfaces
     * near-misses scores above one that surfaces noise. Same shared
-    * BM25 kernel ([[bm25Ranked]] — engine and ranking contract cannot
+    * BM25 store ([[bm25TopRanked]] — engine and ranking contract cannot
     * drift from q235); relevance joins touch only the 10-row-per-query
     * head. Discounted gains (2^rel−1)/log₂(rank+1) quantize to
     * 1e-9-unit LONGs before summation (libm log₂ differs across

@@ -1,5 +1,7 @@
 package graft
 
+import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 /** The shared-kernel memo ([[graft.Kernels]]) and the central oracle
@@ -107,23 +109,92 @@ class KernelsSpec extends SparkSpec {
   test("bm25 top-ranked store == inline kernel reducts (q235/q248 law)") {
     Kernels.clear()
     val sf = "/root/testdata/sf0.001"
-    val store = queries.Evals.bm25TopRanked(spark, sf)
-    assert(store eq queries.Evals.bm25TopRanked(spark, sf))
-    // ranks are assigned over the FULL candidate set inside the build,
-    // so the store's reducts must match the inline kernel's row-for-row
-    val (ranked, handles) = queries.Evals.bm25Ranked(spark, sf)
-    assert(store.filter(col("rnk") <= 10).orderBy("qid", "rnk")
-      .collect().toSeq
-      === ranked.filter(col("rnk") <= 10).orderBy("qid", "rnk")
-        .collect().toSeq)
-    assert(store.filter(col("doc_id") === col("qid")).orderBy("qid")
-      .collect().toSeq
-      === ranked.filter(col("doc_id") === col("qid")).orderBy("qid")
-        .collect().toSeq)
-    handles.foreach { h =>
-      h.unpersist(blocking = false)
-      operators.Exec.releaseScratch(h)
-    }
+    assertStoreMatchesReference(sf)
+  }
+
+  test("bm25 top-ranked store == reference on ties, a deep origin, a miss") {
+    val dir = java.nio.file.Files.createTempDirectory("bm25").toString
+    import spark.implicits._
+    val tied = (1L to 12L).map(i => (i, "alpha beta gamma"))
+    val docs = tied ++ Seq(
+      // query 40 = {alpha, beta}; long, so every short match outranks it
+      (40L, ("alpha beta " * 4 + "omega " * 60).trim),
+      (80L, "delta gamma beta"), // query 80 = {delta, gamma, beta}
+      (13L, "alpha delta delta"),
+      (14L, "zeta eta theta"), // shares no query term
+      (15L, "  gamma   delta  "), // Spark trims spaces only...
+      (16L, "\talpha beta gamma"), // ...so this one has an empty first token
+      (17L, null))
+    docs.toDF("doc_id", "text").write.parquet(s"$dir/documents.parquet")
+    // the fixture exercises what it is for, read off the reference
+    val ref = bm25RankedReference(dir)
+    val originRank = ref.filter(col("qid") === 40L && col("doc_id") === 40L)
+      .select("rnk").head().getInt(0)
+    assert(originRank > 10)
+    val head40 = ref.filter(col("qid") === 40L && col("rnk") <= 10)
+      .orderBy("rnk").collect()
+    assert(head40.map(_.getDouble(2)).distinct.length == 1,
+      "query 40's head is one tie group, ordered by doc_id alone")
+    assert(head40.map(_.getLong(1)).toSeq === (1L to 10L))
+    assert(ref.filter(col("doc_id") === 14L).isEmpty)
+    Kernels.clear()
+    assertStoreMatchesReference(dir)
+    operators.Exec.deleteRecursively(dir)
+  }
+
+  /** Reference for the BM25 self-retrieval store: the Catalyst
+    * formulation the store was first built with — a (query-term ×
+    * document-term) frequency join, `sum` per (query, document) and a
+    * `row_number` over every candidate. Returns the FULL ranking. */
+  private def bm25RankedReference(dir: String): DataFrame = {
+    import graft.functions.Rounding.roundTo
+    import graft.functions.TextFunctions.words
+    val k1 = 1.2
+    val b = 0.75
+    val toks = Tables.documents(spark, dir)
+      .select(col("doc_id"), words(col("text")).as("w"))
+    val dl = toks.select(col("doc_id"),
+      size(col("w")).cast("double").as("dl"))
+    val stats = dl.agg(count(lit(1)).cast("double").as("n_docs"),
+      avg(col("dl")).as("avgdl"))
+    val qterms = toks.filter(pmod(col("doc_id"), lit(40)) === 0)
+      .select(col("doc_id").as("qid"),
+        explode(array_distinct(slice(col("w"), 1, 8))).as("tok"))
+    val terms = qterms.select("tok").distinct()
+    val tf = toks.select(col("doc_id"), explode(col("w")).as("tok"))
+      .join(terms, Seq("tok"), "left_semi")
+      .groupBy("doc_id", "tok")
+      .agg(count(lit(1)).cast("double").as("tf"))
+    val idf = tf.groupBy("tok").agg(count(lit(1)).cast("double").as("df"))
+      .crossJoin(broadcast(stats.select("n_docs")))
+      .select(col("tok"),
+        log(lit(1.0) + (col("n_docs") - col("df") + 0.5) /
+          (col("df") + 0.5)).as("idf"))
+    val scored = qterms
+      .join(tf, "tok")
+      .join(broadcast(idf), "tok")
+      .join(dl, "doc_id")
+      .crossJoin(broadcast(stats.select("avgdl")))
+      .withColumn("contrib",
+        col("idf") * (col("tf") * (k1 + 1.0)) /
+          (col("tf") + lit(k1) * (lit(1.0 - b) + lit(b) * col("dl") /
+            col("avgdl"))))
+      .groupBy("qid", "doc_id")
+      .agg(roundTo(sum(col("contrib")), 4).as("score"))
+    val wr = Window.partitionBy("qid")
+      .orderBy(col("score").desc, col("doc_id").asc)
+    scored.withColumn("rnk", row_number().over(wr))
+  }
+
+  /** The store law: row-for-row the reference's `rnk ≤ 10` head plus
+    * every origin row, nothing else. */
+  private def assertStoreMatchesReference(dir: String): Unit = {
+    val store = queries.Evals.bm25TopRanked(spark, dir)
+    assert(store eq queries.Evals.bm25TopRanked(spark, dir))
+    val expected = bm25RankedReference(dir)
+      .filter(col("rnk") <= 10 || col("doc_id") === col("qid"))
+    assert(store.orderBy("qid", "rnk").collect().toSeq
+      === expected.orderBy("qid", "rnk").collect().toSeq)
     Kernels.clear()
   }
 

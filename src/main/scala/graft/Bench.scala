@@ -1,5 +1,8 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import scala.util.control.NonFatal
+
+import graft.Harness.esc
+import graft.operators.Exec
 
 /** Benchmark main: one JSON line with per-query seconds at
   * `SPARK_GRAFT_SF_DIR`.
@@ -20,32 +23,8 @@ import org.apache.spark.sql.SparkSession
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      // PINNED NEGATIVE RESULT (r16, guide §1.2 "config last"):
-      // flipping coalescePartitions.parallelismFirst to false (post-
-      // shuffle width from BYTES only — 64 MiB advisory — instead of
-      // core count) looked like a §2.2 win for the ~350 small queries
-      // whose exchanges carry KBs, and a cross-epoch sweep pair read
-      // -19 s normalized. A same-epoch interleaved ABAB TimeOne over
-      // the 12 biggest movers refuted it: false is +18% on their sum
-      // (q248 +62%, q235 +85%, q92 +21%, q178 +25% — queries with
-      // real compute AFTER a small exchange, which byte-only width
-      // collapses to 1-2 partitions and serializes), and the apparent
-      // sweep win was epoch drift (0.823 vs 1.144). Spark's default
-      // (respect parallelism when coalescing) stays; env hook kept so
-      // the A/B is one environment variable, not a recompile.
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus)
     // Session-level warmup (shuffle machinery, codegen compiler) so the
     // first query's priming run isn't charged for JVM bring-up.
     def calibOnce(): Double = {
@@ -63,7 +42,8 @@ object Bench {
       } finally spark.sparkContext
         .setLocalProperty("spark.job.description", prev)
     }
-    try calibOnce() catch { case _: Throwable => () }
+    try calibOnce()
+    catch { case NonFatal(e) => Exec.suppressed("Bench calib warm-up", e) }
     // Box-drift calibration (round 14, consumed since round 15): the
     // SAME fixed warm workload timed at sweep start and end. The in-run
     // spread canary catches within-run noise, but a shared box that
@@ -77,7 +57,8 @@ object Bench {
     // swamped the drift signal; the min-of-5 warm floor is the stable
     // epoch statistic.
     def calib(): Double =
-      try Seq.fill(5)(calibOnce()).min catch { case _: Throwable => -1.0 }
+      try Seq.fill(5)(calibOnce()).min
+      catch { case NonFatal(e) => Exec.suppressed("Bench calib", e); -1.0 }
     val calibStart = calib()
 
     // Dev-loop filter: comma-separated name prefixes (e.g. "q127,q137")
@@ -176,7 +157,8 @@ object Bench {
         sinceCalib += 1
         if (sinceCalib >= calibEvery) {
           sinceCalib = 0
-          val c = try calibOnce() catch { case _: Throwable => -1.0 }
+          val c = try calibOnce() catch { case NonFatal(e) =>
+            Exec.suppressed("Bench boundary calib", e); -1.0 }
           calibTimeline += (((System.nanoTime() - sweepT0) / 1e9, c))
         }
         // query construction is INSIDE the timed region: eager
@@ -188,39 +170,14 @@ object Bench {
         }
         val gcPre = gcMillis()
         // operator-owned result caches accumulate across repeat runs of
-        // the same query (each run builds a fresh plan) — drop them
+        // the same query (each run builds a fresh plan) — drain them
         // between runs so run k doesn't pay run k-1's memory pressure.
-        // The drain also unpersists every leftover checkpoint RDD
-        // (Dataset.unpersist never reaches those blocks — they
-        // otherwise wait for a driver GC + ContextCleaner, the r13
-        // in-sweep backlog that inflated q137/q200 ~2x); the Kernels
-        // memo is the one deliberate cross-query cache and is kept.
-        // Invariant the drain relies on: every query's result is fully
-        // consumed (noop-written) before any drain runs — a query
-        // returning a persisted/checkpointed handle consumed only
-        // AFTER its boundary would hit "checkpoint block not found".
-        // one() materializes-and-sinks inside the timed region, so the
-        // invariant holds for every registry entry by construction.
-        def clear(): Unit = {
-          try spark.catalog.clearCache() catch { case _: Throwable => () }
-          try {
-            val keep = graft.Kernels.liveRddIds
-            // what the drain is about to free: released blocks become
-            // driver-heap garbage, which is what the gated boundary GC
-            // below decides on
-            drainedSinceGc += spark.sparkContext.getRDDStorageInfo
-              .filter(i => !keep.contains(i.id))
-              .map(i => i.memSize + i.diskSize).sum
-            spark.sparkContext.getPersistentRDDs.foreach {
-              case (id, rdd) if !keep.contains(id) =>
-                try rdd.unpersist(blocking = false)
-                catch { case _: Throwable => () }
-              case _ => ()
-            }
-          } catch { case _: Throwable => () }
-        }
+        // The drain's "result consumed first" invariant holds because
+        // one() materializes-and-sinks inside the timed region. Its
+        // released bytes feed the gated boundary GC below.
+        def clear(): Unit = drainedSinceGc += Exec.drain(spark)
         // query-boundary driver GC, OUTSIDE every timed region: the
-        // drain above frees block-manager storage deterministically,
+        // drain frees block-manager storage deterministically,
         // but driver-heap garbage (plan trees, codegen classes) still
         // only falls to GC; keeping it at the boundary means heavy
         // queries never pay predecessors' collection inside a timed
@@ -256,6 +213,7 @@ object Bench {
             else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0
           Right((median, times.head))
         } catch {
+          // Throwable, not NonFatal: recorded in "errors" and the exit code
           case e: Throwable =>
             Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
         } finally clear()
@@ -275,15 +233,6 @@ object Bench {
         (if (pct > 90) "  <-- NEAR FULL: JIT may have disabled" else ""))
     }
 
-    def esc(s: String): String = s.flatMap {
-      case '"' => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    }
     val ok = results.collect { case (k, Right((med, _))) => k -> med }
     val mins = results.collect { case (k, Right((_, mn))) => k -> mn }
     val errs = results.collect { case (k, Left(e)) => k -> e }
@@ -426,8 +375,7 @@ object Bench {
            |"errors":$fullErrs}""".stripMargin
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
-    } catch { case e: Throwable =>
-      System.err.println(s"bench file mirror failed: ${e.getMessage}") }
+    } catch { case NonFatal(e) => Exec.suppressed("Bench file mirror", e) }
     spark.stop()
     if (errs.nonEmpty) sys.exit(1)
   }

@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print formatted physical plans for selected queries so
   * pushdown / broadcast / codegen can be eyeballed per round.
   * Usage: runMain graft.Explain [-materialize] [queryName ...]
@@ -23,17 +21,7 @@ object Explain {
     require(unknown.isEmpty,
       s"Explain: unknown flag(s) ${unknown.mkString(", ")} (only -materialize is recognized)")
     graft.operators.Exec.planOnlyHook = !flags.contains("-materialize")
-    val spark = SparkSession.builder()
-      .master("local[8]")
-      .config("spark.sql.shuffle.partitions", "8")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
+    val spark = Harness.session(Harness.envCpus)
     val names = if (qargs.nonEmpty) qargs.toSeq
       else Seq("q01_pricing_summary", "q03_top_revenue_orders",
         "q05_star_join_revenue", "q06_forecast_revenue", "q28_asof_join")

@@ -1,30 +1,22 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
+import graft.operators.Exec
 
 /** Dev tool: time individual queries. Usage:
   * SPARK_GRAFT_SF_DIR=... runMain graft.TimeOne <name> [name ...]
+  *
+  * Every run starts from the same query-boundary drain Bench runs
+  * between its timed runs, so interleaved ABAB numbers measure what
+  * Bench measures.
   */
 object TimeOne {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    val clear = sys.env.get("SPARK_GRAFT_CLEAR_CACHE").contains("1")
+    val spark = Harness.session(Harness.envCpus)
     val nRuns = sys.env.getOrElse("SPARK_GRAFT_RUNS", "2").toInt
     args.foreach { name =>
       (1 to nRuns).foreach { run =>
-        if (clear) spark.catalog.clearCache()
+        Exec.drain(spark)
         spark.sparkContext.setJobDescription(s"timeone: $name run$run")
         val t0 = System.nanoTime()
         // noop write evaluates every column; count() would let Catalyst

@@ -1,6 +1,9 @@
 package graft
-import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import java.nio.file.{Files, Paths}
+import scala.util.control.NonFatal
+import graft.Harness.esc
+import graft.operators.Exec
 /** Driver-run correctness dump: each SparkEntry.queries result → parquet,
   * plus oracle_sql.json, for the driver's DuckDB compare. */
 object Verify {
@@ -12,75 +15,38 @@ object Verify {
       if (args.length > 2) Some(args(2).split(',').toSeq) else None
     def selected(name: String): Boolean =
       only.forall(_.exists(name.startsWith))
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "4")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.adaptive.coalescePartitions.parallelismFirst",
-        sys.env.getOrElse("SPARK_GRAFT_PARALLELISM_FIRST", "true"))
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
+    val spark = Harness.session(Harness.envCpus)
     new java.io.File(outDir).mkdirs()
     SparkEntry.queries.filter(kv => selected(kv._1)).foreach {
       case (name, fn) =>
-      spark.sparkContext.setJobDescription(s"verify: $name")
-      try fn(spark, sfDir).coalesce(1).write.mode("overwrite")
-        .parquet(s"$outDir/$name")
-      catch { case e: Throwable =>
-        System.err.println(s"[verify] $name failed: ${e.getMessage}")
-        // error sentinel: leave an EMPTY result dir (no parquet) plus
-        // the exception text, so the driver's compare records an `err`
-        // row for this query instead of silently dropping it — a
-        // thrown query must never read as "absent" in CORRECTNESS
-        try {
-          val dir = Paths.get(s"$outDir/$name")
-          if (Files.exists(dir)) {
-            val walk = Files.walk(dir)
-            try walk.sorted(java.util.Comparator.reverseOrder())
-              .forEach(p => Files.deleteIfExists(p))
-            finally walk.close()
-          }
-          Files.createDirectories(dir)
-          Files.writeString(dir.resolve("_ERROR.txt"),
-            s"${e.getClass.getName}: ${e.getMessage}\n")
-        } catch { case _: Throwable => () }
-      }
-      // operators persist reusable subplans; drop them between queries
-      // so a 50-query run doesn't accumulate storage-memory pressure.
-      // The RDD drain also frees leftover localCheckpoint blocks, which
-      // Dataset.unpersist/clearCache never reach (they'd otherwise wait
-      // for a driver GC + ContextCleaner); the Kernels memo is the one
-      // deliberate cross-query cache and is kept.
-      try spark.catalog.clearCache() catch { case _: Throwable => () }
-      try {
-        val keep = Kernels.liveRddIds
-        spark.sparkContext.getPersistentRDDs.foreach {
-          case (id, rdd) if !keep.contains(id) =>
-            try rdd.unpersist(blocking = false)
-            catch { case _: Throwable => () }
-          case _ => ()
-        }
-      } catch { case _: Throwable => () }
+        dump(spark, name, fn(spark, sfDir), outDir)
+        Exec.drain(spark)
     }
-    // JSON string escape: backslash, quote, and ALL control chars (<0x20)
-    // — a tab or CR in builder-authored SQL would otherwise make the
-    // driver's json.load fail and silently zero the round's correctness.
-    def q(s: String): String = "\"" + s.flatMap {
-      case '"'  => "\\\""
-      case '\\' => "\\\\"
-      case '\n' => "\\n"
-      case '\r' => "\\r"
-      case '\t' => "\\t"
-      case c if c < ' ' => f"\\u${c.toInt}%04x"
-      case c => c.toString
-    } + "\""
     val json = SparkEntry.oracleSql.filter(kv => selected(kv._1))
-      .map { case (k, v) => s"${q(k)}: ${q(v)}" }.mkString("{", ",", "}")
+      .map { case (k, v) => s""""${esc(k)}": "${esc(v)}"""" }
+      .mkString("{", ",", "}")
     Files.writeString(Paths.get(s"$outDir/oracle_sql.json"), json)
     spark.stop()
+  }
+
+  /** Write one query's result to `<outDir>/<name>` as a single parquet
+    * file. A query that throws instead leaves an EMPTY result dir (no
+    * parquet) holding `_ERROR.txt` with the exception text, so the
+    * oracle compare records an `err` row for it — a thrown query must
+    * never read as "absent". */
+  def dump(spark: SparkSession, name: String, build: => DataFrame,
+           outDir: String): Unit = {
+    spark.sparkContext.setJobDescription(s"verify: $name")
+    try build.coalesce(1).write.mode("overwrite").parquet(s"$outDir/$name")
+    // Throwable, not NonFatal: any failure is recorded as the query's result
+    catch { case e: Throwable =>
+      System.err.println(s"[verify] $name failed: ${e.getMessage}")
+      try {
+        Exec.deleteRecursively(s"$outDir/$name")
+        val dir = Files.createDirectories(Paths.get(s"$outDir/$name"))
+        Files.writeString(dir.resolve("_ERROR.txt"),
+          s"${e.getClass.getName}: ${e.getMessage}\n")
+      } catch { case NonFatal(e2) => Exec.suppressed(s"Verify $name sentinel", e2) }
+    }
   }
 }

@@ -3,7 +3,7 @@ package graft.functions.expressions
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, ExpressionInfo}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType, FloatType}
@@ -192,8 +192,9 @@ object GraftFunctions {
     nfcName -> nfcBuilder,
     boundedTopKName -> boundedTopKBuilder)
 
-  /** Idempotent per-session registration (used by the Column API so
-    * the library works without spark.sql.extensions configuration).
+  /** Idempotent per-session registration, called where a plan uses
+    * the functions — the engine's one registration path, so it works
+    * in any session, including ones it did not build.
     */
   def ensureRegistered(spark: SparkSession): Unit = {
     val reg = spark.sessionState.functionRegistry
@@ -202,54 +203,5 @@ object GraftFunctions {
         reg.createOrReplaceTempFunction(name, builder, "built-in")
       }
     }
-  }
-}
-
-/** `spark.sql.extensions=graft.functions.expressions.GraftExtensions`
-  * injects the engine's native functions at session build time — the
-  * SparkSessionExtensions path for deployments that configure the
-  * library declaratively.
-  */
-class GraftExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
-  override def apply(e: org.apache.spark.sql.SparkSessionExtensions): Unit = {
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.dotName),
-      new ExpressionInfo(classOf[DotProduct].getName, GraftFunctions.dotName),
-      GraftFunctions.dotBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.rollingHashName),
-      new ExpressionInfo(classOf[RollingHash].getName,
-        GraftFunctions.rollingHashName),
-      GraftFunctions.rollingHashBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.wordShinglesName),
-      new ExpressionInfo(classOf[WordShingleArray].getName,
-        GraftFunctions.wordShinglesName),
-      GraftFunctions.wordShinglesBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.simhashName),
-      new ExpressionInfo(classOf[SimHash60].getName,
-        GraftFunctions.simhashName),
-      GraftFunctions.simhashBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.quantStatsName),
-      new ExpressionInfo(classOf[QuantStats].getName,
-        GraftFunctions.quantStatsName),
-      GraftFunctions.quantStatsBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.jaroWinklerName),
-      new ExpressionInfo(classOf[JaroWinkler].getName,
-        GraftFunctions.jaroWinklerName),
-      GraftFunctions.jaroWinklerBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.nfcName),
-      new ExpressionInfo(classOf[NfcNormalize].getName,
-        GraftFunctions.nfcName),
-      GraftFunctions.nfcBuilder))
-    e.injectFunction((
-      FunctionIdentifier(GraftFunctions.boundedTopKName),
-      new ExpressionInfo(classOf[BoundedTopK].getName,
-        GraftFunctions.boundedTopKName),
-      GraftFunctions.boundedTopKBuilder))
   }
 }

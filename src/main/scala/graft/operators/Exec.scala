@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.DataFrame
+import scala.util.control.NonFatal
+
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.col
 
 /** Shared execution-hygiene helpers for the operator layer.
@@ -112,7 +114,8 @@ private[graft] object Exec {
   def detachFromScratch(result: DataFrame, scratchDirs: Seq[String]): DataFrame = {
     val out = result.localCheckpoint(true)
     scratchDirs.foreach { p =>
-      try deleteRecursively(p) catch { case _: Throwable => () }
+      try deleteRecursively(p)
+      catch { case NonFatal(e) => suppressed("Exec.detachFromScratch", e) }
     }
     out
   }
@@ -130,8 +133,8 @@ private[graft] object Exec {
     *
     * Ownership: the returned frame's storage is checkpoint blocks,
     * which `Dataset.unpersist` does NOT free — callers release it
-    * with [[releaseScratch]] (Bench/Verify also drain leftover
-    * checkpoint RDDs at query boundaries).
+    * with [[releaseScratch]] (the harness mains also [[drain]]
+    * leftover checkpoint RDDs at query boundaries).
     */
   /** TEST-ONLY escape hatch: while set, [[owned]] returns results
     * UNMATERIALIZED (nothing released), so plan-assert specs can
@@ -186,14 +189,14 @@ private[graft] object Exec {
     * pass persisted intermediates through this from [[owned]].
     */
   def releaseScratch(frames: org.apache.spark.sql.Dataset[_]*): Unit = {
-    val keep = try graft.Kernels.liveRddIds catch { case _: Throwable => Set.empty[Int] }
+    val keep = graft.Kernels.liveRddIds
     frames.foreach { df =>
       try org.apache.spark.sql.GraftSqlBridge.rootCheckpointRdd(df)
         .foreach(r => if (!keep.contains(r.id)) {
           try r.unpersist(blocking = false)
-          catch { case _: Throwable => () }
+          catch { case NonFatal(e) => suppressed("Exec.releaseScratch unpersist", e) }
         })
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => suppressed("Exec.releaseScratch plan", e) }
     }
   }
 
@@ -204,14 +207,45 @@ private[graft] object Exec {
     * still-live checkpoint input must not go through here. The
     * [[graft.Kernels]] memo's RDDs are still skipped. */
   def releaseScratchDeep(frames: org.apache.spark.sql.Dataset[_]*): Unit = {
-    val keep = try graft.Kernels.liveRddIds catch { case _: Throwable => Set.empty[Int] }
+    val keep = graft.Kernels.liveRddIds
     frames.foreach { df =>
       try org.apache.spark.sql.GraftSqlBridge.checkpointRdds(df)
         .foreach(r => if (!keep.contains(r.id)) {
           try r.unpersist(blocking = false)
-          catch { case _: Throwable => () }
+          catch { case NonFatal(e) => suppressed("Exec.releaseScratchDeep unpersist", e) }
         })
-      catch { case _: Throwable => () }
+      catch { case NonFatal(e) => suppressed("Exec.releaseScratchDeep plan", e) }
     }
   }
+
+  /** The query-boundary drain: drop every CacheManager entry and
+    * unpersist every persisted RDD except the [[graft.Kernels]] memo's
+    * (the one deliberate cross-query cache). The RDD pass is what frees
+    * leftover `localCheckpoint` blocks, which `clearCache` never
+    * reaches; left alone they wait for a driver GC and the
+    * ContextCleaner, and later queries pay for the backlog. Returns the
+    * block-manager bytes released, which are now driver-heap garbage.
+    *
+    * Only call when the previous query's result is fully consumed: a
+    * result still backed by a checkpoint would fail with "checkpoint
+    * block not found" when read after the drain. */
+  def drain(spark: SparkSession): Long = {
+    try spark.catalog.clearCache()
+    catch { case NonFatal(e) => suppressed("Exec.drain clearCache", e) }
+    val keep = graft.Kernels.liveRddIds
+    val sc = spark.sparkContext
+    val released = sc.getRDDStorageInfo
+      .filter(i => !keep.contains(i.id)).map(i => i.memSize + i.diskSize).sum
+    sc.getPersistentRDDs.foreach { case (id, rdd) =>
+      if (!keep.contains(id))
+        try rdd.unpersist(blocking = false)
+        catch { case NonFatal(e) => suppressed("Exec.drain unpersist", e) }
+    }
+    released
+  }
+
+  /** One stderr line for an error a best-effort cleanup step swallows,
+    * naming the step, so a suppressed failure is never silent. */
+  def suppressed(site: String, e: Throwable): Unit =
+    System.err.println(s"[graft] suppressed in $site: $e")
 }

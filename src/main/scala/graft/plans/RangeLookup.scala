@@ -194,11 +194,9 @@ object RangeLookup {
   }
 
   /** Idempotent per-session registration via the public
-    * `ExperimentalMethods` hook (the `SparkSessionExtensions
-    * .injectPlannerStrategy`/`.injectOptimizerRule` path works
-    * identically for deployments that configure extensions
-    * declaratively — see
-    * [[graft.functions.expressions.GraftExtensions]]).
+    * `ExperimentalMethods` hook, called where a plan uses the node (the
+    * same call-time path as `GraftFunctions.ensureRegistered`), so it
+    * works in any session, including ones the engine did not build.
     */
   def ensureStrategy(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(RangeLookupStrategy))

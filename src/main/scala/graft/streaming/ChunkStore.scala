@@ -2,7 +2,11 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths}
 
+import scala.util.control.NonFatal
+
 import org.apache.spark.sql.SparkSession
+
+import graft.operators.Exec
 
 /** Session-lifetime store of REPLAY CHUNK DIRECTORIES — the disk-file
   * counterpart of [[graft.Kernels]]: the time-ordered, mtime-sequenced
@@ -40,7 +44,7 @@ object ChunkStore {
   def ensure(s: SparkSession, key: Any)(build: String => Unit): String =
     memo.getOrElseUpdate((s.sparkContext.applicationId, key), {
       val t0 = System.nanoTime()
-      val dir = graft.operators.Exec.scratchTempDir("graft_chunk_store").toString
+      val dir = Exec.scratchTempDir("graft_chunk_store").toString
       build(dir)
       buildNanos.addAndGet(System.nanoTime() - t0)
       dir
@@ -63,12 +67,13 @@ object ChunkStore {
     val dirs = memo.values.toList
     memo.clear()
     dirs.foreach { d =>
-      try graft.operators.Exec.deleteRecursively(d)
-      catch { case _: Throwable => () }
+      try Exec.deleteRecursively(d)
+      catch { case NonFatal(e) => Exec.suppressed("ChunkStore.clear", e) }
     }
   }
 
   // best-effort disk hygiene on normal JVM exit; /tmp is the backstop
   Runtime.getRuntime.addShutdownHook(new Thread(() =>
-    try clear() catch { case _: Throwable => () }))
+    try clear()
+    catch { case NonFatal(e) => Exec.suppressed("ChunkStore shutdown hook", e) }))
 }

@@ -290,20 +290,6 @@ object ScaleRehearsal {
     done.createNewFile()
   }
 
-  private def session(): SparkSession = {
-    val spark = SparkSession.builder()
-      .master("local[32]")
-      .config("spark.sql.shuffle.partitions", "32")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.ui.enabled", "false")
-      .config("spark.driver.memory", "16g")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    spark
-  }
-
   private def time(spark: SparkSession, name: String, dir: String): Double = {
     spark.catalog.clearCache()
     // per-query COLD measurement: drop memoized shared kernels AND the
@@ -542,7 +528,8 @@ object ScaleRehearsal {
     *  - `--cards`: print the cardinality probes behind the notes.
     *  - plain prefixes: dev loop — time that subset, skip the JSON. */
   def main(args: Array[String]): Unit = {
-    val spark = session()
+    // JVM heap: SPARK_DRIVER_MEM (build.sbt), fixed at JVM launch
+    val spark = graft.Harness.session(32)
     if (args.headOption.contains("--cards")) {
       synthesize(spark, 10, DstDir)
       cards(spark)

@@ -169,7 +169,7 @@ object Bench {
           (System.nanoTime() - t0) / 1e9
         }
         val gcPre = gcMillis()
-        // operator-owned result caches accumulate across repeat runs of
+        // scope-kept result checkpoints accumulate across repeat runs of
         // the same query (each run builds a fresh plan) — drain them
         // between runs so run k doesn't pay run k-1's memory pressure.
         // The drain's "result consumed first" invariant holds because

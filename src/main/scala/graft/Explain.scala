@@ -5,7 +5,7 @@ package graft
   * Usage: runMain graft.Explain [-materialize] [queryName ...]
   *
   * Runs in PLAN-ONLY mode by default (the same `Exec.planOnlyHook`
-  * the plan-assert specs use): without it every `Exec.owned` result
+  * the plan-assert specs use): without it every `Scope.keep` result
   * eagerly checkpoints and the printed plan collapses to a single
   * `Scan ExistingRDD`, hiding the joins/aggregates/pushdowns the tool
   * exists to show. `-materialize` restores production materialization

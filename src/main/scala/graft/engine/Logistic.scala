@@ -4,6 +4,7 @@ import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
 
 import graft.functions.Rounding
+import graft.operators.Exec
 
 /** Distributed binary logistic regression by full-batch gradient
   * descent — the classifier-training half of a curation pipeline
@@ -15,7 +16,7 @@ import graft.functions.Rounding
   * aggregation producing the k+1 gradient components (a k+1-long row —
   * the only thing that ever reaches the driver), then a driver-side
   * weight update, then the next round re-scans the cached projection.
-  * The input is persisted once up front: at 100 TB the projected
+  * The input is cached once up front: at 100 TB the projected
   * feature matrix (k doubles + 1 label per row) is what iterates, never
   * the raw table.
   *
@@ -53,41 +54,39 @@ object Logistic {
     *         first — all-zero when `rounds == 0`
     */
   def fitGd(df: DataFrame, features: Seq[String], labelCol: String,
-            lr: Double = 0.5, rounds: Int = 3): Array[Double] = {
+            lr: Double = 0.5, rounds: Int = 3): Array[Double] = Exec.scope { sc =>
     require(features.nonEmpty, "at least one feature")
     require(lr > 0 && java.lang.Double.doubleToLongBits(lr).&((1L << 52) - 1) == 0,
       s"lr must be a power of two for an exact update step, got $lr")
     val k = features.size
     val xs = features.indices.map(j => col(s"__x$j"))
-    val pts = df.select(
+    val pts = sc.cache(df.select(
       features.zipWithIndex.map { case (f, j) =>
         col(f).cast("double").as(s"__x$j")
-      } :+ col(labelCol).cast("double").as("__y"): _*).persist()
-    try {
-      val n = pts.count()
-      require(n > 0, "empty training input")
-      val w = Array.fill(k + 1)(0.0)
-      var r = 0
-      while (r < rounds) {
-        val p = lit(1.0) / (lit(1.0) + exp(-margin(w, xs)))
-        val resid = p - col("__y")
-        // Rounding.roundTo (half-away-from-zero on the binary double)
-        // rather than functions.round (shortest-decimal HALF_UP) so a
-        // DuckDB oracle's round() reproduces the quantization exactly.
-        val gradCols = (resid * Scale) +: xs.map(x => resid * x * Scale)
-        val sums = pts.agg(
-          sum(Rounding.roundTo(gradCols.head, 0).cast("long")).as("g0"),
-          gradCols.tail.zipWithIndex.map { case (g, j) =>
-            sum(Rounding.roundTo(g, 0).cast("long")).as(s"g${j + 1}")
-          }: _*).head()
-        var j = 0
-        while (j <= k) {
-          w(j) = w(j) - lr * (sums.getLong(j).toDouble / (n.toDouble * Scale))
-          j += 1
-        }
-        r += 1
+      } :+ col(labelCol).cast("double").as("__y"): _*))
+    val n = pts.count()
+    require(n > 0, "empty training input")
+    val w = Array.fill(k + 1)(0.0)
+    var r = 0
+    while (r < rounds) {
+      val p = lit(1.0) / (lit(1.0) + exp(-margin(w, xs)))
+      val resid = p - col("__y")
+      // Rounding.roundTo (half-away-from-zero on the binary double)
+      // rather than functions.round (shortest-decimal HALF_UP) so a
+      // DuckDB oracle's round() reproduces the quantization exactly.
+      val gradCols = (resid * Scale) +: xs.map(x => resid * x * Scale)
+      val sums = pts.agg(
+        sum(Rounding.roundTo(gradCols.head, 0).cast("long")).as("g0"),
+        gradCols.tail.zipWithIndex.map { case (g, j) =>
+          sum(Rounding.roundTo(g, 0).cast("long")).as(s"g${j + 1}")
+        }: _*).head()
+      var j = 0
+      while (j <= k) {
+        w(j) = w(j) - lr * (sums.getLong(j).toDouble / (n.toDouble * Scale))
+        j += 1
       }
-      w
-    } finally { pts.unpersist() }
+      r += 1
+    }
+    w
   }
 }

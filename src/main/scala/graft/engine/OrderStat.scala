@@ -2,7 +2,7 @@ package graft.engine
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
+import graft.operators.{Exec, Scope}
 
 /** Exact order statistics at corpus scale by iterative range
   * narrowing — the classic MapReduce median algorithm, and the
@@ -27,13 +27,11 @@ object OrderStat {
     * collapses to a single representable double IS the answer.
     */
   def kthSmallest(df: DataFrame, valCol: String, k: Long,
-                  bins: Int = 64, cutoff: Long = 4096): Double = {
-    val vals = project(df, valCol)
-    try {
-      val n = vals.count()
-      require(k >= 1 && k <= n, s"k=$k outside 1..$n")
-      solve(vals, k, bins, cutoff)
-    } finally { vals.unpersist() }
+                  bins: Int = 64, cutoff: Long = 4096): Double = Exec.scope { sc =>
+    val vals = project(sc, df, valCol)
+    val n = vals.count()
+    require(k >= 1 && k <= n, s"k=$k outside 1..$n")
+    solve(vals, k, bins, cutoff)
   }
 
   /** Several exact order statistics over ONE cached value projection:
@@ -73,104 +71,101 @@ object OrderStat {
     */
   def multiQuantiles(df: DataFrame, specs: Seq[(String, Long => Seq[Long])],
                      bins: Int = 32, cutoff: Long = 4096)
-      : Seq[(Long, Seq[Double])] = {
+      : Seq[(Long, Seq[Double])] = Exec.scope { sc =>
     require(bins >= 2, "need at least two bins per round")
     val colsN = specs.map(_._1).distinct
-    val vals = df
-      .select(colsN.map(c => col(c).cast("double").as(c)): _*)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
-    try {
-      val agg0 = colsN.flatMap(c => Seq(
-        count(col(c)).as(s"n_$c"),
-        min(col(c)).as(s"lo_$c"), max(col(c)).as(s"hi_$c")))
-      val row0 = vals.agg(agg0.head, agg0.tail: _*).head()
-      val ns = colsN.map(c => c -> row0.getAs[Long](s"n_$c")).toMap
-      final class Task(val c: String, var kk: Long, var lo: Double,
-                       var hi: Double, var cnt: Long, var done: Boolean,
-                       var res: Double)
-      val perSpec: Seq[(Long, Seq[Task])] = specs.map { case (c, ksf) =>
-        val n = ns(c)
-        val ks = ksf(n)
-        require(n > 0, s"column $c has no non-null values")
-        require(ks.forall(k => k >= 1 && k <= n),
-          s"some rank for $c outside 1..$n: $ks")
-        (n, ks.map(k => new Task(c, k, row0.getAs[Double](s"lo_$c"),
-          row0.getAs[Double](s"hi_$c"), -1L, false, 0.0)))
+    val vals = sc.cache(df
+      .select(colsN.map(c => col(c).cast("double").as(c)): _*))
+    val agg0 = colsN.flatMap(c => Seq(
+      count(col(c)).as(s"n_$c"),
+      min(col(c)).as(s"lo_$c"), max(col(c)).as(s"hi_$c")))
+    val row0 = vals.agg(agg0.head, agg0.tail: _*).head()
+    val ns = colsN.map(c => c -> row0.getAs[Long](s"n_$c")).toMap
+    final class Task(val c: String, var kk: Long, var lo: Double,
+                     var hi: Double, var cnt: Long, var done: Boolean,
+                     var res: Double)
+    val perSpec: Seq[(Long, Seq[Task])] = specs.map { case (c, ksf) =>
+      val n = ns(c)
+      val ks = ksf(n)
+      require(n > 0, s"column $c has no non-null values")
+      require(ks.forall(k => k >= 1 && k <= n),
+        s"some rank for $c outside 1..$n: $ks")
+      (n, ks.map(k => new Task(c, k, row0.getAs[Double](s"lo_$c"),
+        row0.getAs[Double](s"hi_$c"), -1L, false, 0.0)))
+    }
+    val all = perSpec.flatMap(_._2)
+    def member(t: Task) = col(t.c) >= t.lo && col(t.c) <= t.hi
+    var guard = 0
+    while (all.exists(!_.done) && guard < 128) {
+      guard += 1
+      for (t <- all if !t.done if t.lo >= t.hi) {
+        t.res = t.lo; t.done = true
       }
-      val all = perSpec.flatMap(_._2)
-      def member(t: Task) = col(t.c) >= t.lo && col(t.c) <= t.hi
-      var guard = 0
-      while (all.exists(!_.done) && guard < 128) {
-        guard += 1
-        for (t <- all if !t.done if t.lo >= t.hi) {
-          t.res = t.lo; t.done = true
+      val active = all.filter(!_.done)
+      // finishers: candidate set small enough (or range below double
+      // resolution — at most ~bins representable values remain) to
+      // walk per-value counts on the driver. ONE batched job: each
+      // row emits its value tagged per matching finisher task,
+      // grouped (task, value) — ≤ tasks × cutoff rows come back.
+      val (fin, toHist) = active.partition(t =>
+        (t.cnt >= 0 && t.cnt <= cutoff) || (t.hi - t.lo) / bins == 0.0)
+      if (fin.nonEmpty) {
+        val entries = fin.zipWithIndex.map { case (t, ti) =>
+          when(member(t),
+            struct(lit(ti).as("t"), col(t.c).as("v")))
         }
-        val active = all.filter(!_.done)
-        // finishers: candidate set small enough (or range below double
-        // resolution — at most ~bins representable values remain) to
-        // walk per-value counts on the driver. ONE batched job: each
-        // row emits its value tagged per matching finisher task,
-        // grouped (task, value) — ≤ tasks × cutoff rows come back.
-        val (fin, toHist) = active.partition(t =>
-          (t.cnt >= 0 && t.cnt <= cutoff) || (t.hi - t.lo) / bins == 0.0)
-        if (fin.nonEmpty) {
-          val entries = fin.zipWithIndex.map { case (t, ti) =>
-            when(member(t),
-              struct(lit(ti).as("t"), col(t.c).as("v")))
+        val rows = vals.select(explode(array(entries: _*)).as("e"))
+          .filter(col("e").isNotNull)
+          .groupBy(col("e.t").as("t"), col("e.v").as("v"))
+          .agg(count(lit(1)).as("cc"))
+          .collect()
+        val byTask = rows.groupBy(_.getInt(0))
+        fin.zipWithIndex.foreach { case (t, ti) =>
+          val vs = byTask(ti).map(r => (r.getDouble(1), r.getLong(2)))
+            .sortBy(_._1)
+          var rem = t.kk
+          var i = 0
+          while (i < vs.length && rem > vs(i)._2) {
+            rem -= vs(i)._2; i += 1
           }
-          val rows = vals.select(explode(array(entries: _*)).as("e"))
-            .filter(col("e").isNotNull)
-            .groupBy(col("e.t").as("t"), col("e.v").as("v"))
-            .agg(count(lit(1)).as("cc"))
-            .collect()
-          val byTask = rows.groupBy(_.getInt(0))
-          fin.zipWithIndex.foreach { case (t, ti) =>
-            val vs = byTask(ti).map(r => (r.getDouble(1), r.getLong(2)))
-              .sortBy(_._1)
-            var rem = t.kk
-            var i = 0
-            while (i < vs.length && rem > vs(i)._2) {
-              rem -= vs(i)._2; i += 1
-            }
-            t.res = vs(i)._1; t.done = true
-          }
-        }
-        // histogram round: each row emits (task, bin) per active task,
-        // grouped — tasks × bins tiny groups, one shuffle, no wide
-        // aggregate (a tasks×bins conditional-sum aggregate has
-        // hundreds of buffer fields and falls off the codegen cliff)
-        if (toHist.nonEmpty) {
-          val entries = toHist.zipWithIndex.map { case (t, ti) =>
-            val w = (t.hi - t.lo) / bins
-            val bi = least(greatest(
-              floor((col(t.c) - lit(t.lo)) / lit(w)), lit(0.0)),
-              lit((bins - 1).toDouble)).cast("int")
-            when(member(t), struct(lit(ti).as("t"), bi.as("b")))
-          }
-          val h = vals.select(explode(array(entries: _*)).as("e"))
-            .filter(col("e").isNotNull)
-            .groupBy(col("e.t").as("t"), col("e.b").as("b"))
-            .agg(count(lit(1)).as("cc"))
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-          toHist.zipWithIndex.foreach { case (t, ti) =>
-            val w = (t.hi - t.lo) / bins
-            def hb(i: Int) = h.getOrElse((ti, i), 0L)
-            var cum = 0L
-            var b = 0
-            while (b < bins && cum + hb(b) < t.kk) { cum += hb(b); b += 1 }
-            t.kk -= cum
-            t.cnt = hb(b)
-            val nlo = t.lo + b * w
-            t.hi = if (b == bins - 1) t.hi
-                   else math.min(t.hi, t.lo + (b + 1) * w)
-            t.lo = nlo
-          }
+          t.res = vs(i)._1; t.done = true
         }
       }
-      require(all.forall(_.done), "order-statistic narrowing stalled")
-      perSpec.map { case (n, ts) => (n, ts.map(_.res)) }
-    } finally { vals.unpersist() }
+      // histogram round: each row emits (task, bin) per active task,
+      // grouped — tasks × bins tiny groups, one shuffle, no wide
+      // aggregate (a tasks×bins conditional-sum aggregate has
+      // hundreds of buffer fields and falls off the codegen cliff)
+      if (toHist.nonEmpty) {
+        val entries = toHist.zipWithIndex.map { case (t, ti) =>
+          val w = (t.hi - t.lo) / bins
+          val bi = least(greatest(
+            floor((col(t.c) - lit(t.lo)) / lit(w)), lit(0.0)),
+            lit((bins - 1).toDouble)).cast("int")
+          when(member(t), struct(lit(ti).as("t"), bi.as("b")))
+        }
+        val h = vals.select(explode(array(entries: _*)).as("e"))
+          .filter(col("e").isNotNull)
+          .groupBy(col("e.t").as("t"), col("e.b").as("b"))
+          .agg(count(lit(1)).as("cc"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+        toHist.zipWithIndex.foreach { case (t, ti) =>
+          val w = (t.hi - t.lo) / bins
+          def hb(i: Int) = h.getOrElse((ti, i), 0L)
+          var cum = 0L
+          var b = 0
+          while (b < bins && cum + hb(b) < t.kk) { cum += hb(b); b += 1 }
+          t.kk -= cum
+          t.cnt = hb(b)
+          val nlo = t.lo + b * w
+          t.hi = if (b == bins - 1) t.hi
+                 else math.min(t.hi, t.lo + (b + 1) * w)
+          t.lo = nlo
+        }
+      }
+    }
+    require(all.forall(_.done), "order-statistic narrowing stalled")
+    perSpec.map { case (n, ts) => (n, ts.map(_.res)) }
   }
 
   /** Exact INTERPOLATED percentiles with Spark `percentile` semantics
@@ -232,106 +227,103 @@ object OrderStat {
     */
   def groupedInterpolatedPercentiles(df: DataFrame, groupExpr: Column,
       valCol: Column, fracs: Seq[Double], bins: Int = 64,
-      cutoff: Long = 4096): Map[String, (Long, Seq[Double])] = {
+      cutoff: Long = 4096): Map[String, (Long, Seq[Double])] = Exec.scope { sc =>
     require(bins >= 2, "need at least two bins per round")
     require(fracs.forall(q => q >= 0 && q <= 1), s"fractions in [0,1]: $fracs")
     val spark = df.sparkSession
     import spark.implicits._
     val v = valCol.cast("double")
-    val vals = df.filter(v.isNotNull)
-      .select(groupExpr.cast("string").as("g"), v.as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    try {
-      val base = vals.groupBy("g")
-        .agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
-          max(col("v")).as("hi"))
-        .collect()
-        .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-          r.getDouble(3)))
-      final class Task(val id: Int, val g: String, var kk: Long,
-                       var lo: Double, var hi: Double, var cnt: Long,
-                       var done: Boolean, var res: Double)
-      val ns = base.map(b => b._1 -> b._2).toMap
-      var nextId = 0
-      val tasksByGroup: Map[String, Map[Long, Task]] = base.map {
-        case (g, n, lo, hi) =>
-          val ranks = fracs.flatMap { q =>
-            val pos = q * (n - 1)
-            Seq(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
-          }.distinct.sorted
-          g -> ranks.map { k =>
-            nextId += 1
-            k -> new Task(nextId, g, k, lo, hi, -1L, false, 0.0)
-          }.toMap
-      }.toMap
-      val all = tasksByGroup.values.flatMap(_.values).toSeq
-      var guard = 0
-      while (all.exists(!_.done) && guard < 128) {
-        guard += 1
-        for (t <- all if !t.done if t.lo >= t.hi) {
-          t.res = t.lo; t.done = true
-        }
-        val active = all.filter(!_.done)
-        val (fin, toHist) = active.partition(t =>
-          (t.cnt >= 0 && t.cnt <= cutoff) || (t.hi - t.lo) / bins == 0.0)
-        // finishers: per-task exact value counts, driver walk — the
-        // state join fans a row out to only ITS group's tasks, so the
-        // emitted width is ≤ tasks-per-group, not total tasks
-        if (fin.nonEmpty) {
-          val st = fin.map(t => (t.id, t.g, t.lo, t.hi))
-            .toDF("tid", "tg", "tlo", "thi")
-          val rows = vals
-            .join(broadcast(st), col("g") === col("tg") &&
-              col("v") >= col("tlo") && col("v") <= col("thi"))
-            .groupBy(col("tid"), col("v")).agg(count(lit(1)).as("cc"))
-            .collect()
-          val byTask = rows.groupBy(_.getInt(0))
-          fin.foreach { t =>
-            val vs = byTask(t.id).map(r => (r.getDouble(1), r.getLong(2)))
-              .sortBy(_._1)
-            var rem = t.kk
-            var i = 0
-            while (i < vs.length && rem > vs(i)._2) {
-              rem -= vs(i)._2; i += 1
-            }
-            t.res = vs(i)._1; t.done = true
+    val vals = sc.cache(df.filter(v.isNotNull)
+      .select(groupExpr.cast("string").as("g"), v.as("v")))
+    val base = vals.groupBy("g")
+      .agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
+        max(col("v")).as("hi"))
+      .collect()
+      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
+        r.getDouble(3)))
+    final class Task(val id: Int, val g: String, var kk: Long,
+                     var lo: Double, var hi: Double, var cnt: Long,
+                     var done: Boolean, var res: Double)
+    val ns = base.map(b => b._1 -> b._2).toMap
+    var nextId = 0
+    val tasksByGroup: Map[String, Map[Long, Task]] = base.map {
+      case (g, n, lo, hi) =>
+        val ranks = fracs.flatMap { q =>
+          val pos = q * (n - 1)
+          Seq(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
+        }.distinct.sorted
+        g -> ranks.map { k =>
+          nextId += 1
+          k -> new Task(nextId, g, k, lo, hi, -1L, false, 0.0)
+        }.toMap
+    }.toMap
+    val all = tasksByGroup.values.flatMap(_.values).toSeq
+    var guard = 0
+    while (all.exists(!_.done) && guard < 128) {
+      guard += 1
+      for (t <- all if !t.done if t.lo >= t.hi) {
+        t.res = t.lo; t.done = true
+      }
+      val active = all.filter(!_.done)
+      val (fin, toHist) = active.partition(t =>
+        (t.cnt >= 0 && t.cnt <= cutoff) || (t.hi - t.lo) / bins == 0.0)
+      // finishers: per-task exact value counts, driver walk — the
+      // state join fans a row out to only ITS group's tasks, so the
+      // emitted width is ≤ tasks-per-group, not total tasks
+      if (fin.nonEmpty) {
+        val st = fin.map(t => (t.id, t.g, t.lo, t.hi))
+          .toDF("tid", "tg", "tlo", "thi")
+        val rows = vals
+          .join(broadcast(st), col("g") === col("tg") &&
+            col("v") >= col("tlo") && col("v") <= col("thi"))
+          .groupBy(col("tid"), col("v")).agg(count(lit(1)).as("cc"))
+          .collect()
+        val byTask = rows.groupBy(_.getInt(0))
+        fin.foreach { t =>
+          val vs = byTask(t.id).map(r => (r.getDouble(1), r.getLong(2)))
+            .sortBy(_._1)
+          var rem = t.kk
+          var i = 0
+          while (i < vs.length && rem > vs(i)._2) {
+            rem -= vs(i)._2; i += 1
           }
-        }
-        if (toHist.nonEmpty) {
-          val st = toHist.map(t =>
-            (t.id, t.g, t.lo, t.hi, (t.hi - t.lo) / bins))
-            .toDF("tid", "tg", "tlo", "thi", "tw")
-          val h = vals
-            .join(broadcast(st), col("g") === col("tg") &&
-              col("v") >= col("tlo") && col("v") <= col("thi"))
-            .select(col("tid"), least(greatest(
-                floor((col("v") - col("tlo")) / col("tw")), lit(0.0)),
-              lit((bins - 1).toDouble)).cast("int").as("b"))
-            .groupBy("tid", "b").agg(count(lit(1)).as("cc"))
-            .collect()
-            .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-          toHist.foreach { t =>
-            val w = (t.hi - t.lo) / bins
-            def hb(i: Int) = h.getOrElse((t.id, i), 0L)
-            var cum = 0L
-            var b = 0
-            while (b < bins && cum + hb(b) < t.kk) { cum += hb(b); b += 1 }
-            t.kk -= cum
-            t.cnt = hb(b)
-            val nlo = t.lo + b * w
-            t.hi = if (b == bins - 1) t.hi
-                   else math.min(t.hi, t.lo + (b + 1) * w)
-            t.lo = nlo
-          }
+          t.res = vs(i)._1; t.done = true
         }
       }
-      require(all.forall(_.done), "grouped order-statistic narrowing stalled")
-      tasksByGroup.map { case (g, byRank) =>
-        val n = ns(g)
-        val resByRank = byRank.map { case (k, t) => k -> t.res }
-        g -> (n, fracs.map(q => interp(q, n, resByRank)))
+      if (toHist.nonEmpty) {
+        val st = toHist.map(t =>
+          (t.id, t.g, t.lo, t.hi, (t.hi - t.lo) / bins))
+          .toDF("tid", "tg", "tlo", "thi", "tw")
+        val h = vals
+          .join(broadcast(st), col("g") === col("tg") &&
+            col("v") >= col("tlo") && col("v") <= col("thi"))
+          .select(col("tid"), least(greatest(
+              floor((col("v") - col("tlo")) / col("tw")), lit(0.0)),
+            lit((bins - 1).toDouble)).cast("int").as("b"))
+          .groupBy("tid", "b").agg(count(lit(1)).as("cc"))
+          .collect()
+          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
+        toHist.foreach { t =>
+          val w = (t.hi - t.lo) / bins
+          def hb(i: Int) = h.getOrElse((t.id, i), 0L)
+          var cum = 0L
+          var b = 0
+          while (b < bins && cum + hb(b) < t.kk) { cum += hb(b); b += 1 }
+          t.kk -= cum
+          t.cnt = hb(b)
+          val nlo = t.lo + b * w
+          t.hi = if (b == bins - 1) t.hi
+                 else math.min(t.hi, t.lo + (b + 1) * w)
+          t.lo = nlo
+        }
       }
-    } finally { vals.unpersist() }
+    }
+    require(all.forall(_.done), "grouped order-statistic narrowing stalled")
+    tasksByGroup.map { case (g, byRank) =>
+      val n = ns(g)
+      val resByRank = byRank.map { case (k, t) => k -> t.res }
+      g -> (n, fracs.map(q => interp(q, n, resByRank)))
+    }
   }
 
   /** The shared rank convention for quantile boundaries: the q-th
@@ -343,20 +335,17 @@ object OrderStat {
 
   /** `(n, k, value)` for the lower median (`k = (n+1)/2`). */
   def lowerMedian(df: DataFrame, valCol: String, bins: Int = 64,
-                  cutoff: Long = 4096): (Long, Long, Double) = {
-    val vals = project(df, valCol)
-    try {
-      val n = vals.count()
-      require(n > 0, "empty input has no median")
-      val k = (n + 1) / 2
-      (n, k, solve(vals, k, bins, cutoff))
-    } finally { vals.unpersist() }
+                  cutoff: Long = 4096): (Long, Long, Double) = Exec.scope { sc =>
+    val vals = project(sc, df, valCol)
+    val n = vals.count()
+    require(n > 0, "empty input has no median")
+    val k = (n + 1) / 2
+    (n, k, solve(vals, k, bins, cutoff))
   }
 
-  private def project(df: DataFrame, valCol: String): DataFrame = {
+  private def project(sc: Scope, df: DataFrame, valCol: String): DataFrame = {
     val x = col(valCol).cast("double")
-    df.filter(x.isNotNull).select(x.as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    sc.cache(df.filter(x.isNotNull).select(x.as("v")))
   }
 
   private def solve(vals: DataFrame, k: Long, bins: Int,

@@ -5,6 +5,7 @@ import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
 
 import graft.functions.Rounding.{roundTo => round}
+import graft.operators.Exec
 
 /** Exact decision-stump fitting — the base learner of boosted trees
   * and the one-feature "is this column predictive" probe a curation
@@ -35,16 +36,16 @@ object Stump {
     * a split and is excluded; null feature/label rows are ignored.
     */
   def bestSplits(df: DataFrame, xCol: String, labelCol: String,
-                 buckets: Int = 32, topK: Int = 5): DataFrame = {
+                 buckets: Int = 32, topK: Int = 5): DataFrame = Exec.scope { sc =>
     require(buckets >= 1, "need at least one range bucket")
     require(topK >= 1, "topK must be positive")
     val x = col(xCol).cast("double")
     val y = col(labelCol).cast("long")
     // the per-value table feeds bounds, bucketing, AND totals — persist
     // or the corpus aggregation re-executes once per reference
-    val per = df.filter(x.isNotNull && y.isNotNull).select(x.as("v"), y.as("y"))
-      .groupBy("v").agg(count(lit(1)).as("c"), sum("y").as("p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val per = sc.cache(df.filter(x.isNotNull && y.isNotNull)
+      .select(x.as("v"), y.as("y"))
+      .groupBy("v").agg(count(lit(1)).as("c"), sum("y").as("p")))
     val fracs = (1 until buckets).map(_.toDouble / buckets)
     val boundsDf =
       if (buckets == 1) per.agg(array().cast("array<double>").as("bounds"))
@@ -86,7 +87,7 @@ object Stump {
       .select(col("v").as("threshold"), col("nl").as("n_left"),
         col("pl").as("pos_left"), col("nr").as("n_right"),
         col("pr").as("pos_right"), round(col("g"), 6).as("gini"))
-    graft.operators.Exec.owned(out, Seq(per))
+    sc.keep(out)
   }
 
   /** Best stump PER FEATURE in ONE corpus pass — feature selection's
@@ -103,7 +104,8 @@ object Stump {
     * — lower gini = more predictive.
     */
   def featureRanking(df: DataFrame, features: Seq[String],
-                     labelCol: String, buckets: Int = 32): DataFrame = {
+                     labelCol: String,
+                     buckets: Int = 32): DataFrame = Exec.scope { sc =>
     require(features.nonEmpty, "need at least one feature")
     require(buckets >= 1, "need at least one range bucket")
     val y = col(labelCol).cast("long")
@@ -119,9 +121,8 @@ object Stump {
     // checkpoint of it measured 4× slower than the lazy cache
     // (TimeOne run2 1.07 s → 4.22 s at sf0.1) — the q305
     // checkpoint-wins class applies only to genuinely small frames.
-    val per = melted.groupBy("f", "v")
-      .agg(count(lit(1)).as("c"), sum("y").as("p"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val per = sc.cache(melted.groupBy("f", "v")
+      .agg(count(lit(1)).as("c"), sum("y").as("p")))
     val fracs = (1 until buckets).map(_.toDouble / buckets)
     val bounds =
       if (buckets == 1)
@@ -129,11 +130,10 @@ object Stump {
       else per.groupBy("f").agg(expr(
         s"approx_percentile(v, array(${fracs.mkString(",")}), 1000)").as("bounds"))
     // feeds both the in-bucket windows and the offset totals
-    val bucketed = per.join(broadcast(bounds), "f")
+    val bucketed = sc.cache(per.join(broadcast(bounds), "f")
       .select(col("f"), col("v"), col("c"), col("p"),
         aggregate(col("bounds"), lit(0),
-          (acc, b) => acc + when(col("v") > b, 1).otherwise(0)).as("bk"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+          (acc, b) => acc + when(col("v") > b, 1).otherwise(0)).as("bk")))
     val inBucket = Window.partitionBy("f", "bk").orderBy("v")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     val withLocal = bucketed
@@ -169,6 +169,6 @@ object Stump {
         col("nl").as("n_left"), col("pl").as("pos_left"),
         col("nr").as("n_right"), col("pr").as("pos_right"),
         round(col("g"), 6).as("gini"))
-    graft.operators.Exec.owned(out, Seq(per, bucketed))
+    sc.keep(out)
   }
 }

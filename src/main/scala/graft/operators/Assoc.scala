@@ -26,15 +26,14 @@ object Assoc {
     * `item_a < item_b`, ordered by (pmi desc, item_a, item_b).
     */
   def pmiPairs(baskets: DataFrame, basketCol: String, itemCol: String,
-               minSupport: Long, topN: Int): DataFrame = {
+               minSupport: Long, topN: Int): DataFrame = Exec.scope { sc =>
     require(minSupport >= 1, "minSupport must be >= 1")
     require(topN >= 1, "topN must be >= 1")
     // referenced four times (total, marginals, both self-join sides) —
     // persist so the distinct shuffle runs once, not per reference
-    val bi = baskets
+    val bi = sc.cache(baskets
       .select(col(basketCol).as("bk"), col(itemCol).as("it"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val total = bi.agg(countDistinct(col("bk")).cast("double").as("n_bk"))
     val itemCnt = bi.groupBy(col("it")).agg(count(lit(1)).as("cnt"))
     val pairs = bi.as("x").join(bi.as("y"),
@@ -55,7 +54,7 @@ object Assoc {
           .as("pmi"))
       .orderBy(col("pmi").desc, col("item_a"), col("item_b"))
       .limit(topN)
-    Exec.owned(result, Seq(bi))
+    sc.keep(result)
   }
 
   /** Skip-gram PMI over token windows — the statistic word2vec
@@ -75,7 +74,8 @@ object Assoc {
     * joins.
     */
   def skipgramPmi(docs: DataFrame, idCol: String, textCol: String,
-                  window: Int, minCount: Long, topN: Int): DataFrame = {
+                  window: Int, minCount: Long,
+                  topN: Int): DataFrame = Exec.scope { sc =>
     require(window >= 1, "window must be >= 1")
     require(minCount >= 1 && topN >= 1, "minCount/topN must be >= 1")
     import graft.functions.TextFunctions.words
@@ -97,9 +97,8 @@ object Assoc {
         col("d") === col("d2") && col("pos2") === col("pos") + col("k"))
       .select(least(col("w"), col("w2")).as("tok_a"),
         greatest(col("w"), col("w2")).as("tok_b"))
-    val pairCnt = pairsRaw.groupBy("tok_a", "tok_b")
-      .agg(count(lit(1)).as("n_ab"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val pairCnt = sc.cache(pairsRaw.groupBy("tok_a", "tok_b")
+      .agg(count(lit(1)).as("n_ab")))
     val nPairs = pairCnt.agg(sum(col("n_ab")).cast("double").as("n_pairs"))
     val result = pairCnt
       .filter(col("n_ab") >= minCount)
@@ -116,6 +115,6 @@ object Assoc {
            (col("n_b").cast("double") / col("n_tok")))), 4).as("pmi"))
       .orderBy(col("pmi").desc, col("tok_a"), col("tok_b"))
       .limit(topN)
-    Exec.owned(result, Seq(pairCnt))
+    sc.keep(result)
   }
 }

@@ -38,7 +38,7 @@ object Bpe {
     * by symbol order). Stops early if no adjacent pair remains.
     */
   def trainMerges(docs: DataFrame, textCol: String,
-                  nMerges: Int): DataFrame = {
+                  nMerges: Int): DataFrame = Exec.scope { sc =>
     require(nMerges >= 1, "nMerges must be >= 1")
     val spark = docs.sparkSession
     // corpus touched exactly once: the word-frequency aggregation
@@ -47,13 +47,12 @@ object Bpe {
       .groupBy("w").agg(count(lit(1)).as("freq"))
     // initial symbol sequence: characters, double-space-separated
     // (slice drops the trailing '' element Spark's split keeps)
-    var vocab = wordFreq.select(
+    var vocab = sc.checkpoint(wordFreq.select(
         concat(lit(" "),
           array_join(slice(split(col("w"), ""), lit(1),
             length(col("w"))), "  "),
           lit(" ")).as("s"),
-        col("freq"))
-      .localCheckpoint(true)
+        col("freq")))
     val merges = Seq.newBuilder[(Int, String, String, String, Long)]
     var step = 1
     var exhausted = false
@@ -77,20 +76,16 @@ object Bpe {
         val y = best(0).getString(1)
         val c = best(0).getLong(2)
         merges += ((step, x, y, x + y, c))
-        val next = vocab.select(
+        val next = sc.checkpoint(vocab.select(
             call_function("replace", col("s"),
               lit(s" $x  $y "), lit(s" $x$y ")).as("s"),
-            col("freq"))
-          .localCheckpoint(true)
-        // next is materialized — the previous round's vocab blocks are
-        // dead (RDD-level release; unpersist is a no-op on checkpoints)
-        Exec.releaseScratch(vocab)
+            col("freq")))
+        sc.release(vocab)
         vocab = next
         step += 1
       }
     }
-    // the result is driver-side merge rows — the last vocab is dead too
-    Exec.releaseScratch(vocab)
+    // the result is driver-side merge rows: the scope frees the last vocab
     toMergesDf(spark, merges.result())
   }
 

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -24,16 +23,18 @@ import graft.functions.VectorFunctions
   * [[embeddingPairsBucketed]]'s recall measurement.
   *
   * Cache lifecycle: operators that reference a subplan multiple times
-  * persist it internally, but every internal handle is released before
-  * the call returns ([[Exec.owned]]) — the returned DataFrame is
-  * materialized into its own cache and is the single owning handle
-  * (callers `.unpersist()` it when done, or let the session drop it).
-  * Consequently those operators are EAGER: the heavy lifting runs
-  * inside the call, not at the caller's first action.
+  * cache it inside an [[Exec.scope]], which releases every internal
+  * handle before the call returns. The returned DataFrame is a kept
+  * checkpoint and is the single owning handle: an enclosing scope
+  * releases it, and a caller outside any scope frees it with
+  * [[Exec.releaseScratch]] (`Dataset.unpersist` cannot reach
+  * checkpoint blocks). Consequently those operators are EAGER: the
+  * heavy lifting runs inside the call, not at the caller's first
+  * action.
   */
 object Dedup {
 
-  import Exec.{owned, widen}
+  import Exec.widen
 
   /** Normalized content hash: lowercase + collapsed whitespace → md5. */
   def contentHash(text: Column): Column =
@@ -62,11 +63,10 @@ object Dedup {
     * as a k-row broadcast.
     */
   def sourceOverlap(docs: DataFrame, textCol: String,
-                    sourceCol: String): DataFrame = {
-    val hs = docs
+                    sourceCol: String): DataFrame = Exec.scope { sc =>
+    val hs = sc.cache(docs
       .select(contentHash(col(textCol)).as("h"), col(sourceCol).as("src"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val totals = hs.groupBy("src").agg(count(lit(1)).as("n"))
     val pairs = hs.as("a").join(hs.as("b"),
         col("a.h") === col("b.h") && col("a.src") < col("b.src"))
@@ -83,7 +83,7 @@ object Dedup {
           col("n_shared").cast("double") /
             least(col("n_a"), col("n_b")).cast("double"), 4)
           .as("containment"))
-    owned(out, Seq(hs))
+    sc.keep(out)
   }
 
   /** Shingle sets per document: `(id, sh: array<string>)` — the
@@ -122,33 +122,30 @@ object Dedup {
     */
   def minhashPairs(docs: DataFrame, idCol: String, textCol: String,
                    threshold: Double, shingleN: Int = 3, k: Int = 12,
-                   bands: Int = 6, rowsPerBand: Int = 2): DataFrame = {
+                   bands: Int = 6,
+                   rowsPerBand: Int = 2): DataFrame = Exec.scope { sc =>
     require(bands * rowsPerBand == k, "signature must split evenly into bands")
     require(threshold > 0.0,
       "threshold must be positive: zero-similarity candidate pairs drop " +
         "out of the verification join and cannot be reported")
     // self-joined below → persist so the signature aggregation runs once
-    val banded = bandKeys(docs, idCol, textCol, shingleN, k, bands,
-        rowsPerBand)
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val cand = banded.as("a")
+    val banded = sc.cache(bandKeys(docs, idCol, textCol, shingleN, k, bands,
+        rowsPerBand))
+    // referenced 3x below (two id-unions + the verification join)
+    val cand = sc.cache(banded.as("a")
       .join(banded.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key") &&
           col("a.id") < col("b.id"))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .distinct()
-      // referenced 3x below (two id-unions + the verification join)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // Exact-Jaccard verification needs distinct shingle SETS, but only
     // for documents that appear in a candidate pair — a tiny fraction
     // of the corpus at any scale.
-    val candShingles = shingleRowsRaw(
+    val candShingles = sc.cache(shingleRowsRaw(
         docsInCandidates(docs, idCol, cand, Seq("doc_a", "doc_b")),
         idCol, textCol, shingleN)
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    owned(jaccardOfPairs(cand, candShingles, threshold),
-      Seq(banded, cand, candShingles))
+      .distinct())
+    sc.keep(jaccardOfPairs(cand, candShingles, threshold))
   }
 
   /** Documents whose id appears in any of the given candidate-pair
@@ -206,7 +203,7 @@ object Dedup {
   def jaccardPairsExact(docs: DataFrame, idCol: String, textCol: String,
                         threshold: Double, shingleN: Int = 3,
                         maxShingleDf: Int = Int.MaxValue,
-                        precomputed: Option[ShingleIndex] = None): DataFrame = {
+                        precomputed: Option[ShingleIndex] = None): DataFrame = Exec.scope { sc =>
     require(threshold > 0.0,
       "threshold must be positive: zero-similarity pairs never co-occur " +
         "in the inverted index and cannot be reported")
@@ -220,10 +217,10 @@ object Dedup {
     // — and they MUST be [[buildShingleIndex]] output for the same
     // (docs, idCol, textCol, shingleN, maxShingleDf), or the pair set
     // silently diverges from the operator's contract.
-    val (kernelHandles, idx, docStats) = precomputed match {
-      case Some(ix) => (Seq.empty[DataFrame], ix.idx, ix.docStats)
+    val (idx, docStats) = precomputed match {
+      case Some(ix) => (ix.idx, ix.docStats)
       case None =>
-        cappedInvertedIndex(docs, idCol, textCol, shingleN, maxShingleDf)
+        cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
     }
     // exact shared-indexed-shingle count per candidate pair
     val ii = idx.as("a")
@@ -234,7 +231,8 @@ object Dedup {
     // prune on the upper bound; the margin keeps every pair whose
     // TRUE jaccard could still round up across the threshold
     val margin = 0.5e-4
-    val cand = ii
+    // referenced three times below (two id-unions + the verify join)
+    val cand = sc.cache(ii
       .join(docStats.as("da"), col("doc_a") === col("da.id"))
       .join(docStats.as("db"), col("doc_b") === col("db.id"))
       .withColumn("ub_inter",
@@ -242,18 +240,15 @@ object Dedup {
       .filter(col("ub_inter").cast("double") /
         (col("da.sz") + col("db.sz") - col("ub_inter")).cast("double")
         >= threshold - margin)
-      .select("doc_a", "doc_b")
-      // referenced three times below (two id-unions + the verify join)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select("doc_a", "doc_b"))
     // Exact Jaccard on the FULL string shingle sets of the (few)
     // survivors — re-derived from the docs scan for candidate docs
     // only (the corpus-wide array materialization would dominate the
-    // whole operator at scale)
-    val sets = candidateSets(docs, idCol, textCol, shingleN, cand,
-        Seq("doc_a", "doc_b"))
-      // joined below as both sides of the verification — persist so
-      // the candidate semi-join + set collection compute once
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    // whole operator at scale); joined below as both sides of the
+    // verification — cached so the candidate semi-join + set
+    // collection compute once
+    val sets = sc.cache(candidateSets(docs, idCol, textCol, shingleN, cand,
+        Seq("doc_a", "doc_b")))
     val result = cand
       .join(sets.as("x"), col("doc_a") === col("x.id"))
       .join(sets.as("y"), col("doc_b") === col("y.id"))
@@ -264,7 +259,7 @@ object Dedup {
             .cast("double"), 4))
       .filter(col("jaccard") >= threshold)
       .select("doc_a", "doc_b", "jaccard")
-    owned(result, kernelHandles ++ Seq(cand, sets))
+    sc.keep(result)
   }
 
   /** Shared df-capped inverted-index kernel of [[jaccardPairsExact]]
@@ -291,15 +286,15 @@ object Dedup {
     *    document and contribute to no intersection, so they are never
     *    counted hidden.
     *
-    * Returns `(handles-to-unpersist, idx, docStats)`; previously these
-    * came from three separate corpus passes (set-size aggregation,
+    * Returns `(idx, docStats)`, read through a cache `sc` owns;
+    * previously these came from three separate corpus passes (set-size aggregation,
     * broadcast over-cap probe, pairable semi-join) each with its own
     * cache.
     */
-  private def cappedInvertedIndex(docs: DataFrame, idCol: String,
-                                  textCol: String, shingleN: Int,
-                                  maxShingleDf: Int)
-      : (Seq[DataFrame], DataFrame, DataFrame) = {
+  private def cappedInvertedIndex(sc: Scope, docs: DataFrame,
+                                  idCol: String, textCol: String,
+                                  shingleN: Int, maxShingleDf: Int)
+      : (DataFrame, DataFrame) = {
     // shingle strings die IN THE SCAN PROJECTION: the inverted index
     // keys on xxhash64, so every downstream shuffle — the df
     // aggregation, the df join, the pair self-join — moves 8-byte
@@ -319,8 +314,7 @@ object Dedup {
       .select(col("id"), explode(col("sh")).as("sr"))
       .select(col("id"), xxhash64(col("sr")).as("s"))
     val dfTab = inv.groupBy("s").agg(count(lit(1)).as("df"))
-    val withDf = inv.join(dfTab, Seq("s"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val withDf = sc.cache(inv.join(dfTab, Seq("s")))
     val docStats = withDf.groupBy("id").agg(
       count(lit(1)).as("sz"),
       (if (maxShingleDf == Int.MaxValue) lit(0L)
@@ -330,7 +324,7 @@ object Dedup {
         (if (maxShingleDf == Int.MaxValue) lit(true)
          else col("df") <= maxShingleDf))
       .select("id", "s")
-    (Seq(withDf), idx, docStats)
+    (idx, docStats)
   }
 
   /** The df-capped inverted shingle index as a PERSISTED ARTIFACT:
@@ -346,25 +340,17 @@ object Dedup {
     */
   final case class ShingleIndex(idx: DataFrame, docStats: DataFrame)
 
-  /** Build a [[ShingleIndex]] eagerly: both frames are materialized as
+  /** Build a [[ShingleIndex]] eagerly: both frames are kept as
     * self-contained checkpoints (no dependency on the build's internal
-    * cache, which is released before returning) and are the CALLER's
-    * to free via [[Exec.releaseScratch]]. */
+    * cache, which is released before returning). */
   def buildShingleIndex(docs: DataFrame, idCol: String, textCol: String,
                         shingleN: Int = 3,
-                        maxShingleDf: Int = Int.MaxValue): ShingleIndex = {
-    val (handles, idx, docStats) =
-      cappedInvertedIndex(docs, idCol, textCol, shingleN, maxShingleDf)
-    // checkpoint BOTH outputs before releasing the shared kernel cache
-    // (owned() would release it after the first, killing the second)
-    val outIdx = idx.localCheckpoint(true)
-    val outStats = docStats.localCheckpoint(true)
-    handles.foreach { h =>
-      h.unpersist(blocking = false)
-      Exec.releaseScratch(h)
+                        maxShingleDf: Int = Int.MaxValue): ShingleIndex =
+    Exec.scope { sc =>
+      val (idx, docStats) =
+        cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
+      ShingleIndex(sc.keep(idx), sc.keep(docStats))
     }
-    ShingleIndex(outIdx, outStats)
-  }
 
   /** Full distinct shingle SETS (strings) for documents appearing in a
     * candidate pair: a second scan of the docs table restricted by a
@@ -404,7 +390,7 @@ object Dedup {
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double, shingleN: Int = 3,
                        maxShingleDf: Int = Int.MaxValue,
-                       precomputed: Option[ShingleIndex] = None): DataFrame = {
+                       precomputed: Option[ShingleIndex] = None): DataFrame = Exec.scope { sc =>
     require(threshold > 0.0 && threshold <= 1.0,
       "containment threshold must be in (0, 1]")
     require(maxShingleDf >= 2,
@@ -413,10 +399,10 @@ object Dedup {
     // same persisted-index contract as [[jaccardPairsExact]]: the
     // caller owns the frames, which must be [[buildShingleIndex]]
     // output for the same (docs, idCol, textCol, shingleN, cap)
-    val (kernelHandles, idx, docStats) = precomputed match {
-      case Some(ix) => (Seq.empty[DataFrame], ix.idx, ix.docStats)
+    val (idx, docStats) = precomputed match {
+      case Some(ix) => (ix.idx, ix.docStats)
       case None =>
-        cappedInvertedIndex(docs, idCol, textCol, shingleN, maxShingleDf)
+        cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
     }
     val ii = idx.as("a")
       .join(idx.as("b"),
@@ -427,18 +413,16 @@ object Dedup {
     // EITHER direction's containment bound could still round over the
     // threshold
     val margin = 0.5e-4
-    val cand = ii
+    val cand = sc.cache(ii
       .join(docStats.as("da"), col("doc_a") === col("da.id"))
       .join(docStats.as("db"), col("doc_b") === col("db.id"))
       .withColumn("ub_inter",
         (col("ii") + least(col("da.hid"), col("db.hid"))).cast("double"))
       .filter(col("ub_inter") / col("da.sz") >= threshold - margin ||
         col("ub_inter") / col("db.sz") >= threshold - margin)
-      .select("doc_a", "doc_b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val sets = candidateSets(docs, idCol, textCol, shingleN, cand,
-        Seq("doc_a", "doc_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .select("doc_a", "doc_b"))
+    val sets = sc.cache(candidateSets(docs, idCol, textCol, shingleN, cand,
+        Seq("doc_a", "doc_b")))
     val withInter = cand
       .join(sets.as("x"), col("doc_a") === col("x.id"))
       .join(sets.as("y"), col("doc_b") === col("y.id"))
@@ -455,7 +439,7 @@ object Dedup {
       round(col("inter") / col("sb"), 4).as("containment"))
     val result = dirA.unionByName(dirB)
       .filter(col("containment") >= threshold)
-    owned(result, kernelHandles ++ Seq(cand, sets))
+    sc.keep(result)
   }
 
   /** Exact Jaccard for given candidate pairs over a shingle-row table:
@@ -527,7 +511,7 @@ object Dedup {
                           rowsPerBand: Int = 2,
                           checkDisjoint: Boolean = true,
                           precomputedBands: Option[(DataFrame, DataFrame)] =
-                            None): DataFrame = {
+                            None): DataFrame = Exec.scope { sc =>
     require(bands * rowsPerBand == k, "signature must split evenly into bands")
     require(threshold > 0.0,
       "threshold must be positive: zero-similarity candidate pairs drop " +
@@ -552,20 +536,18 @@ object Dedup {
     val (bBands, cBands) = precomputedBands.getOrElse((
       bandKeys(batch, idCol, textCol, shingleN, k, bands, rowsPerBand),
       bandKeys(corpus, idCol, textCol, shingleN, k, bands, rowsPerBand)))
-    val cand = bBands.as("a")
+    val cand = sc.cache(bBands.as("a")
       .join(cBands.as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     // exact-set verification restricted to candidate documents on
     // BOTH sides, exactly like minhashPairs
     def candShingles(docs: DataFrame, side: String): DataFrame =
       shingleRowsRaw(docsInCandidates(docs, idCol, cand, Seq(side)),
         idCol, textCol, shingleN).distinct()
-    val inv = candShingles(batch, "doc_a")
-      .unionByName(candShingles(corpus, "doc_b"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val inv = sc.cache(candShingles(batch, "doc_a")
+      .unionByName(candShingles(corpus, "doc_b")))
     val matches = jaccardOfPairs(cand, inv, threshold)
       .groupBy("doc_a").agg(count(lit(1)).as("n_dup_matches"))
     val result = batch.select(col(idCol))
@@ -573,7 +555,7 @@ object Dedup {
       .select(col(idCol),
         col("n_dup_matches").isNotNull.as("is_dup"),
         coalesce(col("n_dup_matches"), lit(0L)).as("n_dup_matches"))
-    owned(result, Seq(cand, inv))
+    sc.keep(result)
   }
 
   private def jaccardOfPairs(cand: DataFrame, inv: DataFrame,
@@ -607,7 +589,7 @@ object Dedup {
     * pairs are expanded back to document pairs by two equi-joins.
     */
   def simhashPairs(docs: DataFrame, idCol: String, textCol: String,
-                   maxHamming: Int = 3): DataFrame = {
+                   maxHamming: Int = 3): DataFrame = Exec.scope { sc =>
     require(maxHamming >= 0 && maxHamming <= 3,
       "the 4x15-bit banding guarantees candidate recall only for " +
         "hamming <= 3 (pigeonhole); larger radii would silently drop pairs")
@@ -621,10 +603,9 @@ object Dedup {
     // (doc, token) table.)
     // referenced 5x downstream (distinct values, both expansion joins,
     // both sides of the same-fingerprint join) → persist
-    val sims = widen(docs, idCol)
+    val sims = sc.cache(widen(docs, idCol)
       .select(col(idCol).as("id"),
-        simhash60(words(col(textCol))).as("sim"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        simhash60(words(col(textCol))).as("sim")))
     val uniq = sims.select("sim").distinct()
     val banded = uniq.select(col("sim"),
       posexplode(transform(sequence(lit(0), lit(3)), b =>
@@ -654,7 +635,7 @@ object Dedup {
         col("x.sim") === col("y.sim") && col("x.id") < col("y.id"))
       .select(col("x.id").as("doc_a"), col("y.id").as("doc_b"),
               lit(0).cast("int").as("hamming_dist"))
-    owned(crossPairs.unionByName(samePairs), Seq(sims))
+    sc.keep(crossPairs.unionByName(samePairs))
   }
 
   private def shiftrightByCol(e: Column, n: Column): Column =
@@ -680,25 +661,19 @@ object Dedup {
     */
   def connectedComponents(pairs: DataFrame, aCol: String = "doc_a",
                           bCol: String = "doc_b",
-                          maxIters: Int = 25): DataFrame = {
+                          maxIters: Int = 25): DataFrame = Exec.scope { sc =>
     // Lineage MUST be truncated every round: a DataFrame loop otherwise
     // nests each round's plan inside the next (branching ×2 through the
     // self-join), and after k rounds the analyzer walks a 2^k-node tree
     // rooted at the full upstream pipeline — driver OOM long before the
     // data is big. Eager localCheckpoint replaces the plan with the
     // materialized RDD, so every round plans against a constant-size
-    // tree; the checkpoint storage is graph-sized (nodes+edges) and is
-    // reclaimed by Spark's ContextCleaner when the handles drop.
-    val edges = pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
-      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .localCheckpoint(true)
-    var labels = edges.select(col("src").as("id")).distinct()
-      .withColumn("lbl", col("id"))
-      .localCheckpoint(true)
-    if (labels.isEmpty) {
-      return owned(labels.select(col("id"), col("lbl").as("cluster_id")),
-        Seq(edges, labels))
-    }
+    // tree; the checkpoint storage is graph-sized (nodes+edges).
+    val edges = sc.checkpoint(
+      pairs.select(col(aCol).as("src"), col(bCol).as("dst"))
+      .unionByName(pairs.select(col(bCol).as("src"), col(aCol).as("dst"))))
+    var labels = sc.checkpoint(edges.select(col("src").as("id")).distinct()
+      .withColumn("lbl", col("id")))
     // labels only ever DECREASE (every step is a min), so the label
     // checksum is monotone non-increasing and equality across rounds
     // is an exact fixpoint test — ONE action per round instead of a
@@ -707,8 +682,8 @@ object Dedup {
     def checksum(df: DataFrame): java.math.BigDecimal =
       df.agg(sum(col("lbl").cast("decimal(38,0)")).as("s"))
         .head().getDecimal(0)
-    var sum0 = checksum(labels)
-    var converged = false
+    var sum0 = if (labels.isEmpty) null else checksum(labels)
+    var converged = sum0 == null
     var i = 0
     while (!converged && i < maxIters) {
       // one neighbor-propagation step: min over incoming neighbor
@@ -723,32 +698,23 @@ object Dedup {
       // ...then POINTER JUMPING (take my label's own label), which
       // shortcuts chains so rounds grow with log(diameter), not
       // diameter — a chain of 2^k collapses in ~k rounds
-      val next = neighborMin.as("a")
+      val next = sc.checkpoint(neighborMin.as("a")
         .join(neighborMin
             .select(col("id").as("lid"), col("lbl").as("llbl")).as("b"),
           col("a.lbl") === col("lid"), "left")
         .select(col("a.id").as("id"),
-          least(col("a.lbl"), coalesce(col("llbl"), col("a.lbl"))).as("lbl"))
-        .localCheckpoint(true)
+          least(col("a.lbl"), coalesce(col("llbl"), col("a.lbl"))).as("lbl")))
       val sum1 = checksum(next)
-      // `next` is materialized and lineage-truncated — the previous
-      // generation's node-sized blocks are dead NOW; without the
-      // RDD-level release they linger until a driver GC (plain
-      // unpersist never touches checkpoint blocks)
-      Exec.releaseScratch(labels)
+      sc.release(labels)
       labels = next
       converged = sum1.compareTo(sum0) == 0
       sum0 = sum1
       i += 1
     }
-    if (!converged) {
-      Exec.releaseScratch(labels, edges)
-      throw new IllegalStateException(
-        s"label propagation did not converge in $maxIters rounds " +
-          "(component diameter exceeds the bound)")
-    }
-    owned(labels.select(col("id"), col("lbl").as("cluster_id")),
-      Seq(labels, edges))
+    if (!converged) throw new IllegalStateException(
+      s"label propagation did not converge in $maxIters rounds " +
+        "(component diameter exceeds the bound)")
+    sc.keep(labels.select(col("id"), col("lbl").as("cluster_id")))
   }
 
   /** Embedding-cosine near-dup pairs — brute force all-pairs. This is
@@ -794,13 +760,13 @@ object Dedup {
     */
   def embeddingPairsBucketed(emb: DataFrame, idCol: String, vecCol: String,
                              threshold: Double, planesPerBand: Int = 4,
-                             bands: Int = 12, dim: Int = 64): DataFrame = {
+                             bands: Int = 12,
+                             dim: Int = 64): DataFrame = Exec.scope { sc =>
     val planes = VectorFunctions.randomPlanes(planesPerBand * bands, dim)
     // referenced 3x (both sides of the band self-join via `banded`,
     // plus the two verification joins)
-    val v = widen(emb, idCol).select(col(idCol).as("id"), col(vecCol).as("v"),
-        VectorFunctions.norm(col(vecCol)).as("nrm"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val v = sc.cache(widen(emb, idCol).select(col(idCol).as("id"),
+        col(vecCol).as("v"), VectorFunctions.norm(col(vecCol)).as("nrm")))
     // band-key table stays NARROW (id, key) — embedding payloads are
     // re-joined only for surviving candidates, so the band fan-out
     // never multiplies vector data through the shuffle
@@ -822,6 +788,6 @@ object Dedup {
           (col("x.nrm") * col("y.nrm")), 4))
       .filter(col("cosine") >= threshold)
       .select(col("id_a").as("vec_a"), col("id_b").as("vec_b"), col("cosine"))
-    owned(result, Seq(v))
+    sc.keep(result)
   }
 }

@@ -1,9 +1,12 @@
 package graft.operators
 
+import scala.collection.mutable
 import scala.util.control.NonFatal
 
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{DataFrame, Dataset, GraftSqlBridge, SparkSession}
 import org.apache.spark.sql.functions.col
+import org.apache.spark.storage.StorageLevel
 
 /** Shared execution-hygiene helpers for the operator layer.
   *
@@ -16,16 +19,13 @@ import org.apache.spark.sql.functions.col
   *     `repartition(...)` before every call is a full-corpus shuffle
   *     for nothing. [[widen]] only widens.
   *
-  *  2. ''Deterministic cache lifecycle'': operators persist subplans
-  *     their own plan references multiple times (self-joins,
-  *     verification joins). Those handles must not outlive the call —
-  *     a library caller cannot be asked to `spark.catalog.clearCache()`
-  *     (which would also drop caches the CALLER owns). [[owned]]
-  *     materializes the (small) final result as a self-contained eager
-  *     checkpoint and releases every intermediate handle before
-  *     returning, so the one surviving handle is the returned DataFrame
-  *     itself — the caller's to free via [[Exec.releaseScratch]] (or to
-  *     let the session drop).
+  *  2. ''Deterministic lifetime'': every cache, checkpoint and
+  *     scratch directory an operator or query creates belongs to one
+  *     [[Exec.scope]] and is released when that scope exits — see
+  *     [[Scope]]. A library caller is never asked to
+  *     `spark.catalog.clearCache()` (which would also drop caches the
+  *     CALLER owns). [[drain]] stays as the harness backstop at query
+  *     boundaries.
   */
 private[graft] object Exec {
 
@@ -105,40 +105,24 @@ private[graft] object Exec {
     }
   }
 
-  /** Eagerly materialize a SMALL result (localCheckpoint truncates its
-    * lineage so it no longer references any input file), then delete
-    * the scratch directories it was computed from. For queries that
-    * stage intermediate files/tables: without this the scratch outlives
-    * the call — leaked per run, and colliding under concurrent
-    * verifies when the path is fixed. */
-  def detachFromScratch(result: DataFrame, scratchDirs: Seq[String]): DataFrame = {
-    val out = result.localCheckpoint(true)
-    scratchDirs.foreach { p =>
-      try deleteRecursively(p)
-      catch { case NonFatal(e) => suppressed("Exec.detachFromScratch", e) }
-    }
+  /** Run `body` in a fresh [[Scope]]: everything the body caches,
+    * checkpoints or stages through the scope is released when it
+    * returns or throws. See [[Scope]] for the rules. */
+  def scope[A](body: Scope => A): A = {
+    val sc = new Scope(current.get)
+    current.set(sc)
+    val out = try body(sc) finally { current.set(sc.parent); sc.close() }
+    sc.checkResult(out)
     out
   }
 
-  /** Materialization mechanism: eager `localCheckpoint`, NOT
-    * persist+count. The result must be SELF-CONTAINED before the
-    * intermediates are dropped, because in Spark 4.1
-    * `Dataset.unpersist` on an upstream frame also drops DEPENDENT
-    * CacheManager entries (measured: persist+count the result, then
-    * unpersist an intermediate inside its plan → the result's own
-    * cache entry vanishes and every later read re-executes the full
-    * operator — the pre-round-14 `owned` paid exactly that silent 2×).
-    * The checkpoint truncates lineage, so the returned frame
-    * references nothing the cleanup below releases.
-    *
-    * Ownership: the returned frame's storage is checkpoint blocks,
-    * which `Dataset.unpersist` does NOT free — callers release it
-    * with [[releaseScratch]] (the harness mains also [[drain]]
-    * leftover checkpoint RDDs at query boundaries).
-    */
-  /** TEST-ONLY escape hatch: while set, [[owned]] returns results
-    * UNMATERIALIZED (nothing released), so plan-assert specs can
-    * inspect an operator's real execution plan — the one the eager
+  // the innermost open scope of this thread: a nested scope's kept
+  // result is handed to it
+  private val current = new ThreadLocal[Scope]
+
+  /** TEST-ONLY escape hatch: while set, [[Scope.keep]] returns results
+    * UNMATERIALIZED and scopes release nothing, so plan-assert specs
+    * can inspect an operator's real execution plan — the one the eager
     * checkpoint executes and then hides behind a LogicalRDD scan.
     * Deliberately a package-private var, NOT a system property: a
     * stray `-Dgraft.exec.planOnly` on a production launch would
@@ -151,70 +135,24 @@ private[graft] object Exec {
     * parallel runner would leak the flag into concurrent queries. */
   @volatile private[graft] var planOnlyHook: Boolean = false
 
-  def owned(result: DataFrame, intermediates: Seq[DataFrame]): DataFrame =
-    if (planOnlyHook) result
-    else try result.localCheckpoint(true)
-    finally intermediates.foreach { df =>
-      // unpersist covers CacheManager-persisted intermediates; the
-      // RDD-level release covers localCheckpoint'ed ones (whose blocks
-      // unpersist never reaches)
-      df.unpersist(blocking = false)
-      releaseScratch(df)
-    }
-
-  /** Deterministically free the block-manager storage behind DEAD
-    * `localCheckpoint`ed frames. `Dataset.unpersist` is a no-op for
-    * these (it only calls CacheManager.uncacheQuery; checkpoint blocks
-    * are held by the RDD inside the plan's LogicalRDD node), so without
-    * this call dead generations of an iterative operator — or per-call
-    * scratch of a repeated one — linger until an incidental driver GC
-    * lets the ContextCleaner reap the unreachable RDD. In a long
-    * single-JVM sweep (the 381-query bench) that backlog becomes
-    * memory pressure LATER queries pay for; at scale it is the
-    * difference between 2 live edge generations and roundsN+1.
-    *
-    * Only call on frames that are truly dead: a localCheckpointed RDD
-    * cannot recompute (lineage truncated), so reading a released frame
-    * fails with "checkpoint block not found" rather than recomputing.
-    *
-    * Releases ONLY frames that ARE checkpoint handles (plan root =
-    * LogicalRDD, what `localCheckpoint` returns) — never LogicalRDDs
-    * embedded deeper in a composed plan, because those may be a
-    * CALLER's still-live input (measured: an operator whose persisted
-    * intermediate was built over a caller-checkpointed corpus released
-    * the caller's blocks and the caller's next join died with
-    * "checkpoint block not found"). For a frame whose WHOLE plan is
-    * known-dead scratch, use [[releaseScratchDeep]]. Frames that are
-    * not checkpoint handles are skipped silently, so it is safe to
-    * pass persisted intermediates through this from [[owned]].
-    */
-  def releaseScratch(frames: org.apache.spark.sql.Dataset[_]*): Unit = {
+  /** Free the block-manager storage behind a caller-owned checkpoint
+    * handle held outside any [[Scope]] (tests, harnesses, the
+    * [[graft.Kernels]] memo). `Dataset.unpersist` cannot do this: it
+    * only reaches the CacheManager, while checkpoint blocks are held by
+    * the RDD inside the plan's LogicalRDD root. Only frames that ARE
+    * checkpoint handles are released — never LogicalRDDs deeper in a
+    * composed plan, which may be someone else's live input — and the
+    * memo's own RDDs are skipped. A released handle cannot be read
+    * again ("checkpoint block not found"). */
+  def releaseScratch(frames: Dataset[_]*): Unit = {
     val keep = graft.Kernels.liveRddIds
     frames.foreach { df =>
-      try org.apache.spark.sql.GraftSqlBridge.rootCheckpointRdd(df)
+      try GraftSqlBridge.rootCheckpointRdd(df)
         .foreach(r => if (!keep.contains(r.id)) {
           try r.unpersist(blocking = false)
           catch { case NonFatal(e) => suppressed("Exec.releaseScratch unpersist", e) }
         })
       catch { case NonFatal(e) => suppressed("Exec.releaseScratch plan", e) }
-    }
-  }
-
-  /** [[releaseScratch]], but for EVERY LogicalRDD anywhere in the
-    * frame's plan. Only for frames whose whole plan is known-dead
-    * scratch the caller assembled itself (e.g. a detached result whose
-    * routing checkpoint is now unreachable) — a composed plan over any
-    * still-live checkpoint input must not go through here. The
-    * [[graft.Kernels]] memo's RDDs are still skipped. */
-  def releaseScratchDeep(frames: org.apache.spark.sql.Dataset[_]*): Unit = {
-    val keep = graft.Kernels.liveRddIds
-    frames.foreach { df =>
-      try org.apache.spark.sql.GraftSqlBridge.checkpointRdds(df)
-        .foreach(r => if (!keep.contains(r.id)) {
-          try r.unpersist(blocking = false)
-          catch { case NonFatal(e) => suppressed("Exec.releaseScratchDeep unpersist", e) }
-        })
-      catch { case NonFatal(e) => suppressed("Exec.releaseScratchDeep plan", e) }
     }
   }
 
@@ -248,4 +186,115 @@ private[graft] object Exec {
     * naming the step, so a suppressed failure is never silent. */
   def suppressed(site: String, e: Throwable): Unit =
     System.err.println(s"[graft] suppressed in $site: $e")
+}
+
+/** The lifetime of materialized intermediates, owned by one
+  * [[Exec.scope]] call:
+  *
+  *  - [[cache]] persists a frame (MEMORY_AND_DISK) the body reads more
+  *    than once; [[checkpoint]] eagerly `localCheckpoint`s one, which
+  *    truncates its lineage (iterative loops, plans that would
+  *    otherwise grow per round).
+  *  - [[keep]] is the result handed to the caller: an eager,
+  *    self-contained checkpoint the scope does not release. In a
+  *    nested scope the kept handle moves to the enclosing scope, which
+  *    releases it on its own exit unless it keeps it in turn; outside
+  *    any scope it is the caller's ([[Exec.releaseScratch]], or the
+  *    harness [[Exec.drain]]).
+  *  - [[release]] frees a dead generation before exit. It only frees
+  *    what this scope owns, so passing a caller's input is a no-op.
+  *    Releasing a cached frame also drops the cache entries of frames
+  *    that depend on it (Spark's `Dataset.unpersist`), so release a
+  *    cached frame only when no dependent cached frame is still in use.
+  *  - [[tempDir]] is a directory under [[Exec.scratchRoot]].
+  *
+  * On exit, normal or thrown, caches are unpersisted, checkpoints are
+  * released at RDD level (`Dataset.unpersist` never reaches checkpoint
+  * blocks) and directories are deleted. A [[graft.Kernels]] memo RDD is
+  * never released. Why checkpoint rather than persist+count for the
+  * result: `Dataset.unpersist` on an intermediate also drops DEPENDENT
+  * cache entries, so a persisted result would silently recompute once
+  * its intermediates are gone; a checkpoint references none of them.
+  * A returned `Dataset` whose plan still reads a checkpoint this scope
+  * released fails at exit with `IllegalStateException` — a forgotten
+  * [[keep]] surfaces here, not later as "checkpoint block not found".
+  * Under [[Exec.planOnlyHook]] [[keep]] returns its input
+  * unmaterialized and the scope releases nothing.
+  */
+final class Scope private[operators] (private[operators] val parent: Scope) {
+  private val checkpoints = mutable.LinkedHashMap.empty[Int, RDD[_]]
+  private val caches = mutable.ArrayBuffer.empty[Dataset[_]]
+  private val dirs = mutable.ArrayBuffer.empty[String]
+  private val released = mutable.Set.empty[Int]
+
+  def cache[T](ds: Dataset[T]): Dataset[T] = {
+    val c = ds.persist(StorageLevel.MEMORY_AND_DISK)
+    caches += c
+    c
+  }
+
+  /** Eager `localCheckpoint`; a frame that already is a checkpoint
+    * handle is returned as it is, never checkpointed twice. */
+  def checkpoint[T](ds: Dataset[T]): Dataset[T] =
+    if (GraftSqlBridge.rootCheckpointRdd(ds).isDefined) ds
+    else {
+      val c = ds.localCheckpoint(true)
+      GraftSqlBridge.rootCheckpointRdd(c).foreach(r => checkpoints(r.id) = r)
+      c
+    }
+
+  def keep[T](ds: Dataset[T]): Dataset[T] =
+    if (Exec.planOnlyHook) ds
+    else {
+      val c = checkpoint(ds)
+      GraftSqlBridge.rootCheckpointRdd(c).flatMap(r => checkpoints.remove(r.id))
+        .foreach(r => if (parent != null) parent.checkpoints(r.id) = r)
+      c
+    }
+
+  def release(dss: Dataset[_]*): Unit = if (!Exec.planOnlyHook) {
+    val memo = graft.Kernels.liveRddIds
+    dss.foreach { ds =>
+      GraftSqlBridge.rootCheckpointRdd(ds).flatMap(r => checkpoints.remove(r.id))
+        .foreach(free(_, memo))
+      val i = caches.indexWhere(_ eq ds)
+      if (i >= 0) unpersist(caches.remove(i))
+    }
+  }
+
+  def tempDir(prefix: String): String = {
+    val d = Exec.scratchTempDir(prefix).toString
+    dirs += d
+    d
+  }
+
+  private def free(r: RDD[_], memo: Set[Int]): Unit = if (!memo.contains(r.id)) {
+    released += r.id
+    try r.unpersist(blocking = false)
+    catch { case NonFatal(e) => Exec.suppressed("Scope checkpoint", e) }
+  }
+
+  private def unpersist(ds: Dataset[_]): Unit =
+    try ds.unpersist(blocking = false)
+    catch { case NonFatal(e) => Exec.suppressed("Scope cache", e) }
+
+  private[operators] def close(): Unit = if (!Exec.planOnlyHook) {
+    caches.foreach(unpersist)
+    val memo = graft.Kernels.liveRddIds
+    checkpoints.values.foreach(free(_, memo))
+    dirs.foreach { d =>
+      try Exec.deleteRecursively(d)
+      catch { case NonFatal(e) => Exec.suppressed("Scope tempDir", e) }
+    }
+    caches.clear(); checkpoints.clear(); dirs.clear()
+  }
+
+  private[operators] def checkResult(out: Any): Unit = out match {
+    case ds: Dataset[_] if released.nonEmpty =>
+      val dead = GraftSqlBridge.checkpointRdds(ds).map(_.id).filter(released)
+      if (dead.nonEmpty) throw new IllegalStateException(
+        s"scope result reads checkpoint RDD ${dead.mkString(", ")} that the " +
+          "scope released on exit: keep the result")
+    case _ =>
+  }
 }

@@ -123,18 +123,17 @@ object Fuzzy {
     */
   def snmBlockingStats(df: DataFrame, idCol: String, strCol: String,
                        blockLen: Int = 4, window: Int = 3,
-                       maxDist: Int = 2): DataFrame = {
+                       maxDist: Int = 2): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.functions.{count => cnt}
-    val cand = snmCandidates(df, idCol, strCol, blockLen, window)
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val cand = sc.cache(snmCandidates(df, idCol, strCol, blockLen, window)
+      .distinct())
     val nc = cand.agg(cnt(lit(1)).as("n_candidates"))
     val nm = cand.filter(levenshtein(col("str_a"), col("str_b"))
         <= maxDist)
       .agg(cnt(lit(1)).as("n_matched"))
     val nr = df.agg(cnt(lit(1)).as("n_rows"))
     val out = nr.crossJoin(broadcast(nc)).crossJoin(broadcast(nm))
-    Exec.owned(out, Seq(cand))
+    sc.keep(out)
   }
 
   def jaroWinklerPairs(df: DataFrame, idCol: String, strCol: String,

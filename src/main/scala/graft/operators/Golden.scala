@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Golden-record survivorship — the step AFTER record linkage turns
   * match pairs into one canonical row per entity: transitive-closure
@@ -34,8 +33,8 @@ object Golden {
     */
   def goldenRecords(records: DataFrame, idCol: String, qualityCol: String,
                     payloadCols: Seq[String], pairs: DataFrame,
-                    aCol: String, bCol: String): DataFrame = {
-    val rec = records.persist(StorageLevel.MEMORY_AND_DISK)
+                    aCol: String, bCol: String): DataFrame = Exec.scope { sc =>
+    val rec = sc.cache(records)
     val clusters = Dedup.connectedComponents(pairs, aCol, bCol)
       .select(col("id").as("__node"), col("cluster_id"))
     val members = rec.join(clusters, rec(idCol) === col("__node"))
@@ -50,6 +49,6 @@ object Golden {
       (-col("__pick.negid")).as("__sid"))
     val payload = rec.select(
       col(idCol).as("__sid") +: payloadCols.map(c => col(c).as(s"rep_$c")): _*)
-    Exec.owned(surv.join(payload, "__sid").drop("__sid"), Seq(rec))
+    sc.keep(surv.join(payload, "__sid").drop("__sid"))
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Rounding.{roundTo => round}
 
@@ -41,7 +40,8 @@ object Graph {
     * identical). Returns `(node, rank)` quantized to 9 decimals.
     */
   def pagerank(edges: DataFrame, damping: Double = 0.85,
-               iters: Int = 2, undirected: Boolean = false): DataFrame = {
+               iters: Int = 2,
+               undirected: Boolean = false): DataFrame = Exec.scope { sc =>
     require(iters >= 0, "iters must be >= 0")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     // the edge table is PINNED to hash(src) ONCE, up front: the
@@ -56,27 +56,24 @@ object Graph {
     // distinct's own exchange it does coalesce, the partition-count
     // mismatch that re-shuffled the node table every round and cost
     // q92 its 10×-scale ratio in the round-7 rehearsal.
-    val e = Exec.pin(edges.select(col("src"), col("dst")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = sc.cache(Exec.pin(edges.select(col("src"), col("dst")), "src"))
     // 1/outdeg folded into the edge table once — per-round cost is the
     // small rank table's shuffle, not a degree recompute; both the
     // aggregation and the join run exchange-free on e's pinned layout,
     // and `weighted` INHERITS hash(src) through them (no re-pin)
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val weighted = e.join(outdeg, "src")
+    val weighted = sc.cache(e.join(outdeg, "src")
       .select(col("src"), col("dst"),
-        (lit(1.0) / col("deg")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        (lit(1.0) / col("deg")).as("w")))
     // node set: a symmetrized graph's src set IS the node set, so the
     // undirected path re-reads the (node-sized, already-distinct)
     // out-degree srcs — no edge-sized endpoint union, no distinct
     // shuffle. The directed path unions both endpoint sets.
-    val nodes = (
+    val nodes = sc.cache(
       if (undirected) Exec.pin(outdeg.select(col("src").as("node")), "node")
       else Exec.pin(e.select(col("src").as("node"))
           .unionByName(e.select(col("dst").as("node"))), "node")
-        .distinct()
-      ).persist(StorageLevel.MEMORY_AND_DISK)
+        .distinct())
 
     val nRow = nodes.count().toDouble // materializes the caches below it
     val init = nodes.withColumn("rank", round(lit(1.0 / nRow), 9))
@@ -88,7 +85,7 @@ object Graph {
           round(lit((1 - damping) / nRow) +
             lit(damping) * coalesce(col("mass"), lit(0.0)), 9).as("rank"))
     }
-    Exec.owned(ranks, Seq(e, weighted, nodes))
+    sc.keep(ranks)
   }
 
   /** Personalized PageRank: [[pagerank]] with the teleport mass
@@ -106,31 +103,27 @@ object Graph {
     */
   def personalizedPagerank(edges: DataFrame, sources: DataFrame,
                            srcCol: String, damping: Double = 0.85,
-                           iters: Int = 2): DataFrame = {
+                           iters: Int = 2): DataFrame = Exec.scope { sc =>
     require(iters >= 0, "iters must be >= 0")
     require(damping > 0 && damping < 1, "damping must be in (0, 1)")
     // same one-pin layout discipline as [[pagerank]]: e pinned to
     // hash(src) once; outdeg/weighted inherit it exchange-free; nodes
     // pinned before its distinct; per-round exchanges move only the
     // rank/contrib tables, never nodes or edges
-    val e = Exec.pin(edges.select(col("src"), col("dst")), "src")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val e = sc.cache(Exec.pin(edges.select(col("src"), col("dst")), "src"))
     val outdeg = e.groupBy("src").agg(count(lit(1)).as("deg"))
-    val weighted = e.join(outdeg, "src")
-      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val nodes = Exec.pin(e.select(col("src").as("node"))
+    val weighted = sc.cache(e.join(outdeg, "src")
+      .select(col("src"), col("dst"), (lit(1.0) / col("deg")).as("w")))
+    val nodes = sc.cache(Exec.pin(e.select(col("src").as("node"))
         .unionByName(e.select(col("dst").as("node"))), "node")
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val srcs = sources.select(col(srcCol).as("node")).distinct()
     val nS = srcs.count().toDouble
     require(nS > 0, "source set must be non-empty")
-    val tele = nodes
+    val tele = sc.cache(nodes
       .join(srcs.withColumn("t", lit(true)), Seq("node"), "left")
       .select(col("node"),
-        when(col("t").isNotNull, lit(1.0 / nS)).otherwise(lit(0.0)).as("p"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        when(col("t").isNotNull, lit(1.0 / nS)).otherwise(lit(0.0)).as("p")))
     val init = tele.select(col("node"), round(col("p"), 9).as("rank"))
     val ranks = (1 to iters).foldLeft(init) { (r, _) =>
       val contrib = r.join(weighted, col("node") === col("src"))
@@ -140,7 +133,7 @@ object Graph {
           round(lit(1 - damping) * col("p") +
             lit(damping) * coalesce(col("mass"), lit(0.0)), 9).as("rank"))
     }
-    Exec.owned(ranks, Seq(e, nodes, weighted, tele))
+    sc.keep(ranks)
   }
 
   /** HITS (hubs & authorities) over a directed/bipartite edge table
@@ -173,18 +166,16 @@ object Graph {
     * tables union into the one result frame).
     */
   def hits(edges: DataFrame, aCol: String, bCol: String,
-           iters: Int = 2): DataFrame = {
+           iters: Int = 2): DataFrame = Exec.scope { sc =>
     require(iters >= 1, "iters must be >= 1")
     // both edge copies are PINNED to their half-round join key:
     // distinct() leaves the table hash(a,b)-partitioned, which matches
     // NEITHER join — without the explicit hash(a) pin the hub→auth
     // half-round re-shuffles the edge table every iteration
-    val e = Exec.pin(
+    val e = sc.cache(Exec.pin(
         edges.select(col(aCol).as("a"), col(bCol).as("b")), "a")
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val eByB = Exec.pin(e, "b")
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
+    val eByB = sc.cache(Exec.pin(e, "b"))
     val hubs0 = e.select(col("a").as("node")).distinct()
     val nHubs = hubs0.count().toDouble // materializes the edge cache too
     // scores live as 1e9-scaled LONG units ("u") between half-rounds:
@@ -194,42 +185,35 @@ object Graph {
     // per half-round is the normalize divide, a pure function of two
     // integers (identical in any engine); its result re-enters the
     // integer grid immediately.
-    // score-generation checkpoints are collected and released with the
-    // result materialization — checkpoint blocks need the RDD-level
-    // release (plain unpersist is CacheManager-only)
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     def l1norm(raw: DataFrame): DataFrame = {
-      val r = raw.localCheckpoint(true)
+      val r = sc.checkpoint(raw)
       val total = r.agg(sum("u").as("tot"))
-      val normed = r.crossJoin(broadcast(total))
+      val normed = sc.checkpoint(r.crossJoin(broadcast(total))
         .select(col("node"),
           round(col("u").cast("double") * 1e9 / col("tot").cast("double"),
-            0).cast("long").as("u"))
-        .localCheckpoint(true)
+            0).cast("long").as("u")))
       // normed is self-contained — the raw half-round checkpoint is dead
-      Exec.releaseScratch(r)
-      scratch += normed
+      sc.release(r)
       normed
     }
-    val init = hubs0
-      .withColumn("u", round(lit(1e9 / nHubs), 0).cast("long"))
-      .localCheckpoint(true)
-    scratch += init
+    val init = sc.checkpoint(hubs0
+      .withColumn("u", round(lit(1e9 / nHubs), 0).cast("long")))
     val (hub, auth) = (1 to iters).foldLeft(
-        (init, init.limit(0))) { case ((h, _), _) =>
+        (init, init.limit(0))) { case ((h, a), _) =>
       val a2 = l1norm(h.join(e, col("node") === col("a"))
         .groupBy(col("b")).agg(sum("u").as("u"))
         .select(col("b").as("node"), col("u")))
       val h2 = l1norm(a2.join(eByB, col("node") === col("b"))
         .groupBy(col("a")).agg(sum("u").as("u"))
         .select(col("a").as("node"), col("u")))
+      sc.release(h, a)
       (h2, a2)
     }
     val out = hub.withColumn("side", lit("hub"))
       .unionByName(auth.withColumn("side", lit("auth")))
       .select(col("node"), col("side"),
         round(col("u").cast("double") / 1e9, 9).as("score"))
-    Exec.owned(out, Seq(e, eByB) ++ scratch)
+    sc.keep(out)
   }
 
   /** Synchronous label propagation (community detection): `rounds`
@@ -253,16 +237,14 @@ object Graph {
     * truncated per round like the other iterative operators.
     */
   def labelPropagation(edges: DataFrame, aCol: String, bCol: String,
-                       rounds: Int): DataFrame = {
+                       rounds: Int): DataFrame = Exec.scope { sc =>
     require(rounds >= 1, "rounds must be >= 1")
-    val e = edges.select(col(aCol).as("src"), col(bCol).as("dst"))
+    val e = sc.checkpoint(edges.select(col(aCol).as("src"), col(bCol).as("dst"))
       .unionByName(
         edges.select(col(bCol).as("src"), col(aCol).as("dst")))
-      .distinct()
-      .localCheckpoint(true)
-    var labels = e.select(col("src").as("node")).distinct()
-      .withColumn("lbl", col("node"))
-      .localCheckpoint(true)
+      .distinct())
+    var labels = sc.checkpoint(e.select(col("src").as("node")).distinct()
+      .withColumn("lbl", col("node")))
     val w = org.apache.spark.sql.expressions.Window
       .partitionBy("node").orderBy(col("c").desc, col("lbl").asc)
     (1 to rounds).foreach { _ =>
@@ -270,20 +252,14 @@ object Graph {
             col("lbl")), col("dst") === col("dst_n"))
         .groupBy(col("src").as("node"), col("lbl"))
         .agg(count(lit(1)).as("c"))
-      val next = votes
+      val next = sc.checkpoint(votes
         .withColumn("rn", row_number().over(w))
         .filter(col("rn") === 1)
-        .select(col("node"), col("lbl"))
-        .localCheckpoint(true)
-      // next is materialized — the previous sweep's label blocks are
-      // dead now (RDD-level release; unpersist would be a no-op)
-      Exec.releaseScratch(labels)
+        .select(col("node"), col("lbl")))
+      sc.release(labels)
       labels = next
     }
-    // node-sized result, owned so the final label/edge checkpoints are
-    // released before the operator returns
-    Exec.owned(labels.select(col("node"), col("lbl").as("community")),
-      Seq(labels, e))
+    sc.keep(labels.select(col("node"), col("lbl").as("community")))
   }
 
   /** Deterministic negative edge sampling — the non-edges a link-
@@ -300,16 +276,16 @@ object Graph {
     * (`u < v`) candidate non-edges.
     */
   def negativeSample(edges: DataFrame, aCol: String, bCol: String,
-                     buckets: Int, salt: String = "neg"): DataFrame = {
+                     buckets: Int,
+                     salt: String = "neg"): DataFrame = Exec.scope { sc =>
     require(buckets >= 1, "buckets must be >= 1")
     // the edge input feeds both endpoint projections AND the anti-join
     // — persist a canonical projection of it (a derived plan, so
     // releasing it cannot drop a cache the CALLER registered on the
     // same input) or the upstream edge build re-executes three times
-    val canon = edges.select(
+    val canon = sc.cache(edges.select(
         least(col(aCol), col(bCol)).as("u"),
-        greatest(col(aCol), col(bCol)).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        greatest(col(aCol), col(bCol)).as("v")))
     val nodes = canon.select(col("u").as("node"))
       .unionByName(canon.select(col("v").as("node")))
       .distinct()
@@ -323,7 +299,7 @@ object Graph {
       .filter(col("nxt").isNotNull)
       .select(least(col("node"), col("nxt")).as("u"),
         greatest(col("node"), col("nxt")).as("v"))
-    Exec.owned(cand.join(canon, Seq("u", "v"), "left_anti"), Seq(canon))
+    sc.keep(cand.join(canon, Seq("u", "v"), "left_anti"))
   }
 
   /** Per-node triangle counts over an undirected edge table: `(node,
@@ -348,14 +324,13 @@ object Graph {
     * rebalance; nothing all-pairs.
     */
   def triangleCounts(edges: DataFrame, aCol: String,
-                     bCol: String): DataFrame = {
+                     bCol: String): DataFrame = Exec.scope { sc =>
     // canonical undirected edge set: (u < v), self-loops dropped
-    val und = edges.select(
+    val und = sc.cache(edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val deg = und.select(col("u").as("node"))
       .unionByName(und.select(col("v").as("node")))
       .groupBy("node").agg(count(lit(1)).as("deg"))
@@ -364,15 +339,14 @@ object Graph {
     // at scale; AQE broadcasts it when it actually fits)
     val du = deg.select(col("node").as("u"), col("deg").as("du"))
     val dv = deg.select(col("node").as("v"), col("deg").as("dv"))
-    val oriented = und.join(du, "u").join(dv, "v")
+    val oriented = sc.cache(und.join(du, "u").join(dv, "v")
       .select(
         when(col("du") < col("dv") ||
              (col("du") === col("dv") && col("u") < col("v")),
           col("u")).otherwise(col("v")).as("s"),
         when(col("du") < col("dv") ||
              (col("du") === col("dv") && col("u") < col("v")),
-          col("v")).otherwise(col("u")).as("t"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          col("v")).otherwise(col("u")).as("t")))
     val tri = oriented.as("e1")
       .join(oriented.as("e2"), col("e1.t") === col("e2.s"))
       .join(oriented.as("e3"),
@@ -382,7 +356,7 @@ object Graph {
     val counts = tri
       .select(explode(array(col("a"), col("b"), col("c"))).as("node"))
       .groupBy("node").agg(count(lit(1)).as("n_triangles"))
-    Exec.owned(counts, Seq(und, oriented))
+    sc.keep(counts)
   }
 
   /** k-hop BFS distances from a source set over an UNDIRECTED edge
@@ -409,7 +383,8 @@ object Graph {
     * functions of the graph, no tie-breaks needed.
     */
   def bfsHops(edges: DataFrame, aCol: String, bCol: String,
-              sources: DataFrame, srcCol: String, hops: Int): DataFrame = {
+              sources: DataFrame, srcCol: String,
+              hops: Int): DataFrame = Exec.scope { sc =>
     require(hops >= 0, "hops must be non-negative")
     // pin-then-distinct is deliberate, and distinct-then-pin (so the
     // persisted table carries HashPartitioning(s) and the hop joins
@@ -422,15 +397,13 @@ object Graph {
     // subplans. An exchange-free und side instead plans sort-merge,
     // re-sorting the full edge table once per hop per recomputed
     // subplan with nothing reusable.
-    val und = Exec.pin(edges
+    val und = sc.cache(Exec.pin(edges
         .select(col(aCol).as("s"), col(bCol).as("d"))
         .unionByName(edges.select(col(bCol).as("s"), col(aCol).as("d"))),
         "s")
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val init = sources.select(col(srcCol).as("node")).distinct()
       .withColumn("dist", lit(0))
-    val scratch = scala.collection.mutable.ArrayBuffer.empty[DataFrame]
     val dist = (1 to hops).foldLeft(init) { (acc, h) =>
       val frontier = acc.filter(col("dist") === h - 1)
       val reached = frontier
@@ -439,13 +412,9 @@ object Graph {
         .join(acc, Seq("node"), "left_anti")
         .withColumn("dist", lit(h))
       val next = acc.unionByName(reached)
-      if (h % 3 == 0 && h < hops) {
-        val cp = next.localCheckpoint()
-        scratch += cp
-        cp
-      } else next
+      if (h % 3 == 0 && h < hops) sc.checkpoint(next) else next
     }
-    Exec.owned(dist, Seq(und) ++ scratch)
+    sc.keep(dist)
   }
 
   /** Adamic-Adar link prediction: for every NON-edge pair (a, b) with
@@ -469,15 +438,15 @@ object Graph {
     * the human-readable unscaled value.
     */
   def adamicAdar(edges: DataFrame, aCol: String, bCol: String,
-                 maxMidDegree: Int = 64, topK: Int = 25): DataFrame = {
+                 maxMidDegree: Int = 64,
+                 topK: Int = 25): DataFrame = Exec.scope { sc =>
     require(maxMidDegree >= 2, "maxMidDegree must be at least 2")
     val scale = (1L << 24).toDouble
-    val und = edges.select(
+    val und = sc.cache(edges.select(
         least(col(aCol), col(bCol)).as("u"),
         greatest(col(aCol), col(bCol)).as("v"))
       .filter(col("u") =!= col("v"))
-      .distinct()
-      .persist(StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val adj = und.select(col("u").as("s"), col("v").as("d"))
       .unionByName(und.select(col("v").as("s"), col("u").as("d")))
     val deg = adj.groupBy(col("s").as("node"))
@@ -503,6 +472,6 @@ object Graph {
         round(col("score_q").cast("double") / lit(scale), 4).as("score"))
       .orderBy(col("score_q").desc, col("a"), col("b"))
       .limit(topK)
-    Exec.owned(out, Seq(und))
+    sc.keep(out)
   }
 }

@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Rounding.{roundTo => round}
 import graft.functions.VectorFunctions.dot
@@ -22,9 +21,9 @@ import graft.functions.VectorFunctions.dot
   *  - the centroid update is one hash aggregation of (cid, dim) —
   *    k·dims rows out, corpus-sized rows in, map-side combine does the
   *    heavy lifting exactly like the reference's two-level OLS reduce.
-  * The corpus projection is persisted once for the whole loop (each
-  * iteration is two scans of it: assign + update) and released via the
-  * owned-result pattern.
+  * The corpus projection is cached once for the whole loop (each
+  * iteration is two scans of it: assign + update) and released when
+  * the operator's scope exits.
   *
   * Reproducibility semantics (deliberate, documented): distances and
   * centroid coordinates are QUANTIZED each round (`round(·, 8)` /
@@ -56,13 +55,12 @@ object KMeans {
     * same behavior in the SQL mirror).
     */
   def lloyd(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-            iters: Int): DataFrame = {
+            iters: Int): DataFrame = Exec.scope { sc =>
     require(k >= 1, "k must be >= 1")
     require(iters >= 0, "iters must be >= 0")
-    val v = Exec.widen(emb, idCol)
+    val v = sc.cache(Exec.widen(emb, idCol)
       .select(col(idCol).as("vid"),
-        transform(col(vecCol), x => x.cast("double")).as("v"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        transform(col(vecCol), x => x.cast("double")).as("v")))
 
     // seeds: k smallest ids, cid = rank in id order, coordinates
     // quantized like every later round's
@@ -98,6 +96,6 @@ object KMeans {
       .groupBy("cid")
       .agg(count(lit(1)).as("n_members"),
         round(sum("d2"), 4).as("inertia"))
-    Exec.owned(result, Seq(v))
+    sc.keep(result)
   }
 }

@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.functions.Rounding.{roundTo => round}
 import graft.functions.VectorFunctions.dot
@@ -111,13 +110,13 @@ object Pq {
     * only the broadcast grows to m·256 rows.
     */
   def codebookStats(emb: DataFrame, idCol: String, vecCol: String,
-                    dim: Int, m: Int, k: Int, iters: Int): DataFrame = {
+                    dim: Int, m: Int, k: Int,
+                    iters: Int): DataFrame = Exec.scope { sc =>
     require(m >= 1 && dim % m == 0,
       s"dim $dim must split into m=$m equal subvectors")
     require(k >= 1, "k must be >= 1")
     require(iters >= 0, "iters must be >= 0")
-    val sub = subvectors(emb, idCol, vecCol, dim, m)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sub = sc.cache(subvectors(emb, idCol, vecCol, dim, m))
     val init = seedCodebook(emb, idCol, vecCol, dim, m, k)
     val codebook = (1 to iters).foldLeft(init) { (c, _) =>
       update(assign(sub, c)) }
@@ -125,7 +124,7 @@ object Pq {
       .groupBy("sub", "cid")
       .agg(count(lit(1)).as("n_vectors"),
         round(sum("d2"), 4).as("inertia"))
-    Exec.owned(result, Seq(sub))
+    sc.keep(result)
   }
 
   /** Asymmetric-distance (ADC) top-k: encode the corpus once, then for
@@ -142,13 +141,12 @@ object Pq {
     */
   def adcTopK(emb: DataFrame, queries: DataFrame, idCol: String,
               vecCol: String, dim: Int, m: Int, k: Int, iters: Int,
-              topK: Int): DataFrame = {
+              topK: Int): DataFrame = Exec.scope { sc =>
     require(m >= 1 && dim % m == 0,
       s"dim $dim must split into m=$m equal subvectors")
     require(k >= 1 && iters >= 0 && topK >= 1,
       "k, iters, topK must be positive")
-    val sub = subvectors(emb, idCol, vecCol, dim, m)
-      .persist(StorageLevel.MEMORY_AND_DISK)
+    val sub = sc.cache(subvectors(emb, idCol, vecCol, dim, m))
     val init = seedCodebook(emb, idCol, vecCol, dim, m, k)
     val codebook = (1 to iters).foldLeft(init) { (c, _) =>
       update(assign(sub, c)) }
@@ -172,6 +170,6 @@ object Pq {
       .select(col("qid").as("query_id"), col("rank").cast("int").as("rank"),
         col("vid").as("neighbor_id"),
         round(col("di") / lit(1e6), 6).as("adc_d2"))
-    Exec.owned(result, Seq(sub))
+    sc.keep(result)
   }
 }

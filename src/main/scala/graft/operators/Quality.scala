@@ -2,7 +2,6 @@ package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
 import org.apache.spark.sql.expressions.Window
-import org.apache.spark.storage.StorageLevel
 import org.apache.spark.sql.functions._
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
@@ -536,20 +535,18 @@ object Quality {
     * multiplicity `nv` — callers that already hold a per-value count
     * table (q240 bins from the same table) skip the corpus pass. The
     * count table feeds bounds, bucketing, offsets AND totals, so it
-    * is persisted here (value-cardinality-sized — the safe side of
+    * is cached here (value-cardinality-sized — the safe side of
     * the persist-vs-recompute line; the 4×-corpus melt is not) and
-    * UNPERSISTED before returning: the groups×fracs result is
-    * localCheckpoint-pinned eagerly, so no cached partitions outlive
-    * the call (library callers don't all run under Bench's
-    * clearCache-between-queries regime).
+    * released before returning: the groups×fracs result is kept as
+    * an eager checkpoint, so no cached partitions outlive the call.
     */
   def groupedRankQuantilesFromCounts(valsIn: DataFrame,
                                      fracs: Seq[(Int, Int)],
-                                     buckets: Int = 32): DataFrame = {
+                                     buckets: Int = 32): DataFrame = Exec.scope { sc =>
     require(buckets >= 1 && fracs.nonEmpty, "need buckets and fractions")
     fracs.foreach { case (p, q) =>
       require(p >= 0 && q > 0 && p <= q, s"bad fraction $p/$q") }
-    val vals = valsIn.persist(StorageLevel.MEMORY_AND_DISK)
+    val vals = sc.cache(valsIn)
     val bFracs = (1 until buckets).map(_.toDouble / buckets)
     val boundsDf =
       if (buckets == 1) vals.agg(array().cast("array<double>").as("bounds"))
@@ -582,16 +579,13 @@ object Quality {
     val targets = totals.crossJoin(broadcast(fracsDf))
       .select(col("g"), col("qi"), greatest(lit(1L),
         expr("(p * tw + q - 1) div q")).as("target"))
-    val out = bucketed
+    sc.keep(bucketed
       .withColumn("lcw", sum("nv").over(inBucket))
       .join(offsets, Seq("g", "bk"))
       .select(col("g"), col("v"), (col("lcw") + col("ob")).as("cw"))
       .join(broadcast(targets), Seq("g"))
       .filter(col("cw") >= col("target"))
       .groupBy("g", "qi")
-      .agg(min(col("v")).as("value"))
-      .localCheckpoint(true)
-    vals.unpersist(blocking = false)
-    out
+      .agg(min(col("v")).as("value")))
   }
 }

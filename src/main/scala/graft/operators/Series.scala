@@ -3,7 +3,6 @@ package graft.operators
 import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 /** Time-series regularization — turning an irregular event stream into
   * the dense, gap-filled grid every downstream window/forecast/feature
@@ -71,15 +70,14 @@ object Series {
     * weeks| rows. No window over the corpus, no sort.
     */
   def retentionCohorts(events: DataFrame, userCol: String, tsCol: String,
-                       epoch: String = "1990-01-01"): DataFrame = {
+                       epoch: String = "1990-01-01"): DataFrame = Exec.scope { sc =>
     val week = floor(datediff(to_date(col(tsCol)),
       lit(epoch).cast("date")) / 7).cast("long")
     // referenced by the cohort min AND the final join — without a
     // persist Spark re-executes the corpus scan + distinct shuffle per
     // reference (3 corpus scans at 100 TB instead of 1)
-    val userWeeks = events
-      .select(col(userCol).as("u"), week.as("week")).distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val userWeeks = sc.cache(events
+      .select(col(userCol).as("u"), week.as("week")).distinct())
     val cohorts = userWeeks.groupBy("u")
       .agg(min(col("week")).as("cohort_week"))
     val sizes = cohorts.groupBy("cohort_week")
@@ -93,7 +91,7 @@ object Series {
         graft.functions.Rounding.roundTo(
           col("n_users").cast("double") / col("cohort_size").cast("double"),
           4).as("retention"))
-    Exec.owned(result, Seq(userWeeks))
+    sc.keep(result)
   }
 
   /** Rolling z-score anomaly flags over per-type daily volumes:
@@ -403,7 +401,8 @@ object Series {
     * with forecast = level + trend + s_next (4 dp).
     */
   def holtWintersDaily(events: DataFrame, typeCol: String, tsCol: String,
-                       alpha: Double = 0.5, beta: Double = 0.5): DataFrame = {
+                       alpha: Double = 0.5,
+                       beta: Double = 0.5): DataFrame = Exec.scope { sc =>
     def pow2(v: Double) = v > 0 && v <= 1 &&
       (java.lang.Double.doubleToLongBits(v) & ((1L << 52) - 1)) == 0
     require(pow2(alpha) && pow2(beta),
@@ -412,25 +411,22 @@ object Series {
       lit("1990-01-01").cast("date")).cast("long")
     val obs = events.select(col(typeCol).as("k"), epochDay.as("t"))
       .groupBy("k", "t").agg(count(lit(1)).as("cnt"))
-    val span = obs.agg(min(col("t")).as("t0"), max(col("t")).as("t1"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
-    val grid = obs.select("k").distinct()
+    val span = sc.cache(obs.agg(min(col("t")).as("t0"), max(col("t")).as("t1")))
+    val grid = sc.cache(obs.select("k").distinct()
       .crossJoin(broadcast(span.select(
         explode(sequence(col("t0"), col("t1"))).as("t"))))
       .join(obs, Seq("k", "t"), "left")
       .select(col("k"), col("t"), pmod(col("t"), lit(7L)).as("dow"),
-        coalesce(col("cnt"), lit(0L)).cast("double").as("x"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+        coalesce(col("cnt"), lit(0L)).cast("double").as("x")))
     // additive seasonal index per (series, dow): integer-exact sums,
     // one quantized division — identical doubles in any engine
-    val seas = grid.groupBy("k", "dow")
+    val seas = sc.cache(grid.groupBy("k", "dow")
       .agg(sum("x").as("sx"), count(lit(1)).as("nx"))
       .join(grid.groupBy("k").agg(sum("x").as("so"),
         count(lit(1)).as("no")), "k")
       .select(col("k"), col("dow"),
         graft.functions.Rounding.roundTo(
-          col("sx") / col("nx") - col("so") / col("no"), 6).as("s"))
-      .persist(StorageLevel.MEMORY_AND_DISK)
+          col("sx") / col("nx") - col("so") / col("no"), 6).as("s")))
     val series = grid.join(seas, Seq("k", "dow"))
       .select(col("k"), col("t"), (col("x") - col("s")).as("x"))
       .groupBy("k")
@@ -461,7 +457,7 @@ object Series {
         col("s_next"),
         graft.functions.Rounding.roundTo(
           col("st.l") + col("st.b") + col("s_next"), 4).as("forecast"))
-    Exec.owned(out, Seq(span, grid, seas))
+    sc.keep(out)
   }
 
   def dailyGapFill(events: DataFrame, keyCol: String,

@@ -139,23 +139,24 @@ object Similarity {
     * as the in-memory path — the round-trip must not change results.
     */
   def ivfIndexQuery(queries: DataFrame, idCol: String, vecCol: String,
-                    dir: String, k: Int, nprobe: Int = 2): DataFrame = {
+                    dir: String, k: Int,
+                    nprobe: Int = 2): DataFrame = Exec.scope { sc =>
     val s = queries.sparkSession
     val cents = s.read.parquet(s"$dir/centroids")
     val q = queries.select(col(idCol).as("query_id"), col(vecCol).as("qv"),
       norm(col(vecCol)).as("qn"))
     val wCell = Window.partitionBy("query_id")
       .orderBy(desc("ccos"), asc("cell"))
-    val probes = q.crossJoin(broadcast(cents))
+    // tiny (nprobe rows per query) — materialized once so the
+    // probed-cell collect and the candidate join don't re-route; kept,
+    // because the returned frame reads it (an enclosing scope frees it)
+    val probes = sc.keep(q.crossJoin(broadcast(cents))
       .withColumn("ccos", round(
         dot(col("qv"), col("cvec")) /
           (col("qn") * sqrt(dot(col("cvec"), col("cvec")))), 4))
       .withColumn("crank", row_number().over(wCell))
       .filter(col("crank") <= nprobe)
-      .select(col("query_id"), col("qv"), col("qn"), col("cell"))
-      // tiny (nprobe rows per query) — materialized once so the
-      // probed-cell collect and the candidate join don't re-route
-      .localCheckpoint(true)
+      .select(col("query_id"), col("qv"), col("qn"), col("cell")))
     val probedCells = probes.select("cell").distinct().collect()
       .map(_.get(0)).toSeq
     val c = s.read.parquet(s"$dir/cells")
@@ -304,7 +305,7 @@ object Similarity {
     * DECIMAL(38,0) product — no FP sum anywhere, so no accumulation-
     * order hazard. */
   def lof(emb: DataFrame, idCol: String, vecCol: String, k: Int,
-          queryPred: Column): DataFrame = {
+          queryPred: Column): DataFrame = Exec.scope { sc =>
     val corpus = Exec.widen(emb, idCol)
       .select(col(idCol).as("cid"), col(vecCol).as("cvec"))
     val points = emb.select(col(idCol).as("pid"), col(vecCol).as("pvec"))
@@ -314,13 +315,12 @@ object Similarity {
       val d2 = dot(col("pvec"), col("pvec")) +
         dot(col("cvec"), col("cvec")) -
         lit(2.0) * dot(col("pvec"), col("cvec"))
-      corpus.join(broadcast(ps), col("pid") =!= col("cid"))
+      sc.checkpoint(corpus.join(broadcast(ps), col("pid") =!= col("cid"))
         .withColumn("du", floor(d2 * lit(1e6) + lit(0.5)).cast("long"))
         .withColumn("rn", row_number().over(
           Window.partitionBy("pid").orderBy(col("du").asc, col("cid").asc)))
         .filter(col("rn") <= k)
-        .select(col("pid"), col("cid").as("nid"), col("du"))
-        .localCheckpoint(true)
+        .select(col("pid"), col("cid").as("nid"), col("du")))
     }
     def expand(nn: DataFrame): DataFrame =
       nn.select(col("nid").as("pid")).distinct()
@@ -349,9 +349,6 @@ object Similarity {
         round((col("ilrd").cast(dec) * col("rsum").cast(dec))
           .cast("double") / lit(k.toDouble * 1e18), 6).as("lof"))
       .orderBy("query_id")
-    // query-set-sized result, owned so the three per-hop kNN
-    // checkpoints are released before the call returns (checkpoint
-    // blocks need the RDD-level release, not unpersist)
-    Exec.owned(result, Seq(n1, n2, n3))
+    sc.keep(result)
   }
 }

@@ -101,7 +101,7 @@ object Spans {
     * same contract as [[dropRepeatedSpans]]'s drop-set).
     */
   def repeatedPassages(docs: DataFrame, idCol: String, textCol: String,
-                       k: Int = 8, maxOcc: Int = 1): DataFrame = {
+                       k: Int = 8, maxOcc: Int = 1): DataFrame = Exec.scope { sc =>
     require(k >= 2, "window must span at least 2 words")
     require(maxOcc >= 1, "maxOcc must be >= 1")
     val ws = words(col(textCol))
@@ -121,10 +121,9 @@ object Spans {
         i => xxhash64(slice(whArr, i, lit(k)))))
     // the window-hash projection feeds BOTH the
     // occurrence count and the flag join — hash once, not twice
-    val wins = docs
+    val wins = sc.cache(docs
       .select(col(idCol).as("id"), posexplode(winArr).as(Seq("p0", "wh")))
-      .select(col("id"), (col("p0") + 1).as("pos"), col("wh"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .select(col("id"), (col("p0") + 1).as("pos"), col("wh")))
     val repSet = broadcast(
       wins.groupBy("wh").agg(count(lit(1)).as("occ"))
         .filter(col("occ") > maxOcc)
@@ -143,6 +142,6 @@ object Spans {
         sum(col("e") - col("s") + 1).as("rep_words"),
         max(col("e") - col("s") + 1).cast("long").as("longest"))
       .withColumnRenamed("id", idCol)
-    Exec.owned(out, Seq(wins))
+    sc.keep(out)
   }
 }

@@ -30,7 +30,7 @@ object GraftSqlBridge {
     * blocks are held by the RDD itself and are otherwise reclaimed
     * only when a driver GC lets the ContextCleaner reap the
     * unreachable RDD object. Deterministic release
-    * ([[graft.operators.Exec.releaseScratch]]) needs the RDD handles.
+    * ([[graft.operators.Scope]]) needs the RDD handles.
     */
   def checkpointRdds(df: Dataset[_]): Seq[org.apache.spark.rdd.RDD[_]] =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.logical.collect {
@@ -38,13 +38,14 @@ object GraftSqlBridge {
     }
 
   /** The materialized RDD of a frame that IS a checkpoint handle —
-    * i.e. its plan root is the LogicalRDD itself (what
-    * `localCheckpoint` returns), not a plan merely composed over one.
-    * The distinction matters for release: a composed plan's embedded
+    * i.e. its plan root is the LogicalRDD of a checkpointed RDD (what
+    * an eager `localCheckpoint` returns), not a plan merely composed
+    * over one, nor a `createDataFrame` over a lazy RDD. The
+    * distinction matters for release: a composed plan's embedded
     * LogicalRDDs may belong to a caller's still-live input. */
   def rootCheckpointRdd(df: Dataset[_]): Option[org.apache.spark.rdd.RDD[_]] =
     df.asInstanceOf[classic.Dataset[_]].queryExecution.logical match {
-      case r: execution.LogicalRDD => Some(r.rdd)
+      case r: execution.LogicalRDD if r.rdd.isCheckpointed => Some(r.rdd)
       case _ => None
     }
 }

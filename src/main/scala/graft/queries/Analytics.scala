@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -319,7 +320,7 @@ object Analytics {
     * (1 − candidates / n·(n−1)/2 — the work the blocking avoided).
     * A blocking scheme silently losing recall, or silently exploding
     * candidate volume, flips a graded number. */
-  private def q228(s: SparkSession, d: String): DataFrame = {
+  private def q228(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val names = Tables.part(s, d)
       .groupBy("p_name").agg(min(col("p_partkey").cast("long")).as("pk"))
       .select(col("pk"), col("p_name"))
@@ -329,8 +330,7 @@ object Analytics {
         concat(col("p_name").substr(lit(1), pos - 1),
           col("p_name").substr(pos + 1, length(col("p_name"))))
           .as("p_name"))
-    val all = names.unionByName(typos)
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val all = sc.cache(names.unionByName(typos))
     val nTrue = graft.operators.Fuzzy
       .editDistance1Pairs(all, "pk", "p_name")
       .agg(count(lit(1)).as("n_true"))
@@ -345,7 +345,7 @@ object Analytics {
           col("n_true").cast("double"), 9).as("completeness"),
         round(lit(1.0) - col("n_candidates").cast("double") /
           (n * (n - lit(1.0)) / lit(2.0)), 9).as("reduction_ratio"))
-    graft.operators.Exec.owned(result, Seq(all))
+    sc.keep(result)
   }
 
   private val q228Sql =

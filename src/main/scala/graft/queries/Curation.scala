@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -327,13 +328,12 @@ object Curation {
     * expression (n = 2) inside the scan projection; the model tables
     * are vocabulary², aggregated once and joined back by bigram key.
     */
-  private def q81(s: SparkSession, d: String): DataFrame = {
+  private def q81(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val docs = Tables.documents(s, d)
       .filter(size(words(col("text"))) >= 2)
-    val bi = graft.operators.Dedup
+    val bi = sc.cache(graft.operators.Dedup
       .shingleRowsRaw(docs, "doc_id", "text", 2)
-      .withColumnRenamed("id", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumnRenamed("id", "doc_id"))
     val bc = bi.groupBy("s").agg(count(lit(1)).as("cb"))
     // prefix counts from the vocab-sized bigram table, NOT a second
     // corpus-sized aggregation: c(a ·) = Σ_b c(a b)
@@ -348,7 +348,7 @@ object Curation {
       .agg(count(lit(1)).as("n_bigrams"),
            round(avg(col("l")), 4).as("avg_bigram_logprob"))
       .orderBy("doc_id")
-    graft.operators.Exec.owned(result, Seq(bi))
+    sc.keep(result)
   }
 
   private val q81Sql =

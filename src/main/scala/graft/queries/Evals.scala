@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -29,7 +30,6 @@ import graft.functions.TextFunctions.words
 object Evals {
   type Q = (SparkSession, String) => DataFrame
 
-  private val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
   private val dec = "decimal(38,0)"
 
   // --------------------------------------------------------------- q214
@@ -84,16 +84,15 @@ object Evals {
     * confusion table — ONE corpus aggregation, then k-row frames;
     * the only FP op is the final division.
     */
-  private def q215(s: SparkSession, d: String): DataFrame = {
+  private def q215(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val nt = size(words(col("text")))
-    val conf = Tables.documents(s, d)
+    val conf = sc.cache(Tables.documents(s, d)
       .select(
         when(col("n_chars") < 150, "short")
           .when(col("n_chars") < 300, "medium").otherwise("long").as("ra"),
         when(nt < 27, "short")
           .when(nt < 50, "medium").otherwise("long").as("rb"))
-      .groupBy("ra", "rb").agg(count(lit(1)).as("c"))
-      .persist(sl)
+      .groupBy("ra", "rb").agg(count(lit(1)).as("c")))
     val tot = conf.agg(sum(col("c")).as("n"),
       sum(when(col("ra") === col("rb"), col("c")).otherwise(0L)).as("dg"))
     val rows = conf.groupBy("ra").agg(sum(col("c")).as("rc"))
@@ -111,7 +110,7 @@ object Evals {
           .cast("double") /
         (col("n").cast(dec) * col("n").cast(dec) - col("sp"))
           .cast("double"), 9).as("kappa"))
-    graft.operators.Exec.owned(result, Seq(conf))
+    sc.keep(result)
   }
 
   private val q215Sql =
@@ -153,11 +152,10 @@ object Evals {
     * order-independent by construction, with libm ulp noise far below
     * the grid (the q212 contract).
     */
-  private def q216(s: SparkSession, d: String): DataFrame = {
-    val cs = Tables.documents(s, d)
+  private def q216(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val cs = sc.cache(Tables.documents(s, d)
       .select(col("source"), explode(words(col("text"))).as("w"))
-      .groupBy("source", "w").agg(count(lit(1)).as("cs"))
-      .persist(sl)
+      .groupBy("source", "w").agg(count(lit(1)).as("cs")))
     val ts = cs.groupBy("source").agg(sum(col("cs")).as("ts"))
     val cg = cs.groupBy("w").agg(sum(col("cs")).as("cg"))
     val tg = cs.agg(sum(col("cs")).as("tg"))
@@ -182,7 +180,7 @@ object Evals {
         round((col("tunits") + tailUnits).cast("double") / lit(1e12), 6)
           .as("jsd"))
       .orderBy("source")
-    graft.operators.Exec.owned(result, Seq(cs))
+    sc.keep(result)
   }
 
   private val q216Sql =
@@ -822,17 +820,15 @@ object Evals {
     * Docs in no near-dup pair are singleton clusters (coalesce to own
     * id), so the metric covers the WHOLE corpus, not just paired docs.
     */
-  private def q222(s: SparkSession, d: String): DataFrame = {
+  private def q222(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val docs = Tables.documents(s, d)
     val clusters = graft.Kernels.minhashComponents(s, d, threshold = 0.8)
-    val assign = docs.select(col("doc_id"),
+    val assign = sc.cache(docs.select(col("doc_id"),
         graft.operators.Dedup.contentHash(col("text")).as("t"))
       .join(clusters, col("doc_id") === col("id"), "left")
       .select(col("doc_id"),
-        coalesce(col("cluster_id"), col("doc_id")).as("c"), col("t"))
-      .persist(sl)
-    val nct = assign.groupBy("c", "t").agg(count(lit(1)).as("n"))
-      .persist(sl)
+        coalesce(col("cluster_id"), col("doc_id")).as("c"), col("t")))
+    val nct = sc.cache(assign.groupBy("c", "t").agg(count(lit(1)).as("n")))
     def sideUnits(grp: String) = nct
       .groupBy(grp)
       .agg(sum(col("n") * col("n")).as("s2"), sum(col("n")).as("ng"))
@@ -859,7 +855,7 @@ object Evals {
             col("n_docs").cast("double") +
            col("ru").cast("double") / lit(1e12) /
             col("n_docs").cast("double")), 9).as("b3_f1"))
-    graft.operators.Exec.owned(result, Seq(assign, nct))
+    sc.keep(result)
   }
 
   private val q222Sql =
@@ -908,7 +904,7 @@ object Evals {
     * ranked by quantized MI with name tie-break — the categorical
     * companion to q173's threshold-split ranking.
     */
-  private def q223(s: SparkSession, d: String): DataFrame = {
+  private def q223(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val melted = Tables.orders(s, d)
       .select(explode(array(
           struct(lit("o_orderstatus").as("f"),
@@ -920,8 +916,7 @@ object Evals {
         .as("e"),
         (col("o_totalprice") > 150000.0).as("y"))
       .select(col("e.f").as("f"), col("e.v").as("v"), col("y"))
-    val cells = melted.groupBy("f", "v", "y").agg(count(lit(1)).as("nxy"))
-      .persist(sl)
+    val cells = sc.cache(melted.groupBy("f", "v", "y").agg(count(lit(1)).as("nxy")))
     val nx = cells.groupBy("f", "v").agg(sum(col("nxy")).as("nx"))
     val ny = cells.groupBy("f", "y").agg(sum(col("nxy")).as("ny"))
     val nTot = cells.groupBy("f").agg(sum(col("nxy")).as("nn"))
@@ -941,7 +936,7 @@ object Evals {
         round(col("units").cast("double") / lit(1e12), 6).as("mi"),
         row_number().over(byMi).cast("int").as("rank"))
       .orderBy("rank")
-    graft.operators.Exec.owned(result, Seq(cells))
+    sc.keep(result)
   }
 
   private val q223Sql =
@@ -1077,11 +1072,10 @@ object Evals {
     * overflow surfaces as NULL, never a silent wrap). Value tables are
     * bounded by document length, not corpus size.
     */
-  private def q225(s: SparkSession, d: String): DataFrame = {
-    val pairs = Tables.documents(s, d)
+  private def q225(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val pairs = sc.cache(Tables.documents(s, d)
       .select(col("n_chars").as("x"),
-        size(words(col("text"))).cast("long").as("y"))
-      .persist(sl)
+        size(words(col("text"))).cast("long").as("y")))
     def rank2(c: String) = {
       val w = Window.orderBy("v")
         .rowsBetween(Window.unboundedPreceding, Window.currentRow)
@@ -1109,7 +1103,7 @@ object Evals {
             .cast("double") *
           (col("n").cast(dec) * col("syy") - col("sy") * col("sy"))
             .cast("double")), 9).as("spearman_rho"))
-    graft.operators.Exec.owned(result, Seq(pairs))
+    sc.keep(result)
   }
 
   private val q225Sql =
@@ -1154,7 +1148,7 @@ object Evals {
     * cents; the only FP ops are the final mean divisions. Corpus
     * shape: one customer aggregation of orders + a k-row boundary
     * fold; windows run over the 10-row decile table. */
-  private def q229(s: SparkSession, d: String): DataFrame = {
+  private def q229(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val arm = graft.operators.Sampling
       .hashBucket(col("c_custkey"), "up", 2)
     val cust = Tables.customer(s, d)
@@ -1165,11 +1159,10 @@ object Evals {
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
         .as("spend_cents"))
-    val joined = cust
+    val joined = sc.cache(cust
       .join(spend, col("c_custkey") === col("o_custkey"), "left")
       .select(col("bal_cents"), col("treated"),
-        coalesce(col("spend_cents"), lit(0L)).as("spend"))
-      .persist(sl)
+        coalesce(col("spend_cents"), lit(0L)).as("spend")))
     val qs9 = graft.engine.OrderStat
       .quantileRanks((1 to 9).map(_ / 10.0)) _
     val Seq((_, bs)) = graft.engine.OrderStat
@@ -1197,7 +1190,7 @@ object Evals {
         round(mt - mc, 4).as("uplift_cents"),
         round(cmt - cmc, 4).as("cum_uplift_cents"))
       .orderBy("decile")
-    graft.operators.Exec.owned(result, Seq(joined))
+    sc.keep(result)
   }
 
   private val q229Sql =
@@ -1272,7 +1265,7 @@ object Evals {
     * degenerate A = B = U. Graded against the exact intersection with
     * a relative-error readout.
     */
-  private def q230(s: SparkSession, d: String): DataFrame = {
+  private def q230(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val p = 8
     // the value floor keeps both populations PARTIAL subsets of the
     // user base (every user does every event type in this corpus, so
@@ -1283,8 +1276,7 @@ object Evals {
       .select(col("user_id").cast("string").as("k"),
         when(col("event_type") === "purchase", "A").otherwise("B")
           .as("cls"))
-    val regs = graft.operators.Sketch.hllRegistersBy(ev, "k", "cls", p)
-      .persist(sl)
+    val regs = sc.cache(graft.operators.Sketch.hllRegistersBy(ev, "k", "cls", p))
     // identity rollup evaluates A and B; the relabel-to-'U' rollup
     // max-merges both classes into the union sketch
     val per = graft.operators.Sketch.hllRollup(regs, col("grp"), p)
@@ -1307,7 +1299,7 @@ object Evals {
         col("est_intersection"), col("true_intersection"),
         round((col("est_intersection") - col("true_intersection"))
           / col("true_intersection").cast("double"), 4).as("rel_err"))
-    graft.operators.Exec.owned(result, Seq(regs))
+    sc.keep(result)
   }
 
   private val q230Sql =
@@ -1479,7 +1471,7 @@ object Evals {
     * sharing a query term. Built once per (session, dir) through the
     * [[graft.Kernels]] memo; both evals read the store. */
   private[graft] def bm25TopRanked(s: SparkSession, d: String): DataFrame =
-    graft.Kernels.cached(s, ("bm25TopRanked", d)) {
+    graft.Kernels.cached(s, ("bm25TopRanked", d)) { _ =>
       graft.operators.Rank.bm25SelfRetrieval(Tables.documents(s, d),
         "doc_id", "text", isQuery = pmod(col("doc_id"), lit(40)) === 0)
     }
@@ -1553,7 +1545,7 @@ object Evals {
     * SAME 15-day grid in both halves (day-of-month mod 15), making
     * the two distributions genuinely comparable shapes.
     */
-  private def q236(s: SparkSession, d: String): DataFrame = {
+  private def q236(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val ev = Tables.events(s, d)
       .select(col("event_type"),
         datediff(to_date(col("ts")), lit("2024-01-01").cast("date"))
@@ -1563,10 +1555,9 @@ object Evals {
         (col("dd") < 15).as("a"))
     val spark = s
     import spark.implicits._
-    val counts0 = ev.groupBy("event_type", "g")
+    val counts0 = sc.cache(ev.groupBy("event_type", "g")
       .agg(sum(when(col("a"), 1L).otherwise(0L)).as("ca"),
-        sum(when(!col("a"), 1L).otherwise(0L)).as("cb"))
-      .persist(sl)
+        sum(when(!col("a"), 1L).otherwise(0L)).as("cb")))
     // densify: a grid point absent from the counts still contributes
     // its gap's |CDF_a − CDF_b| — the CDFs are flat there, not zero
     val grid = counts0.select("event_type").distinct()
@@ -1594,7 +1585,7 @@ object Evals {
           (col("n_a").cast("double") * col("n_b").cast("double")), 9)
           .as("w1_days"))
       .orderBy("event_type")
-    graft.operators.Exec.owned(result, Seq(counts0))
+    sc.keep(result)
   }
 
   private val q236Sql =
@@ -1643,7 +1634,7 @@ object Evals {
     * DECIMAL(38,0), and the correlation is fixed-shape IEEE on the
     * exact moments (the q114/q172 discipline), 4-dp rounded.
     */
-  private def q237(s: SparkSession, d: String): DataFrame = {
+  private def q237(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val spark = s
     import spark.implicits._
     val obs = Tables.events(s, d)
@@ -1653,7 +1644,7 @@ object Evals {
     val span = obs.agg(min(col("day")).as("d0"), max(col("day")).as("d1"))
     val days = span
       .select(explode(sequence(col("d0"), col("d1"))).as("day"))
-    val grid = days
+    val grid = sc.cache(days
       .join(obs.filter(col("k") === "click")
         .select(col("day"), col("cnt").as("ca")), Seq("day"), "left")
       .join(obs.filter(col("k") === "purchase")
@@ -1661,8 +1652,7 @@ object Evals {
       .select(col("day"), coalesce(col("ca"), lit(0L)).as("ca"),
         coalesce(col("cb"), lit(0L)).as("cb"))
       .withColumn("rn",
-        row_number().over(Window.orderBy("day")))
-      .persist(sl)
+        row_number().over(Window.orderBy("day"))))
     val lags = (-3 to 3).toDF("lag")
     val pairs = grid.select(col("rn"), col("ca")).as("a")
       .crossJoin(broadcast(lags))
@@ -1685,7 +1675,7 @@ object Evals {
             col("sx") * col("sy")).cast("double") / sqrt(da * db), 4))
           .as("xcorr"))
       .orderBy("lag")
-    graft.operators.Exec.owned(result, Seq(grid))
+    sc.keep(result)
   }
 
   private val q237Sql =
@@ -1735,7 +1725,7 @@ object Evals {
     * arms ride one cached frame); outcomes are integer cents; the
     * only FP is the final cent→currency display division.
     */
-  private def q239(s: SparkSession, d: String): DataFrame = {
+  private def q239(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val spark = s
     import spark.implicits._
     val arm = graft.operators.Sampling
@@ -1744,20 +1734,18 @@ object Evals {
       .groupBy(col("o_custkey"))
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
         .as("spend_cents"))
-    val joined = Tables.customer(s, d)
+    val joined = sc.cache(Tables.customer(s, d)
       .select(col("c_custkey"), (arm === 0).as("treated"))
       .join(spend, col("c_custkey") === col("o_custkey"), "left")
       .select(col("treated"),
         coalesce(col("spend_cents"), lit(0L)).as("sp"))
       .select(when(col("treated"), col("sp")).as("st"),
-        when(!col("treated"), col("sp")).as("sc"))
-      .persist(sl)
+        when(!col("treated"), col("sp")).as("sc")))
     val qs = Seq(0.25, 0.5, 0.75, 0.9)
     val ranks = graft.engine.OrderStat.quantileRanks(qs) _
     val Seq((_, ts), (_, cs)) = graft.engine.OrderStat
       .multiQuantiles(joined, Seq("st" -> ranks, "sc" -> ranks),
         bins = 512)
-    joined.unpersist(false)
     qs.zip(ts.zip(cs)).map { case (q, (t, c)) =>
       (q, round(t / 100.0, 2), round(c / 100.0, 2),
         round((t - c) / 100.0, 2))
@@ -1814,7 +1802,7 @@ object Evals {
     * over the full 0..k−1 range so collapsed boundaries still expose
     * drift. One melted pass, k-row-per-feature state.
     */
-  private def q240(s: SparkSession, d: String): DataFrame = {
+  private def q240(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val k = 8
     val feats = Seq("l_quantity", "l_extendedprice", "l_discount",
       "l_tax")
@@ -1841,9 +1829,8 @@ object Evals {
     // 4x-corpus melt itself measured ~6 s/run, slower than the 0.3 s
     // re-melt it saved). Both the boundary solve and the binning read
     // from this table, so the corpus is scanned exactly once.
-    val counts = melted
-      .groupBy("f", "v", "isref").agg(count(lit(1)).as("nv"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val counts = sc.cache(melted
+      .groupBy("f", "v", "isref").agg(count(lit(1)).as("nv")))
     // per-feature equi-depth boundaries as exact rank-max(1,ceil(q·n))
     // order statistics of the REFERENCE period, all features in ONE
     // grouped prefix-sum pass over the count table (the earlier
@@ -1857,25 +1844,22 @@ object Evals {
     // 4-row table referenced TWICE below (the binning broadcast and
     // the dense grid): localCheckpoint pins it so the boundary solve
     // runs once, not per consumer
-    val bounds = solvedB.groupBy("g")
+    val bounds = sc.checkpoint(solvedB.groupBy("g")
       .agg(transform(
         array_sort(collect_list(struct(col("qi"), col("value")))),
         e => e.getField("value")).as("bounds"))
-      .select(col("g").as("f"), col("bounds"))
-      .localCheckpoint(true)
+      .select(col("g").as("f"), col("bounds")))
     // binned is f×bin-row tiny: checkpoint it eagerly so the counts
-    // cache can be dropped HERE — the returned plan must not lean on
-    // cached partitions that only Bench's clearCache would reap
-    val binned = counts.join(broadcast(bounds), "f")
+    // cache can be dropped HERE
+    val binned = sc.checkpoint(counts.join(broadcast(bounds), "f")
       .select(col("f"), col("isref"), col("nv"),
         aggregate(col("bounds"), lit(0),
           (acc, b) => acc + when(col("v") > b, 1).otherwise(0))
           .as("bin"))
       .groupBy("f", "bin")
       .agg(sum(when(col("isref"), col("nv")).otherwise(0L)).as("n_ref"),
-        sum(when(!col("isref"), col("nv")).otherwise(0L)).as("n_cur"))
-      .localCheckpoint(true)
-    counts.unpersist(blocking = false)
+        sum(when(!col("isref"), col("nv")).otherwise(0L)).as("n_cur")))
+    sc.release(counts)
     val grid = bounds.select("f")
       .crossJoin(broadcast((0 until k).toDF("bin")))
     val dense = grid.join(binned, Seq("f", "bin"), "left")
@@ -1897,9 +1881,7 @@ object Evals {
       .select(col("f").as("feature"), col("n_ref"), col("n_cur"),
         round(col("u").cast("double") / lit(1e9), 6).as("psi"))
       .orderBy("feature")
-    // feature-count-sized result, owned so the three small checkpoints
-    // (the solve result, bounds, binned) release before returning
-    graft.operators.Exec.owned(result, Seq(solvedB, bounds, binned))
+    sc.keep(result)
   }
 
   private val q240Sql = {
@@ -2168,12 +2150,11 @@ object Evals {
     * (o−e)²/e quantizes to 1e-6-unit LONGs before the k-cell sum, so
     * the fold is order-independent; V = sqrt(χ²/(n·(min(r,c)−1))).
     */
-  private def q246(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.orders(s, d)
+  private def q246(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val cells = sc.cache(Tables.orders(s, d)
       .groupBy(col("o_orderstatus").as("rr"),
         col("o_orderpriority").as("cc"))
-      .agg(count(lit(1)).as("o"))
-      .persist(sl)
+      .agg(count(lit(1)).as("o")))
     val rowm = cells.groupBy("rr").agg(sum(col("o")).as("rm"))
     val colm = cells.groupBy("cc").agg(sum(col("o")).as("cm"))
     val tot = cells.agg(sum(col("o")).as("n"),
@@ -2195,7 +2176,7 @@ object Evals {
           (col("n").cast("double") *
             (least(col("nr"), col("nc")) - lit(1)).cast("double"))), 6)
           .as("cramers_v"))
-    graft.operators.Exec.owned(result, Seq(cells))
+    sc.keep(result)
   }
 
   private val q246Sql =
@@ -2608,10 +2589,9 @@ object Evals {
     * table in ONE aggregation; all iteration runs on that bounded
     * frame (windows partitioned by the margin being scaled).
     */
-  private def q253(s: SparkSession, d: String): DataFrame = {
-    val cells = Tables.documents(s, d)
-      .groupBy("source", "lang").agg(count(lit(1)).as("n"))
-      .persist(sl)
+  private def q253(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val cells = sc.cache(Tables.documents(s, d)
+      .groupBy("source", "lang").agg(count(lit(1)).as("n")))
     val wAll = Window.partitionBy()
     val wSrc = Window.partitionBy("source")
     val wLang = Window.partitionBy("lang")
@@ -2644,7 +2624,7 @@ object Evals {
         round(col("w") / col("n").cast("double"), 6).as("factor"),
         (col("max_src_err") < lit(1.0)).as("row_margins_converged"))
       .orderBy("source", "lang")
-    graft.operators.Exec.owned(result, Seq(cells))
+    sc.keep(result)
   }
 
   private val q253Sql = {
@@ -2862,10 +2842,10 @@ object Evals {
     * divisions. Scale: bigrams from one lag window partitioned by
     * user; model = \|states\|² count table; eval join broadcasts the
     * \|states\|-row model. */
-  private def q280(s: SparkSession, d: String): DataFrame = {
+  private def q280(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val byUser = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val bigrams = Tables.events(s, d)
+    val bigrams = sc.cache(Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type").as("nxt"))
       .withColumn("prev", lag("nxt", 1).over(byUser))
@@ -2873,8 +2853,7 @@ object Evals {
       .select(col("user_id"), col("prev"), col("nxt"))
       .withColumn("split",
         when(graft.operators.Sampling.hashBucket(
-          col("user_id"), "markov", 10) < 8L, "train").otherwise("eval"))
-      .persist(sl)
+          col("user_id"), "markov", 10) < 8L, "train").otherwise("eval")))
     val byCount = Window.partitionBy("prev")
       .orderBy(col("n").desc, col("nxt").asc)
     val model = bigrams.filter(col("split") === "train")
@@ -2889,7 +2868,7 @@ object Evals {
       .groupBy("nxt").agg(count(lit(1)).as("n"))
       .orderBy(col("n").desc, col("nxt").asc)
       .limit(1).collect().headOption.map(_.getString(0))
-    val out = globalTopOpt match {
+    sc.keep(globalTopOpt match {
       case None =>
         bigrams.select(lit("").as("prev"), lit(0L).as("n_eval"),
           lit(0.0).as("accuracy"), lit(0.0).as("majority_baseline"))
@@ -2909,10 +2888,7 @@ object Evals {
             round(col("n_majority").cast("double") /
               col("n_eval").cast("double"), 6).as("majority_baseline"))
           .orderBy("prev")
-          .localCheckpoint(true)
-    }
-    bigrams.unpersist(blocking = false)
-    out
+    })
   }
 
   private val q280Sql =
@@ -2958,30 +2934,28 @@ object Evals {
     * the `OrderStat` narrowing kernel — never a corpus-multiset
     * percentile buffer. All counts/cents are exact LONGs; coverage is
     * one fixed-shape division. */
-  private def q278(s: SparkSession, d: String): DataFrame = {
+  private def q278(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val cents = round(col("o_totalprice") * 100, 0).cast("long")
     val bucket = graft.operators.Sampling.hashBucket(
       col("o_orderkey"), "conf", 10)
-    val base = Tables.orders(s, d).select(
+    val base = sc.cache(Tables.orders(s, d).select(
       col("o_orderpriority").as("prio"), cents.as("y"),
       when(bucket < 6L, "train").when(bucket < 8L, "cal")
-        .otherwise("eval").as("split"))
-      .persist(sl)
+        .otherwise("eval").as("split")))
     val model = base.filter(col("split") === "train")
       .groupBy("prio")
       .agg(sum("y").as("sy"), count(lit(1)).as("cnt"))
       // integer floor division: double-divide-then-truncate drifts a
       // ulp across engines once n is large enough that 1/n < ulp(q)
       .select(col("prio"), expr("sy DIV cnt").as("yhat"))
-    val scored = base.filter(col("split") =!= "train")
+    val scored = sc.cache(base.filter(col("split") =!= "train")
       .join(broadcast(model), "prio")
-      .select(col("split"), abs(col("y") - col("yhat")).as("score"))
-      .persist(sl)
+      .select(col("split"), abs(col("y") - col("yhat")).as("score")))
     val (nCal, qhatSeq) = graft.engine.OrderStat.kthSmallests(
       scored.filter(col("split") === "cal"), "score",
       n => Seq(((n + 1L) * 9L + 9L) / 10L))
     val qhat = qhatSeq.head.toLong
-    val out = scored.filter(col("split") === "eval")
+    sc.keep(scored.filter(col("split") === "eval")
       .agg(count(lit(1)).as("n_eval"),
         sum(when(col("score") <= qhat, 1L).otherwise(0L))
           .as("n_covered"))
@@ -2990,11 +2964,7 @@ object Evals {
         lit(qhat).as("qhat_cents"), col("n_eval"), col("n_covered"),
         round(col("n_covered").cast("double") /
           greatest(col("n_eval"), lit(1L)).cast("double"), 6)
-          .as("coverage"))
-      .localCheckpoint(true)
-    base.unpersist(blocking = false)
-    scored.unpersist(blocking = false)
-    out
+          .as("coverage")))
   }
 
   private val q278Sql =

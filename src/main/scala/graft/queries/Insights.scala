@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -1105,12 +1106,12 @@ object Insights {
     * window). Ties on a boundary go to
     * the lower bin in both engines; recency scores INVERT (recent =
     * better). */
-  private def q136(s: SparkSession, d: String): DataFrame = {
+  private def q136(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val orders = Tables.orders(s, d)
     val maxDay = orders.agg(max(to_date(col("o_orderdate"))).as("d1"))
     // referenced by the boundary aggregation AND the scoring pass —
     // persist so the customer aggregation shuffle runs once
-    val rfm = orders
+    val rfm = sc.cache(orders
       .groupBy(col("o_custkey"))
       .agg(max(to_date(col("o_orderdate"))).as("last_day"),
         count(lit(1)).as("frequency"),
@@ -1118,8 +1119,7 @@ object Insights {
       .crossJoin(broadcast(maxDay))
       .select(col("o_custkey"),
         datediff(col("d1"), col("last_day")).cast("long").as("recency"),
-        col("frequency"), col("monetary"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        col("frequency"), col("monetary")))
     // quartile boundaries as exact order statistics (k = ceil(q·n),
     // the q182 contract) — the customer table is one group, and a
     // single-group exact `percentile` buffers its whole multiset
@@ -1146,7 +1146,7 @@ object Insights {
       .withColumn("segment", concat(col("r_score"), col("f_score"),
         col("m_score")))
       .orderBy("o_custkey")
-    graft.operators.Exec.owned(result, Seq(rfm))
+    sc.keep(result)
   }
 
   private val q136Sql =
@@ -1198,7 +1198,7 @@ object Insights {
     * precision)`. LSH recall < 1 comes from banding; precision < 1
     * from the exact path's df-cap contract — this query watches both
     * numbers so neither degrades silently. */
-  private def q137(s: SparkSession, d: String): DataFrame = {
+  private def q137(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // eval sample: recall/precision are MEASUREMENTS — a fixed-size
     // deterministic sample is how an eval harness runs at corpus
     // scale (the full-corpus dedup itself is graded by q36/q38)
@@ -1216,15 +1216,14 @@ object Insights {
     val stats = lsh.agg(count(lit(1)).as("n_lsh"))
       .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
       .crossJoin(common.agg(count(lit(1)).as("n_common")))
-    // 1-row result, materialized eagerly; the memoized kernels are the
-    // session's to keep (Kernels.clear releases them)
-    graft.operators.Exec.owned(
+    // 1-row result, kept eagerly; the memoized kernels are the
+    // session's (Kernels.clear releases them)
+    sc.keep(
       stats.select(col("n_exact"), col("n_lsh"), col("n_common"),
         round(col("n_common").cast("double") /
           col("n_exact").cast("double"), 4).as("recall"),
         round(col("n_common").cast("double") /
-          col("n_lsh").cast("double"), 4).as("precision")),
-      Nil)
+          col("n_lsh").cast("double"), 4).as("precision")))
   }
 
   // the shared band CTEs scoped to the same eval sample: the one
@@ -1289,14 +1288,13 @@ object Insights {
     * tables are ngram-cardinality and join back by ngram key; N is a
     * one-row broadcast. No window, no self-join.
     */
-  private def q138(s: SparkSession, d: String): DataFrame = {
+  private def q138(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import graft.functions.TextFunctions.words
     import graft.operators.Dedup.shingleRowsRaw
     val docs = Tables.documents(s, d)
       .filter(org.apache.spark.sql.functions.size(words(col("text"))) >= 3)
-    val tri = shingleRowsRaw(docs, "doc_id", "text", 3)
-      .withColumnRenamed("id", "doc_id")
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val tri = sc.cache(shingleRowsRaw(docs, "doc_id", "text", 3)
+      .withColumnRenamed("id", "doc_id"))
     val uni = docs.select(col("doc_id"),
       explode(words(col("text"))).as("t"))
     val c1 = uni.groupBy("t").agg(count(lit(1)).as("c1"))
@@ -1327,7 +1325,7 @@ object Insights {
       .agg(count(lit(1)).as("n_trigrams"),
         round(avg(col("l")), 4).as("avg_interp_logprob"))
       .orderBy("doc_id")
-    graft.operators.Exec.owned(result, Seq(tri))
+    sc.keep(result)
   }
 
   private val q138Sql =
@@ -2093,19 +2091,18 @@ object Insights {
     * the exact cumulative DECIMAL sums (ties → smaller day). Scale:
     * ONE corpus aggregation to the bounded per-day table; both rounds'
     * windows and argmaxes run on that table only. */
-  private def q279(s: SparkSession, d: String): DataFrame = {
+  private def q279(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val spark = s
     import spark.implicits._
     val dec = "decimal(38,0)"
     val day = datediff(to_date(col("o_orderdate")),
       lit("1990-01-01").cast("date")).cast("long")
-    val per = Tables.orders(s, d)
+    val per = sc.cache(Tables.orders(s, d)
       .select(day.as("day"),
         round(col("o_totalprice") * 100, 0).cast("long").as("yc"))
       .groupBy("day")
-      .agg(count(lit(1)).as("c"), (sum("yc") * 1000L).as("sm"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("c"), (sum("yc") * 1000L).as("sm")))
     val w = Window.orderBy("day")
       .rowsBetween(Window.unboundedPreceding, Window.currentRow)
     def rha(sl: BigInt, n: BigInt): Long = // round-half-away mean
@@ -2136,7 +2133,6 @@ object Insights {
       (col("sm") - col("c") *
         when(col("day") <= t1, pl1).otherwise(pr1)).as("sm"))
     val (t2, nl2, nr2, pl2, pr2) = fit(per2)
-    per.unpersist(blocking = false)
     Seq((1, t1, nl1, nr1, pl1, pr1), (2, t2, nl2, nr2, pl2, pr2))
       .toDF("round", "threshold_day", "n_left", "n_right",
         "pred_left_mc", "pred_right_mc")
@@ -2696,14 +2692,12 @@ object Insights {
     * estimate read off it must land within the 3σ=3·1.04/√m error
     * contract of the true distinct count, which DuckDB recomputes
     * exactly. */
-  private def q177(s: SparkSession, d: String): DataFrame = {
+  private def q177(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val p = 10
     val batchEvents = Tables.events(s, d)
     val rawSchema = s.read.parquet(s"$d/events.parquet").schema
-    val outDir = graft.operators.Exec
-      .scratchTempDir("graft_stream_hll").toString
-    val ckpt = graft.operators.Exec
-      .scratchTempDir("graft_stream_hll_ckpt").toString
+    val outDir = sc.tempDir("graft_stream_hll")
+    val ckpt = sc.tempDir("graft_stream_hll_ckpt")
     // the events table ships in two layouts (the q204 branch): a
     // single events.parquet FILE (driver testdata — stream the parent
     // dir with a glob, FileStreamSource's basePath must be a
@@ -2763,7 +2757,7 @@ object Insights {
           .as("within_bounds"))
     // the 1-row result is checkpointed eagerly so the stream's scratch
     // (sink parquet + checkpoint log) can be deleted before returning
-    graft.operators.Exec.detachFromScratch(result, Seq(outDir, ckpt))
+    sc.keep(result)
   }
 
   private val q177Sql =
@@ -2851,19 +2845,18 @@ object Insights {
     * of exact cent/day integers (identical ops both engines);
     * intercept units stay DECIMAL(38,0) exact.
     */
-  private def q250(s: SparkSession, d: String): DataFrame = {
+  private def q250(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
     val day = datediff(col("l_shipdate").cast("date"),
       lit("1996-01-01").cast("date")).cast("long")
-    val daily = Tables.lineitem(s, d)
+    val daily = sc.cache(Tables.lineitem(s, d)
       .filter(col("l_shipdate").cast("date") >= lit("1996-01-01") &&
         col("l_shipdate").cast("date") < lit("1996-04-01"))
       .select(day.as("dd"),
         floor(col("l_extendedprice") * lit(100.0) + lit(0.5)).cast("long")
           .as("cents"))
-      .groupBy("dd").agg(sum(col("cents")).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("dd").agg(sum(col("cents")).as("c")))
     val a = daily.select(col("dd").as("d1"), col("c").as("c1"))
     val b = daily.select(col("dd").as("d2"), col("c").as("c2"))
     val slopes = a.join(b, col("d1") < col("d2"))
@@ -2894,7 +2887,7 @@ object Insights {
           .as("slope_cents_per_day"),
         round(col("b_u").cast("double") / lit(1e6), 4)
           .as("intercept_cents"))
-    graft.operators.Exec.owned(result, Seq(daily))
+    sc.keep(result)
   }
 
   private val q250Sql =
@@ -2976,19 +2969,18 @@ object Insights {
     * quantized to 1e-6-unit LONGs before the lag-difference sums so
     * the fold is order-independent; DW = Σ(eₜ−eₜ₋₁)²/Σeₜ².
     */
-  private def q255(s: SparkSession, d: String): DataFrame = {
+  private def q255(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
     val day = datediff(col("l_shipdate").cast("date"),
       lit("1996-01-01").cast("date")).cast("long")
-    val daily = Tables.lineitem(s, d)
+    val daily = sc.cache(Tables.lineitem(s, d)
       .filter(col("l_shipdate").cast("date") >= lit("1996-01-01") &&
         col("l_shipdate").cast("date") < lit("1997-01-01"))
       .select(day.as("dd"),
         floor(col("l_extendedprice") * lit(100.0) + lit(0.5)).cast("long")
           .as("cents"))
-      .groupBy("dd").agg(sum(col("cents")).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .groupBy("dd").agg(sum(col("cents")).as("c")))
     val m = daily.agg(count(lit(1)).as("n"),
       sum(col("dd")).as("sd"), sum(col("c")).as("sc"),
       sum(col("dd").cast(dec) * col("c").cast(dec)).as("sdc"),
@@ -3020,7 +3012,7 @@ object Insights {
           .as("dw"),
         round(lit(1.0) - col("num").cast("double") /
           col("den").cast("double") / lit(2.0), 6).as("rho_approx"))
-    graft.operators.Exec.owned(result, Seq(daily))
+    sc.keep(result)
   }
 
   private val q255Sql =

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.{Exec, Scope}
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -18,7 +19,6 @@ import graft.functions.TextFunctions.words
 object Lifecycle {
   type Q = (SparkSession, String) => DataFrame
 
-  private val sl = org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK
 
   // --------------------------------------------------------------- q205
   /** Kaplan-Meier survival curve over customer lifetimes (orders
@@ -107,11 +107,10 @@ object Lifecycle {
     * final quantized division (operands cast to double first, so both
     * engines run the identical IEEE ops even past 2^53).
     */
-  private def q206(s: SparkSession, d: String): DataFrame = {
-    val items = Tables.lineitem(s, d)
+  private def q206(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val items = sc.cache(Tables.lineitem(s, d)
       .select(col("l_orderkey").as("oid"), col("l_partkey").as("item"))
-      .distinct()
-      .persist(sl)
+      .distinct())
     val nOrders = items.select("oid").distinct().count()
     val supp = items.groupBy("item").agg(count(lit(1)).as("s"))
     val a = items.select(col("oid"), col("item").as("x"))
@@ -135,7 +134,7 @@ object Lifecycle {
       .orderBy(col("lift").desc, col("support").desc,
         col("antecedent"), col("consequent"))
       .limit(25)
-    graft.operators.Exec.owned(result, Seq(items))
+    sc.keep(result)
   }
 
   private val q206Sql =
@@ -169,46 +168,35 @@ object Lifecycle {
     * per round ([[graft.operators.Graph.labelPropagation]]
     * discipline). Output: nodes/edges remaining after each round.
     */
-  private def q207(s: SparkSession, d: String): DataFrame = {
+  private def q207(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val k = 6
     val roundsN = 6
     val pairs = Tables.lineitem(s, d)
       .select((col("l_orderkey") * 2).as("src"),
         (col("l_partkey") * 2 + 1).as("dst"))
       .distinct()
-    var sym = pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst")))
-      .localCheckpoint(true)
+    var sym = sc.checkpoint(pairs
+      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst"))))
     val stats = (1 to roundsN).map { r =>
       val prev = sym
       val keepS = sym.groupBy("src").agg(count(lit(1)).as("deg"))
         .filter(col("deg") >= k).select(col("src").as("node"))
       val keepD = keepS.withColumnRenamed("node", "node2")
-      sym = sym
+      sym = sc.checkpoint(sym
         .join(keepS, col("src") === col("node")).drop("node")
-        .join(keepD, col("dst") === col("node2")).drop("node2")
-        .localCheckpoint(true)
+        .join(keepD, col("dst") === col("node2")).drop("node2"))
       // the new generation is materialized — the previous round's
       // corpus-sized blocks are dead NOW; without an eager release all
       // roundsN+1 generations stay pinned until the final union runs
-      // (the r13 sf10 probe OOM'd a 16 GiB heap on exactly that).
-      // Must be the RDD-level release: Dataset.unpersist is a no-op on
-      // a checkpointed frame (CacheManager-only), so the old
-      // `prev.unpersist` freed nothing until an incidental driver GC
-      graft.operators.Exec.releaseScratch(prev)
+      // (the r13 sf10 probe OOM'd a 16 GiB heap on exactly that)
+      sc.release(prev)
       // 1-row round readout, eagerly materialized so it owns no
       // reference to any edge generation
-      sym.agg(countDistinct(col("src")).as("n_nodes"),
+      sc.checkpoint(sym.agg(countDistinct(col("src")).as("n_nodes"),
           (count(lit(1)) / lit(2)).cast("long").as("n_edges"))
-        .select(lit(r).as("round"), col("n_nodes"), col("n_edges"))
-        .localCheckpoint(true)
+        .select(lit(r).as("round"), col("n_nodes"), col("n_edges")))
     }
-    val out = stats.reduce(_.unionByName(_)).orderBy("round")
-      .localCheckpoint(true)
-    // `out` is self-contained — the last edge generation and the six
-    // 1-row round readouts are dead; release their blocks eagerly
-    graft.operators.Exec.releaseScratch(sym +: stats: _*)
-    out
+    sc.keep(stats.reduce(_.unionByName(_)).orderBy("round"))
   }
 
   private val q207Sql = {
@@ -248,13 +236,11 @@ object Lifecycle {
     * vocabulary-sized; the per-doc score is one join + aggregation.
     * No model, no RNG — a pure corpus statistic, fully oracle-graded.
     */
-  private def q208(s: SparkSession, d: String): DataFrame = {
+  private def q208(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val docs = Tables.documents(s, d)
-    val toks = docs
-      .select(col("doc_id"), col("lang"), explode(words(col("text"))).as("w"))
-      .persist(sl)
-    val allCnt = toks.groupBy("w").agg(count(lit(1)).as("ca"))
-      .persist(sl)
+    val toks = sc.cache(docs
+      .select(col("doc_id"), col("lang"), explode(words(col("text"))).as("w")))
+    val allCnt = sc.cache(toks.groupBy("w").agg(count(lit(1)).as("ca")))
     val tgtCnt = toks.filter(col("lang") === "en")
       .groupBy("w").agg(count(lit(1)).as("ct"))
     val Seq(ta, tt, v) = {
@@ -275,7 +261,7 @@ object Lifecycle {
         round(avg(col("lw")), 4).as("dsir_weight"))
       .orderBy(col("dsir_weight").desc, col("doc_id"))
       .limit(30)
-    graft.operators.Exec.owned(result, Seq(toks, allCnt))
+    sc.keep(result)
   }
 
   private val q208Sql =
@@ -312,20 +298,19 @@ object Lifecycle {
     * variance inputs are exact integers in both engines — FP appears
     * only in the final quantized divisions.
     */
-  private def q209(s: SparkSession, d: String): DataFrame = {
+  private def q209(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val day = datediff(to_date(col("ts")),
       lit("1990-01-01").cast("date")).cast("long")
     val ev = Tables.events(s, d)
       .select(col("event_type"), col("user_id"), day.as("day"),
         round(col("value") * 100, 0).cast("long").as("cents"))
     val span = ev.agg(min("day").as("d0"), max("day").as("d1"))
-    val cells = ev.crossJoin(broadcast(span))
+    val cells = sc.cache(ev.crossJoin(broadcast(span))
       .select(col("event_type"),
         (col("user_id") % 2 === 0).as("treat"),
         (col("day") > col("d0") +
           ((col("d1") - col("d0")) / lit(2L)).cast("long")).as("post"),
-        col("cents"))
-      .persist(sl)
+        col("cents")))
     def cell(t: Boolean, p: Boolean, suffix: String): Seq[Column] = {
       val in = col("treat") === t && col("post") === p
       Seq(sum(when(in, 1L).otherwise(0L)).as(s"n_$suffix"),
@@ -336,8 +321,7 @@ object Lifecycle {
     }
     val cols = cell(true, false, "tpre") ++ cell(true, true, "tpost") ++
       cell(false, false, "cpre") ++ cell(false, true, "cpost")
-    val agg = cells.groupBy("event_type").agg(cols.head, cols.tail: _*)
-      .persist(sl)
+    val agg = sc.cache(cells.groupBy("event_type").agg(cols.head, cols.tail: _*))
     def m(x: String) = round(col(s"s_$x").cast("double") /
       col(s"n_$x").cast("double"), 4)
     def va(x: String) = (col(s"q_$x").cast("double") -
@@ -357,7 +341,7 @@ object Lifecycle {
           .as("se")), "event_type")
       .withColumn("t_stat", round(col("did") / col("se"), 4))
       .orderBy("event_type")
-    graft.operators.Exec.owned(result, Seq(cells, agg))
+    sc.keep(result)
   }
 
   private val q209Sql =
@@ -498,10 +482,10 @@ object Lifecycle {
     * deaths, `n`/`dt` = totals, filtered to days with ≥1 death. The
     * corpus collapses to per-customer rows in ONE aggregation, then to
     * a (day × 2 arms) grid; all windows run on that bounded grid.
-    * Returns the margins frame plus the persisted handle the caller
-    * must release.
+    * Returns the margins frame plus the per-arm table it reads, cached
+    * in the caller's scope `sc`.
     */
-  private def eventTimeMargins(s: SparkSession, d: String)
+  private def eventTimeMargins(sc: Scope, s: SparkSession, d: String)
       : (DataFrame, DataFrame) = {
     import org.apache.spark.sql.expressions.Window
     val spark = s
@@ -513,15 +497,14 @@ object Lifecycle {
       .groupBy("o_custkey")
       .agg(min("day").as("d0"), max("day").as("d1"))
     val end = users.agg(max("d1").as("endday"))
-    val perArm = users.crossJoin(broadcast(end))
+    val perArm = sc.cache(users.crossJoin(broadcast(end))
       .select((col("d1") - col("d0")).as("t"),
         (col("endday") - col("d1") >= 90).as("died"),
         graft.operators.Sampling.hashBucket(col("o_custkey"), "km", 2)
           .as("arm"))
       .groupBy("t", "arm")
       .agg(count(lit(1)).as("n_users"),
-        sum(when(col("died"), 1L).otherwise(0L)).as("d"))
-      .persist(sl)
+        sum(when(col("died"), 1L).otherwise(0L)).as("d")))
     // dense (t × arm) grid so the descending at-risk cumsum sees every
     // day in both arms — bounded by day-cardinality × 2
     val grid = perArm.select("t").distinct()
@@ -541,9 +524,9 @@ object Lifecycle {
     (byT, perArm)
   }
 
-  private def q266(s: SparkSession, d: String): DataFrame = {
+  private def q266(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
-    val (byT, perArm) = eventTimeMargins(s, d)
+    val (byT, perArm) = eventTimeMargins(sc, s, d)
     val r = col("n1").cast("double") / col("n").cast("double")
     val e1t = col("dt").cast("double") * r
     val vt = when(col("n") > 1,
@@ -563,16 +546,13 @@ object Lifecycle {
     // e2) can be negative, where signum-aware roundTo diverges from
     // the oracle's floor(x*1e6+0.5)/1e6 on negative half-grid ties
     import graft.functions.Rounding.floorRound
-    val out = sums.select(
+    sc.keep(sums.select(
       col("n_times"), col("o1"),
       floorRound(e1, 6).as("e1"),
       (col("d_total") - col("o1")).as("o2"),
       floorRound(col("d_total").cast("double") - e1, 6).as("e2"),
       floorRound(dev * dev / v, 6).as("chi2"),
-      floorRound(dev / sqrt(v), 6).as("z"))
-      .localCheckpoint(true)
-    perArm.unpersist(blocking = false)
-    out
+      floorRound(dev / sqrt(v), 6).as("z")))
   }
 
   /** Oracle twin of [[eventTimeMargins]] — the CTE chain ending in
@@ -659,14 +639,13 @@ object Lifecycle {
     * bounded driver state, the reference's own loop shape
     * (kernel.cu:175-188).
     */
-  private def q302(s: SparkSession, d: String): DataFrame = {
-    val (byT, perArm) = eventTimeMargins(s, d)
+  private def q302(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val (byT, perArm) = eventTimeMargins(sc, s, d)
     // covariate x = 1{arm 1}: at-risk nx = n − n1, deaths dx = dt − d1
-    val ev = byT.select(col("t"), col("n1").as("n0"),
+    val ev = sc.checkpoint(byT.select(col("t"), col("n1").as("n0"),
         (col("n") - col("n1")).as("nx"),
-        (col("dt") - col("d1")).as("dx"), col("dt"))
-      .localCheckpoint(true)
-    perArm.unpersist(blocking = false)
+        (col("dt") - col("d1")).as("dx"), col("dt")))
+    sc.release(perArm)
     // one Newton evaluation: quantized (U, I) at the given beta
     def step(beta: Double): (Double, Double) = {
       val e = math.exp(beta)
@@ -694,14 +673,14 @@ object Lifecycle {
       val p = math.pow(10, n)
       math.floor(x * p + 0.5) / p
     }
-    ev.agg(count(lit(1)).as("n_times"),
+    sc.keep(ev.agg(count(lit(1)).as("n_times"),
         sum("dt").as("d_total"), sum("dx").as("dx_total"))
       .select(col("n_times"), col("d_total"), col("dx_total"),
         lit(fr(z0, 6)).as("score_z"),
         lit(fr(b3, 6)).as("beta"),
         lit(fr(math.exp(b3), 6)).as("hazard_ratio"),
         lit(fr(se, 6)).as("se"),
-        lit(fr(b3 / se, 6)).as("wald_z"))
+        lit(fr(b3 / se, 6)).as("wald_z")))
   }
 
   private val q302Sql = {
@@ -766,15 +745,15 @@ object Lifecycle {
     * q205 contract) before the interval terms, which quantize to
     * 1e-6-unit LONGs so the cross-day sum is order-independent.
     */
-  private def q305(s: SparkSession, d: String): DataFrame = {
+  private def q305(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val tau = 365L
-    val (byT0, perArm) = eventTimeMargins(s, d)
+    val (byT0, perArm) = eventTimeMargins(sc, s, d)
     // the margins table is day-cardinality but feeds FOUR plan branches
     // (two union arms × the terms/tail split) — checkpoint it once so
     // the corpus collapse runs once, not four times
-    val byT = byT0.localCheckpoint(true)
-    perArm.unpersist(blocking = false)
+    val byT = sc.checkpoint(byT0)
+    sc.release(perArm)
     val arms = byT.select(col("t"), lit(0L).as("arm"),
         col("n1").as("n_r"), col("d1").as("dd"))
       .unionByName(byT.select(col("t"), lit(1L).as("arm"),
@@ -790,15 +769,14 @@ object Lifecycle {
         when(min(col("f")).over(wAsc) === 0.0, lit(0.0))
           .otherwise(round(exp(sum(log(col("f"))).over(wAsc)), 9)))
     val wLag = Window.partitionBy("arm").orderBy("t")
-    val terms = surv
+    val terms = sc.checkpoint(surv
       .withColumn("t_prev", coalesce(lag(col("t"), 1).over(wLag),
         lit(0L)))
       .withColumn("s_prev", coalesce(lag(col("s_after"), 1).over(wLag),
         lit(1.0)))
       .withColumn("seg", col("s_prev") *
         (least(col("t"), lit(tau)) - least(col("t_prev"), lit(tau)))
-          .cast("double"))
-      .localCheckpoint(true)
+          .cast("double")))
     val tail = terms.groupBy("arm").agg(
       max(col("t")).as("t_max"),
       // s_after at t_max: t is unique per arm, so max_by is exact
@@ -816,7 +794,7 @@ object Lifecycle {
           floor(col("tail_seg") * lit(1e6) + lit(0.5)).cast("long")
             .cast("double") / lit(1e6), 4).as("rmst_365"))
       .orderBy("arm")
-    out
+    sc.keep(out)
   }
 
   private val q305Sql =
@@ -883,12 +861,11 @@ object Lifecycle {
     * bracket table; N and m are two driver scalars (the reference's
     * reduce-to-driver pattern).
     */
-  private def q265(s: SparkSession, d: String): DataFrame = {
+  private def q265(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val dec = "decimal(38,0)"
-    val cust = Tables.customer(s, d)
-      .withColumn("bracket", floor(col("c_acctbal") / 1000).cast("long"))
-      .persist(sl)
+    val cust = sc.cache(Tables.customer(s, d)
+      .withColumn("bracket", floor(col("c_acctbal") / 1000).cast("long")))
     val gb = cust.groupBy("bracket").agg(count(lit(1)).as("qc"))
     val cumQ = gb.withColumn("cum_q",
         sum("qc").over(Window.orderBy("bracket")
@@ -930,15 +907,10 @@ object Lifecycle {
           col("n_classes"), col("n_violating"), col("n_rows_exposed"),
           col("max_emd"))
     }
-    // eager-checkpoint the 2-row report so the bracketed base can be
-    // unpersisted before the caller evaluates the returned frame
-    val out = audit("1_segment", Seq("c_mktsegment"))
+    sc.keep(audit("1_segment", Seq("c_mktsegment"))
       .unionByName(audit("2_nation_segment",
         Seq("c_nationkey", "c_mktsegment")))
-      .orderBy("qi_set")
-      .localCheckpoint(true)
-    cust.unpersist(blocking = false)
-    out
+      .orderBy("qi_set"))
   }
 
   private val q265Sql =
@@ -1060,12 +1032,12 @@ object Lifecycle {
     * where batch DENSITY is the point). */
   private def sessionReplayChunks(s: SparkSession, d: String,
                                   fixedChunkUs: Long,
-                                  chunkBudget: Int): DataFrame = {
+                                  chunkBudget: Int): DataFrame = Exec.scope { sc =>
     import s.implicits._
     import java.nio.file.Files
     val gapUs = 30L * 60 * 1000000     // q23's 30-min inactivity gap
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_sess_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_sess_out").toString
+    val ckpt = sc.tempDir("graft_sess_ckpt")
+    val outDir = sc.tempDir("graft_sess_out")
 
     // the chunk files are a pure function of (dir, chunk width) —
     // built once per session (ChunkStore), replayed read-only by every
@@ -1141,7 +1113,7 @@ object Lifecycle {
       .orderBy("user_id")
     // the ingest dir belongs to the ChunkStore — only per-run scratch
     // is deleted here
-    graft.operators.Exec.detachFromScratch(result, Seq(ckpt, outDir))
+    sc.keep(result)
   }
 
   /** Streaming result == batch sessionization, so the oracle IS the
@@ -1183,12 +1155,12 @@ object Lifecycle {
     * kernel (per-round shuffle = `bins` longs), never a single-group
     * percentile buffering the corpus multiset.
     */
-  private def q212(s: SparkSession, d: String): DataFrame = {
+  private def q212(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val docs = Tables.documents(s, d)
       .filter(size(words(col("text"))) >= 2)
-    val bi = graft.operators.Dedup
+    val bi = sc.cache(graft.operators.Dedup
       .shingleRowsRaw(docs, "doc_id", "text", 2)
-      .withColumnRenamed("id", "doc_id").persist(sl)
+      .withColumnRenamed("id", "doc_id"))
     // the clean-reference model: bigram + prefix counts, V = distinct
     // prefix words + 1 (the UNK slot)
     val bc = bi.filter(col("doc_id") % 5 === 0)
@@ -1213,12 +1185,11 @@ object Lifecycle {
           (coalesce(col("cp"), lit(0L)).cast("double") +
             col("v").cast("double") + 1.0)) * 1e6, 0)
           .cast("long").as("lu"))
-    val perDoc = scored.groupBy("doc_id")
+    val perDoc = sc.cache(scored.groupBy("doc_id")
       .agg(count(lit(1)).as("n_bigrams"), sum("lu").as("slu"))
       .withColumn("h",
         round(-(col("slu").cast("double") /
-          col("n_bigrams").cast("double")) / 1e6, 4))
-      .persist(sl)
+          col("n_bigrams").cast("double")) / 1e6, 4)))
     val (_, Seq(t1, t2)) = graft.engine.OrderStat.kthSmallests(
       perDoc, "h",
       graft.engine.OrderStat.quantileRanks(Seq(1.0 / 3, 2.0 / 3)))
@@ -1236,7 +1207,7 @@ object Lifecycle {
         round(col("sum_h4").cast("double") /
           col("n_docs").cast("double") / 1e4, 4))
       .orderBy("bucket", "lang")
-    graft.operators.Exec.owned(result, Seq(bi, perDoc))
+    sc.keep(result)
   }
 
   private val q212Sql =
@@ -1397,7 +1368,7 @@ object Lifecycle {
     * invariant at the old width). Eviction still happens across
     * batches: each boundary drops state more than one chunk old. */
   private[graft] def dedupReplay(s: SparkSession, d: String,
-                                 chunkBudget: Int): DataFrame = {
+                                 chunkBudget: Int): DataFrame = Exec.scope { sc =>
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // span-scaled chunk width (origin-anchored ids, the q272
     // treatment): a cheap per-run min/max scan sizes the budget; the
@@ -1407,15 +1378,15 @@ object Lifecycle {
     val (minTs, maxTs) = (mm.getLong(0), mm.getLong(1))
     val chunkUs = math.max((maxTs - minTs) / chunkBudget + 1L, 1L)
     val delaySec = chunkUs / 1000000L + 86400L
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_sdd_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_sdd_out").toString
+    val ckpt = sc.tempDir("graft_sdd_ckpt")
+    val outDir = sc.tempDir("graft_sdd_out")
 
     // chunk files with the adversarial duplicate injection are a pure
     // function of (dir, chunk budget) — built once per session
     // (ChunkStore), replayed read-only with a fresh checkpoint per run
     val ingest = graft.streaming.ChunkStore
       .ensure(s, ("q226", d, chunkBudget)) { store =>
-        val tmp = graft.operators.Exec.scratchTempDir("graft_sdd_split").toString
+        val tmp = sc.tempDir("graft_sdd_split")
         val ev = Tables.events(s, d)
           .select(col("event_id").cast("long").as("event_id"),
             unix_micros(col("ts")).as("ts_us"),
@@ -1483,7 +1454,7 @@ object Lifecycle {
         countDistinct(col("event_id")).as("n_distinct"))
       .orderBy("event_type")
     // ingest belongs to the ChunkStore — per-run scratch only
-    graft.operators.Exec.detachFromScratch(result, Seq(ckpt, outDir))
+    sc.keep(result)
   }
 
   /** The oracle reads the CLEAN events table: streaming output equals
@@ -1506,7 +1477,7 @@ object Lifecycle {
     * selects it) must equal the plain batch aggregation, which is the
     * oracle. Update-mode emissions are immediate; no sentinel flush
     * or watermark choreography is needed. */
-  private def q231(s: SparkSession, d: String): DataFrame = {
+  private def q231(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import java.nio.file.{Files, Paths, StandardCopyOption}
     // 2-real-chunk budget (was fixed 10-day chunks, which the
     // unaligned absolute origin smeared into FOUR micro-batches over
@@ -1518,14 +1489,14 @@ object Lifecycle {
     // micro-batches are pure per-batch fixed cost (the q211
     // rationale).
     val chunkBudget = 2
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_tws_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_tws_out").toString
+    val ckpt = sc.tempDir("graft_tws_ckpt")
+    val outDir = sc.tempDir("graft_tws_out")
 
     // chunk files built once per session (ChunkStore), replayed
     // read-only with a fresh checkpoint per run
     val ingest = graft.streaming.ChunkStore
       .ensure(s, ("q231", d, chunkBudget)) { store =>
-        val tmp = graft.operators.Exec.scratchTempDir("graft_tws_split").toString
+        val tmp = sc.tempDir("graft_tws_split")
         val ev = Tables.events(s, d)
           .filter(col("value").isNotNull)
           .select(col("user_id").cast("long").as("user_id"),
@@ -1600,7 +1571,7 @@ object Lifecycle {
         col("m.spend_units").as("spend_units"))
       .orderBy("user_id")
     // ingest belongs to the ChunkStore — per-run scratch only
-    graft.operators.Exec.detachFromScratch(result, Seq(ckpt, outDir))
+    sc.keep(result)
   }
 
   /** Final transformWithState totals == the batch aggregation. */
@@ -1629,12 +1600,12 @@ object Lifecycle {
     * strictly grow, so `max(struct(n_events, spend_units))` per user
     * selects the final emission regardless of batch timing — equal to
     * the batch aggregation, the oracle. */
-  private def q277(s: SparkSession, d: String): DataFrame = {
+  private def q277(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import java.nio.file.{Files, Paths, StandardCopyOption}
-    val staging = graft.operators.Exec.scratchTempDir("graft_rec_staging").toString
-    val ingest = graft.operators.Exec.scratchTempDir("graft_rec_ingest").toString
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_rec_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_rec_out").toString
+    val staging = sc.tempDir("graft_rec_staging")
+    val ingest = sc.tempDir("graft_rec_ingest")
+    val ckpt = sc.tempDir("graft_rec_ckpt")
+    val outDir = sc.tempDir("graft_rec_out")
 
     // the chunk build (scan + span agg + chunk write) happens once per
     // session (ChunkStore); this choreography CONSUMES its staged
@@ -1701,8 +1672,7 @@ object Lifecycle {
       .select(col("user_id"), col("m.n_events").as("n_events"),
         col("m.spend_units").as("spend_units"))
       .orderBy("user_id")
-    graft.operators.Exec.detachFromScratch(result,
-      Seq(staging, ingest, ckpt, outDir))
+    sc.keep(result)
   }
 
   /** Recovered-stream totals == the batch aggregation. */
@@ -1734,17 +1704,17 @@ object Lifecycle {
     * append-mode's tail rule (windows past the final watermark never
     * emit).
     */
-  private def q259(s: SparkSession, d: String): DataFrame = {
+  private def q259(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val chunkUs = 6L * 86400 * 1000000
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_wm_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_wm_out").toString
+    val ckpt = sc.tempDir("graft_wm_ckpt")
+    val outDir = sc.tempDir("graft_wm_out")
 
     // chunk files with the late-copy injection built once per session
     // (ChunkStore), replayed read-only with a fresh checkpoint per run
     val ingest = graft.streaming.ChunkStore
       .ensure(s, ("q259", d, chunkUs)) { store =>
-        val tmp = graft.operators.Exec.scratchTempDir("graft_wm_split").toString
+        val tmp = sc.tempDir("graft_wm_split")
         val ev = Tables.events(s, d)
           .select(col("event_id").cast("long").as("event_id"),
             unix_micros(col("ts")).as("ts_us"),
@@ -1801,7 +1771,7 @@ object Lifecycle {
     val result = s.read.parquet(outDir)
       .orderBy("event_type", "day")
     // ingest belongs to the ChunkStore — per-run scratch only
-    graft.operators.Exec.detachFromScratch(result, Seq(ckpt, outDir))
+    sc.keep(result)
   }
 
   /** The oracle replays the deterministic watermark model: running

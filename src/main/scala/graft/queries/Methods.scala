@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -1614,7 +1615,7 @@ object Methods {
     * arithmetic-identical on any build (no raw-double trajectory).
     * The final rating is a 6-dp integer-grid value divided by 1e6.
     */
-  private def q303(s: SparkSession, d: String): DataFrame = {
+  private def q303(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val arr = graft.functions.TextFunctions.words(col("text"))
     val docs = Tables.documents(s, d)
       .select(col("lang"), col("source"),
@@ -1632,13 +1633,12 @@ object Methods {
     val below = g.withColumn("below",
       coalesce(sum("c").over(wBelow), lit(0L)))
     val dec = "decimal(18,0)"
-    val wins = cnt.as("a")
+    val wins = sc.checkpoint(cnt.as("a")
       .join(below.as("b"),
         col("a.lang") === col("b.lang") && col("a.su") === col("b.su") &&
           col("a.source") =!= col("b.source"))
       .groupBy(col("a.source").as("i"), col("b.source").as("j"))
-      .agg(sum(col("a.c").cast(dec) * col("b.below").cast(dec)).as("w"))
-      .localCheckpoint(true)
+      .agg(sum(col("a.c").cast(dec) * col("b.below").cast(dec)).as("w")))
     val m = wins
       .join(wins.select(col("i").as("j"), col("j").as("i"),
         col("w").as("wt")), Seq("i", "j"), "full_outer")
@@ -1647,22 +1647,19 @@ object Methods {
         (coalesce(col("w"), lit(0).cast(dec)) +
           coalesce(col("wt"), lit(0).cast(dec))).as("n"))
     val tot = m.agg(sum("w").as("wtot"))
-    val base = m.crossJoin(broadcast(tot))
+    val base = sc.checkpoint(m.crossJoin(broadcast(tot))
       .select(col("i"), col("j"),
         expr("(CAST(n AS DECIMAL(38,0)) * 1000000000000) div " +
-          "greatest(CAST(wtot AS DECIMAL(38,0)), 1)").as("nfu"))
-      .localCheckpoint(true)
-    val wi = m.groupBy("i").agg(sum("w").as("wins"))
+          "greatest(CAST(wtot AS DECIMAL(38,0)), 1)").as("nfu")))
+    val wi = sc.checkpoint(m.groupBy("i").agg(sum("w").as("wins"))
       .crossJoin(broadcast(tot))
       .select(col("i"), col("wins"),
         expr("(CAST(wins AS DECIMAL(38,0)) * 1000000000000) div " +
-          "greatest(CAST(wtot AS DECIMAL(38,0)), 1)").as("wfu"))
-      .localCheckpoint(true)
+          "greatest(CAST(wtot AS DECIMAL(38,0)), 1)").as("wfu")))
     // 4 MM iterations on the tiny sources² matrix — all-integer:
     // ratings in 1e-9 units, terms tu = nfu·1e9 div (riu+rju)
-    var r = wi.select(col("i").as("source"),
-        lit(1000000000L).as("ru"))
-      .localCheckpoint(true)
+    var r = sc.checkpoint(wi.select(col("i").as("source"),
+        lit(1000000000L).as("ru")))
     for (_ <- 1 to 4) {
       val terms = base
         .join(r.select(col("source").as("i"), col("ru").as("riu")), "i")
@@ -1670,16 +1667,15 @@ object Methods {
         .select(col("i"),
           expr("(CAST(nfu AS DECIMAL(38,0)) * 1000000000) div " +
             "greatest(riu + rju, 1)").as("tu"))
-      r = terms.groupBy("i").agg(sum("tu").as("du"))
+      r = sc.checkpoint(terms.groupBy("i").agg(sum("tu").as("du"))
         .join(wi.select("i", "wfu"), "i")
         .select(col("i").as("source"),
           expr("(CAST(wfu AS DECIMAL(38,0)) * 1000000000) div " +
-            "greatest(du, 1)").as("ru"))
-        .localCheckpoint(true)
+            "greatest(du, 1)").as("ru")))
     }
     val losses = m.groupBy("j").agg(sum("w").as("losses"))
     val norm = r.agg(sum("ru").as("rtot"), count(lit(1)).as("ns"))
-    r.crossJoin(broadcast(norm))
+    sc.keep(r.crossJoin(broadcast(norm))
       .join(wi.select(col("i").as("source"), col("wins")), "source")
       .join(losses.select(col("j").as("source"), col("losses")), "source")
       .select(col("source"),
@@ -1687,7 +1683,7 @@ object Methods {
         col("losses").cast("long").as("losses"),
         (expr("(CAST(ru AS DECIMAL(38,0)) * ns * 1000000) div " +
           "greatest(rtot, 1)").cast("double") / lit(1e6)).as("rating"))
-      .orderBy(col("rating").desc, col("source"))
+      .orderBy(col("rating").desc, col("source")))
   }
 
   // every CTE MATERIALIZED: the iteration chain references each rI
@@ -1912,7 +1908,7 @@ object Methods {
     * quantize to 1e-9-unit LONGs before the one exact sum perplexity
     * closes over.
     */
-  private def q306(s: SparkSession, d: String): DataFrame = {
+  private def q306(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val dD = 0.75
     val docs = Tables.documents(s, d)
       .filter(size(graft.functions.TextFunctions.words(col("text"))) >= 2)
@@ -1921,10 +1917,9 @@ object Methods {
       docs.filter(col("bkt") < 4), "doc_id", "text", 2)
     val bq = graft.operators.Dedup.shingleRowsRaw(
       docs.filter(col("bkt") === 4), "doc_id", "text", 2)
-    val bc = bt.groupBy("s").agg(count(lit(1)).as("cb"))
+    val bc = sc.checkpoint(bt.groupBy("s").agg(count(lit(1)).as("cb"))
       .withColumn("v", substring_index(col("s"), " ", 1))
-      .withColumn("w", substring_index(col("s"), " ", -1))
-      .localCheckpoint(true)
+      .withColumn("w", substring_index(col("s"), " ", -1)))
     val vm = bc.groupBy("v")
       .agg(sum("cb").as("cv"), count(lit(1)).as("n1v"))
     val wm = bc.groupBy("w").agg(count(lit(1)).as("n1w"))
@@ -1958,10 +1953,10 @@ object Methods {
     import graft.functions.Rounding.floorRound
     val avgLp = (col("lu").cast("double") / lit(1e9)) /
       safe(col("n_test").cast("double"))
-    agg.select(col("btypes"), col("n_test"), col("oov_contexts"),
+    sc.keep(agg.select(col("btypes"), col("n_test"), col("oov_contexts"),
       col("unseen_bigrams"),
       floorRound(avgLp, 6).as("avg_logprob"),
-      round(exp(-avgLp), 4).as("perplexity"))
+      round(exp(-avgLp), 4).as("perplexity")))
   }
 
   private val q306Sql =
@@ -2216,17 +2211,16 @@ object Methods {
     * stays constant. Rounds stop early once coverage is total — the
     * oracle's empty-pick CTEs agree.
     */
-  private def q309(s: SparkSession, d: String): DataFrame = {
+  private def q309(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val spark = s
     import spark.implicits._
-    val dw = Tables.documents(s, d)
+    val dw = sc.cache(Tables.documents(s, d)
       .select(col("doc_id"),
         explode(graft.functions.TextFunctions.words(col("text")))
           .as("w"))
-      .distinct()
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .distinct())
     val vtot = dw.select("w").distinct().count()
-    var covered = dw.select("w").filter(lit(false)).localCheckpoint(true)
+    var covered = sc.checkpoint(dw.select("w").filter(lit(false)))
     val picks = scala.collection.mutable.ListBuffer
       .empty[(Long, Long, Long, Long)]
     var k = 1
@@ -2239,14 +2233,13 @@ object Methods {
       else {
         val doc = top(0).getLong(0)
         val g = top(0).getLong(1)
-        covered = covered
+        covered = sc.checkpoint(covered
           .unionByName(dw.filter(col("doc_id") === doc).select("w"))
-          .distinct().localCheckpoint(true)
+          .distinct())
         picks += ((k.toLong, doc, g, covered.count()))
         k += 1
       }
     }
-    dw.unpersist(blocking = false)
     picks.toSeq.toDF("round", "doc_id", "gain", "covered_words")
       .withColumn("coverage",
         round(col("covered_words").cast("double") /
@@ -2397,7 +2390,7 @@ object Methods {
     * cents. The naive unmatched difference is reported next to the
     * ATT — the gap IS the confounding.
     */
-  private def q311(s: SparkSession, d: String): DataFrame = {
+  private def q311(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val cal = 10000L // caliper in balance cents
     val cust = Tables.customer(s, d)
       .select(col("c_custkey").as("key"),
@@ -2408,11 +2401,10 @@ object Methods {
       .select(col("o_custkey").as("key"),
         round(col("o_totalprice") * 100, 0).cast("long").as("rc"))
       .groupBy("key").agg(sum("rc").as("yc"))
-    val base = cust.join(rev, Seq("key"), "left")
+    val base = sc.checkpoint(cust.join(rev, Seq("key"), "left")
       .na.fill(0L, Seq("yc"))
       .withColumn("b", floor(col("bal").cast("double") /
-        lit(cal.toDouble)).cast("long"))
-      .localCheckpoint(true)
+        lit(cal.toDouble)).cast("long")))
     val treatedDf = base.filter(col("treated"))
       .select(col("key").as("tk"), col("bal").as("tb"),
         col("yc").as("ty"), col("b"))
@@ -2441,7 +2433,7 @@ object Methods {
     val att = matched.agg(count(lit(1)).as("n_matched"),
       sum((col("ty") - col("cy")).cast(dec38)).as("gap"))
     import graft.functions.Rounding.floorRound
-    att.crossJoin(broadcast(naive))
+    sc.keep(att.crossJoin(broadcast(naive))
       .select(col("nt").as("n_treated"), col("nc").as("n_control"),
         col("n_matched"),
         floorRound(col("syt").cast("double") /
@@ -2451,7 +2443,7 @@ object Methods {
           .as("naive_diff"),
         floorRound(col("gap").cast("double") /
           safe(col("n_matched").cast("double")) / lit(100.0), 6)
-          .as("att"))
+          .as("att")))
   }
 
   private val q311Sql =
@@ -2510,7 +2502,7 @@ object Methods {
     * means are fixed-shape divisions of exact cent LONGs; per-event
     * DR terms quantize to 1e-6-unit LONGs before the one exact sum.
     */
-  private def q312(s: SparkSession, d: String): DataFrame = {
+  private def q312(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val ev = Tables.events(s, d)
       .select(pmod(col("user_id"), lit(4L)).as("seg"),
         col("event_type").as("a"),
@@ -2518,12 +2510,11 @@ object Methods {
           .as("rc"),
         (Sampling.hashBucket(col("event_id"), "ips", 5) < 4)
           .as("is_train"))
-    val model = ev.filter(col("is_train"))
+    val model = sc.checkpoint(ev.filter(col("is_train"))
       .groupBy("seg", "a")
       .agg(sum("rc").as("tr"), count(lit(1)).as("n"))
       .withColumn("qhat",
-        col("tr").cast("double") / col("n").cast("double") / 100.0)
-      .localCheckpoint(true)
+        col("tr").cast("double") / col("n").cast("double") / 100.0))
     val wPick = Window.partitionBy("seg")
       .orderBy(col("tr").desc, col("a").asc)
     val pi = model.withColumn("rk", row_number().over(wPick))
@@ -2553,11 +2544,11 @@ object Methods {
         sum(floor(dr * lit(1e6) + lit(0.5)).cast("decimal(38,0)"))
           .as("du"))
     import graft.functions.Rounding.floorRound
-    agg.select(col("seg"), col("pi_a"), col("n_test"),
+    sc.keep(agg.select(col("seg"), col("pi_a"), col("n_test"),
         col("n_matched"), col("dm_value"),
         floorRound((col("du").cast("double") / lit(1e6)) /
           safe(col("n_test").cast("double")), 6).as("dr_value"))
-      .orderBy("seg")
+      .orderBy("seg"))
   }
 
   private val q312Sql =

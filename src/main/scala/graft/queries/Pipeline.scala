@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -1092,17 +1093,16 @@ object Pipeline {
     * per doc. Ranking uses the 4-decimal-rounded weight + term as
     * tie-break so both engines rank identically.
     */
-  private def q60(s: SparkSession, d: String): DataFrame = {
+  private def q60(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.expressions.Window
     val docsDf = Tables.documents(s, d)
     val nDocs = docsDf.count()
     // referenced twice (tf side + df derivation) — without the persist
     // the corpus explode+aggregate subtree executes once per reference
-    val tf = docsDf
+    val tf = sc.cache(docsDf
       .select(col("doc_id"), explode(words(col("text"))).as("term"))
       .groupBy("doc_id", "term")
-      .agg(count(lit(1)).as("tf"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .agg(count(lit(1)).as("tf")))
     val dfreq = tf.groupBy("term").agg(count(lit(1)).as("df"))
     val w = Window.partitionBy("doc_id").orderBy(desc("tfidf"), asc("term"))
     val result = tf.join(dfreq, "term")
@@ -1112,7 +1112,7 @@ object Pipeline {
       .filter(col("rnk") <= 3)
       .select("doc_id", "term", "tf", "df", "tfidf", "rnk")
       .orderBy("doc_id", "rnk")
-    graft.operators.Exec.owned(result, Seq(tf))
+    sc.keep(result)
   }
 
   private val q60Sql =
@@ -1262,7 +1262,7 @@ object Pipeline {
     * Corpus work = the q36/q71 kernels + one stats aggregation; the
     * pair table re-attaches by id join, never corpus².
     */
-  private def q264(s: SparkSession, d: String): DataFrame = {
+  private def q264(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val docs = Tables.documents(s, d)
     // shared memoized kernels — both already materialized, so the
     // multi-branch reuse below (pair splits + assignment stats) costs
@@ -1278,10 +1278,9 @@ object Pipeline {
       Sampling.hashBucket(c, salt, 10)
     def splitOf(b: Column) = when(b <= 7, "train")
       .when(b === 8, "val").otherwise("test")
-    val assigned = rep
+    val assigned = sc.cache(rep
       .withColumn("split", splitOf(bucket(col("rep"), "split")))
-      .withColumn("naive", splitOf(bucket(col("doc_id"), "split")))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+      .withColumn("naive", splitOf(bucket(col("doc_id"), "split"))))
     val sides = assigned.select(col("doc_id"), col("split"), col("naive"))
     val pairSplits = pairs
       .join(sides.select(col("doc_id").as("doc_a"),
@@ -1299,7 +1298,7 @@ object Pipeline {
         sum(col("n_tokens")).as("n_tokens"))
       .crossJoin(broadcast(pairSplits))
       .orderBy("split")
-    graft.operators.Exec.owned(result, Seq(assigned))
+    sc.keep(result)
   }
 
   private val q264Sql =
@@ -1490,13 +1489,12 @@ object Pipeline {
     * each document scored by the mean log-probability of its tokens.
     * Low scores flag boilerplate/garbage vocabularies. Two aggregation
     * passes over the token table (frequencies, then per-doc means via
-    * a frequency join) — the token table is persisted once and
-    * released via the owned-result pattern. */
-  private def q72(s: SparkSession, d: String): DataFrame = {
+    * a frequency join) — the token table is cached once and released
+    * when the query's scope exits. */
+  private def q72(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val docsDf = Tables.documents(s, d)
-    val toks = docsDf
-      .select(col("doc_id"), explode(words(col("text"))).as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val toks = sc.cache(docsDf
+      .select(col("doc_id"), explode(words(col("text"))).as("w")))
     val total = toks.count()
     val freq = toks.groupBy("w").agg(count(lit(1)).as("cnt"))
     val result = toks.join(freq, "w")
@@ -1505,7 +1503,7 @@ object Pipeline {
            round(avg(log(col("cnt").cast("double") / total.toDouble)), 4)
              .as("avg_logprob"))
       .orderBy("doc_id")
-    graft.operators.Exec.owned(result, Seq(toks))
+    sc.keep(result)
   }
 
   private val q72Sql =

@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -268,8 +269,8 @@ object Probes {
     * earliest argmax, and the tail bound 2·exp(−6K²/(D³+D²)) closes
     * in FP.
     */
-  private def q354(s: SparkSession, d: String): DataFrame = {
-    val days = dayGrid(s, d).localCheckpoint(true)
+  private def q354(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val days = sc.checkpoint(dayGrid(s, d))
     val vals = days.groupBy("rev").agg(count(lit(1)).as("tv"))
     val wV = Window.orderBy("rev")
       .rowsBetween(Window.unboundedPreceding, -1)
@@ -284,7 +285,7 @@ object Probes {
       .withColumn("ut", sum("delta").over(wT))
       .filter(col("t") < col("dd") - 1)
     val k = u.agg(max(abs(col("ut"))).as("k_stat"))
-    u.crossJoin(broadcast(k))
+    sc.keep(u.crossJoin(broadcast(k))
       .filter(abs(col("ut")) === col("k_stat"))
       .orderBy("t").limit(1)
       .select(col("k_stat"), col("dt").as("break_date"),
@@ -294,7 +295,7 @@ object Probes {
           safe(col("dd").cast("double") * col("dd").cast("double") *
             col("dd").cast("double") +
             col("dd").cast("double") * col("dd").cast("double"))), 6)
-          .as("p_value"))
+          .as("p_value")))
   }
 
   private val q354Sql =
@@ -337,9 +338,8 @@ object Probes {
     * three-level recursion closes in fixed-shape FP mirrored term for
     * term.
     */
-  private def q355(s: SparkSession, d: String): DataFrame = {
-    val days = dayGrid(s, d).select(col("t"), col("rev"))
-      .localCheckpoint(true)
+  private def q355(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val days = sc.checkpoint(dayGrid(s, d).select(col("t"), col("rev")))
     def lagStats(k: Int): DataFrame = {
       val lead = days.select(col("t"), col("rev").as("x0"))
       val lag = days.select((col("t") - lit(k.toLong)).as("t"),
@@ -375,13 +375,13 @@ object Probes {
       .withColumn("p33",
         q9((col("r3") - col("p21") * col("r2") - col("p22") * col("r1")) /
           safe(col("v2"))))
-    withR.select(col("dd").as("n_days"),
+    sc.keep(withR.select(col("dd").as("n_days"),
       round(col("r1"), 6).as("acf1"),
       round(col("r2"), 6).as("acf2"),
       round(col("r3"), 6).as("acf3"),
       round(col("r1"), 6).as("pacf1"),
       round(col("p22"), 6).as("pacf2"),
-      round(col("p33"), 6).as("pacf3"))
+      round(col("p33"), 6).as("pacf3")))
   }
 
   private val q355Sql = {
@@ -538,9 +538,8 @@ object Probes {
     * revenue); F = ((RSS_p − RSS₁ − RSS₂)/2) / ((RSS₁+RSS₂)/(n−4))
     * closes in FP. One scan, three 1-row aggregates.
     */
-  private def q357(s: SparkSession, d: String): DataFrame = {
-    val days = dayGrid(s, d).select(col("t"), col("rev"))
-      .localCheckpoint(true)
+  private def q357(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val days = sc.checkpoint(dayGrid(s, d).select(col("t"), col("rev")))
     val dTot = days.agg(count(lit(1)).as("dd"))
     // integer midpoint: Spark Column `/` is FP division (the q250
     // pitfall) — floor to mirror DuckDB's `//`
@@ -577,12 +576,12 @@ object Probes {
     // it would overflow roundTo's BIGINT floor; report the scale-free
     // split/pooled ratio instead (1 − ratio = variance explained by
     // allowing the break)
-    pooled.crossJoin(broadcast(parts))
+    sc.keep(pooled.crossJoin(broadcast(parts))
       .select(col("nn").as("n_days"),
         round((col("rssp") - col("rss12")) / lit(2.0) /
           safe(col("rss12") / safe(col("nn").cast("double") - lit(4.0))), 4)
           .as("f_stat"),
-        round(col("rss12") / safe(col("rssp")), 6).as("rss_ratio"))
+        round(col("rss12") / safe(col("rssp")), 6).as("rss_ratio")))
   }
 
   private val q357Sql = {
@@ -1048,9 +1047,8 @@ object Probes {
     * and the seasonal story is decorative. Exact integer cent errors,
     * squared in DECIMAL, one sqrt ratio at the close over days ≥ 7.
     */
-  private def q364(s: SparkSession, d: String): DataFrame = {
-    val days = dayGrid(s, d).select(col("t"), col("rev"))
-      .localCheckpoint(true)
+  private def q364(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val days = sc.checkpoint(dayGrid(s, d).select(col("t"), col("rev")))
     def lagged(k: Int, nm: String): DataFrame =
       days.select((col("t") + lit(k.toLong)).as("t"), col("rev").as(nm))
     val m = days.join(lagged(7, "l7"), Seq("t"))
@@ -1060,14 +1058,14 @@ object Probes {
         (col("rev") - col("l7")).cast(dec)).as("e7"),
       sum((col("rev") - col("l1")).cast(dec) *
         (col("rev") - col("l1")).cast(dec)).as("e1"))
-    agg.select(col("n").as("n_days"),
+    sc.keep(agg.select(col("n").as("n_days"),
       round(sqrt(col("e7").cast("double") / safe(col("n").cast("double"))) /
         safe(sqrt(col("e1").cast("double") /
           safe(col("n").cast("double")))), 6).as("theils_u"),
       round(sqrt(col("e7").cast("double") / safe(col("n").cast("double"))) /
         lit(100.0), 2).as("rmse_seasonal_usd"),
       round(sqrt(col("e1").cast("double") / safe(col("n").cast("double"))) /
-        lit(100.0), 2).as("rmse_naive_usd"))
+        lit(100.0), 2).as("rmse_naive_usd")))
   }
 
   private val q364Sql =
@@ -1351,9 +1349,8 @@ object Probes {
     * day grid (no FP mean in the comparison), earliest day breaks
     * ties; G closes in FP from exact n-scaled moments.
     */
-  private def q367(s: SparkSession, d: String): DataFrame = {
-    val days = dayGrid(s, d).select(col("dt"), col("t"), col("rev"))
-      .localCheckpoint(true)
+  private def q367(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val days = sc.checkpoint(dayGrid(s, d).select(col("dt"), col("t"), col("rev")))
     val m = days.agg(count(lit(1)).as("dd"),
       sum(col("rev").cast(dec)).as("ss"),
       sum(col("rev").cast(dec) * col("rev").cast(dec)).as("sq"))
@@ -1362,7 +1359,7 @@ object Probes {
         abs(col("dd").cast(dec) * col("rev").cast(dec) - col("ss")))
     val mx = dev.agg(max("adev").as("madev"))
     val ddD = col("dd").cast("double")
-    dev.crossJoin(broadcast(mx))
+    sc.keep(dev.crossJoin(broadcast(mx))
       .filter(col("adev") === col("madev"))
       .orderBy("t").limit(1)
       .select(col("dd").as("n_days"), col("dt").as("outlier_date"),
@@ -1371,7 +1368,7 @@ object Probes {
         round((col("adev").cast("double") / ddD) /
           safe(sqrt(safe((ddD * col("sq").cast("double") -
             col("ss").cast("double") * col("ss").cast("double")) /
-            safe(ddD * (ddD - lit(1.0)))))), 4).as("g_stat"))
+            safe(ddD * (ddD - lit(1.0)))))), 4).as("g_stat")))
   }
 
   private val q367Sql =
@@ -1442,15 +1439,14 @@ object Probes {
     * shares quantize to the 1e-9 grid before the |v−s| sum over the
     * bounded term×source grid.
     */
-  private def q369(s: SparkSession, d: String): DataFrame = {
+  private def q369(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val toks = Tables.documents(s, d).select(col("source"),
       explode(graft.functions.TextFunctions.words(lower(col("text"))))
         .as("w"))
     // persist, NOT localCheckpoint: the (term, source) table is
     // vocabulary-sized (the q173 boundary — eager checkpoints only for
     // genuinely small frames), and it feeds three consumers
-    val perSrc = toks.groupBy("w", "source").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val perSrc = sc.cache(toks.groupBy("w", "source").agg(count(lit(1)).as("c")))
     val srcTot = perSrc.groupBy("source").agg(sum("c").as("sc"))
     val allTot = srcTot.agg(sum("sc").as("n"))
     val top = perSrc.groupBy("w").agg(sum("c").as("tf"))
@@ -1468,7 +1464,7 @@ object Probes {
       .select(col("w").as("term"), col("tf").as("total_freq"),
         round(col("dsum").cast("double") / lit(2e9), 6).as("dp"))
       .orderBy(col("dp").desc, col("term")).limit(10)
-    graft.operators.Exec.owned(result, Seq(perSrc))
+    sc.keep(result)
   }
 
   private val q369Sql =
@@ -1638,7 +1634,7 @@ object Probes {
     * over groups). The tie-corrected variance closes from exact
     * integer Σn(n−1)(2n+5)-style sums (the q284 tie machinery).
     */
-  private def q372(s: SparkSession, d: String): DataFrame = {
+  private def q372(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val x = col("value").cast("double")
     val units = (floor(abs(x) * lit(1e6) + lit(0.5))).cast("long") *
       when(x < 0, -1L).otherwise(1L)
@@ -1647,9 +1643,8 @@ object Probes {
     // cg grows with distinct value cardinality (micro-unit values are
     // near-unique) — persist, never eager-checkpoint, a frame that is
     // not provably small (the q369/q378 measured lesson); the final
-    // one-row readout is owned below and releases this handle
-    val cg = b.groupBy("g", "u").agg(count(lit(1)).as("c"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    // one-row readout is kept, and the scope releases this handle
+    val cg = sc.cache(b.groupBy("g", "u").agg(count(lit(1)).as("c")))
     val grid = cg.select("u").distinct()
       .crossJoin(broadcast(cg.select("g").distinct()))
       .join(cg, Seq("g", "u"), "left")
@@ -1697,7 +1692,7 @@ object Probes {
         .as("jt_over_null"),
       round((col("jt2").cast("double") / lit(2.0) - e) /
         safe(sqrt(safe(vr))), 4).as("z"))
-    graft.operators.Exec.owned(result, Seq(cg))
+    sc.keep(result)
   }
 
   private val q372Sql =
@@ -2101,12 +2096,11 @@ object Probes {
     * 1e-9 grid before summation; conditional entropies close by
     * subtraction of exact grid sums.
     */
-  private def q378(s: SparkSession, d: String): DataFrame = {
+  private def q378(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // persist, NOT localCheckpoint: the tokenized corpus is
     // corpus-sized (the q173 boundary), read once per n-gram level
     val w = graft.functions.TextFunctions.words(lower(col("text")))
-    val docsW = Tables.documents(s, d).select(w.as("w"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val docsW = sc.cache(Tables.documents(s, d).select(w.as("w")))
     def grams(n: Int): DataFrame =
       if (n == 1) docsW.select(explode(col("w")).as("g"))
       else docsW
@@ -2133,7 +2127,7 @@ object Probes {
         .as("h_cond_1"),
       round((col("h3u") - col("h2u")).cast("double") / lit(1e9), 6)
         .as("h_cond_2"))
-    graft.operators.Exec.owned(result, Seq(docsW))
+    sc.keep(result)
   }
 
   private val q378Sql = {
@@ -2175,14 +2169,13 @@ object Probes {
     * reordering two "commuting" stages. Shares the q363 fingerprint
     * and representative rule.
     */
-  private def q379(s: SparkSession, d: String): DataFrame = {
+  private def q379(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val w = graft.functions.TextFunctions.words(col("text"))
     // one row per document — corpus-proportional, so persist (lazy,
     // spillable) rather than eager-checkpoint (the q369/q378 measured
     // lesson: eager materialization of non-small frames ran 4× slower)
-    val base = Tables.documents(s, d).select(col("doc_id"),
-      dupFp.as("fp"), size(array_distinct(w)).cast("long").as("q"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+    val base = sc.cache(Tables.documents(s, d).select(col("doc_id"),
+      dupFp.as("fp"), size(array_distinct(w)).cast("long").as("q")))
     val wF = Window.partitionBy("fp")
       .orderBy(col("q").desc, col("doc_id"))
     val inSample = graft.operators.Sampling
@@ -2203,7 +2196,7 @@ object Probes {
         col("kept_dedup_then_sample"), col("kept_sample_then_dedup"),
         (col("kept_sample_then_dedup") - col("kept_dedup_then_sample"))
           .as("order_bias"))
-    graft.operators.Exec.owned(result, Seq(base))
+    sc.keep(result)
   }
 
   private val q379Sql =
@@ -2247,11 +2240,10 @@ object Probes {
     * green. SimilaritySpec additionally asserts the round-trip equals
     * the in-memory [[graft.operators.Similarity.knnIvf]] verbatim.
     */
-  private def q380(s: SparkSession, d: String): DataFrame = {
+  private def q380(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // per-run unique index dir (the q186 convention): the small result
-    // is eagerly materialized below, then the scratch is deleted
-    val dir = graft.operators.Exec
-      .scratchTempDir("graft_q380_ivf").toString
+    // is kept eagerly, then the scope deletes the scratch
+    val dir = sc.tempDir("graft_q380_ivf")
     val emb = Tables.embeddings(s, d)
     graft.operators.Similarity
       .ivfIndexBuild(emb, "vec_id", "embedding", "label", dir)
@@ -2260,12 +2252,7 @@ object Probes {
         dir, k = 5, nprobe = 2)
       .withColumn("rank", col("rank").cast("int"))
       .orderBy("query_id", "rank")
-    val out = graft.operators.Exec.detachFromScratch(res, Seq(dir))
-    // res's plan holds ivfIndexQuery's probe-routing checkpoint — dead
-    // once the detached result is materialized (deep: the whole res
-    // plan is this query's own scratch over the just-deleted index dir)
-    graft.operators.Exec.releaseScratchDeep(res)
-    out
+    sc.keep(res)
   }
 
   private val q380Sql =
@@ -2482,7 +2469,7 @@ object Probes {
       .select(col("level"), col("flag"), col("status"), col("n_exact"),
         col("n_sample"), col("p50_cents"), col("p90_cents"))
       .orderBy("level", "flag", "status")
-    // no owned(): the leaf checkpoint belongs to the Kernels memo
+    // no keep: the result reads the Kernels memo's leaf checkpoint
   }
 
   private val q382Sql =
@@ -2622,7 +2609,7 @@ object Probes {
         col("n_sample"), col("w_sample"), col("p50_cents"),
         col("p90_cents"))
       .orderBy("level", "flag", "status")
-    // no owned(): the leaf checkpoint belongs to the Kernels memo
+    // no keep: the result reads the Kernels memo's leaf checkpoint
   }
 
   private val q383Sql =

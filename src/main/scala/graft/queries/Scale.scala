@@ -524,11 +524,14 @@ object Scale {
     * per cluster). Oracle: q53's generated-plane CTE chain + the same
     * recursive reachability closure as q71's. */
   private def q96(s: SparkSession, d: String): DataFrame =
-    graft.operators.Dedup.connectedComponents(
-        graft.operators.Dedup.embeddingPairsBucketed(
-          Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.45),
-        aCol = "vec_a", bCol = "vec_b")
-      .orderBy("id")
+    // the scope frees the pair list; the kept components are handed on
+    graft.operators.Exec.scope { sc =>
+      sc.keep(graft.operators.Dedup.connectedComponents(
+          graft.operators.Dedup.embeddingPairsBucketed(
+            Tables.embeddings(s, d), "vec_id", "embedding", threshold = 0.45),
+          aCol = "vec_a", bCol = "vec_b"))
+        .orderBy("id")
+    }
 
   private val q96Sql =
     s"""WITH RECURSIVE ${Pipeline.q53PairsCte},

@@ -2,6 +2,7 @@ package graft.queries
 
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -361,7 +362,7 @@ object Signals {
     * no-Exchange plan; this query value-checks the results that plan
     * produces against the origin tables). Grades integer-cent revenue
     * per segment. */
-  private def q185(s: SparkSession, d: String): DataFrame = {
+  private def q185(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // the catalog is in-memory per JVM but the warehouse directory is
     // not: a table dropped-by-restart leaves its location behind, and
     // CREATE then fails with LOCATION_ALREADY_EXISTS — clear both
@@ -383,15 +384,14 @@ object Signals {
       .write.mode("overwrite")
       .bucketBy(8, "c_custkey").sortBy("c_custkey")
       .saveAsTable("graft_q185_customer")
-    val result = s.table("graft_q185_orders")
+    val result = sc.keep(s.table("graft_q185_orders")
       .join(s.table("graft_q185_customer"),
         col("o_custkey") === col("c_custkey"))
       .groupBy("c_mktsegment")
       .agg(count(lit(1)).as("n_orders"),
         sum(round(col("o_totalprice") * 100, 0).cast("long"))
           .as("price_cents"))
-      .orderBy("c_mktsegment")
-      .localCheckpoint(true)
+      .orderBy("c_mktsegment"))
     // result is materialized (lineage truncated) — the bucketed scratch
     // tables can be dropped before returning instead of leaking per run
     dropBucketTables()
@@ -413,12 +413,11 @@ object Signals {
     * partition-column round-trip, and read-path pruning all sit inside
     * the value check. Revenue pre-quantized to integer cents at write
     * time: the graded sum is a LONG both before and after the trip. */
-  private def q186(s: SparkSession, d: String): DataFrame = {
+  private def q186(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // per-run unique sink: a fixed path leaks per run and collides
-    // under concurrent verifies; the small result is checkpointed
-    // eagerly below so the scratch can be deleted before returning
-    val path = graft.operators.Exec
-      .scratchTempDir("graft_q186_sink").toString
+    // under concurrent verifies; the small result is kept eagerly so
+    // the scope can delete the scratch on exit
+    val path = sc.tempDir("graft_q186_sink")
     Tables.lineitem(s, d)
       .select(col("l_orderkey"), col("l_returnflag"),
         round(col("l_extendedprice") * (lit(1.0) - col("l_discount"))
@@ -428,7 +427,7 @@ object Signals {
       .groupBy("l_returnflag")
       .agg(count(lit(1)).as("n"), sum("rev_cents").as("rev_cents_sum"))
       .orderBy("l_returnflag")
-    graft.operators.Exec.detachFromScratch(result, Seq(path))
+    sc.keep(result)
   }
 
   private val q186Sql =
@@ -557,12 +556,11 @@ object Signals {
     * revenue mass and share — "how top-heavy is the book" without a
     * global sort: one aggregation, a 3-value boundary broadcast, one
     * conditional re-aggregation. */
-  private def q189(s: SparkSession, d: String): DataFrame = {
-    val rev = Tables.orders(s, d)
+  private def q189(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val rev = sc.cache(Tables.orders(s, d)
       .groupBy("o_custkey")
       .agg(sum(round(col("o_totalprice") * 100, 0).cast("long"))
-        .as("rev_cents"))
-      .persist(org.apache.spark.storage.StorageLevel.MEMORY_AND_DISK)
+        .as("rev_cents")))
     // tier boundaries as exact order statistics (k = ceil(q·n), the
     // q182 contract): the narrowing kernel's per-round state is `bins`
     // longs, where a single-group exact `percentile` would buffer the
@@ -585,7 +583,7 @@ object Signals {
       .unionByName(tier("2_top_decile", b90))
       .unionByName(tier("3_top_percentile", b99))
       .orderBy("tier")
-    graft.operators.Exec.owned(result, Seq(rev))
+    sc.keep(result)
   }
 
   private val q189Sql =
@@ -896,11 +894,11 @@ object Signals {
     * vec_id tie-break, so the greedy trajectory is a pure function of
     * the data — the oracle unrolls all k rounds CTE-by-CTE and must
     * pick the identical centers and coverage radii. */
-  private def q196(s: SparkSession, d: String): DataFrame = {
+  private def q196(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import s.implicits._
     val k = 6
-    val emb = Tables.embeddings(s, d)
-      .select(col("vec_id"), col("embedding")).localCheckpoint(true)
+    val emb = sc.checkpoint(Tables.embeddings(s, d)
+      .select(col("vec_id"), col("embedding")))
     def cosTo(df: DataFrame, centerId: Long): DataFrame = {
       val ce = emb.filter(col("vec_id") === centerId)
         .select(col("embedding").as("cemb"))
@@ -912,25 +910,22 @@ object Signals {
         .drop("cemb")
     }
     val c1 = emb.agg(min("vec_id")).head().getLong(0)
-    var state = cosTo(emb, c1)
-      .select(col("vec_id"), col("embedding"), col("dq").as("md"))
-      .localCheckpoint(true)
+    var state = sc.checkpoint(cosTo(emb, c1)
+      .select(col("vec_id"), col("embedding"), col("dq").as("md")))
     val picks = scala.collection.mutable.ArrayBuffer(
       (1, c1, state.agg(max("md")).head().getLong(0)))
     for (j <- 2 to k) {
       val cj = state.orderBy(col("md").desc, col("vec_id"))
         .select("vec_id").head().getLong(0)
-      val next = cosTo(state, cj)
+      val next = sc.checkpoint(cosTo(state, cj)
         .select(col("vec_id"), col("embedding"),
-          least(col("md"), col("dq")).as("md"))
-        .localCheckpoint(true)
+          least(col("md"), col("dq")).as("md")))
       // previous round's min-dist state is dead once next materializes
-      graft.operators.Exec.releaseScratch(state)
+      sc.release(state)
       state = next
       picks += ((j, cj, state.agg(max("md")).head().getLong(0)))
     }
-    // result rows are driver-side — all corpus-sized scratch is dead
-    graft.operators.Exec.releaseScratch(state, emb)
+    // result rows are driver-side — the scope frees the corpus scratch
     picks.toSeq.toDF("rank", "vec_id", "radius_micro")
       .orderBy("rank")
   }
@@ -1181,7 +1176,7 @@ object Signals {
     * oracle replays all four stages in one CTE chain over the SHARED
     * shingle/band CTEs (q36/q73/q74's own text), so the composition
     * can never drift from the parts. */
-  private def q200(s: SparkSession, d: String): DataFrame = {
+  private def q200(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // Every text-scanning stage reads a session KERNEL (the per-doc
     // signal / fingerprint / pair / contamination stores in
     // [[graft.Kernels]]) — the funnel itself is small-table algebra
@@ -1197,17 +1192,15 @@ object Signals {
     // released before the query returns (the r13 GC-backlog lesson).
     val sig = Kernels.gopherSignals(s, d)
     val corpusSig = sig.filter(pmod(col("doc_id"), lit(20)) =!= 0)
-    val gIds = corpusSig.filter(col("keep")).select("doc_id")
-      .localCheckpoint(true)
+    val gIds = sc.checkpoint(corpusSig.filter(col("keep")).select("doc_id"))
     // exact dedup over the quality survivors = groupBy over the stored
     // fingerprints of exactly those docs (Dedup.exact's aggregation,
     // min id per content-hash group)
-    val exIds = Kernels.docContentHash(s, d)
+    val exIds = sc.checkpoint(Kernels.docContentHash(s, d)
       .join(gIds, "doc_id")
       .groupBy("content_hash")
       .agg(min("doc_id").as("doc_id"))
-      .select("doc_id")
-      .localCheckpoint(true)
+      .select("doc_id"))
     // near-dup pairs over the exact survivors = the full-corpus pair
     // store restricted to pairs with BOTH ends surviving (band keys
     // are per-doc, jaccard verification is pairwise — q200's
@@ -1216,8 +1209,7 @@ object Signals {
       .join(exIds.select(col("doc_id").as("doc_a")), "doc_a")
       .join(exIds.select(col("doc_id").as("doc_b")), "doc_b")
     val dropB = pairs.select(col("doc_b").as("doc_id")).distinct()
-    val ndIds = exIds.join(dropB, Seq("doc_id"), "left_anti")
-      .localCheckpoint(true)
+    val ndIds = sc.checkpoint(exIds.join(dropB, Seq("doc_id"), "left_anti"))
     val rd = ndIds
       .join(Kernels.benchOverlap(s, d, n = 3)
         .select(col("id").as("doc_id"),
@@ -1228,7 +1220,7 @@ object Signals {
     // p90 threshold as an exact order statistic (k = ceil(0.9·n), the
     // q182 contract): no doc-cardinality multiset buffer, and the
     // boundary is a data value both engines hold bit-identically
-    val rdC = rd.localCheckpoint(true)
+    val rdC = sc.checkpoint(rd)
     val (_, Seq(thr)) = graft.engine.OrderStat.kthSmallests(
       rdC, "ratio", graft.engine.OrderStat.quantileRanks(Seq(0.9)))
     val contamIds = rdC
@@ -1260,9 +1252,9 @@ object Signals {
         sum(when(col("f_cl") === 1L, col("toks")).otherwise(0L))
           .as("clean_token_sum"))
       .orderBy("source")
-    // per-source report (a handful of rows): own it eagerly so every
+    // per-source report (a handful of rows): keep it eagerly so every
     // stage checkpoint is released before the query returns
-    graft.operators.Exec.owned(funnel, Seq(gIds, exIds, ndIds, rdC))
+    sc.keep(funnel)
   }
 
   private val q200Sql = Pipeline.minhashBandCtes +
@@ -1542,14 +1534,12 @@ object Signals {
     * INNER join's final output equals the batch join over the same
     * rows, so DuckDB replays the identical interval join as batch SQL
     * — grading counts AND both distinct-endpoint cardinalities. */
-  private def q204(s: SparkSession, d: String): DataFrame = {
+  private def q204(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import org.apache.spark.sql.types.{LongType, TimestampNTZType,
       TimestampType}
     val rawSchema = s.read.parquet(s"$d/events.parquet").schema
-    val outDir = graft.operators.Exec
-      .scratchTempDir("graft_ssj_sink").toString
-    val ckpt = graft.operators.Exec
-      .scratchTempDir("graft_ssj_ckpt").toString
+    val outDir = sc.tempDir("graft_ssj_sink")
+    val ckpt = sc.tempDir("graft_ssj_ckpt")
     // same ts normalization as Tables.events (raw parquet is
     // TIMESTAMP(NANOS): a LONG under nanosAsLong, NTZ otherwise)
     def norm(df: DataFrame): DataFrame = df.schema("ts").dataType match {
@@ -1613,7 +1603,7 @@ object Signals {
         countDistinct(col("p_id")).as("n_purchases"),
         countDistinct(col("c_id")).as("n_clicks"))
       .orderBy("day")
-    graft.operators.Exec.detachFromScratch(result, Seq(outDir, ckpt))
+    sc.keep(result)
   }
 
   private val q204Sql =
@@ -1646,12 +1636,12 @@ object Signals {
     * (distinct sink batch ids) is graded too: it must equal the
     * distinct 6-day chunk count, proving the dimension really served
     * MULTIPLE micro-batches rather than one mega-batch. */
-  private def q267(s: SparkSession, d: String): DataFrame = {
+  private def q267(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     import s.implicits._
     import java.nio.file.{Files, Paths, StandardCopyOption}
     val chunkUs = 6L * 86400 * 1000000
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_enrich_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_enrich_out").toString
+    val ckpt = sc.tempDir("graft_enrich_ckpt")
+    val outDir = sc.tempDir("graft_enrich_out")
 
     // one file per 6-day chunk, mtime-sequenced = the FileStreamSource
     // replay order; built once per session (ChunkStore), replayed
@@ -1703,7 +1693,7 @@ object Signals {
         sunk.agg(countDistinct("batch_id").as("n_batches"))))
       .orderBy("segment")
     // ingest belongs to the ChunkStore — per-run scratch only
-    graft.operators.Exec.detachFromScratch(result, Seq(ckpt, outDir))
+    sc.keep(result)
   }
 
   private val q267Sql =
@@ -1753,11 +1743,11 @@ object Signals {
     * micro-batches, more eviction-boundary carries) configuration the
     * bench-time q272 no longer runs. */
   private[graft] def outerJoinReplay(s: SparkSession, d: String,
-                                     chunkBudget: Int): DataFrame = {
+                                     chunkBudget: Int): DataFrame = Exec.scope { sc =>
     import s.implicits._
     import java.nio.file.Files
-    val ckpt = graft.operators.Exec.scratchTempDir("graft_soj_ckpt").toString
-    val outDir = graft.operators.Exec.scratchTempDir("graft_soj_out").toString
+    val ckpt = sc.tempDir("graft_soj_ckpt")
+    val outDir = sc.tempDir("graft_soj_out")
 
     // chunk files (span-scaled width + sentinels) built once per
     // session (ChunkStore), replayed read-only with a fresh checkpoint
@@ -1853,7 +1843,7 @@ object Signals {
         countDistinct(col("p_id")).as("n_purchases"))
       .orderBy("day")
     // ingest belongs to the ChunkStore — per-run scratch only
-    graft.operators.Exec.detachFromScratch(result, Seq(ckpt, outDir))
+    sc.keep(result)
   }
 
   private val q272Sql =

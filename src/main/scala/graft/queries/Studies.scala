@@ -3,6 +3,7 @@ package graft.queries
 import org.apache.spark.sql.{Column, DataFrame, SparkSession}
 import org.apache.spark.sql.expressions.Window
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
 
@@ -1092,12 +1093,11 @@ object Studies {
     * carried on the 1e-9 grid, so the unrolled oracle CTE chain replays
     * the identical arithmetic.
     */
-  private def q326(s: SparkSession, d: String): DataFrame = {
-    val grid = Tables.lineitem(s, d)
+  private def q326(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val grid = sc.checkpoint(Tables.lineitem(s, d)
       .select(round(col("l_discount") * 100, 0).cast("long").as("x"),
         when(col("l_returnflag") === "R", 1L).otherwise(0L).as("y"))
-      .groupBy("x").agg(count(lit(1)).as("m"), sum("y").as("sy"))
-      .localCheckpoint(true)
+      .groupBy("x").agg(count(lit(1)).as("m"), sum("y").as("sy")))
     val rows = grid.collect().map(r =>
       (r.getLong(0), r.getLong(1), r.getLong(2)))
     def fl(v: Double, p: Double): Double =
@@ -1130,7 +1130,7 @@ object Studies {
     val (a2, b2) = newton(a1, b1)
     val (a3, b3) = newton(a2, b2)
     def sig(z: Double): Double = 1.0 / (1.0 + math.exp(-z))
-    grid.agg(sum("m").as("n"), sum("sy").as("positives"),
+    sc.keep(grid.agg(sum("m").as("n"), sum("sy").as("positives"),
         sum(when(col("x") === 0L, col("sy")).otherwise(0L)).as("s0"),
         sum(when(col("x") === 0L, col("m")).otherwise(0L)).as("m0"),
         sum(when(col("x") === 10L, col("sy")).otherwise(0L)).as("s10"),
@@ -1142,7 +1142,7 @@ object Studies {
         round(col("s0").cast("double") /
           safe(col("m0").cast("double")), 6).as("emp_rate_low"),
         round(col("s10").cast("double") /
-          safe(col("m10").cast("double")), 6).as("emp_rate_high"))
+          safe(col("m10").cast("double")), 6).as("emp_rate_high")))
   }
 
   private val q326Sql = {
@@ -1535,7 +1535,7 @@ object Studies {
     * asc), per-term logs on the 1e-9 grid, one 101-row window. The
     * corpus contributes one projection-only scan.
     */
-  private def q331(s: SparkSession, d: String): DataFrame = {
+  private def q331(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val k = 100
     val top = Tables.documents(s, d)
       .select(col("doc_id"),
@@ -1544,8 +1544,8 @@ object Studies {
       .orderBy(col("x").desc, col("doc_id"))
       .limit(k + 1)
     val w = Window.orderBy(col("x").desc, col("doc_id"))
-    val rn = top.withColumn("rn", row_number().over(w))
-      .localCheckpoint(true) // 101 rows, read by km/xk/terms
+    // 101 rows, read by km/xk/terms
+    val rn = sc.checkpoint(top.withColumn("rn", row_number().over(w)))
     val km = rn.agg(max("rn").as("kmax"))
     val kmax = rn.crossJoin(broadcast(km))
       .filter(col("rn") === col("kmax"))
@@ -1555,14 +1555,14 @@ object Studies {
       .select(col("kmax"), col("xk"),
         floor(log(col("x").cast("double") / col("xk").cast("double")) *
           lit(1e9) + lit(0.5)).cast("long").as("tu"))
-    terms.groupBy("kmax", "xk")
+    sc.keep(terms.groupBy("kmax", "xk")
       .agg(count(lit(1)).as("k_used"), sum("tu").as("su"))
       .select(col("k_used"), col("xk").as("x_kplus1"),
         round(col("k_used").cast("double") /
           safe(col("su").cast("double") / 1e9), 6).as("alpha"),
         (round(col("k_used").cast("double") /
           safe(col("su").cast("double") / 1e9), 6) < 2.0)
-          .as("infinite_variance"))
+          .as("infinite_variance")))
   }
 
   private val q331Sql =
@@ -1894,15 +1894,14 @@ object Studies {
     * ≤k² rows with broadcast marginals. Top 15 by (support desc,
     * pair) — a total order.
     */
-  private def q336(s: SparkSession, d: String): DataFrame = {
+  private def q336(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val w = Window.partitionBy("user_id").orderBy("ts", "event_id")
-    val seq0 = Tables.events(s, d)
+    val seq0 = sc.checkpoint(Tables.events(s, d)
       .select(col("user_id"), col("ts"), col("event_id"),
         col("event_type").as("a"))
       .withColumn("b", lead(col("a"), 1).over(w))
       .filter(col("b").isNotNull)
-      .select("user_id", "a", "b").distinct()
-      .localCheckpoint(true) // read by support + both marginals
+      .select("user_id", "a", "b").distinct()) // support + both marginals
     val sup = seq0.groupBy("a", "b").agg(count(lit(1)).as("support"))
     val ua = seq0.select("user_id", "a").distinct()
       .groupBy("a").agg(count(lit(1)).as("ua"))
@@ -1910,7 +1909,7 @@ object Studies {
       .groupBy("b").agg(count(lit(1)).as("ub"))
     val users = Tables.events(s, d).agg(
       countDistinct(col("user_id")).as("u"))
-    sup.join(broadcast(ua), Seq("a")).join(broadcast(ub), Seq("b"))
+    sc.keep(sup.join(broadcast(ua), Seq("a")).join(broadcast(ub), Seq("b"))
       .crossJoin(broadcast(users))
       .select(col("a").as("first_type"), col("b").as("next_type"),
         col("support"),
@@ -1920,7 +1919,7 @@ object Studies {
           / safe(col("ua").cast("double") * col("ub").cast("double")),
           4).as("lift"))
       .orderBy(col("support").desc, col("first_type"), col("next_type"))
-      .limit(15)
+      .limit(15))
   }
 
   private val q336Sql =
@@ -1956,7 +1955,7 @@ object Studies {
     * driver-side (the q302/q326 bounded-loop shape), so the unrolled
     * oracle CTE chain replays identical arithmetic.
     */
-  private def q337(s: SparkSession, d: String): DataFrame = {
+  private def q337(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val daily = Tables.orders(s, d)
       .select(to_date(col("o_orderdate")).as("dt"))
       .groupBy("dt").agg(count(lit(1)).as("y"))
@@ -1967,11 +1966,10 @@ object Studies {
       .select(datediff(col("dt"), col("d0")).cast("long").as("t"),
         coalesce(col("y"), lit(0L)).as("y"))
     val tm = grid.agg(max("t").as("tmax"))
-    val days = grid.crossJoin(broadcast(tm))
+    val days = sc.checkpoint(grid.crossJoin(broadcast(tm))
       .select(col("t"), col("y"),
         (col("t").cast("double") /
-          greatest(col("tmax"), lit(1L)).cast("double")).as("x"))
-      .localCheckpoint(true)
+          greatest(col("tmax"), lit(1L)).cast("double")).as("x")))
     def fl(v: Double, p: Double): Double = math.floor(v * p + 0.5) / p
     def g(x: Double): Double = math.max(x, 1e-12)
     val head = days.agg(count(lit(1)).as("n"), sum("y").as("sy")).head()
@@ -1999,12 +1997,12 @@ object Studies {
     val (a1, b1) = newton(a0, 0.0)
     val (a2, b2) = newton(a1, b1)
     val (a3, b3) = newton(a2, b2)
-    days.agg(count(lit(1)).as("n_days"), sum("y").as("n_orders"))
+    sc.keep(days.agg(count(lit(1)).as("n_days"), sum("y").as("n_orders"))
       .select(col("n_days"), col("n_orders"),
         lit(fl(a3, 1e6)).as("a"), lit(fl(b3, 1e6)).as("b"),
         lit(fl(math.exp(b3), 1e6)).as("rate_ratio"),
         round(col("n_orders").cast("double") /
-          safe(col("n_days").cast("double")), 6).as("mean_daily"))
+          safe(col("n_days").cast("double")), 6).as("mean_daily")))
   }
 
   private val q337Sql = {
@@ -2162,17 +2160,16 @@ object Studies {
     * distinct-value placements + two keyed sample joins; no pair
     * enumeration anywhere.
     */
-  private def q340(s: SparkSession, d: String): DataFrame = {
+  private def q340(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val sumB = aggregate(col("embedding"), lit(0.0), (acc, x) => acc + x)
     val sa = col("embedding").getItem(0).cast("double")
     def units(c: Column): Column =
       (floor(abs(c) * lit(1e6) + lit(0.5))).cast("long") *
         when(c < 0, -1L).otherwise(1L)
-    val base = Tables.embeddings(s, d)
+    val base = sc.checkpoint(Tables.embeddings(s, d)
       .select(col("vec_id"),
         (pmod(col("label"), lit(2)) === 0).as("y"),
-        units(sa).as("ua"), units(sumB).as("ub"))
-      .localCheckpoint(true)
+        units(sa).as("ua"), units(sumB).as("ub")))
     val tot = base.agg(
       sum(when(col("y"), 1L).otherwise(0L)).as("p"),
       sum(when(!col("y"), 1L).otherwise(0L)).as("q"))
@@ -2189,10 +2186,9 @@ object Studies {
           (lit(2L) * (col("p") - col("below_pp") - col("pp")) +
             col("pp")).as(s"${pre}01"))
     }
-    val samples = base.select(col("vec_id"), col("y"))
+    val samples = sc.checkpoint(base.select(col("vec_id"), col("y"))
       .join(placed("ua", "a"), Seq("vec_id"))
-      .join(placed("ub", "b"), Seq("vec_id"))
-      .localCheckpoint(true)
+      .join(placed("ub", "b"), Seq("vec_id")))
     val dec = "decimal(38,0)"
     val st1 = samples.crossJoin(broadcast(tot)).groupBy("p", "q")
       .agg(sum(when(col("y"), col("a10").cast(dec))
@@ -2239,11 +2235,11 @@ object Studies {
       (cmp(col("saa01"), qD) + cmp(col("sbb01"), qD) -
         lit(2.0) * cmp(col("sab01"), qD)) / safe(qD)
     import graft.functions.Rounding.floorRound
-    st2.select(col("p").as("n_pos"), col("q").as("n_neg"),
+    sc.keep(st2.select(col("p").as("n_pos"), col("q").as("n_neg"),
       round(col("ta"), 6).as("auc_a"),
       round(col("tb"), 6).as("auc_b"),
       floorRound(col("ta") - col("tb"), 6).as("auc_diff"),
-      floorRound((col("ta") - col("tb")) / safe(sqrt(varD)), 6).as("z"))
+      floorRound((col("ta") - col("tb")) / safe(sqrt(varD)), 6).as("z")))
   }
 
   private val q340Sql =
@@ -2567,11 +2563,10 @@ object Studies {
     * h quantizes to 1e-9-unit LONGs for the mean and (around the
     * broadcast exact mean) the variance, closing in a one-sample z.
     */
-  private def q343(s: SparkSession, d: String): DataFrame = {
-    val base = Tables.embeddings(s, d)
+  private def q343(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val base = sc.checkpoint(Tables.embeddings(s, d)
       .select(col("vec_id"),
-        (pmod(col("label"), lit(2)) === 0).as("pa"), col("embedding"))
-      .localCheckpoint(true)
+        (pmod(col("label"), lit(2)) === 0).as("pa"), col("embedding")))
     def pairsOf(pa: Boolean, v0: String, v1: String): DataFrame = {
       val g = base.filter(col("pa") === lit(pa))
         .select(col("vec_id").as("u"), col("embedding"))
@@ -2595,7 +2590,7 @@ object Studies {
       exp(-(dot(x, x) - lit(2.0) * dot(x, y) + dot(y, y)) / lit(64.0))
     val h = k(col("a0"), col("a1")) + k(col("b0"), col("b1")) -
       k(col("a0"), col("b1")) - k(col("a1"), col("b0"))
-    val hq = quads.select(col("i"), h.as("h")).localCheckpoint(true)
+    val hq = sc.checkpoint(quads.select(col("i"), h.as("h")))
     val st1 = hq.agg(count(lit(1)).as("n"),
       sum(floor(col("h") * lit(1e9) + lit(0.5)).cast("long")).as("shu"))
     val mean = col("shu").cast("double") / 1e9 /
@@ -2613,10 +2608,10 @@ object Studies {
     val se = sqrt(col("sdu").cast("double") / 1e9 /
       safe(nD - 1.0) / safe(nD))
     import graft.functions.Rounding.floorRound
-    st2.select(col("n").as("n_quads"),
+    sc.keep(st2.select(col("n").as("n_quads"),
       floorRound(mmd, 6).as("mmd_linear"),
       round(se, 6).as("se"),
-      floorRound(mmd / safe(se), 6).as("z"))
+      floorRound(mmd / safe(se), 6).as("z")))
   }
 
   private val q343Sql =
@@ -2689,14 +2684,13 @@ object Studies {
     * CTE chain replays identical arithmetic. Deterministic moment
     * init (m ± sd); separation closes as a Cohen-d-style readout.
     */
-  private def q344(s: SparkSession, d: String): DataFrame = {
-    val vc = Tables.documents(s, d)
+  private def q344(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+    val vc = sc.checkpoint(Tables.documents(s, d)
       .select(size(graft.functions.TextFunctions.words(col("text")))
         .cast("long").as("v"))
       .groupBy("v").agg(count(lit(1)).as("c"))
       .select(col("v"), col("c"),
-        log(greatest(col("v"), lit(1L)).cast("double")).as("x"))
-      .localCheckpoint(true)
+        log(greatest(col("v"), lit(1L)).cast("double")).as("x")))
     def fl(v: Double, p: Double): Double = math.floor(v * p + 0.5) / p
     def g(x: Double): Double = math.max(x, 1e-12)
     // moment init from exact quantized sums
@@ -2740,14 +2734,14 @@ object Studies {
         1e-6), 1e9)
     }
     val sep = (mu2 - mu1) / math.sqrt((va1 + va2) / 2.0)
-    vc.agg(sum("c").as("n_docs"))
+    sc.keep(vc.agg(sum("c").as("n_docs"))
       .select(col("n_docs"),
         lit(fl(w, 1e6)).as("weight_low"),
         lit(fl(mu1, 1e6)).as("mu_log_low"),
         lit(fl(mu2, 1e6)).as("mu_log_high"),
         lit(fl(math.sqrt(va1), 1e6)).as("sigma_low"),
         lit(fl(math.sqrt(va2), 1e6)).as("sigma_high"),
-        lit(fl(sep, 1e4)).as("separation"))
+        lit(fl(sep, 1e4)).as("separation")))
   }
 
   private val q344Sql = {
@@ -3129,18 +3123,17 @@ object Studies {
     * bounded passes over the calendar-bounded day table with the
     * broadcast fitted line.
     */
-  private def q348(s: SparkSession, d: String): DataFrame = {
+  private def q348(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val daily = Tables.orders(s, d)
       .select(to_date(col("o_orderdate")).as("dt"),
         round(col("o_totalprice") * 100, 0).cast("long").as("c"))
       .groupBy("dt").agg(sum("c").as("c"))
     val span = daily.agg(min("dt").as("d0"), max("dt").as("d1"))
-    val grid = span.select(col("d0"),
+    val grid = sc.checkpoint(span.select(col("d0"),
         explode(sequence(col("d0"), col("d1"))).as("dt"))
       .join(daily, Seq("dt"), "left")
       .select(datediff(col("dt"), col("d0")).cast("long").as("t"),
-        (coalesce(col("c"), lit(0L)).cast("double") / 1e6).as("r"))
-      .localCheckpoint(true)
+        (coalesce(col("c"), lit(0L)).cast("double") / 1e6).as("r")))
     val dec = "decimal(38,0)"
     val s1 = grid.agg(count(lit(1)).as("n"), sum("t").as("st"),
       sum(col("t").cast(dec) * col("t").cast(dec)).as("stt"),
@@ -3174,10 +3167,10 @@ object Studies {
       col("sg").cast("double") * col("sg").cast("double")
     val r2 = num * num / safe(denx * deng)
     import graft.functions.Rounding.floorRound
-    s2.select(col("n").as("n_days"),
+    sc.keep(s2.select(col("n").as("n_days"),
       floorRound(col("beta"), 6).as("beta"),
       round(r2, 6).as("r2_aux"),
-      round(nD * r2, 4).as("bp_stat"), lit(1L).as("dof"))
+      round(nD * r2, 4).as("bp_stat"), lit(1L).as("dof")))
   }
 
   private val q348Sql =

@@ -21,7 +21,7 @@ import graft.operators.Exec
   * streaming operator's measured work is unchanged.
   *
   * Ownership: the store's directories must never be passed to a
-  * query's own scratch cleanup (`detachFromScratch`); [[clear]] (test
+  * query's own scratch cleanup (a scope's `tempDir`); [[clear]] (test
   * isolation / cold-cost harnesses) and a JVM shutdown hook delete
   * them. Queries that CONSUME their staged files per run (q277 moves
   * chunks into the ingest dir mid-stream) take a per-run [[linkInto]]

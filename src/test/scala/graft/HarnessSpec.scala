@@ -18,7 +18,7 @@ class HarnessSpec extends SparkSpec {
   test("drain releases checkpointed scratch and keeps the Kernels memo readable") {
     Kernels.clear()
     try {
-      val store = Kernels.cached(spark, "harness-spec")(spark.range(0, 1000).toDF("id"))
+      val store = Kernels.cached(spark, "harness-spec")(_ => spark.range(0, 1000).toDF("id"))
       val storeRows = store.count()
       val scratch = spark.range(0, 5000).selectExpr("id", "id * 2 AS v")
         .localCheckpoint(true)
@@ -65,5 +65,15 @@ class HarnessSpec extends SparkSpec {
     assert(occurrences("src/main", "getPersistentRDDs").keySet ===
       Set("src/main/scala/graft/operators/Exec.scala"))
     assert(occurrences("src/main", "case _: Throwable").isEmpty)
+    // every materialization goes through Exec.scope's Scope
+    val exec = Set("src/main/scala/graft/operators/Exec.scala")
+    Seq("localCheckpoint(", ".persist(", ".unpersist(").foreach { call =>
+      assert(occurrences("src/main", call).keySet === exec, call)
+    }
+    Seq("owned" + "(", "releaseScratch" + "Deep", "detachFrom" + "Scratch")
+      .foreach(gone => assert(occurrences("src", gone).isEmpty, gone))
+    assert(occurrences("src/main", "scratchTempDir(").keySet === exec ++ Set(
+      "src/main/scala/graft/streaming/ChunkStore.scala",
+      "src/main/scala/graft/streaming/ChunkReplay.scala"))
   }
 }

@@ -7,7 +7,7 @@ import org.scalatest.funsuite.AnyFunSuite
 trait SparkSpec extends AnyFunSuite {
   lazy val spark: SparkSession = SparkSpec.session
 
-  /** Build a frame with `Exec.owned` left UNMATERIALIZED (the
+  /** Build a frame with every `Scope.keep` left UNMATERIALIZED (the
     * `Exec.planOnlyHook` flag), so plan-assert tests can inspect the
     * operator's real execution plan instead of the LogicalRDD scan the
     * eager checkpoint leaves behind. Construction-only: evaluate the

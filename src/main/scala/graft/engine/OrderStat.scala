@@ -168,164 +168,6 @@ object OrderStat {
     perSpec.map { case (n, ts) => (n, ts.map(_.res)) }
   }
 
-  /** Exact INTERPOLATED percentiles with Spark `percentile` semantics
-    * — `pos = q·(n−1)` (0-based), result `(ceil(pos)−pos)·v_floor +
-    * (pos−floor(pos))·v_ceil` — WITHOUT ever buffering the column:
-    * the two bracketing order statistics per fraction ride one
-    * batched [[multiQuantiles]] narrowing solve and the driver
-    * applies Spark's own weighted-interpolation formula, so the
-    * result is bit-identical to `expr("percentile(c, q)")` on the
-    * same data (OrderStatSpec pins this) while the largest
-    * aggregation state anywhere is `bins` counters. Returns
-    * `(n, values aligned with fracs)`; requires a non-empty column
-    * (`percentile` of nothing is NULL — callers own that case).
-    */
-  def interpolatedPercentiles(df: DataFrame, valCol: String,
-                              fracs: Seq[Double], bins: Int = 512,
-                              cutoff: Long = 4096): (Long, Seq[Double]) = {
-    require(fracs.forall(q => q >= 0 && q <= 1), s"fractions in [0,1]: $fracs")
-    def bracket(n: Long): Seq[Long] = fracs.flatMap { q =>
-      val pos = q * (n - 1)
-      Seq(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
-    }.distinct.sorted
-    val Seq((n, vs)) =
-      multiQuantiles(df, Seq(valCol -> (bracket _)), bins, cutoff)
-    val byRank = bracket(n).zip(vs).toMap
-    (n, fracs.map(q => interp(q, n, byRank)))
-  }
-
-  /** Spark's `Percentile.getPercentile` arithmetic, verbatim: the
-    * weighted two-sided form (NOT `lo + f·(hi−lo)` — the two differ
-    * by an ulp, which a rounded oracle compare can surface). */
-  private def interp(q: Double, n: Long, byRank: Map[Long, Double])
-      : Double = {
-    val pos = q * (n - 1)
-    val lo = math.floor(pos).toLong
-    val hi = math.ceil(pos).toLong
-    if (lo == hi) byRank(lo + 1)
-    else (hi - pos) * byRank(lo + 1) + (pos - lo) * byRank(hi + 1)
-  }
-
-  /** The grouped companion: exact interpolated percentiles of
-    * `valCol` PER GROUP, every group narrowing in LOCKSTEP — the
-    * per-round work is one broadcast join of a tiny `(group, task,
-    * lo, hi)` state table followed by one `(task, bin)` count, so a
-    * round costs O(rows × fracs) regardless of how many groups exist,
-    * and no task ever buffers more than `bins` counters. This is what
-    * retires grouped exact `percentile(...)` whose group count does
-    * NOT grow with the corpus (3 order statuses, a handful of
-    * sources, a few thousand days): there each group's aggregation
-    * buffer is O(corpus/groups) = O(corpus) — the single-group buffer
-    * bomb wearing a groupBy.
-    *
-    * The group key is compared as a STRING (state rows are
-    * driver-built literals; stringifying sidesteps type-lossy
-    * round-trips) — pass `groupExpr` already cast if the natural
-    * string form is ambiguous. Returns `group → (n, values aligned
-    * with fracs)` for every group with ≥1 non-null value, values
-    * bit-identical to Spark's `percentile` per group.
-    */
-  def groupedInterpolatedPercentiles(df: DataFrame, groupExpr: Column,
-      valCol: Column, fracs: Seq[Double], bins: Int = 64,
-      cutoff: Long = 4096): Map[String, (Long, Seq[Double])] = Exec.scope { sc =>
-    require(bins >= 2, "need at least two bins per round")
-    require(fracs.forall(q => q >= 0 && q <= 1), s"fractions in [0,1]: $fracs")
-    val spark = df.sparkSession
-    import spark.implicits._
-    val v = valCol.cast("double")
-    val vals = sc.cache(df.filter(v.isNotNull)
-      .select(groupExpr.cast("string").as("g"), v.as("v")))
-    val base = vals.groupBy("g")
-      .agg(count(lit(1)).as("n"), min(col("v")).as("lo"),
-        max(col("v")).as("hi"))
-      .collect()
-      .map(r => (r.getString(0), r.getLong(1), r.getDouble(2),
-        r.getDouble(3)))
-    final class Task(val id: Int, val g: String, var kk: Long,
-                     var lo: Double, var hi: Double, var cnt: Long,
-                     var done: Boolean, var res: Double)
-    val ns = base.map(b => b._1 -> b._2).toMap
-    var nextId = 0
-    val tasksByGroup: Map[String, Map[Long, Task]] = base.map {
-      case (g, n, lo, hi) =>
-        val ranks = fracs.flatMap { q =>
-          val pos = q * (n - 1)
-          Seq(math.floor(pos).toLong + 1, math.ceil(pos).toLong + 1)
-        }.distinct.sorted
-        g -> ranks.map { k =>
-          nextId += 1
-          k -> new Task(nextId, g, k, lo, hi, -1L, false, 0.0)
-        }.toMap
-    }.toMap
-    val all = tasksByGroup.values.flatMap(_.values).toSeq
-    var guard = 0
-    while (all.exists(!_.done) && guard < 128) {
-      guard += 1
-      for (t <- all if !t.done if t.lo >= t.hi) {
-        t.res = t.lo; t.done = true
-      }
-      val active = all.filter(!_.done)
-      val (fin, toHist) = active.partition(t =>
-        (t.cnt >= 0 && t.cnt <= cutoff) || (t.hi - t.lo) / bins == 0.0)
-      // finishers: per-task exact value counts, driver walk — the
-      // state join fans a row out to only ITS group's tasks, so the
-      // emitted width is ≤ tasks-per-group, not total tasks
-      if (fin.nonEmpty) {
-        val st = fin.map(t => (t.id, t.g, t.lo, t.hi))
-          .toDF("tid", "tg", "tlo", "thi")
-        val rows = vals
-          .join(broadcast(st), col("g") === col("tg") &&
-            col("v") >= col("tlo") && col("v") <= col("thi"))
-          .groupBy(col("tid"), col("v")).agg(count(lit(1)).as("cc"))
-          .collect()
-        val byTask = rows.groupBy(_.getInt(0))
-        fin.foreach { t =>
-          val vs = byTask(t.id).map(r => (r.getDouble(1), r.getLong(2)))
-            .sortBy(_._1)
-          var rem = t.kk
-          var i = 0
-          while (i < vs.length && rem > vs(i)._2) {
-            rem -= vs(i)._2; i += 1
-          }
-          t.res = vs(i)._1; t.done = true
-        }
-      }
-      if (toHist.nonEmpty) {
-        val st = toHist.map(t =>
-          (t.id, t.g, t.lo, t.hi, (t.hi - t.lo) / bins))
-          .toDF("tid", "tg", "tlo", "thi", "tw")
-        val h = vals
-          .join(broadcast(st), col("g") === col("tg") &&
-            col("v") >= col("tlo") && col("v") <= col("thi"))
-          .select(col("tid"), least(greatest(
-              floor((col("v") - col("tlo")) / col("tw")), lit(0.0)),
-            lit((bins - 1).toDouble)).cast("int").as("b"))
-          .groupBy("tid", "b").agg(count(lit(1)).as("cc"))
-          .collect()
-          .map(r => (r.getInt(0), r.getInt(1)) -> r.getLong(2)).toMap
-        toHist.foreach { t =>
-          val w = (t.hi - t.lo) / bins
-          def hb(i: Int) = h.getOrElse((t.id, i), 0L)
-          var cum = 0L
-          var b = 0
-          while (b < bins && cum + hb(b) < t.kk) { cum += hb(b); b += 1 }
-          t.kk -= cum
-          t.cnt = hb(b)
-          val nlo = t.lo + b * w
-          t.hi = if (b == bins - 1) t.hi
-                 else math.min(t.hi, t.lo + (b + 1) * w)
-          t.lo = nlo
-        }
-      }
-    }
-    require(all.forall(_.done), "grouped order-statistic narrowing stalled")
-    tasksByGroup.map { case (g, byRank) =>
-      val n = ns(g)
-      val resByRank = byRank.map { case (k, t) => k -> t.res }
-      g -> (n, fracs.map(q => interp(q, n, resByRank)))
-    }
-  }
-
   /** The shared rank convention for quantile boundaries: the q-th
     * quantile of n values is the `max(1, ceil(q*n))`-th smallest —
     * replayable in ANY engine as `row_number() ORDER BY v` at that

@@ -1,5 +1,6 @@
 package org.apache.spark.sql
 
+import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one compilation unit that lives inside Spark's package scope.
@@ -8,9 +9,10 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * whole-operator extension path — SURVEY.md §2.9 preference rung (c))
   * requires `Dataset.ofRows`, which Spark scopes `private[sql]`; there
   * is no public constructor from a logical plan. This shim re-exports
-  * exactly the two entry points the engine's custom plans need and
-  * nothing else. Everything downstream (`graft.plans.*`) stays in the
-  * engine's own namespace and uses only these two calls.
+  * the two entry points the engine's custom plans need, the checkpoint
+  * handles [[graft.operators.Scope]] releases, and the listener-bus
+  * drain that job-counting tests read their counts after. Everything
+  * downstream (`graft.plans.*`) stays in the engine's own namespace.
   */
 object GraftSqlBridge {
 
@@ -48,4 +50,9 @@ object GraftSqlBridge {
       case r: execution.LogicalRDD if r.rdd.isCheckpointed => Some(r.rdd)
       case _ => None
     }
+
+  /** Block until every event posted so far has reached every
+    * `SparkListener` (`SparkContext.listenerBus` is `private[spark]`):
+    * a listener's job count is complete only after this. */
+  def drainListenerBus(sc: SparkContext): Unit = sc.listenerBus.waitUntilEmpty()
 }

@@ -1,7 +1,12 @@
 package graft.queries
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import scala.jdk.CollectionConverters._
+
+import org.apache.spark.HashPartitioner
+import org.apache.spark.rdd.RDD
+import org.apache.spark.sql.{Column, DataFrame, Row, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{IntegerType, LongType, StructField, StructType}
 import graft.operators.{Exec, Scope}
 // cross-engine deterministic rounding shadows functions.round
 import graft.functions.Rounding.{roundTo => round}
@@ -163,40 +168,88 @@ object Lifecycle {
     * the deterministic variant of the classic peel (visit-order
     * peeling is unreproducible across partitionings; the synchronous
     * sweep is a pure function of the graph, so an oracle can unroll it
-    * round by round). Per round: one degree aggregation on the pinned
-    * symmetric edge table + two survivor semi-joins, lineage truncated
-    * per round ([[graft.operators.Graph.labelPropagation]]
-    * discipline). Output: nodes/edges remaining after each round.
+    * round by round). Output: nodes/edges remaining after each round.
+    *
+    * Execution: a frontier peel ("MapReduce Algorithms for Big Data
+    * Analysis", VLDB 2012) as a chain of RDD shuffles on one
+    * `HashPartitioner(spark.sql.shuffle.partitions)`. The symmetric
+    * adjacency `(node, nbrs, deg)` is built once with `groupByKey`;
+    * each round is then one `reduceByKey` in which a survivor
+    * (`deg ≥ 6`) sends its own row and a peeled node sends one
+    * decrement to each neighbour and drops out. Rows without a self
+    * row (decrements for nodes already gone) and survivors left with
+    * degree 0 are dropped, so every edge sends at most one message each
+    * way over the whole peel and the state shrinks with the survivors.
+    * The readouts (`n_nodes` = surviving rows, `n_edges` = Σdeg / 2)
+    * come from one union over the six rounds' shuffle outputs, which
+    * Spark re-reads instead of recomputing: the whole peel is ONE job
+    * of 8 stages, with nothing persisted or checkpointed, and the
+    * result is a local 6-row frame (`LocalRelation`).
+    *
+    * This is the one query that leaves [[graft.operators.Graph]]'s
+    * "no RDDs" rule. Under AQE every exchange and broadcast of a
+    * DataFrame loop runs as its own job, and a per-round plan must be
+    * materialized or it regrows every round; in an RDD chain the
+    * shuffle files ARE the per-round materialization. DataFrame
+    * variants measured on a 4-core box, all slower or no faster than
+    * the old loop (degree agg + two semi-joins + two checkpoints per
+    * round; 43 jobs per run on `LifecycleSpec`'s cascade fixture,
+    * against 2 now: the parquet schema read and the peel):
+    *  - a checkpointed delta join (recount only the frontier's
+    *    neighbours): 41 jobs, no gain;
+    *  - generations pinned with `sc.cache` instead of checkpointed:
+    *    14.6 s, because the lazy plan grows every round;
+    *  - a `collect_list`/struct plan with one exchange per round: 14
+    *    jobs, but AQE coalesced each round to one task, no gain.
     */
-  private def q207(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
+  private def q207(s: SparkSession, d: String): DataFrame = {
     val k = 6
     val roundsN = 6
-    val pairs = Tables.lineitem(s, d)
+    val part = new HashPartitioner(s.conf.get("spark.sql.shuffle.partitions").toInt)
+    // A node row is Array(deg, nbrs...), a decrement Array(-count): one
+    // primitive array per message, which Spark shuffles with Kryo (a
+    // tuple value goes through Java serialization and made the peel
+    // about a fifth slower at sf1). A NULL key is a neighbour the SQL
+    // joins never keep: it counts toward round 1's degree and is gone
+    // after it. It arrives as a self-loop, which the bipartite graph
+    // (even order ids, odd part ids) never has, and is counted in `deg`
+    // but left out of the neighbour list.
+    val adjacency: RDD[(Long, Array[Long])] = Tables.lineitem(s, d)
       .select((col("l_orderkey") * 2).as("src"),
         (col("l_partkey") * 2 + 1).as("dst"))
-      .distinct()
-    var sym = sc.checkpoint(pairs
-      .unionByName(pairs.select(col("dst").as("src"), col("src").as("dst"))))
-    val stats = (1 to roundsN).map { r =>
-      val prev = sym
-      val keepS = sym.groupBy("src").agg(count(lit(1)).as("deg"))
-        .filter(col("deg") >= k).select(col("src").as("node"))
-      val keepD = keepS.withColumnRenamed("node", "node2")
-      sym = sc.checkpoint(sym
-        .join(keepS, col("src") === col("node")).drop("node")
-        .join(keepD, col("dst") === col("node2")).drop("node2"))
-      // the new generation is materialized — the previous round's
-      // corpus-sized blocks are dead NOW; without an eager release all
-      // roundsN+1 generations stay pinned until the final union runs
-      // (the r13 sf10 probe OOM'd a 16 GiB heap on exactly that)
-      sc.release(prev)
-      // 1-row round readout, eagerly materialized so it owns no
-      // reference to any edge generation
-      sc.checkpoint(sym.agg(countDistinct(col("src")).as("n_nodes"),
-          (count(lit(1)) / lit(2)).cast("long").as("n_edges"))
-        .select(lit(r).as("round"), col("n_nodes"), col("n_edges")))
-    }
-    sc.keep(stats.reduce(_.unionByName(_)).orderBy("round"))
+      .rdd.flatMap { r =>
+        def end(i: Int): Seq[(Long, Long)] =
+          if (r.isNullAt(i)) Nil
+          else Seq(r.getLong(i) -> r.getLong(if (r.isNullAt(1 - i)) i else 1 - i))
+        end(0) ++ end(1)
+      }
+      .groupByKey(part)
+      .map { case (node, vs) =>
+        val nbrs = vs.toArray.distinct
+        (node, nbrs.length.toLong +: nbrs.filter(_ != node))
+      }
+    // The arrays mutated below are each read from a shuffle or built
+    // in this round, never shared.
+    def peel(state: RDD[(Long, Array[Long])]): RDD[(Long, Array[Long])] = state
+      .flatMap { case (node, row) =>
+        if (row(0) >= k) {
+          row(0) = math.min(row(0), row.length - 1L) // drops a NULL neighbour
+          Iterator(node -> row)
+        } else row.iterator.drop(1).map(_ -> Array(-1L))
+      }
+      .reduceByKey(part, (a, b) => if (b(0) >= 0) { b(0) += a(0); b } else { a(0) += b(0); a })
+      .filter(_._2(0) > 0)
+    val rounds = Iterator.iterate(adjacency)(peel).slice(1, roundsN + 1).toVector
+    val sums = s.sparkContext
+      .union(rounds.zipWithIndex.map { case (st, i) => st.map(x => (i, x._2(0))) })
+      .aggregate(new Array[Long](2 * roundsN))(
+        (acc, x) => { acc(2 * x._1) += 1; acc(2 * x._1 + 1) += x._2; acc },
+        (a, b) => { a.indices.foreach(i => a(i) += b(i)); a })
+    val rows = (0 until roundsN).map(i => Row(i + 1, sums(2 * i), sums(2 * i + 1) / 2))
+    s.createDataFrame(rows.asJava, StructType(Seq(
+      StructField("round", IntegerType, nullable = false),
+      StructField("n_nodes", LongType, nullable = false),
+      StructField("n_edges", LongType))))
   }
 
   private val q207Sql = {

@@ -2,7 +2,8 @@ package graft
 
 import java.sql.Timestamp
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 
 /** Hand-computable fixtures for the round-8 lifecycle operators: each
   * test stages a tiny parquet table and runs the REAL registered query
@@ -93,6 +94,62 @@ class LifecycleSpec extends SparkSpec {
     assert(rows.length == 6)
     assert(rows.head == ((1, 12L, 36L)))
     assert(rows.last == ((6, 12L, 36L)))
+  }
+
+  // A 6-core (K6,6 on orders 1-6 x parts 1-6) plus a peel that
+  // cascades over rounds 1-4: order 10 (degree 1) peels in round 1,
+  // which drops part 20 (orders 10, 12, 1-4) to 5; part 20 peels in
+  // round 2, order 12 (parts 20, 22, 1-4) in round 3 and part 22
+  // (orders 12, 1-5) in round 4. Order 13 and part 23 (degree 5 each)
+  // are adjacent and peel together in round 1, as do order 11 and part
+  // 21. Part 30 survives round 1 with degree 6, but all six of its
+  // orders (31-36, degree 1) peel in that round, so it has no edge
+  // left and leaves n_nodes. The core's degrees stay >= 6 throughout.
+  private lazy val cascadeDir = {
+    val core = for (o <- 1L to 6L; p <- 1L to 6L) yield (o, p)
+    val cascade = Seq((10L, 20L), (11L, 21L), (12L, 20L), (12L, 22L), (13L, 23L)) ++
+      (1L to 4L).flatMap(i => Seq((i, 20L), (12L, i), (13L, i), (i, 23L))) ++
+      (1L to 5L).map(o => (o, 22L)) ++ (31L to 36L).map(o => (o, 30L))
+    staged("kcore_cascade")("lineitem" -> (core ++ cascade).toDF("l_orderkey", "l_partkey"))
+  }
+
+  test("q207 k-core: a 4-round cascade, a same-round adjacent pair and an emptied survivor") {
+    val rows = SparkEntry.queries("q207_kcore")(spark, cascadeDir)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    // round 1: 15 nodes (core + part 20, order 12, part 22), degrees
+    // sum to 102; each later round peels one node with 5 live edges
+    assert(rows.toSeq == Seq((1, 15L, 51L), (2, 14L, 46L), (3, 13L, 41L),
+      (4, 12L, 36L), (5, 12L, 36L), (6, 12L, 36L)), rows.toSeq.toString)
+  }
+
+  test("q207 k-core: one run starts at most 6 Spark jobs") {
+    val dir = cascadeDir // staged (parquet-writing jobs) before counting
+    val sc = spark.sparkContext
+    val jobs = new java.util.concurrent.atomic.AtomicInteger
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit = jobs.incrementAndGet()
+    }
+    GraftSqlBridge.drainListenerBus(sc)
+    sc.addSparkListener(listener)
+    try {
+      SparkEntry.queries("q207_kcore")(spark, dir).collect()
+      GraftSqlBridge.drainListenerBus(sc)
+    } finally sc.removeSparkListener(listener)
+    assert(jobs.get <= 6, s"q207 started ${jobs.get} jobs")
+  }
+
+  test("q207 k-core: a NULL key counts toward round 1's degree only, as in SQL") {
+    // order 7 holds parts 1-5 of a K6,6 plus a line with a NULL part:
+    // degree 6 in round 1 (the SQL degree count sees the NULL edge,
+    // its joins then drop it), so it survives round 1 with 5 edges and
+    // peels in round 2; a NULL order on part 1 changes nothing
+    val k66 = for (o <- 1L to 6L; p <- 1L to 6L) yield (Option(o), Option(p))
+    val extra = (1L to 5L).map(p => (Option(7L), Option(p))) ++
+      Seq((Option(7L), None), (None, Option(1L)))
+    val dir = staged("kcore_null")("lineitem" -> (k66 ++ extra).toDF("l_orderkey", "l_partkey"))
+    val rows = SparkEntry.queries("q207_kcore")(spark, dir)
+      .collect().map(r => (r.getInt(0), r.getLong(1), r.getLong(2)))
+    assert(rows.toSeq == (1, 13L, 41L) +: (2 to 6).map(r => (r, 12L, 36L)), rows.toSeq.toString)
   }
 
   test("q208 DSIR weights: target-exclusive tokens score positive") {

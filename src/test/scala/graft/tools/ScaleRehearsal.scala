@@ -158,13 +158,17 @@ object ScaleRehearsal {
       ("linear-by-construction (r13 cards probe, measured: symmetric " +
         "edges 1.20M -> 12.0M and first-peel survivors 52.2k -> " +
         "521.6k, each exactly x10 — disjoint key-shifted subgraphs " +
-        "peel identically); cost = 6 peel rounds x (degree agg + two " +
-        "semi-joins + checkpoint) on a x10 edge table. Round 14 made " +
+        "peel identically); cost = one adjacency groupByKey over the " +
+        "x10 edge table, then 6 reduceByKey rounds whose messages " +
+        "(survivor rows + one decrement per peeled edge end) shrink " +
+        "with the survivors, all in one job with nothing persisted. " +
+        "Before that (degree agg + two semi-joins + checkpoint per " +
+        "round) the peel held its edge generations, and round 14 made " +
         "the per-round generation release REAL (the r13 unpersist was " +
-        "a Dataset-level no-op on checkpoint blocks; blocks now free " +
+        "a Dataset-level no-op on checkpoint blocks; blocks then freed " +
         "via the RDD inside LogicalRDD the moment the next generation " +
-        "materializes), and the r13 memory posture disappeared with " +
-        "it: sf10 now completes in the DEFAULT 8 GiB heap (r13 needed " +
+        "materialized), and the r13 memory posture disappeared with " +
+        "it: sf10 completed in the DEFAULT 8 GiB heap (r13 needed " +
         "16 GiB) at ratio 8.71 (300 s) vs r13's ~13 (436 s) — " +
         "sublinear at the decade where linear reads as ~10. (The r13 " +
         "sf10 runs also exposed SPURIOUS GCLocker OutOfMemoryErrors " +

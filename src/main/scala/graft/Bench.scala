@@ -18,13 +18,18 @@ import graft.operators.Exec
   *    box vary ±50% with VM weather, medians reproduce within ~20%;
   *  - a query failure is RECORDED (per-query error message in the JSON,
   *    nonzero exit), never swallowed — a crashing query must not read
-  *    as a fast success.
+  *    as a fast success;
+  *  - every run is one [[Exec.boundary]]: an RDD a run leaves persisted
+  *    is named on stderr and counted in `leaked_rdds`, never freed
+  *    quietly; `suppressed_errors` counts every [[Exec.suppressed]]
+  *    cleanup error of the JVM.
   */
 object Bench {
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
     val runs = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "3").toInt
     val spark = Harness.session(Harness.envCpus)
+    Tables.requireAll(spark, sfDir)
     // Session-level warmup (shuffle machinery, codegen compiler) so the
     // first query's priming run isn't charged for JVM bring-up.
     def calibOnce(): Double = {
@@ -35,8 +40,7 @@ object Bench {
       spark.sparkContext.setJobDescription("bench: calib")
       try {
         val t0 = System.nanoTime()
-        spark.read.parquet(s"$sfDir/lineitem.parquet")
-          .groupBy("l_returnflag").count()
+        Tables.lineitem(spark, sfDir).groupBy("l_returnflag").count()
           .write.format("noop").mode("overwrite").save()
         (System.nanoTime() - t0) / 1e9
       } finally spark.sparkContext
@@ -86,18 +90,21 @@ object Bench {
           p.getName.contains("Code Cache"))
         .map(p => (p.getName, p.getUsage.getUsed, p.getUsage.getMax)).toSeq
     val gcByQuery = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    // true median for even counts (upper-middle would give runs=2 a max)
+    def median(xs: Seq[Double]): Double = {
+      val s = xs.sorted
+      if (s.length % 2 == 1) s(s.length / 2) else (s(s.length / 2 - 1) + s(s.length / 2)) / 2.0
+    }
     // the deliberate query-boundary System.gc() is accounted SEPARATELY:
-    // since round 14's scratch drain, most reclaimable storage is
-    // deserialized checkpoint rows, which make the boundary full GC
-    // itself cost ~0.3-0.7 s — folding that into the per-query figure
+    // since each run's boundary frees its own storage, most reclaimable
+    // heap is deserialized checkpoint rows, which make the boundary full
+    // GC itself cost ~0.3-0.7 s — folding that into the per-query figure
     // made every query read "GC-heavy" when the in-run (timed-region)
     // GC is what the diagnostic question is about
     var gcBoundaryMs = 0L
-    // gated-boundary-GC state (round 15): bytes of block-manager
-    // storage the query-boundary drains released since the last
-    // boundary GC, and how many queries ran since it
-    var drainedSinceGc = 0L
-    var queriesSinceGc = 0
+    // gated-boundary-GC state (see the gate below), and the RDDs runs
+    // leaked (each named on stderr by its boundary)
+    var (releasedSinceGc, queriesSinceGc, leakedRdds) = (0L, 0, 0)
     // per query: (median of runs, min of runs). The MIN is the
     // box-load canary (VERDICT r9): a loaded box inflates the median
     // while the min stays near the true warm cost, so median ≫ min in
@@ -161,29 +168,27 @@ object Bench {
             Exec.suppressed("Bench boundary calib", e); -1.0 }
           calibTimeline += (((System.nanoTime() - sweepT0) / 1e9, c))
         }
-        // query construction is INSIDE the timed region: eager
-        // operators (dedup/ANN) do their work in fn itself
+        // every run (priming and timed) is one boundary, so run k never
+        // pays run k-1's kept result; its released bytes feed the gated
+        // boundary GC below. Query construction is timed too: eager
+        // operators (dedup/ANN) do their work in fn itself.
         def one(): Double = {
-          val t0 = System.nanoTime()
-          fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-          (System.nanoTime() - t0) / 1e9
+          val run = Exec.boundary(spark, name) {
+            fn(spark, sfDir).write.format("noop").mode("overwrite").save()
+          }
+          releasedSinceGc += run.releasedBytes
+          leakedRdds += run.leaked.size
+          run.seconds
         }
         val gcPre = gcMillis()
-        // scope-kept result checkpoints accumulate across repeat runs of
-        // the same query (each run builds a fresh plan) — drain them
-        // between runs so run k doesn't pay run k-1's memory pressure.
-        // The drain's "result consumed first" invariant holds because
-        // one() materializes-and-sinks inside the timed region. Its
-        // released bytes feed the gated boundary GC below.
-        def clear(): Unit = drainedSinceGc += Exec.drain(spark)
         // query-boundary driver GC, OUTSIDE every timed region: the
-        // drain frees block-manager storage deterministically,
+        // run boundaries free block-manager storage deterministically,
         // but driver-heap garbage (plan trees, codegen classes) still
         // only falls to GC; keeping it at the boundary means heavy
         // queries never pay predecessors' collection inside a timed
         // run. GATED (round 15): an unconditional per-query full GC
         // cost ~2 min of sweep wall clock while most boundaries had
-        // nothing to reclaim — collect only when the drains since the
+        // nothing to reclaim — collect only when the runs since the
         // last boundary GC released real storage (the freed blocks are
         // now heap garbage), when the heap already looks crowded (a
         // cheap pre-GC overestimate — garbage counts as used — so it
@@ -195,28 +200,23 @@ object Bench {
         val rt = Runtime.getRuntime
         val usedFrac =
           (rt.totalMemory - rt.freeMemory).toDouble / rt.maxMemory
-        if (drainedSinceGc > (32L << 20) || usedFrac > 0.6 ||
+        if (releasedSinceGc > (32L << 20) || usedFrac > 0.6 ||
             queriesSinceGc >= 6) {
           System.gc()
-          drainedSinceGc = 0L
+          releasedSinceGc = 0L
           queriesSinceGc = 0
         }
         val gc0 = gcMillis() // in-run baseline: AFTER the boundary GC
         gcBoundaryMs += gc0 - gcPre
         val r = try {
           one() // priming run, untimed
-          val times = Seq.fill(runs) { clear(); one() }.sorted
-          // true median for even run counts too (upper-middle alone
-          // would report a max for runs=2)
-          val median =
-            if (times.length % 2 == 1) times(times.length / 2)
-            else (times(times.length / 2 - 1) + times(times.length / 2)) / 2.0
-          Right((median, times.head))
+          val times = Seq.fill(runs)(one())
+          Right((median(times), times.min))
         } catch {
           // Throwable, not NonFatal: recorded in "errors" and the exit code
           case e: Throwable =>
             Left(s"${e.getClass.getSimpleName}: ${String.valueOf(e.getMessage).take(300)}")
-        } finally clear()
+        }
         gcByQuery += name -> (gcMillis() - gc0)
         name -> r
       }
@@ -239,10 +239,7 @@ object Bench {
     // The harness captures only the TAIL of stdout (~2 kB): the JSON
     // line must fit there complete or it records parsed=null. Short
     // keys (qNN prefix) + 3-decimal seconds keep 70+ queries ~1 kB.
-    def shortKey(k: String): String = k.indexOf('_') match {
-      case -1 => k
-      case i  => k.substring(0, i)
-    }
+    def shortKey(k: String): String = k.takeWhile(_ != '_')
     // duplicate short keys would silently lose a timing in JSON parse
     val shorts = results.map(r => shortKey(r._1))
     require(shorts.distinct.length == shorts.length,
@@ -291,14 +288,8 @@ object Bench {
     // (a start-only probe runs ~10-15% less warm than the
     // timeline-dominated median and would bias every drift).
     val CalibRef = 0.263
-    val calibSamples =
-      (calibStart +: calibTimeline.map(_._2).toSeq).filter(_ > 0).sorted
-    val calibMedian =
-      if (calibSamples.isEmpty) -1.0
-      else if (calibSamples.length % 2 == 1)
-        calibSamples(calibSamples.length / 2)
-      else (calibSamples(calibSamples.length / 2 - 1) +
-        calibSamples(calibSamples.length / 2)) / 2.0
+    val calibSamples = (calibStart +: calibTimeline.map(_._2).toSeq).filter(_ > 0)
+    val calibMedian = if (calibSamples.isEmpty) -1.0 else median(calibSamples)
     val calibDrift = if (calibMedian > 0) calibMedian / CalibRef else -1.0
     def norm(v: Double): Double = if (calibDrift > 0) v / calibDrift else v
     // stall_suspect (VERDICT r15 item 2): a query is flagged when the
@@ -332,8 +323,9 @@ object Bench {
     // into the captured tail even when the full line no longer parses.
     // value_min = sum of per-query min-of-runs: value ≫ value_min means
     // the box was loaded during this bench (see per-query mins in the
-    // file mirror).
-    println(s"""{"metric":"total","queries":$qs,"errors":$es,"runs":$runs,"sf":"${esc(sfDir)}","unit":"sec","spread":${fmt(spread)},"contaminated":$contaminated,"calib_start_sec":${fmt(calibStart)},"calib_end_sec":${fmt(calibEnd)},"calib_median_sec":${fmt(calibMedian)},"calib_ref_sec":${fmt(CalibRef)},"calib_drift":${fmt(calibDrift)},"kernels_build_sec":${fmt(kernelsBuildSec)},"chunkstore_build_sec":${fmt(chunkBuildSec)},"probe_median_sec":${fmt(probeMedian)},"stall_suspect":$stallJson,"value_min_calib_normalized":${fmt(norm(totalMin))},"value_calib_normalized":${fmt(norm(total))},"value_min":${fmt(totalMin)},"value":${fmt(total)}}""")
+    // file mirror). The same summary fields open the file mirror.
+    val summary = s""""spread":${fmt(spread)},"contaminated":$contaminated,"calib_start_sec":${fmt(calibStart)},"calib_end_sec":${fmt(calibEnd)},"calib_median_sec":${fmt(calibMedian)},"calib_ref_sec":${fmt(CalibRef)},"calib_drift":${fmt(calibDrift)},"kernels_build_sec":${fmt(kernelsBuildSec)},"chunkstore_build_sec":${fmt(chunkBuildSec)},"probe_median_sec":${fmt(probeMedian)},"stall_suspect":$stallJson,"leaked_rdds":$leakedRdds,"suppressed_errors":${Exec.suppressedErrors},"value_min_calib_normalized":${fmt(norm(totalMin))},"value_calib_normalized":${fmt(norm(total))},"value_min":${fmt(totalMin)},"value":${fmt(total)}"""
+    println(s"""{"metric":"total","queries":$qs,"errors":$es,"runs":$runs,"sf":"${esc(sfDir)}","unit":"sec",$summary}""")
     // The stdout tail keeps only ~2 kB — at 240+ queries most per-query
     // medians never reach the captured record. Mirror the FULL result
     // (long names, warm medians, errors) to a file so round-over-round
@@ -341,12 +333,9 @@ object Bench {
     // Committed at round close as BENCH_LOCAL_r{N}.json.
     val outPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_OUT", "BENCH_LOCAL.json")
     if (outPath.nonEmpty) try {
-      val full = ok.map { case (k, v) => s"""  "${esc(k)}": ${fmt(v)}""" }
-        .mkString("{\n", ",\n", "\n}")
-      val fullMins = mins.map { case (k, v) => s"""  "${esc(k)}": ${fmt(v)}""" }
-        .mkString("{\n", ",\n", "\n}")
-      val fullErrs = errs.map { case (k, e) => s"""  "${esc(k)}": "${esc(e)}"""" }
-        .mkString("{\n", ",\n", "\n}")
+      def obj(kvs: Seq[(String, String)]): String =
+        kvs.map { case (k, v) => s"""  "${esc(k)}": $v""" }.mkString("{\n", ",\n", "\n}")
+      def secs(kvs: Seq[(String, Double)]) = obj(kvs.map { case (k, v) => k -> fmt(v) })
       val jvm = {
         val pools = ccPools.map { case (n, used, max) =>
           s"""    "${esc(n)}": {"used_mb": ${used / 1048576}, "max_mb": ${max / 1048576}}"""
@@ -358,21 +347,18 @@ object Bench {
           .mkString("{\n", ",\n", "\n  }")
         s""""jvm": {"gc_total_ms": ${gcMillis()}, "gc_boundary_total_ms": $gcBoundaryMs, "codecache": $pools, "gc_ms_by_query_gt250": $gc}"""
       }
-      val fullT0 = startOffsets
-        .map { case (k, v) => s"""  "${esc(k)}": ${fmt(v)}""" }
-        .mkString("{\n", ",\n", "\n}")
       val json =
-        s"""{"metric":"total","unit":"sec","runs":$runs,"sf":"${esc(sfDir)}","spread":${fmt(spread)},"contaminated":$contaminated,"calib_start_sec":${fmt(calibStart)},"calib_end_sec":${fmt(calibEnd)},"calib_median_sec":${fmt(calibMedian)},"calib_ref_sec":${fmt(CalibRef)},"calib_drift":${fmt(calibDrift)},"kernels_build_sec":${fmt(kernelsBuildSec)},"chunkstore_build_sec":${fmt(chunkBuildSec)},"probe_median_sec":${fmt(probeMedian)},"stall_suspect":$stallJson,"value_min_calib_normalized":${fmt(norm(totalMin))},"value_calib_normalized":${fmt(norm(total))},"value_min":${fmt(totalMin)},"value":${fmt(total)},
+        s"""{"metric":"total","unit":"sec","runs":$runs,"sf":"${esc(sfDir)}",$summary,
            |$jvm,
-           |"queries":$full,
-           |"query_mins":$fullMins,
-           |"query_start_offset_sec":$fullT0,
+           |"queries":${secs(ok)},
+           |"query_mins":${secs(mins)},
+           |"query_start_offset_sec":${secs(startOffsets.toSeq)},
            |"calib_timeline":${calibTimeline
               .map { case (t, c) => s"[${fmt(t)},${fmt(c)}]" }
               .mkString("[", ",", "]")},
            |"boundary_probe_sec":${boundaryProbes
               .map(fmt).mkString("[", ",", "]")},
-           |"errors":$fullErrs}""".stripMargin
+           |"errors":${obj(errs.map { case (k, e) => k -> s""""${esc(e)}"""" })}}""".stripMargin
       java.nio.file.Files.write(java.nio.file.Paths.get(outPath),
         json.getBytes(java.nio.charset.StandardCharsets.UTF_8))
     } catch { case NonFatal(e) => Exec.suppressed("Bench file mirror", e) }

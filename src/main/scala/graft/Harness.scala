@@ -3,8 +3,8 @@ package graft
 import org.apache.spark.sql.SparkSession
 
 /** The one session set-up shared by the mains (Bench, Verify, TimeOne,
-  * Explain), the test session and the scale rehearsal. Query-boundary
-  * cleanup is [[graft.operators.Exec.drain]].
+  * Explain), the test session and the scale rehearsal. Every query run
+  * of a main is one [[graft.operators.Exec.boundary]].
   *
   * AQE is left at Spark's defaults, including
   * `coalescePartitions.parallelismFirst=true`. PINNED NEGATIVE RESULT:

@@ -1,6 +1,6 @@
 package graft
 
-import org.apache.spark.sql.{Column, DataFrame, SparkSession}
+import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions.{col, count, lit, pmod}
 
 import graft.operators.{Dedup, Exec, Scope}
@@ -22,9 +22,8 @@ import graft.operators.{Dedup, Exec, Scope}
   * This memo computes each kernel once per (application, input dir,
   * params), materializes the SMALL result as an eager checkpoint
   * (lineage truncated — no dependency on operator-internal caches;
-  * RDD blocks survive `spark.catalog.clearCache()`, which only drops
-  * the Dataset cache manager), and hands every consumer the same
-  * frame. The 100 TB posture is unchanged: the kernels themselves are
+  * RDD blocks survive a cleared Dataset cache manager), and hands
+  * every consumer the same frame. The 100 TB posture is unchanged: the kernels themselves are
   * the scale-safe banded/capped implementations in
   * [[graft.operators.Dedup]] / the wedge join below, and only their
   * reduced outputs are pinned. On a cluster this is exactly a
@@ -76,9 +75,9 @@ object Kernels {
     store(s, key)(sc => Seq(build(sc))).head
 
   /** RDD ids backing the live memoized kernels, one per memo frame —
-    * the blocks a query-boundary scratch drain (Bench/Verify) and a
-    * [[Scope]] must NOT release: the memo is the one deliberate
-    * cross-query cache. */
+    * the blocks a [[Scope]] must NOT release and a harness run's
+    * [[Exec.boundary]] does not count as leaked: the memo is the one
+    * deliberate cross-query cache. */
   def liveRddIds: Set[Int] = memo.values.flatMap(_.rddIds).toSet
 
   /** Drop all memoized kernels, releasing their checkpoint blocks. */

@@ -15,6 +15,14 @@ object Tables {
     "region", "nation", "customer", "supplier", "part",
     "orders", "lineitem", "events", "documents", "embeddings")
 
+  /** Fail once, before any query runs, naming every [[all]] table path
+    * missing under `dir` (resolved through Hadoop, like [[isDirectory]]). */
+  def requireAll(s: SparkSession, dir: String): Unit = {
+    val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
+    val missing = all.map(n => s"$dir/$n.parquet").filterNot(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
+    require(missing.isEmpty, s"table dir $dir lacks ${missing.mkString(", ")}")
+  }
+
   def table(spark: SparkSession, dir: String, name: String): DataFrame =
     spark.read.parquet(s"$dir/$name.parquet")
 

@@ -22,10 +22,11 @@ import org.apache.spark.storage.StorageLevel
   *  2. ''Deterministic lifetime'': every cache, checkpoint and
   *     scratch directory an operator or query creates belongs to one
   *     [[Exec.scope]] and is released when that scope exits — see
-  *     [[Scope]]. A library caller is never asked to
-  *     `spark.catalog.clearCache()` (which would also drop caches the
-  *     CALLER owns). [[drain]] stays as the harness backstop at query
-  *     boundaries.
+  *     [[Scope]]. A library caller is never asked to clear the
+  *     session's cache (which would also drop caches the CALLER owns).
+  *     A harness runs each query in one [[boundary]]: the query's kept
+  *     result belongs to that run's scope, and what the run leaves
+  *     persisted is reported as a leak, never freed behind its back.
   */
 private[graft] object Exec {
 
@@ -156,36 +157,47 @@ private[graft] object Exec {
     }
   }
 
-  /** The query-boundary drain: drop every CacheManager entry and
-    * unpersist every persisted RDD except the [[graft.Kernels]] memo's
-    * (the one deliberate cross-query cache). The RDD pass is what frees
-    * leftover `localCheckpoint` blocks, which `clearCache` never
-    * reaches; left alone they wait for a driver GC and the
-    * ContextCleaner, and later queries pay for the backlog. Returns the
-    * block-manager bytes released, which are now driver-heap garbage.
-    *
-    * Only call when the previous query's result is fully consumed: a
-    * result still backed by a checkpoint would fail with "checkpoint
-    * block not found" when read after the drain. */
-  def drain(spark: SparkSession): Long = {
-    try spark.catalog.clearCache()
-    catch { case NonFatal(e) => suppressed("Exec.drain clearCache", e) }
-    val keep = graft.Kernels.liveRddIds
+  /** One [[boundary]]: the seconds `consume` took, the block-manager
+    * bytes its scope released (now heap garbage) and the leaked RDDs. */
+  final case class Run(seconds: Double, releasedBytes: Long, leaked: Seq[RDD[_]])
+
+  /** The harness query boundary: `consume` builds one query and sinks
+    * its result inside one [[scope]], which the query's own scopes nest
+    * in — its kept result is freed after its consumer, by construction.
+    * Then the leak check: an RDD persisted now, not before the run and
+    * not in the [[graft.Kernels]] memo is a leak, named on stderr and
+    * returned, never freed. A throwing `consume` propagates unchecked. */
+  def boundary(spark: SparkSession, label: String)(consume: => Unit): Run = {
     val sc = spark.sparkContext
-    val released = sc.getRDDStorageInfo
-      .filter(i => !keep.contains(i.id)).map(i => i.memSize + i.diskSize).sum
-    sc.getPersistentRDDs.foreach { case (id, rdd) =>
-      if (!keep.contains(id))
-        try rdd.unpersist(blocking = false)
-        catch { case NonFatal(e) => suppressed("Exec.drain unpersist", e) }
+    def persisted = sc.getPersistentRDDs
+    def stored = sc.getRDDStorageInfo.map(i => i.id -> (i.memSize + i.diskSize)).toMap
+    val before = persisted.keySet
+    var (secs, held) = (0.0, Map.empty[Int, Long])
+    scope { _ =>
+      val t0 = System.nanoTime()
+      consume
+      secs = (System.nanoTime() - t0) / 1e9
+      held = stored
     }
-    released
+    val after = persisted
+    val memo = graft.Kernels.liveRddIds
+    val leaked = after.collect { case (id, r) if !before(id) && !memo(id) => r }
+      .toSeq.sortBy(_.id)
+    leaked.foreach(r => System.err.println(s"[graft] $label leaked persisted RDD $r"))
+    Run(secs, held.collect { case (id, b) if !after.contains(id) => b }.sum, leaked)
   }
+
+  private val suppressedCount = new java.util.concurrent.atomic.AtomicLong(0L)
+
+  /** How many errors [[suppressed]] has swallowed in this JVM. */
+  def suppressedErrors: Long = suppressedCount.get
 
   /** One stderr line for an error a best-effort cleanup step swallows,
     * naming the step, so a suppressed failure is never silent. */
-  def suppressed(site: String, e: Throwable): Unit =
+  def suppressed(site: String, e: Throwable): Unit = {
+    suppressedCount.incrementAndGet()
     System.err.println(s"[graft] suppressed in $site: $e")
+  }
 }
 
 /** The lifetime of materialized intermediates, owned by one
@@ -199,8 +211,8 @@ private[graft] object Exec {
   *    self-contained checkpoint the scope does not release. In a
   *    nested scope the kept handle moves to the enclosing scope, which
   *    releases it on its own exit unless it keeps it in turn; outside
-  *    any scope it is the caller's ([[Exec.releaseScratch]], or the
-  *    harness [[Exec.drain]]).
+  *    any scope it is the caller's ([[Exec.releaseScratch]]); a harness
+  *    run's [[Exec.boundary]] is such an enclosing scope.
   *  - [[release]] frees a dead generation before exit. It only frees
   *    what this scope owns, so passing a caller's input is a no-op.
   *    Releasing a cached frame also drops the cache entries of frames

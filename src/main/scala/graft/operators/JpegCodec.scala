@@ -428,7 +428,7 @@ object JpegCodec {
         if (pendingRst >= 0)
           throw new Corrupt("entropy data continues across a restart marker")
         if (pos >= bytes.length) throw new Corrupt("entropy stream truncated")
-        var b = bytes(pos) & 0xff; pos += 1
+        val b = bytes(pos) & 0xff; pos += 1
         if (b == 0xff) {
           if (pos >= bytes.length) throw new Corrupt("truncated after 0xFF")
           val m = bytes(pos) & 0xff; pos += 1

@@ -9,7 +9,7 @@ import graft.functions.Rounding.{roundTo => round}
 
 import graft.Tables
 import graft.functions.TextFunctions._
-import graft.operators.{Decontam, Packing, Quality, Sampling}
+import graft.operators.{Packing, Sampling}
 
 /** Corpus-curation surface (round 3): the remaining steps a
   * training-data pipeline runs between "raw filtered corpus" and

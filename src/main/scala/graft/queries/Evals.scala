@@ -1804,8 +1804,6 @@ object Evals {
     */
   private def q240(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val k = 8
-    val feats = Seq("l_quantity", "l_extendedprice", "l_discount",
-      "l_tax")
     val spark = s
     import spark.implicits._
     val split = lit("1998-01-01").cast("date")

@@ -578,7 +578,6 @@ object Lifecycle {
   }
 
   private def q266(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
-    import org.apache.spark.sql.expressions.Window
     val (byT, perArm) = eventTimeMargins(sc, s, d)
     val r = col("n1").cast("double") / col("n").cast("double")
     val e1t = col("dt").cast("double") * r
@@ -1087,7 +1086,6 @@ object Lifecycle {
                                   fixedChunkUs: Long,
                                   chunkBudget: Int): DataFrame = Exec.scope { sc =>
     import s.implicits._
-    import java.nio.file.Files
     val gapUs = 30L * 60 * 1000000     // q23's 30-min inactivity gap
     val ckpt = sc.tempDir("graft_sess_ckpt")
     val outDir = sc.tempDir("graft_sess_out")

@@ -769,7 +769,6 @@ object Pipeline {
     * raster = UTF-8 bytes zero-padded to 8×h×3, brightness = byte
     * mean / 255. */
   private def q59(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     Multimodal.decodeImageFeatures(
         Multimodal.toPpmMedia(Tables.documents(s, d))).toDF()
       .withColumn("brightness", round(col("brightness"), 4))
@@ -803,7 +802,6 @@ object Pipeline {
     * text contributes nothing.
     */
   private def q257(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     Multimodal.resizeImageFeatures(
         Multimodal.toPpmMedia(Tables.documents(s, d)), factor = 2).toDF()
       .withColumn("brightness", round(col("brightness"), 4))
@@ -837,7 +835,6 @@ object Pipeline {
     * certifies is that dimensions and brightness survive a real
     * compress/decompress roundtrip. */
   private def q142(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     Multimodal.decodeImageFeatures(
         Multimodal.toPngMedia(Tables.documents(s, d))).toDF()
       .withColumn("brightness", round(col("brightness"), 4))
@@ -870,7 +867,6 @@ object Pipeline {
     * fails the rows gate — silent garbage cannot pass.
     */
   private def q146(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val feats = Multimodal.decodeImageFeatures(
         Multimodal.toJpegMedia(Tables.documents(s, d))).toDF()
       .select("media_id", "mime", "width", "height", "brightness")
@@ -919,7 +915,6 @@ object Pipeline {
     * row and fails the rows gate.
     */
   private def q147(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     val feats = Multimodal.decodeAudioFeatures(
         Multimodal.toAdpcmMedia(Tables.documents(s, d))).toDF()
       .select("media_id", "mime", "sample_rate", "n_samples",
@@ -976,7 +971,6 @@ object Pipeline {
     * decode failure drops the row and fails the rows gate.
     */
   private def q155(s: SparkSession, d: String): DataFrame = {
-    import s.implicits._
     Multimodal.sampleVideoFrames(
         Multimodal.toY4mMedia(Tables.documents(s, d)), every = 2).toDF()
       .groupBy("media_id", "mime", "width", "height", "n_frames")

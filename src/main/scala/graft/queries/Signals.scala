@@ -7,9 +7,8 @@ import graft.operators.Exec
 import graft.functions.Rounding.{roundTo => round}
 
 import graft.{Kernels, Tables}
-import graft.functions.TextFunctions.words
 import graft.functions.VectorFunctions
-import graft.operators.{Decontam, Dedup, Quality, Sampling, Series}
+import graft.operators.{Sampling, Series}
 
 /** Round-7 signal-engineering operators: seasonal forecasting by
   * decomposition, weight-of-evidence feature binning, referential-
@@ -1637,8 +1636,6 @@ object Signals {
     * distinct 6-day chunk count, proving the dimension really served
     * MULTIPLE micro-batches rather than one mega-batch. */
   private def q267(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
-    import s.implicits._
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val chunkUs = 6L * 86400 * 1000000
     val ckpt = sc.tempDir("graft_enrich_ckpt")
     val outDir = sc.tempDir("graft_enrich_out")
@@ -1745,7 +1742,6 @@ object Signals {
   private[graft] def outerJoinReplay(s: SparkSession, d: String,
                                      chunkBudget: Int): DataFrame = Exec.scope { sc =>
     import s.implicits._
-    import java.nio.file.Files
     val ckpt = sc.tempDir("graft_soj_ckpt")
     val outDir = sc.tempDir("graft_soj_out")
 

@@ -2593,8 +2593,6 @@ object Studies {
     val hq = sc.checkpoint(quads.select(col("i"), h.as("h")))
     val st1 = hq.agg(count(lit(1)).as("n"),
       sum(floor(col("h") * lit(1e9) + lit(0.5)).cast("long")).as("shu"))
-    val mean = col("shu").cast("double") / 1e9 /
-      safe(col("n").cast("double"))
     val st2 = hq.crossJoin(broadcast(st1))
       .select(col("n"), col("shu"),
         floor((col("h") - col("shu").cast("double") / 1e9 /

@@ -1,13 +1,10 @@
 package graft.sources
 
-import scala.jdk.CollectionConverters._
-
 import org.apache.avro.{Schema, SchemaBuilder}
 import org.apache.avro.file.{CodecFactory, DataFileReader, DataFileWriter}
 import org.apache.avro.generic.{GenericData, GenericDatumReader, GenericDatumWriter, GenericRecord}
 import org.apache.avro.mapred.FsInput
-import org.apache.hadoop.conf.Configuration
-import org.apache.hadoop.fs.{FileSystem, Path}
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, Row, SparkSession}
 import org.apache.spark.sql.types._
 import org.apache.spark.util.SerializableConfiguration

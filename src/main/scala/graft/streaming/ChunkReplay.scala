@@ -56,8 +56,8 @@ object ChunkReplay {
     * Returns the number of chunk files written. */
   def writeChunks(df: DataFrame, tsUsCol: String, chunkUs: Long,
                   ingestDir: String, sentinels: Seq[DataFrame] = Nil,
-                  originUs: Long = 0L): Int = {
-    val tmp = graft.operators.Exec.scratchTempDir("graft_chunk_split").toString
+                  originUs: Long = 0L): Int = graft.operators.Exec.scope { sc =>
+    val tmp = sc.tempDir("graft_chunk_split")
     // all rows of a chunk land in ONE task so partitionBy emits a
     // single part file per chunk directory. Chunk id is integer FLOOR
     // division (`div`), matching the oracles' exact `//`: the FP form
@@ -86,7 +86,6 @@ object ChunkReplay {
       Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
       dst.toFile.setLastModified(1700000000000L + k * 10000L)
     }
-    graft.operators.Exec.deleteRecursively(tmp)
     ordered.length
   }
 }

@@ -1,12 +1,59 @@
 package graft
 
-import org.apache.spark.sql.functions._
+import scala.collection.mutable
 
-import graft.operators.{Graph, Linalg}
+import org.apache.spark.scheduler.{SparkListener, SparkListenerBlockUpdated, SparkListenerUnpersistRDD}
+import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.functions._
+import org.apache.spark.storage.RDDBlockId
+
+import graft.operators.{Exec, Graph, Linalg}
 
 /** PageRank and the distributed-moments/driver-eigensolve PCA split. */
 class GraphLinalgSpec extends SparkSpec {
   import spark.implicits._
+
+  /** The most RDDs holding blocks at once while `body` runs: an RDD
+    * joins the live set with its first stored block and leaves it when
+    * it is unpersisted. */
+  private def peakLiveRdds(body: => Unit): Int = {
+    val sc = spark.sparkContext
+    val live = mutable.Set.empty[Int]
+    var peak = 0
+    val listener = new SparkListener {
+      override def onBlockUpdated(e: SparkListenerBlockUpdated): Unit =
+        e.blockUpdatedInfo.blockId match {
+          case RDDBlockId(id, _) if e.blockUpdatedInfo.storageLevel.isValid =>
+            live += id
+            peak = math.max(peak, live.size)
+          case _ =>
+        }
+      override def onUnpersistRDD(e: SparkListenerUnpersistRDD): Unit = live -= e.rddId
+    }
+    sc.addSparkListener(listener)
+    try { body; GraftSqlBridge.drainListenerBus(sc) }
+    finally sc.removeSparkListener(listener)
+    peak
+  }
+
+  // an iterative loop that stops releasing its dead generation holds
+  // one more RDD per round: at these round counts well over the bound
+  test("iterative graph loops keep a bounded number of generations live") {
+    val edges = Seq((1L, 2L), (2L, 3L), (1L, 3L), (3L, 4L), (4L, 5L), (5L, 6L), (4L, 6L))
+      .toDF("a", "b")
+    val lpa = peakLiveRdds {
+      val out = Graph.labelPropagation(edges, "a", "b", rounds = 6)
+      assert(out.count() == 6)
+      Exec.releaseScratch(out)
+    }
+    val hits = peakLiveRdds {
+      val out = Graph.hits(edges, "a", "b", iters = 4)
+      assert(out.count() == 10)
+      Exec.releaseScratch(out)
+    }
+    assert(lpa <= 3, s"label propagation peaked at $lpa live RDDs")
+    assert(hits <= 7, s"hits peaked at $hits live RDDs")
+  }
 
   test("pagerank on a 2-cycle is uniform and conserves mass") {
     val edges = Seq(("a", "b"), ("b", "a")).toDF("src", "dst")

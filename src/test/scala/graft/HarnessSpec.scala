@@ -4,35 +4,68 @@ import java.nio.file.{Files, Paths}
 
 import scala.jdk.CollectionConverters._
 
-import org.apache.spark.sql.GraftSqlBridge
+import org.apache.spark.sql.{DataFrame, GraftSqlBridge}
 
 import graft.operators.Exec
 
-/** The harness promises ([[Harness]], [[Exec.drain]], [[Verify.dump]])
-  * and the single-path invariants behind them. */
+/** The harness promises ([[Harness]], [[Exec.boundary]], [[Verify.dump]],
+  * [[Tables.requireAll]]) and the single-path invariants behind them. */
 class HarnessSpec extends SparkSpec {
 
   private def storedBytes(id: Int): Long = spark.sparkContext.getRDDStorageInfo
     .filter(_.id == id).map(i => i.memSize + i.diskSize).sum
 
-  test("drain releases checkpointed scratch and keeps the Kernels memo readable") {
+  test("a run boundary frees the kept result after its consumer and keeps the Kernels memo") {
     Kernels.clear()
     try {
       val store = Kernels.cached(spark, "harness-spec")(_ => spark.range(0, 1000).toDF("id"))
       val storeRows = store.count()
-      val scratch = spark.range(0, 5000).selectExpr("id", "id * 2 AS v")
-        .localCheckpoint(true)
-      val scratchId = GraftSqlBridge.rootCheckpointRdd(scratch).get.id
-      val scratchBytes = storedBytes(scratchId)
-      assert(scratchBytes > 0)
-
-      val released = Exec.drain(spark)
+      var (keptId, keptBytes, keptRows) = (-1, 0L, 0L)
+      val run = Exec.boundary(spark, "harness-spec") {
+        val kept = Exec.scope(sc => sc.keep(spark.range(0, 5000).selectExpr("id", "id * 2 AS v")))
+        keptId = GraftSqlBridge.rootCheckpointRdd(kept).get.id
+        keptRows = kept.count() // the consumer: still readable inside the run
+        GraftSqlBridge.drainListenerBus(spark.sparkContext)
+        keptBytes = storedBytes(keptId)
+      }
+      assert(keptRows === 5000 && keptBytes > 0)
       val persisted = spark.sparkContext.getPersistentRDDs.keySet
-      assert(!persisted.contains(scratchId))
-      assert(released >= scratchBytes)
+      assert(!persisted.contains(keptId))
+      assert(run.releasedBytes >= keptBytes)
+      assert(run.leaked.isEmpty)
       assert(Kernels.liveRddIds.nonEmpty && Kernels.liveRddIds.subsetOf(persisted))
       assert(store.count() === storeRows)
     } finally Kernels.clear()
+  }
+
+  test("a raw localCheckpoint left by a run is reported as a leak, not freed") {
+    var raw: DataFrame = null
+    val run = Exec.boundary(spark, "harness-spec-leak") {
+      raw = spark.range(0, 100).toDF("id").localCheckpoint(true)
+    }
+    try {
+      val id = GraftSqlBridge.rootCheckpointRdd(raw).get.id
+      assert(run.leaked.map(_.id) === Seq(id))
+      assert(spark.sparkContext.getPersistentRDDs.contains(id))
+    } finally Exec.releaseScratch(raw)
+  }
+
+  test("Tables.requireAll names every missing table once and passes a full dir") {
+    val dir = Exec.scratchTempDir("harness-tables").toString
+    try {
+      Tables.all.foreach(t => Files.createDirectories(Paths.get(s"$dir/$t.parquet")))
+      Tables.requireAll(spark, dir)
+      Seq("orders", "events").foreach(t => Files.delete(Paths.get(s"$dir/$t.parquet")))
+      val e = intercept[IllegalArgumentException](Tables.requireAll(spark, dir))
+      assert(e.getMessage.endsWith(
+        s"table dir $dir lacks $dir/orders.parquet, $dir/events.parquet"))
+    } finally Exec.deleteRecursively(dir)
+  }
+
+  test("a suppressed error is counted") {
+    val n = Exec.suppressedErrors
+    Exec.suppressed("HarnessSpec", new RuntimeException("cleanup failed"))
+    assert(Exec.suppressedErrors === n + 1)
   }
 
   test("Verify.dump: a throwing build leaves only _ERROR.txt, wiping an earlier result") {
@@ -49,8 +82,8 @@ class HarnessSpec extends SparkSpec {
   }
 
   // Source scan, like the SURVEY coverage test in QueriesSmokeSpec: the
-  // single session factory and the single drain stay single.
-  test("one session builder, one drain, no swallowed Throwable in main") {
+  // single session factory and the single leak check stay single.
+  test("one session builder, one leak check, no drain, no swallowed Throwable in main") {
     def occurrences(root: String, needle: String): Map[String, Int] = {
       val re = java.util.regex.Pattern.quote(needle).r
       val walk = Files.walk(Paths.get(root))
@@ -62,8 +95,10 @@ class HarnessSpec extends SparkSpec {
     // split so this file does not count itself
     assert(occurrences("src", "SparkSession" + ".builder") ===
       Map("src/main/scala/graft/Harness.scala" -> 1))
-    assert(occurrences("src/main", "getPersistentRDDs").keySet ===
-      Set("src/main/scala/graft/operators/Exec.scala"))
+    assert(occurrences("src/main", "getPersistentRDDs") ===
+      Map("src/main/scala/graft/operators/Exec.scala" -> 1))
+    assert(occurrences("src/main", "clearCache").isEmpty)
+    assert(occurrences("src", "Exec" + ".drain").isEmpty)
     assert(occurrences("src/main", "case _: Throwable").isEmpty)
     // every materialization goes through Exec.scope's Scope
     val exec = Set("src/main/scala/graft/operators/Exec.scala")
@@ -73,7 +108,6 @@ class HarnessSpec extends SparkSpec {
     Seq("owned" + "(", "releaseScratch" + "Deep", "detachFrom" + "Scratch")
       .foreach(gone => assert(occurrences("src", gone).isEmpty, gone))
     assert(occurrences("src/main", "scratchTempDir(").keySet === exec ++ Set(
-      "src/main/scala/graft/streaming/ChunkStore.scala",
-      "src/main/scala/graft/streaming/ChunkReplay.scala"))
+      "src/main/scala/graft/streaming/ChunkStore.scala"))
   }
 }

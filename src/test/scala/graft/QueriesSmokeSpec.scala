@@ -8,24 +8,20 @@ package graft
 class QueriesSmokeSpec extends SparkSpec {
 
   test("all SparkEntry queries execute at sf0.001") {
-    graft.operators.Exec.drain(spark)
     val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
         // noop write so every projected column actually evaluates
         // (count() would let Catalyst prune computed columns away)
         try {
-          val out = fn(spark, "/root/testdata/sf0.001")
-          out.write.format("noop").mode("overwrite").save()
-          // leak invariant: every persisted RDD the query left behind is
-          // either a Kernels memo store or read by the returned frame
-          val reads = org.apache.spark.sql.GraftSqlBridge.checkpointRdds(out)
-            .map(_.id).toSet
-          val leaked = spark.sparkContext.getPersistentRDDs.keySet.toSet --
-            Kernels.liveRddIds -- reads
-          if (leaked.isEmpty) None
-          else Some(s"$name: left persisted RDDs ${leaked.toSeq.sorted}")
+          val run = graft.operators.Exec.boundary(spark, name) {
+            fn(spark, "/root/testdata/sf0.001")
+              .write.format("noop").mode("overwrite").save()
+          }
+          // leak invariant: once the run's scope has freed the kept
+          // result, only Kernels memo stores may stay persisted
+          if (run.leaked.isEmpty) None
+          else Some(s"$name: left persisted RDDs ${run.leaked.map(_.id).mkString(", ")}")
         } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-        finally graft.operators.Exec.drain(spark)
     }
     assert(failures.isEmpty, failures.mkString("\n"))
   }

@@ -108,10 +108,11 @@ class ScopeSpec extends SparkSpec {
 
   test("under planOnly the result is unmaterialized and nothing is released") {
     val before = persisted
+    var k, c: DataFrame = null
     val out = planOnly {
       Exec.scope { sc =>
-        val k = sc.checkpoint(frame(80))
-        val c = sc.cache(frame(60))
+        k = sc.checkpoint(frame(80))
+        c = sc.cache(frame(60))
         c.count()
         sc.release(k)
         sc.keep(k.join(c, "id"))
@@ -120,7 +121,9 @@ class ScopeSpec extends SparkSpec {
     assert(GraftSqlBridge.rootCheckpointRdd(out).isEmpty)
     assert((persisted -- before).size == 2)
     assert(out.count() == 60)
-    Exec.drain(spark)
+    Exec.releaseScratch(k)
+    c.unpersist(blocking = true)
+    assert((persisted -- before).isEmpty)
   }
 
   test("a tempDir is deleted after a throwing body and the original exception propagates") {

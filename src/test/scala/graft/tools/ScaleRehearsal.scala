@@ -295,7 +295,6 @@ object ScaleRehearsal {
   }
 
   private def time(spark: SparkSession, name: String, dir: String): Double = {
-    spark.catalog.clearCache()
     // per-query COLD measurement: drop memoized shared kernels AND the
     // streaming chunk store so the ratio reflects this query's own
     // full plan, chunk prep included (see class doc)
@@ -310,10 +309,10 @@ object ScaleRehearsal {
     // on identical data). The GC sits OUTSIDE the timed region.
     System.gc()
     Thread.sleep(500)
-    val t0 = System.nanoTime()
-    graft.SparkEntry.queries(name)(spark, dir)
-      .write.format("noop").mode("overwrite").save()
-    (System.nanoTime() - t0) / 1e9
+    graft.operators.Exec.boundary(spark, name) {
+      graft.SparkEntry.queries(name)(spark, dir)
+        .write.format("noop").mode("overwrite").save()
+    }.seconds
   }
 
   private def warmup(spark: SparkSession, dir: String): Unit =

@@ -15,7 +15,7 @@ class HarnessSpec extends SparkSpec {
   private def storedBytes(id: Int): Long = spark.sparkContext.getRDDStorageInfo
     .filter(_.id == id).map(i => i.memSize + i.diskSize).sum
 
-  test("a run boundary frees the kept result after its consumer and keeps the Kernels memo") {
+  test("drain releases checkpointed scratch and keeps the Kernels memo readable") {
     Kernels.clear()
     try {
       val store = Kernels.cached(spark, "harness-spec")(_ => spark.range(0, 1000).toDF("id"))

@@ -16,7 +16,7 @@ object Tables {
     "orders", "lineitem", "events", "documents", "embeddings")
 
   /** Fail once, before any query runs, naming every [[all]] table path
-    * missing under `dir` (resolved through Hadoop, like [[isDirectory]]). */
+    * missing under `dir` (resolved through the dir's Hadoop FileSystem). */
   def requireAll(s: SparkSession, dir: String): Unit = {
     val fs = new org.apache.hadoop.fs.Path(dir).getFileSystem(s.sparkContext.hadoopConfiguration)
     val missing = all.map(n => s"$dir/$n.parquet").filterNot(p => fs.exists(new org.apache.hadoop.fs.Path(p)))
@@ -47,8 +47,25 @@ object Tables {
     *    identically to the legacy path.
     *  - TIMESTAMP(MICROS, adjusted): already TimestampType, pass-through.
     */
-  def events(s: SparkSession, d: String): DataFrame = {
-    val raw = table(s, d, "events")
+  def events(s: SparkSession, d: String): DataFrame =
+    normalizeTs(table(s, d, "events"))
+
+  /** [[events]] as a FILE STREAM over the same rows (same `ts`
+    * normalization). The table ships in two layouts: a single
+    * events.parquet FILE (driver testdata — stream the parent dir with
+    * a glob, since FileStreamSource's basePath must be a directory) or
+    * an events.parquet DIRECTORY of part files (synthesized scale dirs
+    * — stream it directly; the glob-on-parent would match no leaf
+    * file and the sink would stay empty). */
+  def eventsStream(s: SparkSession, d: String): DataFrame = {
+    val path = s"$d/events.parquet"
+    val reader = s.readStream.schema(table(s, d, "events").schema)
+    normalizeTs(
+      if (isDirectory(s, path)) reader.parquet(path)
+      else reader.option("pathGlobFilter", "events.parquet").parquet(d))
+  }
+
+  private def normalizeTs(raw: DataFrame): DataFrame =
     raw.schema("ts").dataType match {
       case LongType =>
         raw.withColumn("ts", timestamp_micros(expr("ts DIV 1000")))
@@ -56,7 +73,7 @@ object Tables {
         raw.withColumn("ts", col("ts").cast(TimestampType))
       case _ => raw
     }
-  }
+
   def documents(s: SparkSession, d: String): DataFrame  = table(s, d, "documents")
   def embeddings(s: SparkSession, d: String): DataFrame = table(s, d, "embeddings")
 
@@ -65,9 +82,10 @@ object Tables {
     * dirs). Goes through the Hadoop FileSystem resolved from the path
     * itself, so URI-scheme data dirs (hdfs://, s3a://) probe correctly
     * — `java.io.File(...).isDirectory` silently returns false for
-    * those and the caller's glob-on-parent branch would stream nothing.
+    * those and [[eventsStream]]'s glob-on-parent branch would stream
+    * nothing.
     */
-  def isDirectory(s: SparkSession, path: String): Boolean = {
+  private def isDirectory(s: SparkSession, path: String): Boolean = {
     val p = new org.apache.hadoop.fs.Path(path)
     val fs = p.getFileSystem(s.sparkContext.hadoopConfiguration)
     try fs.getFileStatus(p).isDirectory

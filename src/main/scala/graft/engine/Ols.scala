@@ -167,14 +167,26 @@ object Ols {
       graft.functions.Rounding.roundTo(w1, 6).as("w1"))
   }
 
-  /** Two-feature RIDGE `y = w0 + w1·x1 + w2·x2` as a pure plan — the
-    * regularized companion of [[fitLinearExact2Plan]]: λ is added to
-    * the two FEATURE diagonal cells of the normal matrix (the
-    * intercept row stays unpenalized), then the same Cramer solve.
-    * With λ > 0 the system is strictly better conditioned: collinear
-    * features that make the exact fit NaN out get a defined,
-    * shrunk-toward-zero solution here — the practical reason ridge
-    * exists. λ = 0 reduces exactly to the OLS plan.
+  /** Two-feature RIDGE `y = w0 + w1·x1 + w2·x2` as a PURE PLAN; λ = 0
+    * is the exact two-feature OLS — the natural multivariate extension
+    * of the reference's closed-form kernel (its `kernel.cu:62-63` is
+    * the 1-feature special case).
+    * One distributed aggregation of the normal-equation sufficient
+    * statistics `(n, Σx1, Σx2, Σx1², Σx2², Σx1x2, Σy, Σx1y, Σx2y)`,
+    * with λ added to the two FEATURE diagonal cells (the intercept row
+    * stays unpenalized; `sum + 0.0` changes no non-negative sum), then
+    * Cramer's rule on the 3×3 system as scalar expressions over that
+    * single row. Nothing is collected — the returned DataFrame has one
+    * row, so callers can compose it (join, broadcast) without driver
+    * round-trips; the same closed form mirrors verbatim in SQL for the
+    * oracle gate. Degenerate systems yield NaN weights, not an error —
+    * detected by a RELATIVE determinant test (|det| ≤ 1e-12·|n·r11·r22|):
+    * an analytically collinear input accumulates to a tiny-but-nonzero
+    * det, so an exact-zero test would pass floating-point noise off as
+    * coefficients. Empty input also yields NaN. With λ > 0 the system
+    * is strictly better conditioned: collinear features that make the
+    * exact fit NaN out get a defined, shrunk-toward-zero solution — the
+    * practical reason ridge exists.
     */
   def fitRidge2Plan(df: DataFrame, x1Col: String, x2Col: String,
                     yCol: String, lambda: Double): DataFrame = {
@@ -212,72 +224,6 @@ object Ols {
            col("s1"), col("r11"), col("s1y"),
            col("s2"), col("s12"), col("s2y")).as("d2"),
       (col("n") * col("r11") * col("r22")).as("diag"))
-    .withColumn("degenerate",
-      col("det").isNull ||
-        abs(col("det")) <= lit(1e-12) * abs(col("diag")))
-    .select(
-      when(col("degenerate"), Double.NaN)
-        .otherwise(col("d0") / col("det")).as("w0"),
-      when(col("degenerate"), Double.NaN)
-        .otherwise(col("d1") / col("det")).as("w1"),
-      when(col("degenerate"), Double.NaN)
-        .otherwise(col("d2") / col("det")).as("w2"))
-  }
-
-  /** Two-feature exact OLS `y = w0 + w1·x1 + w2·x2` as a PURE PLAN —
-    * the natural multivariate extension of the reference's closed-form
-    * kernel (`/root/reference/kernel.cu:62-63` is the 1-feature
-    * special case): one distributed aggregation of the normal-equation
-    * sufficient statistics `(n, Σx1, Σx2, Σx1², Σx2², Σx1x2, Σy, Σx1y,
-    * Σx2y)`, then Cramer's rule on the 3×3 system as scalar
-    * expressions over that single row. Nothing is collected — the
-    * returned DataFrame has one row, so callers can compose it (join,
-    * broadcast) without driver round-trips; the same closed form
-    * mirrors verbatim in SQL for the oracle gate. Degenerate systems
-    * yield NaN weights, not an error — detected by a RELATIVE
-    * determinant test (|det| ≤ 1e-12·|n·Σx1²·Σx2²|): an analytically
-    * collinear input accumulates to a tiny-but-nonzero det, so an
-    * exact-zero test would pass floating-point noise off as
-    * coefficients. Empty input also yields NaN.
-    */
-  def fitLinearExact2Plan(df: DataFrame, x1Col: String, x2Col: String,
-                          yCol: String): DataFrame = {
-    val x1 = col(x1Col).cast("double")
-    val x2 = col(x2Col).cast("double")
-    val y = col(yCol).cast("double")
-    val sums = df
-      .select(x1.as("x1"), x2.as("x2"), y.as("y"))
-      .filter(col("x1").isNotNull && col("x2").isNotNull &&
-        col("y").isNotNull)
-      .agg(count(lit(1)).cast("double").as("n"),
-           sum("x1").as("s1"), sum("x2").as("s2"),
-           sum(col("x1") * col("x1")).as("s11"),
-           sum(col("x2") * col("x2")).as("s22"),
-           sum(col("x1") * col("x2")).as("s12"),
-           sum("y").as("sy"),
-           sum(col("x1") * col("y")).as("s1y"),
-           sum(col("x2") * col("y")).as("s2y"))
-    // | n   s1   s2  | |w0|   | sy  |
-    // | s1  s11  s12 | |w1| = | s1y |
-    // | s2  s12  s22 | |w2|   | s2y |
-    def det3(a: Column, b: Column, c: Column,
-             d: Column, e: Column, f: Column,
-             g: Column, h: Column, i: Column): Column =
-      a * (e * i - f * h) - b * (d * i - f * g) + c * (d * h - e * g)
-    sums.select(
-      det3(col("n"), col("s1"), col("s2"),
-           col("s1"), col("s11"), col("s12"),
-           col("s2"), col("s12"), col("s22")).as("det"),
-      det3(col("sy"), col("s1"), col("s2"),
-           col("s1y"), col("s11"), col("s12"),
-           col("s2y"), col("s12"), col("s22")).as("d0"),
-      det3(col("n"), col("sy"), col("s2"),
-           col("s1"), col("s1y"), col("s12"),
-           col("s2"), col("s2y"), col("s22")).as("d1"),
-      det3(col("n"), col("s1"), col("sy"),
-           col("s1"), col("s11"), col("s1y"),
-           col("s2"), col("s12"), col("s2y")).as("d2"),
-      (col("n") * col("s11") * col("s22")).as("diag"))
     .withColumn("degenerate",
       col("det").isNull ||
         abs(col("det")) <= lit(1e-12) * abs(col("diag")))

@@ -2695,46 +2695,22 @@ object Insights {
   private def q177(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     val p = 10
     val batchEvents = Tables.events(s, d)
-    val rawSchema = s.read.parquet(s"$d/events.parquet").schema
     val outDir = sc.tempDir("graft_stream_hll")
     val ckpt = sc.tempDir("graft_stream_hll_ckpt")
-    // the events table ships in two layouts (the q204 branch): a
-    // single events.parquet FILE (driver testdata — stream the parent
-    // dir with a glob, FileStreamSource's basePath must be a
-    // directory) or an events.parquet DIRECTORY of part files
-    // (synthesized scale dirs — stream it directly; the glob-on-parent
-    // would match no leaf file and the sink would stay empty)
-    val evPath = s"$d/events.parquet"
-    val reader = s.readStream.schema(rawSchema)
-    val stream =
-      if (Tables.isDirectory(s, evPath)) reader.parquet(evPath)
-      else reader.option("pathGlobFilter", "events.parquet").parquet(d)
-    val regs = Sketch.hllRegisters(
-      stream.select(col("user_id").cast("string").as("k")), "k", p)
-    // stream-scoped conf, restored for the batch rollup below (the
-    // q211/q272 treatment): the streamed state is bounded at 2^p
-    // register rows NO MATTER the corpus (the query's own contract),
-    // so a narrow state exchange is scale-safe by construction and a
-    // complete-mode batch pays one state-store commit per partition —
-    // 32 commits for 1024 rows was pure fixed cost. The trailing
-    // no-data micro-batch only re-emits the identical register table
-    // (complete mode, no watermark): skip its commit+rewrite round.
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = s.conf.get(ndKey)
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    s.conf.set(ndKey, "false")
-    try {
-      val q = regs.writeStream.outputMode("complete")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.coalesce(1).write.mode("overwrite").parquet(outDir)
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set(ndKey, prevNd)
+    val regs = Sketch.hllRegisters(Tables.eventsStream(s, d)
+      .select(col("user_id").cast("string").as("k")), "k", p)
+    // stream-scoped conf (the q211/q272 treatment): the streamed state
+    // is bounded at 2^p register rows NO MATTER the corpus (the
+    // query's own contract), so a narrow state exchange is scale-safe
+    // by construction and a complete-mode batch pays one state-store
+    // commit per partition — 32 commits for 1024 rows was pure fixed
+    // cost. The trailing no-data micro-batch only re-emits the
+    // identical register table (complete mode, no watermark): skip its
+    // commit+rewrite round.
+    graft.streaming.ChunkReplay.run(regs, "complete", ckpt,
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      (b, _) => b.coalesce(1).write.mode("overwrite").parquet(outDir)
     }
     val streamed = s.read.parquet(outDir)
     // the batch reference registers are a session kernel — the stream

@@ -12,6 +12,7 @@ import graft.operators.{Exec, Scope}
 import graft.functions.Rounding.{roundTo => round}
 
 import graft.Tables
+import graft.streaming.{ChunkReplay, ChunkStore}
 import graft.functions.TextFunctions.words
 
 /** Round-8 lifecycle & market-structure operators: survival analysis,
@@ -1094,66 +1095,42 @@ object Lifecycle {
     // built once per session (ChunkStore), replayed read-only by every
     // run with a fresh checkpoint; the stream still processes every
     // micro-batch per run
-    val ingest = graft.streaming.ChunkStore
+    val ingest = ChunkStore
       .ensure(s, ("sessionReplay", d, fixedChunkUs, chunkBudget)) { store =>
         val ev = Tables.events(s, d)
           .select(col("user_id").cast("long").as("user_id"),
             unix_micros(col("ts")).as("ts_us"))
         val mm = ev.agg(min("ts_us"), max("ts_us")).head()
         val (minTs, maxTs) = (mm.getLong(0), mm.getLong(1))
-        val chunkUs =
+        val chunk =
           if (chunkBudget > 0)
-            math.max((maxTs - minTs) / chunkBudget + 1L, 1L)
-          else fixedChunkUs
+            ChunkReplay.chunkId("ts_us",
+              ChunkReplay.spanWidth(minTs, maxTs, chunkBudget), minTs)
+          else ChunkReplay.chunkId("ts_us", fixedChunkUs, 0L)
         def sentinel(offsetDays: Long) =
           Seq((-1L, maxTs + offsetDays * 86400 * 1000000))
             .toDF("user_id", "ts_us")
-        graft.streaming.ChunkReplay.writeChunks(ev, "ts_us", chunkUs,
-          store, Seq(sentinel(10), sentinel(20)),
-          originUs = if (chunkBudget > 0) minTs else 0L)
+        ChunkReplay.writeChunks(ev.withColumn("chunk", chunk), store,
+          Seq(sentinel(10), sentinel(20)))
       }
 
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("user_id",
-        org.apache.spark.sql.types.LongType),
-      org.apache.spark.sql.types.StructField("ts_us",
-        org.apache.spark.sql.types.LongType)))
-    val stream = s.readStream.schema(schema)
-      .option("maxFilesPerTrigger", 1).parquet(ingest)
-      .as[graft.streaming.SessionEvent]
-    val tallies = graft.streaming.EventPipeline
-      .sessionFinalTallies(stream, gapUs, "1 hour")
+    val tallies = graft.streaming.EventPipeline.sessionFinalTallies(
+      ChunkReplay.stream(s, ingest).as[graft.streaming.SessionEvent],
+      gapUs, "1 hour")
     // the state-store shuffle width is read from the session conf at
     // query start: narrow it for the stream (per-batch fixed cost is
     // one state-store commit PER partition PER batch — 32 wide is all
-    // overhead at this key cardinality), restore for the batch rollup.
-    // NOTE: set/restore on the SHARED session conf is safe only under
-    // the serial Verify/Bench harness; concurrent query execution on
-    // one SparkSession would need a per-query `newSession()` clone
-    // instead (same caveat at the q226/q231/q204 sites).
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = s.conf.get(ndKey)
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    // the two far-future sentinels drag the watermark past every real
-    // user's horizon DURING the data batches, so the trailing no-data
-    // micro-batch contributes nothing here (the class doc: if it also
-    // runs, it can only evict the excluded sentinel user) — skipping
-    // it removes a whole batch round (state commits + planning) per
-    // run and the timing variance of whether it ran before stop()
-    s.conf.set(ndKey, "false")
-    try {
-      val q = tallies.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.SessionTally],
-           _: Long) => b.write.mode("append").parquet(outDir)
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set(ndKey, prevNd)
+    // overhead at this key cardinality). The two far-future sentinels
+    // drag the watermark past every real user's horizon DURING the
+    // data batches, so the trailing no-data micro-batch contributes
+    // nothing here (the class doc: if it also runs, it can only evict
+    // the excluded sentinel user) — skipping it removes a whole batch
+    // round (state commits + planning) per run and the timing variance
+    // of whether it ran before stop()
+    ChunkReplay.run(tallies, "append", ckpt,
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      (b, _) => b.write.mode("append").parquet(outDir)
     }
 
     val result = s.read.parquet(outDir)
@@ -1420,14 +1397,13 @@ object Lifecycle {
     * batches: each boundary drops state more than one chunk old. */
   private[graft] def dedupReplay(s: SparkSession, d: String,
                                  chunkBudget: Int): DataFrame = Exec.scope { sc =>
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     // span-scaled chunk width (origin-anchored ids, the q272
     // treatment): a cheap per-run min/max scan sizes the budget; the
     // watermark delay derives from the same width
     val mm = Tables.events(s, d)
       .agg(min(unix_micros(col("ts"))), max(unix_micros(col("ts")))).head()
     val (minTs, maxTs) = (mm.getLong(0), mm.getLong(1))
-    val chunkUs = math.max((maxTs - minTs) / chunkBudget + 1L, 1L)
+    val chunkUs = ChunkReplay.spanWidth(minTs, maxTs, chunkBudget)
     val delaySec = chunkUs / 1000000L + 86400L
     val ckpt = sc.tempDir("graft_sdd_ckpt")
     val outDir = sc.tempDir("graft_sdd_out")
@@ -1435,68 +1411,31 @@ object Lifecycle {
     // chunk files with the adversarial duplicate injection are a pure
     // function of (dir, chunk budget) — built once per session
     // (ChunkStore), replayed read-only with a fresh checkpoint per run
-    val ingest = graft.streaming.ChunkStore
-      .ensure(s, ("q226", d, chunkBudget)) { store =>
-        val tmp = sc.tempDir("graft_sdd_split")
-        val ev = Tables.events(s, d)
-          .select(col("event_id").cast("long").as("event_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("event_type"))
-          .withColumn("chunk",
-            expr(s"(ts_us - $minTs) div $chunkUs"))
-        // duplicates: every 3rd event re-sent one chunk later (same id,
-        // same payload — the re-crawl case)
-        val dups = ev.filter(pmod(col("event_id"), lit(3)) === 0)
-          .withColumn("chunk", col("chunk") + 1)
-        ev.unionByName(dups)
-          .repartition(col("chunk"))
-          .write.partitionBy("chunk").parquet(s"$tmp/real")
+    val ingest = ChunkStore.ensure(s, ("q226", d, chunkBudget)) { store =>
+      val ev = Tables.events(s, d)
+        .select(col("event_id").cast("long").as("event_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("event_type"))
+        .withColumn("chunk", ChunkReplay.chunkId("ts_us", chunkUs, minTs))
+      // duplicates: every 3rd event re-sent one chunk later (same id,
+      // same payload — the re-crawl case)
+      val dups = ev.filter(pmod(col("event_id"), lit(3)) === 0)
+        .withColumn("chunk", col("chunk") + 1)
+      ChunkReplay.writeChunks(ev.unionByName(dups), store, Nil)
+    }
 
-        val ordered = new java.io.File(s"$tmp/real").listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("chunk="))
-          .sortBy(f => f.getName.stripPrefix("chunk=").toLong)
-          .map(_.toString)
-        ordered.zipWithIndex.foreach { case (dir, k) =>
-          val part = new java.io.File(dir).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head
-          val dst = Paths.get(f"$store/chunk_$k%03d.parquet")
-          Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-          dst.toFile.setLastModified(1700000000000L + k * 10000L)
-        }
-        graft.operators.Exec.deleteRecursively(tmp)
-      }
-
-    import org.apache.spark.sql.types.{LongType, StringType, StructField,
-      StructType}
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type",
-        StringType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = s.conf.get(ndKey)
-    s.conf.set("spark.sql.shuffle.partitions", "4")
+    val deduped = ChunkReplay.stream(s, ingest)
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+      .withWatermark("ts", s"$delaySec seconds")
+      .dropDuplicatesWithinWatermark("event_id")
+      .select("event_id", "event_type")
     // first-seen rows emit in their DATA batch (append-mode dedup), so
     // the trailing no-data micro-batch only evicts state — skip its
     // batch round (the q211/q272 treatment)
-    s.conf.set(ndKey, "false")
-    try {
-      val deduped = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .withWatermark("ts", s"$delaySec seconds")
-        .dropDuplicatesWithinWatermark("event_id")
-        .select("event_id", "event_type")
-      val q = deduped.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(outDir)
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally {
-      s.conf.set("spark.sql.shuffle.partitions", prevParts)
-      s.conf.set(ndKey, prevNd)
+    ChunkReplay.run(deduped, "append", ckpt,
+      "spark.sql.shuffle.partitions" -> "4",
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false") {
+      (b, _) => b.write.mode("append").parquet(outDir)
     }
 
     val result = s.read.parquet(outDir)
@@ -1529,7 +1468,6 @@ object Lifecycle {
     * oracle. Update-mode emissions are immediate; no sentinel flush
     * or watermark choreography is needed. */
   private def q231(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     // 2-real-chunk budget (was fixed 10-day chunks, which the
     // unaligned absolute origin smeared into FOUR micro-batches over
     // the ~30-day corpus — the q272 sliver lesson): the update-mode
@@ -1545,74 +1483,34 @@ object Lifecycle {
 
     // chunk files built once per session (ChunkStore), replayed
     // read-only with a fresh checkpoint per run
-    val ingest = graft.streaming.ChunkStore
-      .ensure(s, ("q231", d, chunkBudget)) { store =>
-        val tmp = sc.tempDir("graft_tws_split")
-        val ev = Tables.events(s, d)
-          .filter(col("value").isNotNull)
-          .select(col("user_id").cast("long").as("user_id"),
-            floor(col("value") * lit(1e6) + lit(0.5)).cast("long")
-              .as("units"),
-            unix_micros(col("ts")).as("ts_us"))
-        val mm = ev.agg(min("ts_us"), max("ts_us")).head()
-        val (minTs, maxTs) = (mm.getLong(0), mm.getLong(1))
-        val chunkUs = math.max((maxTs - minTs) / chunkBudget + 1L, 1L)
-        ev.withColumn("chunk", expr(s"(ts_us - $minTs) div $chunkUs"))
-          .drop("ts_us")
-          .repartition(col("chunk"))
-          .write.partitionBy("chunk").parquet(s"$tmp/real")
-        val ordered = new java.io.File(s"$tmp/real").listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("chunk="))
-          .sortBy(f => f.getName.stripPrefix("chunk=").toLong)
-          .map(_.toString)
-        ordered.zipWithIndex.foreach { case (dir, k) =>
-          val part = new java.io.File(dir).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head
-          val dst = Paths.get(f"$store/chunk_$k%03d.parquet")
-          Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-          dst.toFile.setLastModified(1700000000000L + k * 10000L)
-        }
-        graft.operators.Exec.deleteRecursively(tmp)
-      }
+    val ingest = ChunkStore.ensure(s, ("q231", d, chunkBudget)) { store =>
+      val ev = Tables.events(s, d)
+        .filter(col("value").isNotNull)
+        .select(col("user_id").cast("long").as("user_id"),
+          floor(col("value") * lit(1e6) + lit(0.5)).cast("long")
+            .as("units"),
+          unix_micros(col("ts")).as("ts_us"))
+      val mm = ev.agg(min("ts_us"), max("ts_us")).head()
+      val (minTs, maxTs) = (mm.getLong(0), mm.getLong(1))
+      val chunkUs = ChunkReplay.spanWidth(minTs, maxTs, chunkBudget)
+      ChunkReplay.writeChunks(
+        ev.withColumn("chunk", ChunkReplay.chunkId("ts_us", chunkUs, minTs))
+          .drop("ts_us"),
+        store, Nil)
+    }
 
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("units", LongType)))
-    val conf = s.conf
-    val provKey = "spark.sql.streaming.stateStore.providerClass"
-    val prevProv = conf.getOption(provKey)
-    val prevParts = conf.get("spark.sql.shuffle.partitions")
-    val ndKey = "spark.sql.streaming.noDataMicroBatches.enabled"
-    val prevNd = conf.get(ndKey)
+    import s.implicits._
+    val tallies = graft.streaming.EventPipeline.runningSpend(
+      ChunkReplay.stream(s, ingest).as[graft.streaming.ValueEvent])
     // update-mode running totals emit in their DATA batch; the
     // trailing no-data micro-batch adds nothing (the q211/q272
     // treatment)
-    conf.set(ndKey, "false")
-    conf.set(provKey, "org.apache.spark.sql.execution.streaming.state" +
-      ".RocksDBStateStoreProvider")
-    conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      import s.implicits._
-      val stream = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-        .as[graft.streaming.ValueEvent]
-      val tallies = graft.streaming.EventPipeline.runningSpend(stream)
-      val q = tallies.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch {
-          (b: org.apache.spark.sql.Dataset[graft.streaming.SpendTally],
-           _: Long) => b.write.mode("append").parquet(outDir)
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally {
-      conf.set("spark.sql.shuffle.partitions", prevParts)
-      conf.set(ndKey, prevNd)
-      prevProv match {
-        case Some(v) => conf.set(provKey, v)
-        case None => conf.unset(provKey)
-      }
+    ChunkReplay.run(tallies, "update", ckpt,
+      "spark.sql.streaming.noDataMicroBatches.enabled" -> "false",
+      "spark.sql.streaming.stateStore.providerClass" ->
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+      "spark.sql.shuffle.partitions" -> "4") {
+      (b, _) => b.write.mode("append").parquet(outDir)
     }
 
     val result = s.read.parquet(outDir)
@@ -1663,59 +1561,43 @@ object Lifecycle {
     // files (they move into the ingest dir mid-run), so each run takes
     // a hard-link copy of the store into its own staging dir —
     // metadata-only, mtimes shared with the store's inodes
-    val chunkLib = graft.streaming.ChunkStore
-      .ensure(s, ("q277", d)) { store =>
-        val ev = Tables.events(s, d)
-          .filter(col("event_type").isin("purchase", "click"))
-          .select(col("user_id").cast("long").as("user_id"),
-            floor(col("value") * lit(1e6) + lit(0.5)).cast("long")
-              .as("units"),
-            unix_micros(col("ts")).as("ts_us"))
-        val mm = ev.agg(min("ts_us"), max("ts_us")).head()
-        val chunkUs =
-          math.max((mm.getLong(1) - mm.getLong(0)) / 4L + 1L, 1L)
-        // originUs: without the anchor the unaligned absolute origin
-        // yields FIVE chunks from a budget of 4 (the q272 sliver
-        // lesson) — an extra micro-batch round and a lopsided 3/2
-        // restart split
-        graft.streaming.ChunkReplay.writeChunks(ev, "ts_us", chunkUs,
-          store, originUs = mm.getLong(0))
-      }
-    graft.streaming.ChunkStore.linkInto(chunkLib, staging)
+    val chunkLib = ChunkStore.ensure(s, ("q277", d)) { store =>
+      val ev = Tables.events(s, d)
+        .filter(col("event_type").isin("purchase", "click"))
+        .select(col("user_id").cast("long").as("user_id"),
+          floor(col("value") * lit(1e6) + lit(0.5)).cast("long")
+            .as("units"),
+          unix_micros(col("ts")).as("ts_us"))
+      val mm = ev.agg(min("ts_us"), max("ts_us")).head()
+      val chunkUs = ChunkReplay.spanWidth(mm.getLong(0), mm.getLong(1), 4)
+      // origin = min: without the anchor the unaligned absolute origin
+      // yields FIVE chunks from a budget of 4 (the q272 sliver lesson)
+      // — an extra micro-batch round and a lopsided 3/2 restart split
+      ChunkReplay.writeChunks(
+        ev.withColumn("chunk",
+          ChunkReplay.chunkId("ts_us", chunkUs, mm.getLong(0))),
+        store, Nil)
+    }
+    ChunkStore.linkInto(chunkLib.dir, staging)
     val staged = new java.io.File(staging).listFiles()
       .filter(_.getName.endsWith(".parquet")).sortBy(_.getName)
     val firstHalf = (staged.length + 1) / 2
 
-    import org.apache.spark.sql.types.{LongType, StructField, StructType}
-    val schema = StructType(Seq(StructField("user_id", LongType),
-      StructField("units", LongType), StructField("ts_us", LongType)))
-    def drain(): Unit = {
-      val counts = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
+    // query #1 drains the first half, then STOPS; query #2 starts on
+    // the SAME checkpoint and must recover state+offsets
+    Seq(staged.take(firstHalf), staged.drop(firstHalf)).foreach { half =>
+      half.foreach { f =>
+        Files.move(f.toPath, Paths.get(s"$ingest/${f.getName}"),
+          StandardCopyOption.ATOMIC_MOVE)
+      }
+      val counts = ChunkReplay.stream(s, chunkLib.copy(dir = ingest))
         .groupBy("user_id")
         .agg(count(lit(1)).as("n_events"), sum("units").as("spend_units"))
-      val q = counts.writeStream.outputMode("update")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.write.mode("append").parquet(outDir)
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
+      ChunkReplay.run(counts, "update", ckpt,
+        "spark.sql.shuffle.partitions" -> "2") {
+        (b, _) => b.write.mode("append").parquet(outDir)
+      }
     }
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "2")
-    try {
-      staged.take(firstHalf).foreach { f =>
-        Files.move(f.toPath, Paths.get(s"$ingest/${f.getName}"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      drain() // query #1: first half, then STOP
-      staged.drop(firstHalf).foreach { f =>
-        Files.move(f.toPath, Paths.get(s"$ingest/${f.getName}"),
-          StandardCopyOption.ATOMIC_MOVE)
-      }
-      drain() // query #2: SAME checkpoint, must recover state+offsets
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
 
     val result = s.read.parquet(outDir)
       .groupBy("user_id")
@@ -1756,68 +1638,36 @@ object Lifecycle {
     * emit).
     */
   private def q259(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
-    import java.nio.file.{Files, Paths, StandardCopyOption}
     val chunkUs = 6L * 86400 * 1000000
     val ckpt = sc.tempDir("graft_wm_ckpt")
     val outDir = sc.tempDir("graft_wm_out")
 
     // chunk files with the late-copy injection built once per session
     // (ChunkStore), replayed read-only with a fresh checkpoint per run
-    val ingest = graft.streaming.ChunkStore
-      .ensure(s, ("q259", d, chunkUs)) { store =>
-        val tmp = sc.tempDir("graft_wm_split")
-        val ev = Tables.events(s, d)
-          .select(col("event_id").cast("long").as("event_id"),
-            unix_micros(col("ts")).as("ts_us"),
-            col("event_type"))
-          .withColumn("chunk", (col("ts_us") / lit(chunkUs)).cast("long"))
-        val lateCopies = ev.filter(pmod(col("event_id"), lit(5)) === 0)
-          .withColumn("chunk", col("chunk") + 2)
-        ev.unionByName(lateCopies)
-          .repartition(col("chunk"))
-          .write.partitionBy("chunk").parquet(s"$tmp/real")
+    val ingest = ChunkStore.ensure(s, ("q259", d, chunkUs)) { store =>
+      val ev = Tables.events(s, d)
+        .select(col("event_id").cast("long").as("event_id"),
+          unix_micros(col("ts")).as("ts_us"),
+          col("event_type"))
+        .withColumn("chunk", ChunkReplay.chunkId("ts_us", chunkUs, 0L))
+      val lateCopies = ev.filter(pmod(col("event_id"), lit(5)) === 0)
+        .withColumn("chunk", col("chunk") + 2)
+      ChunkReplay.writeChunks(ev.unionByName(lateCopies), store, Nil)
+    }
 
-        val ordered = new java.io.File(s"$tmp/real").listFiles()
-          .filter(f => f.isDirectory && f.getName.startsWith("chunk="))
-          .sortBy(f => f.getName.stripPrefix("chunk=").toLong)
-          .map(_.toString)
-        ordered.zipWithIndex.foreach { case (dir, k) =>
-          val part = new java.io.File(dir).listFiles()
-            .filter(f => f.getName.startsWith("part-") &&
-              f.getName.endsWith(".parquet")).head
-          val dst = Paths.get(f"$store/chunk_$k%03d.parquet")
-          Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
-          dst.toFile.setLastModified(1700000000000L + k * 10000L)
-        }
-        graft.operators.Exec.deleteRecursively(tmp)
-      }
-
-    import org.apache.spark.sql.types.{LongType, StringType, StructField,
-      StructType}
-    val schema = StructType(Seq(StructField("event_id", LongType),
-      StructField("ts_us", LongType), StructField("event_type",
-        StringType)))
-    val prevParts = s.conf.get("spark.sql.shuffle.partitions")
-    s.conf.set("spark.sql.shuffle.partitions", "4")
-    try {
-      val counted = s.readStream.schema(schema)
-        .option("maxFilesPerTrigger", 1).parquet(ingest)
-        .withColumn("ts", timestamp_micros(col("ts_us")))
-        .withWatermark("ts", "3 days")
-        .groupBy(col("event_type"), window(col("ts"), "1 day"))
-        .count()
-      val q = counted.writeStream.outputMode("append")
-        .option("checkpointLocation", ckpt)
-        .foreachBatch { (b: DataFrame, _: Long) =>
-          b.select(col("event_type"),
-              (unix_micros(col("window.start")) / lit(86400000000L))
-                .cast("long").as("day"),
-              col("count").as("n_events"))
-            .write.mode("append").parquet(outDir)
-        }
-        .start()
-      try { q.processAllAvailable() } finally q.stop()
-    } finally s.conf.set("spark.sql.shuffle.partitions", prevParts)
+    val counted = ChunkReplay.stream(s, ingest)
+      .withColumn("ts", timestamp_micros(col("ts_us")))
+      .withWatermark("ts", "3 days")
+      .groupBy(col("event_type"), window(col("ts"), "1 day"))
+      .count()
+    ChunkReplay.run(counted, "append", ckpt,
+      "spark.sql.shuffle.partitions" -> "4") { (b, _) =>
+      b.select(col("event_type"),
+          (unix_micros(col("window.start")) / lit(86400000000L))
+            .cast("long").as("day"),
+          col("count").as("n_events"))
+        .write.mode("append").parquet(outDir)
+    }
 
     val result = s.read.parquet(outDir)
       .orderBy("event_type", "day")

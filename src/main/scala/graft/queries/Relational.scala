@@ -1789,7 +1789,7 @@ object Relational {
        GROUP BY s_nationkey ORDER BY s_nationkey"""
 
   // ---------------------------------------------------------------- q83
-  /** Two-feature exact OLS ([[graft.engine.Ols.fitLinearExact2Plan]]):
+  /** Two-feature exact OLS ([[graft.engine.Ols.fitRidge2Plan]] at λ = 0):
     * `l_extendedprice = w0 + w1·l_quantity + w2·l_discount` — the
     * multivariate extension of the reference's closed-form kernel, as
     * one aggregation + Cramer's rule scalar expressions (nothing
@@ -1797,8 +1797,8 @@ object Relational {
     * arithmetic term for term.
     */
   private def q83(s: SparkSession, d: String): DataFrame =
-    Ols.fitLinearExact2Plan(Tables.lineitem(s, d),
-        "l_quantity", "l_discount", "l_extendedprice")
+    Ols.fitRidge2Plan(Tables.lineitem(s, d),
+        "l_quantity", "l_discount", "l_extendedprice", 0.0)
       .select(round(col("w0"), 4).as("w0"), round(col("w1"), 4).as("w1"),
         round(col("w2"), 4).as("w2"))
 

@@ -2,20 +2,23 @@ package graft.streaming
 
 import java.nio.file.{Files, Paths, StandardCopyOption}
 
-import org.apache.spark.sql.DataFrame
+import org.apache.spark.sql.{Column, DataFrame, Dataset, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.{StructField, StructType}
 
-/** Shared choreography for the file-stream replay harness (the q177
-  * pattern that puts streaming operators under the DuckDB gate): a
-  * batch frame is re-written as time-ordered chunk files whose mtimes
-  * sequence the `FileStreamSource` replay, so `maxFilesPerTrigger=1`
-  * turns each chunk into its own micro-batch in event-time order (no
-  * late data by construction — late-data semantics get their own
-  * injection, q259).
+/** The one file-stream replay path (the q177 pattern that puts
+  * streaming operators under the DuckDB gate): a batch frame is
+  * re-written as time-ordered chunk files whose mtimes sequence the
+  * `FileStreamSource` replay, so `maxFilesPerTrigger=1` turns each
+  * chunk into its own micro-batch in chunk order (late data only
+  * where a caller injects it, q259).
   *
-  * Used by the streaming rows that need multi-batch behavior: q211
-  * (stateful eviction, its own inline copy predates this helper), q267
-  * (stream-static join), q272 (outer stream-stream join).
+  * Used by every replayed streaming row: q211 (stateful eviction),
+  * q226 (dedup, injected duplicates), q231 (transformWithState), q259
+  * (late-data audit, injected late copies), q267 (stream-static join),
+  * q272 (outer stream-stream join) and q277 (checkpoint recovery)
+  * stage and run through it; q177 and q204 stream the events table
+  * itself ([[graft.Tables.eventsStream]]) and run through [[run]].
   */
 object ChunkReplay {
 
@@ -38,34 +41,44 @@ object ChunkReplay {
     math.min(32, math.max(minW, ((bytes + (4L << 20) - 1) / (4L << 20)).toInt))
   }
 
-  /** Write `df` (which must carry a LONG event-time column `tsUsCol`)
-    * into one parquet file per `chunkUs`-wide event-time chunk under
-    * `ingestDir`, mtime-ordered; `sentinels` frames (same schema) are
-    * appended as the LAST chunks — far-future rows that drag the
-    * one-batch-lagging watermark past every real key so stateful /
-    * outer-join results are fully emitted by end-of-stream.
-    *
-    * `originUs` anchors the bucketing: chunk id = (ts − origin) div
-    * width. The default 0 keeps ABSOLUTE buckets (q267's oracle
-    * replays `ts_us // width` and grades the batch count, so its
-    * boundaries must stay engine-independent); a fixed-batch-BUDGET
-    * caller (q272: width = span/budget + 1) passes its min event
-    * time, because an unaligned origin otherwise spreads the span
-    * over budget+1 absolute buckets and the extra sliver chunk costs
-    * a full micro-batch round (~0.9 s fixed) for a handful of rows.
-    * Returns the number of chunk files written. */
-  def writeChunks(df: DataFrame, tsUsCol: String, chunkUs: Long,
-                  ingestDir: String, sentinels: Seq[DataFrame] = Nil,
-                  originUs: Long = 0L): Int = graft.operators.Exec.scope { sc =>
+  /** Width that splits the event span `[minTs, maxTs]` into exactly
+    * `budget` chunks anchored at `minTs` — a fixed micro-batch count
+    * at any scale factor. */
+  def spanWidth(minTs: Long, maxTs: Long, budget: Int): Long =
+    math.max((maxTs - minTs) / budget + 1L, 1L)
+
+  /** Chunk id of the LONG event-time column `ts`: `floor((ts − origin)
+    * / width)` in exact integer arithmetic, matching the oracles' `//`.
+    * Spark's `div` truncates toward zero, so the remainder is taken
+    * with `pmod` first (a row before the origin lands in chunk −1, not
+    * 0); the FP form `(ts/width).cast("long")` also truncates and can
+    * misassign a boundary row once the quotient rounds across an
+    * integer. Origin 0 keeps ABSOLUTE buckets (q267's oracle replays
+    * `ts_us // width` and grades the batch count); a fixed-budget
+    * caller passes its min event time, because an unaligned origin
+    * spreads the span over budget+1 buckets and the sliver chunk
+    * costs a full micro-batch round (~0.9 s fixed) for a handful of
+    * rows. */
+  def chunkId(ts: String, width: Long, origin: Long): Column = {
+    val off = s"($ts - ($origin))"
+    expr(s"($off - pmod($off, $width)) div $width")
+  }
+
+  /** Write `df`, whose LONG `chunk` column the caller assigned
+    * ([[chunkId]], plus any injected copies unioned in), as one
+    * parquet file per chunk under `ingestDir`, mtimes strictly
+    * increasing in chunk order; `sentinels` frames (the same columns
+    * without `chunk`) follow as the LAST files — far-future rows that
+    * drag the one-batch-lagging watermark past every real key so
+    * stateful / outer-join results are fully emitted by end-of-stream.
+    * Returns the staged files' schema: `df`'s columns without `chunk`,
+    * every field nullable (an analysis-time read, no Spark job). */
+  def writeChunks(df: DataFrame, ingestDir: String,
+                  sentinels: Seq[DataFrame]): StructType = graft.operators.Exec.scope { sc =>
     val tmp = sc.tempDir("graft_chunk_split")
     // all rows of a chunk land in ONE task so partitionBy emits a
-    // single part file per chunk directory. Chunk id is integer FLOOR
-    // division (`div`), matching the oracles' exact `//`: the FP form
-    // `(ts/chunkUs).cast("long")` truncates toward zero (wrong chunk
-    // for negative event times) and can misassign a boundary row once
-    // ts/chunkUs rounds across an integer in FP
-    df.withColumn("chunk", expr(s"($tsUsCol - $originUs) div $chunkUs"))
-      .repartition(col("chunk"))
+    // single part file per chunk directory
+    df.repartition(col("chunk"))
       .write.partitionBy("chunk").parquet(s"$tmp/real")
     sentinels.zipWithIndex.foreach { case (sd, i) =>
       sd.coalesce(1).write.parquet(s"$tmp/sentinel_$i")
@@ -86,6 +99,40 @@ object ChunkReplay {
       Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
       dst.toFile.setLastModified(1700000000000L + k * 10000L)
     }
-    ordered.length
+    StructType(df.schema.filterNot(_.name == "chunk")
+      .map(f => StructField(f.name, f.dataType)))
+  }
+
+  /** The file stream replaying `staged`: one chunk file per
+    * micro-batch, in mtime order. */
+  def stream(s: SparkSession, staged: Staged): DataFrame =
+    s.readStream.schema(staged.schema)
+      .option("maxFilesPerTrigger", 1).parquet(staged.dir)
+
+  /** Run `stream` to completion into `sink`: set the call site's
+    * session-conf `overrides` (read at query start — shuffle/state
+    * width, trailing no-data batch, state-store provider), start the
+    * query, `processAllAvailable`, `stop`; then, also when the stream
+    * throws, restore every key to its previous value or unset a key
+    * that had none, so the batch rollup after the stream runs at the
+    * session's own settings. Overriding the SHARED session conf is
+    * safe only under the serial Verify/Bench harness: concurrent
+    * queries on one SparkSession would need a per-query `newSession()`
+    * clone instead. */
+  def run[T](stream: Dataset[T], outputMode: String, checkpointDir: String,
+             overrides: (String, String)*)(sink: (Dataset[T], Long) => Unit): Unit = {
+    val conf = stream.sparkSession.conf
+    val prev = overrides.map { case (k, _) => k -> conf.getOption(k) }
+    try {
+      overrides.foreach { case (k, v) => conf.set(k, v) }
+      val q = stream.writeStream.outputMode(outputMode)
+        .option("checkpointLocation", checkpointDir)
+        .foreachBatch(sink)
+        .start()
+      try q.processAllAvailable() finally q.stop()
+    } finally prev.foreach {
+      case (k, Some(v)) => conf.set(k, v)
+      case (k, None) => conf.unset(k)
+    }
   }
 }

@@ -5,8 +5,12 @@ import java.nio.file.{Files, Paths}
 import scala.util.control.NonFatal
 
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.types.StructType
 
 import graft.operators.Exec
+
+/** A staged replay: the chunk directory and the schema of its files. */
+final case class Staged(dir: String, schema: StructType)
 
 /** Session-lifetime store of REPLAY CHUNK DIRECTORIES — the disk-file
   * counterpart of [[graft.Kernels]]: the time-ordered, mtime-sequenced
@@ -29,7 +33,7 @@ import graft.operators.Exec
   */
 object ChunkStore {
   private val memo =
-    scala.collection.concurrent.TrieMap.empty[(String, Any), String]
+    scala.collection.concurrent.TrieMap.empty[(String, Any), Staged]
 
   // Wall seconds spent STAGING chunk directories this JVM (VERDICT r15
   // item 3): staging runs once per (application, key) inside whichever
@@ -38,16 +42,17 @@ object ChunkStore {
   private val buildNanos = new java.util.concurrent.atomic.AtomicLong(0L)
   def buildSec: Double = buildNanos.get / 1e9
 
-  /** The directory for `key`, building it with `build` on first use.
-    * `build` receives a fresh empty directory and must leave the
-    * finished chunk files (with their replay mtimes) inside it. */
-  def ensure(s: SparkSession, key: Any)(build: String => Unit): String =
+  /** The staged replay for `key`, building it with `build` on first
+    * use. `build` receives a fresh empty directory, must leave the
+    * finished chunk files (with their replay mtimes) inside it and
+    * returns their schema ([[ChunkReplay.writeChunks]] does both). */
+  def ensure(s: SparkSession, key: Any)(build: String => StructType): Staged =
     memo.getOrElseUpdate((s.sparkContext.applicationId, key), {
       val t0 = System.nanoTime()
       val dir = Exec.scratchTempDir("graft_chunk_store").toString
-      build(dir)
+      val staged = Staged(dir, build(dir))
       buildNanos.addAndGet(System.nanoTime() - t0)
-      dir
+      staged
     })
 
   /** Hard-link every parquet chunk of `srcDir` into `dstDir`,
@@ -64,7 +69,7 @@ object ChunkStore {
   /** Delete every stored directory (test isolation, cold-cost
     * rehearsals). */
   def clear(): Unit = {
-    val dirs = memo.values.toList
+    val dirs = memo.values.map(_.dir).toList
     memo.clear()
     dirs.foreach { d =>
       try Exec.deleteRecursively(d)

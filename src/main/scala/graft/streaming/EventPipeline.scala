@@ -25,6 +25,22 @@ private[streaming] final case class SessionState(nSessions: Long,
   */
 object EventPipeline {
 
+  /** Fold a key's batch of events, sorted by event time, into its
+    * carried session state (a new session opens after more than
+    * `gapUs` of silence) and store the result in `state`. */
+  private def fold(state: GroupState[SessionState],
+                   it: Iterator[SessionEvent], gapUs: Long): SessionState = {
+    val st = it.toArray.sortBy(_.ts_us).foldLeft(
+      state.getOption.getOrElse(SessionState(0L, 0L, Long.MinValue))) { (st, e) =>
+      val newSession =
+        st.lastTsUs == Long.MinValue || e.ts_us - st.lastTsUs > gapUs
+      SessionState(st.nSessions + (if (newSession) 1L else 0L),
+        st.nEvents + 1L, math.max(st.lastTsUs, e.ts_us))
+    }
+    state.update(st)
+    st
+  }
+
   /** Tumbling-window counts/sums per event type. On a stream this
     * becomes a stateful windowed aggregation; with `withWatermark`
     * upstream, state is bounded and late data beyond the watermark is
@@ -59,16 +75,7 @@ object EventPipeline {
         GroupStateTimeout.NoTimeout) {
         (user: Long, it: Iterator[SessionEvent],
          state: GroupState[SessionState]) =>
-          val sorted = it.toArray.sortBy(_.ts_us)
-          var st = state.getOption
-            .getOrElse(SessionState(0L, 0L, Long.MinValue))
-          sorted.foreach { e =>
-            val newSession =
-              st.lastTsUs == Long.MinValue || e.ts_us - st.lastTsUs > gapUs
-            st = SessionState(st.nSessions + (if (newSession) 1L else 0L),
-              st.nEvents + 1L, math.max(st.lastTsUs, e.ts_us))
-          }
-          state.update(st)
+          val st = fold(state, it, gapUs)
           Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
       }
   }
@@ -100,16 +107,7 @@ object EventPipeline {
             state.remove()
             Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
           } else {
-            val sorted = it.toArray.sortBy(_.ts_us)
-            var st = state.getOption
-              .getOrElse(SessionState(0L, 0L, Long.MinValue))
-            sorted.foreach { e =>
-              val newSession =
-                st.lastTsUs == Long.MinValue || e.ts_us - st.lastTsUs > gapUs
-              st = SessionState(st.nSessions + (if (newSession) 1L else 0L),
-                st.nEvents + 1L, math.max(st.lastTsUs, e.ts_us))
-            }
-            state.update(st)
+            val st = fold(state, it, gapUs)
             // evict when the watermark passes the session's gap horizon;
             // ceiling division so µs→ms truncation can never arm the
             // timeout before lastEvent+gap
@@ -148,16 +146,7 @@ object EventPipeline {
             state.remove()
             Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
           } else {
-            val sorted = it.toArray.sortBy(_.ts_us)
-            var st = state.getOption
-              .getOrElse(SessionState(0L, 0L, Long.MinValue))
-            sorted.foreach { e =>
-              val newSession =
-                st.lastTsUs == Long.MinValue || e.ts_us - st.lastTsUs > gapUs
-              st = SessionState(st.nSessions + (if (newSession) 1L else 0L),
-                st.nEvents + 1L, math.max(st.lastTsUs, e.ts_us))
-            }
-            state.update(st)
+            val st = fold(state, it, gapUs)
             state.setTimeoutTimestamp((st.lastTsUs + gapUs + 999L) / 1000L)
             Iterator.empty
           }

@@ -109,5 +109,12 @@ class HarnessSpec extends SparkSpec {
       .foreach(gone => assert(occurrences("src", gone).isEmpty, gone))
     assert(occurrences("src/main", "scratchTempDir(").keySet === exec ++ Set(
       "src/main/scala/graft/streaming/ChunkStore.scala"))
+    // one file-stream replay path and one events ts normalization
+    Seq("processAllAvailable", "setLastModified").foreach { call =>
+      assert(occurrences("src/main", call).keySet ===
+        Set("src/main/scala/graft/streaming/ChunkReplay.scala"), call)
+    }
+    assert(occurrences("src/main", "TimestampNTZType").keySet ===
+      Set("src/main/scala/graft/Tables.scala"))
   }
 }

@@ -82,14 +82,32 @@ class OlsSpec extends SparkSpec {
       val x1 = i.toDouble; val x2 = (i % 9).toDouble
       (x1, x2, 3.0 + 2.0 * x1 - 0.5 * x2)
     }.toDF("x1", "x2", "y")
-    val exact = Ols.fitLinearExact2Plan(df, "x1", "x2", "y").collect()(0)
+    // the exact solve, done independently on the driver: Gaussian
+    // elimination on the 3x3 normal equations
+    val exact = {
+      val rows = df.as[(Double, Double, Double)].collect()
+      val a = Array.tabulate(3, 4) { (i, j) =>
+        rows.map { case (x1, x2, y) =>
+          val v = Array(1.0, x1, x2, y)
+          v(i) * v(j)
+        }.sum
+      }
+      for (p <- 0 until 3; r <- p + 1 until 3) {
+        val f = a(r)(p) / a(p)(p)
+        for (c <- p until 4) a(r)(c) -= f * a(p)(c)
+      }
+      val w = new Array[Double](3)
+      for (r <- 2 to 0 by -1)
+        w(r) = (a(r)(3) - (r + 1 until 3).map(c => a(r)(c) * w(c)).sum) / a(r)(r)
+      w
+    }
     val r0 = Ols.fitRidge2Plan(df, "x1", "x2", "y", 0.0).collect()(0)
     (0 to 2).foreach(i =>
-      assert(math.abs(exact.getDouble(i) - r0.getDouble(i)) < 1e-9))
+      assert(math.abs(exact(i) - r0.getDouble(i)) < 1e-9))
     // perfectly collinear features: exact NaNs out, ridge is defined
     val coll = (1 to 30).map(i =>
       (i.toDouble, 2.0 * i, 5.0 + i)).toDF("x1", "x2", "y")
-    val ex = Ols.fitLinearExact2Plan(coll, "x1", "x2", "y").collect()(0)
+    val ex = Ols.fitRidge2Plan(coll, "x1", "x2", "y", 0.0).collect()(0)
     assert(ex.getDouble(1).isNaN)
     val rr = Ols.fitRidge2Plan(coll, "x1", "x2", "y", 10.0).collect()(0)
     assert(!rr.getDouble(1).isNaN && !rr.getDouble(2).isNaN)
@@ -174,12 +192,12 @@ class OlsSpec extends SparkSpec {
     assert(math.abs(r.weights.w1 - 1.0) < 1e-4)
   }
 
-  test("fitLinearExact2Plan recovers planted 2-feature weights; NaN on degenerate") {
+  test("fitRidge2Plan at lambda=0 recovers planted 2-feature weights; NaN on degenerate") {
     // y = 2 + 3*x1 - 5*x2 exactly -> exact recovery
     val rows = for (i <- 1 to 40; j <- 1 to 3) yield
       (i.toDouble, (i % 7 + j).toDouble, 2.0 + 3.0 * i - 5.0 * (i % 7 + j))
     val df = rows.toDF("x1", "x2", "y")
-    val w = Ols.fitLinearExact2Plan(df, "x1", "x2", "y").head()
+    val w = Ols.fitRidge2Plan(df, "x1", "x2", "y", 0.0).head()
     assert(math.abs(w.getDouble(0) - 2.0) < 1e-6)
     assert(math.abs(w.getDouble(1) - 3.0) < 1e-6)
     assert(math.abs(w.getDouble(2) + 5.0) < 1e-6)
@@ -188,12 +206,12 @@ class OlsSpec extends SparkSpec {
     val collinear = Seq((1.0, 3.0, 1.0), (2.0, 6.0, 2.0), (3.0, 9.0, 3.0),
       (4.0, 12.0, 4.5), (5.0, 15.0, 5.0), (6.0, 18.0, 6.5))
       .toDF("x1", "x2", "y")
-    val wc = Ols.fitLinearExact2Plan(collinear, "x1", "x2", "y").head()
+    val wc = Ols.fitRidge2Plan(collinear, "x1", "x2", "y", 0.0).head()
     assert(wc.getDouble(0).isNaN && wc.getDouble(1).isNaN
       && wc.getDouble(2).isNaN)
     // empty input -> NaN weights, never null
-    val we = Ols.fitLinearExact2Plan(
-      collinear.filter(org.apache.spark.sql.functions.col("x1") < 0), "x1", "x2", "y").head()
+    val we = Ols.fitRidge2Plan(
+      collinear.filter(org.apache.spark.sql.functions.col("x1") < 0), "x1", "x2", "y", 0.0).head()
     assert(we.getDouble(0).isNaN && we.getDouble(1).isNaN
       && we.getDouble(2).isNaN)
   }

@@ -42,7 +42,6 @@ class ProbesSpec extends SparkSpec {
     * reference math. */
   private def midranks(obs: Seq[(Double, Boolean)]): Seq[(Double, Boolean)] = {
     val sorted = obs.sortBy(_._1)
-    val n = sorted.length
     val byVal = sorted.groupBy(_._1)
     sorted.map { case (v, a) =>
       val below = sorted.count(_._1 < v)
@@ -645,7 +644,6 @@ class ProbesSpec extends SparkSpec {
     val r = SparkEntry.queries("q377_dup_selection_bias")(spark, dir)
       .collect()(0)
     val toks = Seq(5.0, 5.0, 20.0, 20.0)
-    val dup = Seq(true, true, false, false)
     val n = 4; val n1 = 2; val n0 = 2
     val m1 = 5.0; val m0 = 20.0
     val mean = toks.sum / n

@@ -162,10 +162,11 @@ class StreamingSpec extends SparkSpec {
   }
 
   test("NARROW-chunk session replay (6-day, 5 real micro-batches) sums to batch sessionization") {
-    // q211 benches with 10-day chunks (3 real batches); this keeps the
-    // narrow configuration — more eviction-boundary and state-carry
-    // events per run — exercised against the same batch oracle, so the
-    // sweep-time trade can't silently lose multi-boundary coverage.
+    // q211 benches with a 2-real-chunk budget (one real-real
+    // boundary); this keeps the narrow configuration — more
+    // eviction-boundary and state-carry events per run — exercised
+    // against the same batch oracle, so the sweep-time trade can't
+    // silently lose multi-boundary coverage.
     val d = "/root/testdata/sf0.001"
     val narrow = graft.queries.Lifecycle
       .sessionReplay(spark, d, 6L * 86400 * 1000000)

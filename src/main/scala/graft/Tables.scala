@@ -52,11 +52,11 @@ object Tables {
 
   /** [[events]] as a FILE STREAM over the same rows (same `ts`
     * normalization). The table ships in two layouts: a single
-    * events.parquet FILE (driver testdata — stream the parent dir with
-    * a glob, since FileStreamSource's basePath must be a directory) or
-    * an events.parquet DIRECTORY of part files (synthesized scale dirs
-    * — stream it directly; the glob-on-parent would match no leaf
-    * file and the sink would stay empty). */
+    * events.parquet FILE (generated test data — stream the parent dir
+    * with a glob, since FileStreamSource's basePath must be a
+    * directory) or an events.parquet DIRECTORY of part files
+    * (synthesized scale dirs — stream it directly; the glob-on-parent
+    * would match no leaf file and the sink would stay empty). */
   def eventsStream(s: SparkSession, d: String): DataFrame = {
     val path = s"$d/events.parquet"
     val reader = s.readStream.schema(table(s, d, "events").schema)

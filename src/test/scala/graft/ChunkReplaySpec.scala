@@ -1,7 +1,9 @@
 package graft
 
+import java.nio.file.{Files, Paths}
+
 import org.apache.spark.sql.{DataFrame, Dataset, Row}
-import org.apache.spark.sql.functions.{col, lit}
+import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Exec
@@ -72,13 +74,13 @@ class ChunkReplaySpec extends SparkSpec {
         ChunkReplay.run(ChunkReplay.stream(spark, st), "append",
           sc.tempDir("chunk-replay-ckpt"), setKey -> "during", unsetKey -> "during")(sink)
       }
-      val seen = scala.collection.mutable.ArrayBuffer.empty[(Long, Set[Long], Seq[String])]
-      replay { (b, id) =>
-        seen += ((id, b.select("id").as[Long].collect().toSet,
+      val seen = scala.collection.mutable.ArrayBuffer.empty[(Set[Long], Seq[String])]
+      replay { (b, _) =>
+        seen += ((b.select("id").as[Long].collect().toSet,
           Seq(setKey, unsetKey).map(k => spark.conf.get(k))))
       }
-      assert(seen.map(_._2) === Seq(Set(1L), Set(2L), Set(3L)))
-      assert(seen.forall(_._3 == Seq("during", "during")))
+      assert(seen.map(_._1) === Seq(Set(1L), Set(2L), Set(3L)))
+      assert(seen.forall(_._2 == Seq("during", "during")))
       assert(spark.conf.get(setKey) === "before")
       assert(spark.conf.getOption(unsetKey).isEmpty)
 
@@ -88,17 +90,29 @@ class ChunkReplaySpec extends SparkSpec {
     } finally spark.conf.unset(setKey)
   }
 
-  test("Tables.eventsStream streams the events table with its batch ts normalization") {
-    val d = "/root/testdata/sf0.001"
-    assert(Tables.eventsStream(spark, d).schema === Tables.events(spark, d).schema)
-    val n = Exec.scope { sc =>
-      val out = sc.tempDir("events-stream-out")
-      ChunkReplay.run(Tables.eventsStream(spark, d).select(lit(1).as("one")),
-        "append", sc.tempDir("events-stream-ckpt")) {
-        (b, _) => b.write.mode("append").parquet(out)
+  test("Tables.eventsStream replays Tables.events in both table layouts") {
+    val dir = Exec.scratchTempDir("events-stream").toString
+    try {
+      // ts as LONG nanoseconds: the TIMESTAMP(NANOS) column under nanosAsLong
+      Seq((1L, 7L, "click", 1700000000123456789L), (2L, 8L, "purchase", 1700000100000000000L))
+        .toDF("event_id", "user_id", "event_type", "ts")
+        .coalesce(1).write.parquet(s"$dir/asDir/events.parquet")
+      val part = new java.io.File(s"$dir/asDir/events.parquet").listFiles()
+        .filter(_.getName.endsWith(".parquet")).head
+      Files.createDirectories(Paths.get(s"$dir/asFile"))
+      Files.copy(part.toPath, Paths.get(s"$dir/asFile/events.parquet"))
+      Seq("asDir", "asFile").foreach { layout =>
+        val d = s"$dir/$layout"
+        val streamed = Exec.scope { sc =>
+          val out = sc.tempDir("events-stream-out")
+          ChunkReplay.run(Tables.eventsStream(spark, d), "append",
+            sc.tempDir("events-stream-ckpt")) {
+            (b, _) => b.write.mode("append").parquet(out)
+          }
+          spark.read.parquet(out).collect().toSet
+        }
+        assert(streamed === Tables.events(spark, d).collect().toSet, layout)
       }
-      spark.read.parquet(out).count()
-    }
-    assert(n === Tables.events(spark, d).count())
+    } finally Exec.deleteRecursively(dir)
   }
 }

@@ -202,26 +202,15 @@ object Dedup {
     */
   def jaccardPairsExact(docs: DataFrame, idCol: String, textCol: String,
                         threshold: Double, shingleN: Int = 3,
-                        maxShingleDf: Int = Int.MaxValue,
-                        precomputed: Option[ShingleIndex] = None): DataFrame = Exec.scope { sc =>
+                        maxShingleDf: Int = Int.MaxValue): DataFrame = Exec.scope { sc =>
     require(threshold > 0.0,
       "threshold must be positive: zero-similarity pairs never co-occur " +
         "in the inverted index and cannot be reported")
     require(maxShingleDf >= 2,
       "a document-frequency cap below 2 drops every co-occurring shingle " +
         "and no pair can ever be reported")
-    // `precomputed` is the production posture over a stable corpus:
-    // the df-capped index is a persisted artifact (see
-    // [[buildShingleIndex]]) rebuilt when the corpus changes, not per
-    // query. The caller owns those frames — nothing here releases them
-    // — and they MUST be [[buildShingleIndex]] output for the same
-    // (docs, idCol, textCol, shingleN, maxShingleDf), or the pair set
-    // silently diverges from the operator's contract.
-    val (idx, docStats) = precomputed match {
-      case Some(ix) => (ix.idx, ix.docStats)
-      case None =>
-        cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
-    }
+    val (idx, docStats) =
+      cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
     // exact shared-indexed-shingle count per candidate pair
     val ii = idx.as("a")
       .join(idx.as("b"),
@@ -327,31 +316,6 @@ object Dedup {
     (idx, docStats)
   }
 
-  /** The df-capped inverted shingle index as a PERSISTED ARTIFACT:
-    * `idx` — `(id, s)` rows whose hashed shingle has document
-    * frequency in `[2, maxShingleDf]` (the candidate-generation side;
-    * the df<2 singleton tail, which dominates raw shingle volume, is
-    * excluded) — and `docStats` — one `(id, sz, hid)` row per
-    * document. Over a stable corpus this is exactly the index table a
-    * production dedup service materializes once and reuses across
-    * batches/queries (the same posture as the persisted IVF lake
-    * index); [[jaccardPairsExact]]/[[containmentPairs]] accept it via
-    * their `precomputed` parameter.
-    */
-  final case class ShingleIndex(idx: DataFrame, docStats: DataFrame)
-
-  /** Build a [[ShingleIndex]] eagerly: both frames are kept as
-    * self-contained checkpoints (no dependency on the build's internal
-    * cache, which is released before returning). */
-  def buildShingleIndex(docs: DataFrame, idCol: String, textCol: String,
-                        shingleN: Int = 3,
-                        maxShingleDf: Int = Int.MaxValue): ShingleIndex =
-    Exec.scope { sc =>
-      val (idx, docStats) =
-        cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
-      ShingleIndex(sc.keep(idx), sc.keep(docStats))
-    }
-
   /** Full distinct shingle SETS (strings) for documents appearing in a
     * candidate pair: a second scan of the docs table restricted by a
     * candidate-id semi-join — map-side work plus a candidate-sized
@@ -389,21 +353,14 @@ object Dedup {
     */
   def containmentPairs(docs: DataFrame, idCol: String, textCol: String,
                        threshold: Double, shingleN: Int = 3,
-                       maxShingleDf: Int = Int.MaxValue,
-                       precomputed: Option[ShingleIndex] = None): DataFrame = Exec.scope { sc =>
+                       maxShingleDf: Int = Int.MaxValue): DataFrame = Exec.scope { sc =>
     require(threshold > 0.0 && threshold <= 1.0,
       "containment threshold must be in (0, 1]")
     require(maxShingleDf >= 2,
       "a document-frequency cap below 2 drops every co-occurring shingle " +
         "and no pair can ever be reported")
-    // same persisted-index contract as [[jaccardPairsExact]]: the
-    // caller owns the frames, which must be [[buildShingleIndex]]
-    // output for the same (docs, idCol, textCol, shingleN, cap)
-    val (idx, docStats) = precomputed match {
-      case Some(ix) => (ix.idx, ix.docStats)
-      case None =>
-        cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
-    }
+    val (idx, docStats) =
+      cappedInvertedIndex(sc, docs, idCol, textCol, shingleN, maxShingleDf)
     val ii = idx.as("a")
       .join(idx.as("b"),
         col("a.s") === col("b.s") && col("a.id") < col("b.id"))
@@ -449,11 +406,7 @@ object Dedup {
     */
   /** Per-document LSH band keys `(id, band, key)` — the shared
     * candidate-generation kernel of [[minhashPairs]] and
-    * [[incrementalNearDups]], public because at production scale it IS
-    * the precomputed signature store: band keys are a pure per-document
-    * function, so a stable corpus computes them once and every later
-    * batch joins against the stored keys
-    * ([[incrementalNearDups]]'s `precomputedBands`).
+    * [[incrementalNearDups]].
     *
     * Signatures run over the RAW (non-distinct) shingle rows — min
     * over a multiset equals min over its set, so the corpus-wide
@@ -465,9 +418,9 @@ object Dedup {
     * the row formulation hashes once and the K minima are codegen'd
     * partial aggregates (map-side combine — the shape that scales).
     */
-  def bandKeys(docs: DataFrame, idCol: String, textCol: String,
-               shingleN: Int = 3, k: Int = 12, bands: Int = 6,
-               rowsPerBand: Int = 2): DataFrame = {
+  private def bandKeys(docs: DataFrame, idCol: String, textCol: String,
+                       shingleN: Int, k: Int, bands: Int,
+                       rowsPerBand: Int): DataFrame = {
     require(bands * rowsPerBand == k, "signature must split evenly into bands")
     val hashed = shingleRowsRaw(docs, idCol, textCol, shingleN)
       .withColumn("h", token60(col("s")) % MinhashP)
@@ -486,8 +439,7 @@ object Dedup {
   /** Incremental near-duplicate detection — the PRODUCTION dedup mode:
     * flag documents of an incoming `batch` that near-duplicate any
     * document of the existing `corpus`, WITHOUT the corpus×corpus
-    * self-join (the corpus side only computes band keys, and at scale
-    * those come from a precomputed signature store). Same MinHash/LSH
+    * self-join (the corpus side only computes band keys). Same MinHash/LSH
     * parameters and verification semantics as [[minhashPairs]]:
     * candidates share ≥ 1 band key, verified by exact Jaccard ≥
     * `threshold` on full shingle sets. Id spaces of the two inputs must
@@ -509,9 +461,7 @@ object Dedup {
                           threshold: Double, shingleN: Int = 3,
                           k: Int = 12, bands: Int = 6,
                           rowsPerBand: Int = 2,
-                          checkDisjoint: Boolean = true,
-                          precomputedBands: Option[(DataFrame, DataFrame)] =
-                            None): DataFrame = Exec.scope { sc =>
+                          checkDisjoint: Boolean = true): DataFrame = Exec.scope { sc =>
     require(bands * rowsPerBand == k, "signature must split evenly into bands")
     require(threshold > 0.0,
       "threshold must be positive: zero-similarity candidate pairs drop " +
@@ -526,18 +476,10 @@ object Dedup {
           .join(corpus.select(col(idCol)), Seq(idCol), "left_semi")
           .isEmpty,
         "batch and corpus id spaces must be disjoint")
-    // `precomputedBands` = (batch keys, corpus keys) from a signature
-    // store ([[bandKeys]] output for the same params over the same two
-    // inputs — band keys are per-document, so a predicate split of one
-    // stored table is exactly the split inputs' keys). The production
-    // ingest path: the corpus side's signatures exist already; only the
-    // batch is newly hashed. Caller owns the frames; nothing here
-    // releases them.
-    val (bBands, cBands) = precomputedBands.getOrElse((
-      bandKeys(batch, idCol, textCol, shingleN, k, bands, rowsPerBand),
-      bandKeys(corpus, idCol, textCol, shingleN, k, bands, rowsPerBand)))
-    val cand = sc.cache(bBands.as("a")
-      .join(cBands.as("b"),
+    def keys(docs: DataFrame): DataFrame =
+      bandKeys(docs, idCol, textCol, shingleN, k, bands, rowsPerBand)
+    val cand = sc.cache(keys(batch).as("a")
+      .join(keys(corpus).as("b"),
         col("a.band") === col("b.band") && col("a.key") === col("b.key"))
       .select(col("a.id").as("doc_a"), col("b.id").as("doc_b"))
       .distinct())
@@ -725,7 +667,7 @@ object Dedup {
     */
   def embeddingPairs(emb: DataFrame, idCol: String, vecCol: String,
                      threshold: Double): DataFrame = {
-    // norms are precomputed per vector so each pair costs ONE dot
+    // norms are computed once per vector so each pair costs ONE dot
     // product instead of three full array traversals
     val v = widen(emb, idCol).select(col(idCol).as("id"), col(vecCol).as("v"),
       VectorFunctions.norm(col(vecCol)).as("nrm"))

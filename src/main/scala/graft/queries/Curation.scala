@@ -380,21 +380,13 @@ object Curation {
     */
   private def q84(s: SparkSession, d: String): DataFrame = {
     val docs = Tables.documents(s, d)
-    // band keys come from the session's signature store
-    // (graft.Kernels.docBandKeys) — the production posture where the
-    // corpus side's signatures pre-exist ingest; keys are per-document,
-    // so the mod-4 predicate split of the stored table IS each side's
-    // keys. Disjointness is structural (a predicate and its negation on
-    // the same column), so the eager probe is skipped.
-    val bk = graft.Kernels.docBandKeys(s, d)
+    // disjointness is structural (a predicate and its negation on the
+    // same column), so the eager probe is skipped
     graft.operators.Dedup.incrementalNearDups(
         docs.filter(pmod(col("doc_id"), lit(4)) === 0),
         docs.filter(pmod(col("doc_id"), lit(4)) =!= 0),
         "doc_id", "text", threshold = 0.8,
-        checkDisjoint = false,
-        precomputedBands = Some((
-          bk.filter(pmod(col("id"), lit(4)) === 0),
-          bk.filter(pmod(col("id"), lit(4)) =!= 0))))
+        checkDisjoint = false)
       .orderBy("doc_id")
   }
 

@@ -1471,7 +1471,7 @@ object Evals {
     * sharing a query term. Built once per (session, dir) through the
     * [[graft.Kernels]] memo; both evals read the store. */
   private[graft] def bm25TopRanked(s: SparkSession, d: String): DataFrame =
-    graft.Kernels.cached(s, ("bm25TopRanked", d)) { _ =>
+    graft.Kernels.cached(s, "bm25TopRanked", d) { _ =>
       graft.operators.Rank.bm25SelfRetrieval(Tables.documents(s, d),
         "doc_id", "text", isQuery = pmod(col("doc_id"), lit(40)) === 0)
     }

@@ -749,15 +749,9 @@ object Insights {
     // cap 8 (vs q38's 16): containment candidates skew toward short
     // inner docs, so the index's df tail costs ~6x more pair fan-out
     // here — and a subset relationship always shares the inner doc's
-    // RARE shingles, which is what the capped index keeps. The index
-    // over docs ∪ synth is a pure function of the dir (the injection
-    // is deterministic), so it comes from the session's persisted-
-    // index kernel like q38's.
-    val input = docs.unionByName(synth)
-    Dedup.containmentPairs(input, "doc_id", "text",
-        threshold = 0.9, shingleN = 3, maxShingleDf = 8,
-        precomputed = Some(graft.Kernels.cappedShingleIndexOf(
-          s, ("q127", d, 3, 8))(input, "doc_id", "text", 3, 8)))
+    // RARE shingles, which is what the capped index keeps
+    Dedup.containmentPairs(docs.unionByName(synth), "doc_id", "text",
+        threshold = 0.9, shingleN = 3, maxShingleDf = 8)
       .orderBy("inner_doc", "outer_doc")
   }
 
@@ -1201,23 +1195,20 @@ object Insights {
   private def q137(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // eval sample: recall/precision are MEASUREMENTS — a fixed-size
     // deterministic sample is how an eval harness runs at corpus
-    // scale (the full-corpus dedup itself is graded by q36/q38)
-    // both pair frames are session kernels (graft.Kernels): pure
-    // functions of (dir, sample bound, params), memoized and pinned —
-    // the eval harness posture where the sample's pair ground truth is
-    // computed once per corpus snapshot and every measurement reads it
-    val lsh = graft.Kernels.sampleMinhashPairs(s, d, idBelow = 2500L,
-        threshold = 0.8)
+    // scale (the full-corpus dedup itself is graded by q36/q38). Both
+    // operators return kept checkpoints, so each pair list is built
+    // once per run and read three times below
+    val sample = Tables.documents(s, d).filter(col("doc_id") < 2500L)
+    val lsh = Dedup.minhashPairs(sample, "doc_id", "text", threshold = 0.8)
       .select("doc_a", "doc_b")
-    val exact = graft.Kernels.sampleJaccardPairs(s, d, idBelow = 2500L,
+    val exact = Dedup.jaccardPairsExact(sample, "doc_id", "text",
         threshold = 0.8, maxShingleDf = 16)
       .select("doc_a", "doc_b")
     val common = lsh.join(exact, Seq("doc_a", "doc_b"), "left_semi")
     val stats = lsh.agg(count(lit(1)).as("n_lsh"))
       .crossJoin(exact.agg(count(lit(1)).as("n_exact")))
       .crossJoin(common.agg(count(lit(1)).as("n_common")))
-    // 1-row result, kept eagerly; the memoized kernels are the
-    // session's (Kernels.clear releases them)
+    // 1-row result, kept eagerly; the scope releases both pair lists
     sc.keep(
       stats.select(col("n_exact"), col("n_lsh"), col("n_common"),
         round(col("n_common").cast("double") /
@@ -2713,9 +2704,8 @@ object Insights {
       (b, _) => b.coalesce(1).write.mode("overwrite").parquet(outDir)
     }
     val streamed = s.read.parquet(outDir)
-    // the batch reference registers are a session kernel — the stream
-    // under test is what runs per call
-    val batchRegs = graft.Kernels.eventsHllRegisters(s, d, p)
+    val batchRegs = Sketch.hllRegisters(
+      batchEvents.select(col("user_id").cast("string").as("k")), "k", p)
     val nMismatch = streamed.join(batchRegs, Seq("bucket"), "full_outer")
       .filter(streamed("mreg").isNull || batchRegs("mreg").isNull ||
         streamed("mreg") =!= batchRegs("mreg"))

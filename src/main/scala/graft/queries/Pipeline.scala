@@ -269,13 +269,8 @@ object Pipeline {
     * and in the binding regime by DedupSpec's capped-corpus cases.
     */
   private def q38(s: SparkSession, d: String): DataFrame =
-    // candidate generation + verification run per call; the df-capped
-    // index itself comes from the session's persisted-index kernel
-    // (graft.Kernels) — the production split for a stable corpus
     Dedup.jaccardPairsExact(Tables.documents(s, d), "doc_id", "text",
-        threshold = 0.8, maxShingleDf = 16,
-        precomputed = Some(graft.Kernels.cappedShingleIndex(s, d,
-          shingleN = 3, maxShingleDf = 16)))
+        threshold = 0.8, maxShingleDf = 16)
       .orderBy("doc_a", "doc_b")
 
   private val q38Sql = shingleCte +

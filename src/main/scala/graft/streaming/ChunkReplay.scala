@@ -71,10 +71,11 @@ object ChunkReplay {
     * without `chunk`) follow as the LAST files — far-future rows that
     * drag the one-batch-lagging watermark past every real key so
     * stateful / outer-join results are fully emitted by end-of-stream.
-    * Returns the staged files' schema: `df`'s columns without `chunk`,
-    * every field nullable (an analysis-time read, no Spark job). */
+    * Returns the staged replay, whose schema is `df`'s columns without
+    * `chunk`, every field nullable (an analysis-time read, no Spark
+    * job). */
   def writeChunks(df: DataFrame, ingestDir: String,
-                  sentinels: Seq[DataFrame]): StructType = graft.operators.Exec.scope { sc =>
+                  sentinels: Seq[DataFrame]): Staged = graft.operators.Exec.scope { sc =>
     val tmp = sc.tempDir("graft_chunk_split")
     // all rows of a chunk land in ONE task so partitionBy emits a
     // single part file per chunk directory
@@ -99,8 +100,8 @@ object ChunkReplay {
       Files.move(part.toPath, dst, StandardCopyOption.ATOMIC_MOVE)
       dst.toFile.setLastModified(1700000000000L + k * 10000L)
     }
-    StructType(df.schema.filterNot(_.name == "chunk")
-      .map(f => StructField(f.name, f.dataType)))
+    Staged(ingestDir, StructType(df.schema.filterNot(_.name == "chunk")
+      .map(f => StructField(f.name, f.dataType))))
   }
 
   /** The file stream replaying `staged`: one chunk file per

@@ -9,8 +9,10 @@ import org.apache.spark.sql.types.StructType
 
 import graft.operators.Exec
 
-/** A staged replay: the chunk directory and the schema of its files. */
-final case class Staged(dir: String, schema: StructType)
+/** A staged replay: the chunk directory, the schema of its files and,
+  * where a consumer derives a setting from it (q226's watermark delay),
+  * the chunk width it was staged with (0 where none does). */
+final case class Staged(dir: String, schema: StructType, width: Long = 0L)
 
 /** Session-lifetime store of REPLAY CHUNK DIRECTORIES — the disk-file
   * counterpart of [[graft.Kernels]]: the time-ordered, mtime-sequenced
@@ -45,14 +47,20 @@ object ChunkStore {
   /** The staged replay for `key`, building it with `build` on first
     * use. `build` receives a fresh empty directory, must leave the
     * finished chunk files (with their replay mtimes) inside it and
-    * returns their schema ([[ChunkReplay.writeChunks]] does both). */
-  def ensure(s: SparkSession, key: Any)(build: String => StructType): Staged =
+    * returns the replay staged there ([[ChunkReplay.writeChunks]] does
+    * both). A `build` that throws leaves no directory behind. */
+  def ensure(s: SparkSession, key: Any)(build: String => Staged): Staged =
     memo.getOrElseUpdate((s.sparkContext.applicationId, key), {
       val t0 = System.nanoTime()
       val dir = Exec.scratchTempDir("graft_chunk_store").toString
-      val staged = Staged(dir, build(dir))
-      buildNanos.addAndGet(System.nanoTime() - t0)
-      staged
+      try build(dir)
+      catch {
+        case e: Throwable =>
+          try Exec.deleteRecursively(dir)
+          catch { case NonFatal(d) => e.addSuppressed(d) }
+          throw e
+      }
+      finally buildNanos.addAndGet(System.nanoTime() - t0)
     })
 
   /** Hard-link every parquet chunk of `srcDir` into `dstDir`,

@@ -7,7 +7,7 @@ import org.apache.spark.sql.functions.col
 import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
 
 import graft.operators.Exec
-import graft.streaming.{ChunkReplay, Staged}
+import graft.streaming.{ChunkReplay, ChunkStore, Staged}
 
 /** [[ChunkReplay]]'s staging and run contracts on hand-sized frames. */
 class ChunkReplaySpec extends SparkSpec {
@@ -19,7 +19,7 @@ class ChunkReplaySpec extends SparkSpec {
       check: (Staged, Seq[java.io.File]) => T): T = {
     val dir = Exec.scratchTempDir("chunk-replay-spec").toString
     try {
-      val st = Staged(dir, ChunkReplay.writeChunks(df, dir, sentinels))
+      val st = ChunkReplay.writeChunks(df, dir, sentinels)
       check(st, new java.io.File(dir).listFiles().toSeq.sortBy(_.getName))
     } finally Exec.deleteRecursively(dir)
   }
@@ -88,6 +88,21 @@ class ChunkReplaySpec extends SparkSpec {
       assert(spark.conf.get(setKey) === "before")
       assert(spark.conf.getOption(unsetKey).isEmpty)
     } finally spark.conf.unset(setKey)
+  }
+
+  test("ChunkStore.ensure: a build that throws leaves no directory and is not memoized") {
+    val key = "chunk-replay-spec-throws"
+    var built = Seq.empty[String]
+    intercept[IllegalStateException](ChunkStore.ensure(spark, key) { dir =>
+      built :+= dir
+      Files.write(Paths.get(s"$dir/chunk_000.parquet"), Array[Byte](1))
+      throw new IllegalStateException("build failed")
+    })
+    assert(built.size == 1 && !Files.exists(Paths.get(built.head)))
+    // the next call builds again, into a fresh directory
+    val st = ChunkStore.ensure(spark, key) { dir => built :+= dir; Staged(dir, StructType(Nil)) }
+    try assert(built.size == 2 && st.dir == built(1) && Files.isDirectory(Paths.get(st.dir)))
+    finally ChunkStore.clear()
   }
 
   test("Tables.eventsStream replays Tables.events in both table layouts") {

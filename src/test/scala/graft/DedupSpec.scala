@@ -129,43 +129,6 @@ class DedupSpec extends SparkSpec {
     capped.foreach { case (k, v) => assert(uncapped(k) == v) }
   }
 
-  test("precomputed ShingleIndex reproduces the inline jaccardPairsExact") {
-    val d = Tables.documents(spark, "/root/testdata/sf0.001")
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getLong(1), r.getDouble(2)))
-        .toSet
-    val inline = rows(
-      Dedup.jaccardPairsExact(d, "doc_id", "text", 0.8, maxShingleDf = 16))
-    val ix = Dedup.buildShingleIndex(d, "doc_id", "text", 3,
-      maxShingleDf = 16)
-    val viaIndex = rows(Dedup.jaccardPairsExact(d, "doc_id", "text", 0.8,
-      maxShingleDf = 16, precomputed = Some(ix)))
-    assert(viaIndex == inline)
-    graft.operators.Exec.releaseScratch(ix.idx, ix.docStats)
-  }
-
-  test("precomputed band keys reproduce the inline incrementalNearDups") {
-    val d = Tables.documents(spark, "/root/testdata/sf0.001")
-    val batch = d.filter(pmod(col("doc_id"), lit(4)) === 0)
-    val corpus = d.filter(pmod(col("doc_id"), lit(4)) =!= 0)
-    def rows(df: org.apache.spark.sql.DataFrame) =
-      df.collect().map(r => (r.getLong(0), r.getBoolean(1), r.getLong(2)))
-        .toSet
-    val inline = rows(Dedup.incrementalNearDups(
-      batch, corpus, "doc_id", "text", threshold = 0.8))
-    // band keys are per-document: a predicate split of the full-table
-    // store must equal each side's freshly computed keys
-    val bk = Dedup.bandKeys(d, "doc_id", "text").localCheckpoint(true)
-    val viaStore = rows(Dedup.incrementalNearDups(
-      batch, corpus, "doc_id", "text", threshold = 0.8,
-      checkDisjoint = false,
-      precomputedBands = Some((
-        bk.filter(pmod(col("id"), lit(4)) === 0),
-        bk.filter(pmod(col("id"), lit(4)) =!= 0)))))
-    assert(viaStore == inline)
-    graft.operators.Exec.releaseScratch(bk)
-  }
-
   test("native shingle rows match the lambda shingle sets on edge cases") {
     val df = docs(
       (1L, "a b c d"),      // normal

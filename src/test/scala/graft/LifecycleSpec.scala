@@ -122,8 +122,8 @@ class LifecycleSpec extends SparkSpec {
       (4, 12L, 36L), (5, 12L, 36L), (6, 12L, 36L)), rows.toSeq.toString)
   }
 
-  test("q207 k-core: one run starts at most 6 Spark jobs") {
-    val dir = cascadeDir // staged (parquet-writing jobs) before counting
+  /** Spark jobs started while `body` runs. */
+  private def jobsStarted(body: => Unit): Int = {
     val sc = spark.sparkContext
     val jobs = new java.util.concurrent.atomic.AtomicInteger
     val listener = new SparkListener {
@@ -132,10 +132,26 @@ class LifecycleSpec extends SparkSpec {
     GraftSqlBridge.drainListenerBus(sc)
     sc.addSparkListener(listener)
     try {
-      SparkEntry.queries("q207_kcore")(spark, dir).collect()
+      body
       GraftSqlBridge.drainListenerBus(sc)
     } finally sc.removeSparkListener(listener)
-    assert(jobs.get <= 6, s"q207 started ${jobs.get} jobs")
+    jobs.get
+  }
+
+  test("q207 k-core: one run starts at most 6 Spark jobs") {
+    val dir = cascadeDir // staged (parquet-writing jobs) before counting
+    val jobs = jobsStarted(SparkEntry.queries("q207_kcore")(spark, dir).collect())
+    assert(jobs <= 6, s"q207 started $jobs jobs")
+  }
+
+  // the chunk width rides with the staged replay, so a warm run starts
+  // no events min/max scan: only the stream's and the rollup's jobs
+  test("q226 dedup replay: a warm run starts at most 11 Spark jobs") {
+    val q226 = SparkEntry.queries("q226_streaming_dedup")
+    val dir = "/root/testdata/sf0.001"
+    val cold = q226(spark, dir).collect() // stages the chunk store
+    val jobs = jobsStarted(assert(q226(spark, dir).collect() === cold))
+    assert(jobs <= 11, s"warm q226 started $jobs jobs")
   }
 
   test("q207 k-core: a NULL key counts toward round 1's degree only, as in SQL") {

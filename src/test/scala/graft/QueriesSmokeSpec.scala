@@ -8,8 +8,13 @@ package graft
 class QueriesSmokeSpec extends SparkSpec {
 
   test("all SparkEntry queries execute at sf0.001") {
-    val failures = SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
+    // store name -> the registry queries whose run built it
+    val consumers = scala.collection.mutable.Map.empty[String, Set[String]]
+    val failures = try SparkEntry.queries.toSeq.sortBy(_._1).flatMap {
       case (name, fn) =>
+        // an empty memo before each query: what is live after the run
+        // is exactly what this query built
+        Kernels.clear()
         // noop write so every projected column actually evaluates
         // (count() would let Catalyst prune computed columns away)
         try {
@@ -17,13 +22,21 @@ class QueriesSmokeSpec extends SparkSpec {
             fn(spark, "/root/testdata/sf0.001")
               .write.format("noop").mode("overwrite").save()
           }
+          Kernels.storeNames.foreach(st =>
+            consumers(st) = consumers.getOrElse(st, Set.empty) + name)
           // leak invariant: once the run's scope has freed the kept
           // result, only Kernels memo stores may stay persisted
           if (run.leaked.isEmpty) None
           else Some(s"$name: left persisted RDDs ${run.leaked.map(_.id).mkString(", ")}")
         } catch { case e: Throwable => Some(s"$name: ${e.getMessage}") }
-    }
+    } finally Kernels.clear()
     assert(failures.isEmpty, failures.mkString("\n"))
+    // the store guard rail: a memo that serves one query only hides
+    // that query's own build from its timed runs
+    assert(consumers.nonEmpty, "no query built a Kernels store")
+    val single = consumers.filter(_._2.size < 2)
+    assert(single.isEmpty, "Kernels stores with fewer than 2 registry " +
+      s"consumers: ${single.toSeq.sortBy(_._1).mkString("; ")}")
   }
 
   test("every oracle key has a matching query") {

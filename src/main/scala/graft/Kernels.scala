@@ -90,7 +90,8 @@ object Kernels {
 
   /** [[Dedup.minhashPairs]] over the documents table of `dir` —
     * `(doc_a, doc_b, jaccard)`, memoized per (dir, params). Consumed by
-    * q36, q200, q213, q264, q315 and q376 (and by [[minhashComponents]]). */
+    * q36, q137, q200, q213, q264, q315 and q376 (and by
+    * [[minhashComponents]]). */
   def minhashPairs(s: SparkSession, dir: String, threshold: Double,
                    shingleN: Int = 3, k: Int = 12, bands: Int = 6,
                    rowsPerBand: Int = 2): DataFrame =

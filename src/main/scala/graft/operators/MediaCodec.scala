@@ -1,7 +1,11 @@
 package graft.operators
 
+import java.awt.image.BufferedImage
+import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
 import java.nio.{ByteBuffer, ByteOrder}
 import java.util.zip.{CRC32, Deflater, Inflater}
+import javax.imageio.{IIOException, IIOImage, ImageIO, ImageWriteParam}
+import javax.imageio.stream.{MemoryCacheImageInputStream, MemoryCacheImageOutputStream}
 
 /** Pure-JVM media codecs for the multimodal pipeline: binary PPM (P6)
   * and PNG (RGB8) images and PCM WAV (RIFF) audio — real encode/decode
@@ -15,7 +19,11 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   * are parsed, per-chunk CRCs are verified, scanline filters are
   * reversed, dimensions come from the file (not from heuristics), and
   * corrupt payloads are rejected with a reason instead of decoding to
-  * garbage. Baseline JPEG (entropy/DCT) lives in [[JpegCodec]]; video
+  * garbage. JPEG goes through the JDK's own ImageIO JPEG reader and
+  * writer ([[encodeJpeg]]/[[decodeJpeg]]): DCT and entropy coding are
+  * the JDK's, the glue keeps streams in memory and turns every reader
+  * warning into a `Left`. PNG stays hand-written because the JDK PNG
+  * reader skips IDAT CRCs and accepts a short file. Video
   * travels as YUV4MPEG2 (Y4M — the uncompressed planar container
   * mjpegtools defined and every ffmpeg build reads/writes), giving the
   * frame-sampling path a genuine multi-frame decode. Patent-era
@@ -26,8 +34,8 @@ import java.util.zip.{CRC32, Deflater, Inflater}
   */
 object MediaCodec {
 
-  final case class PpmImage(width: Int, height: Int, pixels: Array[Byte])
-  final case class PngImage(width: Int, height: Int, pixels: Array[Byte])
+  /** A decoded RGB8 raster, row-major, 3 bytes per pixel. */
+  final case class Image(width: Int, height: Int, pixels: Array[Byte])
   final case class WavAudio(sampleRate: Int, samples: Array[Short])
 
   /** Binary PPM (P6): `P6\n<w> <h>\n<maxval>\n<raw RGB bytes>`. */
@@ -45,7 +53,7 @@ object MediaCodec {
     * header ints, maxval 255, exact payload length — anything else is
     * a `Left(reason)`, never a garbage decode.
     */
-  def decodePpm(bytes: Array[Byte]): Either[String, PpmImage] = {
+  def decodePpm(bytes: Array[Byte]): Either[String, Image] = {
     if (bytes.length < 2 || bytes(0) != 'P' || bytes(1) != '6')
       return Left("not a P6 ppm (bad magic)")
     var i = 2
@@ -88,7 +96,7 @@ object MediaCodec {
       _ <- if ((bytes.length - i).toLong != w.toLong * h.toLong * 3L)
              Left(s"raster length ${bytes.length - i} != ${w.toLong * h * 3}")
            else Right(())
-    } yield PpmImage(w, h, java.util.Arrays.copyOfRange(bytes, i, bytes.length))
+    } yield Image(w, h, java.util.Arrays.copyOfRange(bytes, i, bytes.length))
   }
 
   // ------------------------------------------------------------- PNG
@@ -154,7 +162,7 @@ object MediaCodec {
     * inflated length, unsupported IHDR profile — is a `Left(reason)`,
     * never a garbage decode.
     */
-  def decodePng(bytes: Array[Byte]): Either[String, PngImage] = {
+  def decodePng(bytes: Array[Byte]): Either[String, Image] = {
     if (bytes.length < PngSignature.length + 12 ||
         !PngSignature.indices.forall(i => bytes(i) == PngSignature(i)))
       return Left("not a png (bad signature)")
@@ -276,7 +284,60 @@ object MediaCodec {
       }
       y += 1
     }
-    Right(PngImage(width, height, pixels))
+    Right(Image(width, height, pixels))
+  }
+
+  // ------------------------------------------------------------ JPEG
+
+  /** JFIF JPEG encode of an RGB8 raster through the JDK's ImageIO JPEG
+    * writer at `quality` (0-100, the IJG scale). The stream is cached in
+    * memory, never in a temp file.
+    */
+  def encodeJpeg(width: Int, height: Int, rgb: Array[Byte],
+                 quality: Int = 90): Array[Byte] = {
+    require(width > 0 && height > 0, s"bad dimensions ${width}x$height")
+    require(rgb.length == width * height * 3,
+      s"RGB8 needs w*h*3 bytes, got ${rgb.length} for ${width}x$height")
+    val img = new BufferedImage(width, height, BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setPixels(0, 0, width, height, rgb.map(_ & 0xff))
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val bytes = new ByteArrayOutputStream(rgb.length / 4 + 1024)
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      val param = writer.getDefaultWriteParam
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(quality / 100f)
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, null), param)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
+  }
+
+  /** JPEG decode through the JDK's ImageIO JPEG reader (baseline or
+    * progressive, any sampling, 1 or 3 components) into RGB8; a gray
+    * frame's Y is copied into all three channels. A reader warning
+    * (missing EOI, truncated scan) or an `IIOException` (not a JPEG,
+    * no frame) is a `Left(reason)`, never a garbage decode.
+    */
+  def decodeJpeg(bytes: Array[Byte]): Either[String, Image] = {
+    val reader = ImageIO.getImageReadersByFormatName("jpeg").next()
+    val in = new MemoryCacheImageInputStream(new ByteArrayInputStream(bytes))
+    var warning = Option.empty[String]
+    reader.addIIOReadWarningListener((_, w) => warning = warning.orElse(Some(w)))
+    try {
+      reader.setInput(in, true, true)
+      val raster = reader.read(0).getRaster
+      val (w, h, bands) = (raster.getWidth, raster.getHeight, raster.getNumBands)
+      val samples = raster.getPixels(0, 0, w, h, null: Array[Int])
+      val rgb = bands match {
+        case 3 => samples.map(_.toByte)
+        case 1 => samples.flatMap(v => Array.fill(3)(v.toByte))
+        case n => return Left(s"unsupported $n-component jpeg")
+      }
+      warning.map(m => s"corrupt jpeg: $m").toLeft(Image(w, h, rgb))
+    } catch {
+      case e: IIOException => Left(s"not a decodable jpeg: ${e.getMessage}")
+    } finally { reader.dispose(); in.close() }
   }
 
   /** Minimal canonical PCM WAV: RIFF/WAVE, one `fmt ` chunk (PCM,

@@ -30,15 +30,16 @@ final case class VideoFrame(media_id: Long, mime: String, width: Int,
 
 /** Multimodal column plumbing (SURVEY.md §2.11): image/audio/video as
   * opaque `binary` columns with typed metadata. PPM (P6), PNG (RGB8),
-  * baseline JPEG and PCM/ADPCM WAV travel through REAL codecs
-  * ([[MediaCodec]], [[JpegCodec]] — header parse, CRC checks, zlib
-  * inflate, filter reversal, DCT + Huffman entropy coding); only video
+  * JPEG and PCM/ADPCM WAV travel through REAL codecs ([[MediaCodec]] —
+  * header parse, CRC checks, zlib inflate, filter reversal, and the
+  * JDK's ImageIO JPEG reader and writer); only video
   * containers remain STUBBED ([[decodeFeatures]]) with a deterministic
   * fake so that pipeline shape stays testable without codec libraries.
   *
   * Scale posture: decode runs per partition over an iterator
-  * (`mapPartitions`) — codec init amortizes across the partition's
-  * rows, and no row or batch ever reaches the driver.
+  * (`mapPartitions`), and no row or batch ever reaches the driver. The
+  * codecs keep no state across rows (JPEG takes and disposes one
+  * ImageIO reader or writer per blob).
   */
 object Multimodal {
 
@@ -55,7 +56,7 @@ object Multimodal {
         .as("meta"))
 
   /** STUB decoder: a real implementation would decode the image/audio
-    * codec here (e.g. via a JNI/javax.imageio call per blob). The fake
+    * codec here (as [[decodeImageFeatures]] does per blob). The fake
     * derives deterministic pseudo-features from the raw bytes so the
     * pipeline shape — partition-iterator in, typed features out — is
     * fully exercised and testable.
@@ -78,78 +79,53 @@ object Multimodal {
     }
   }
 
-  /** REAL-codec media table: each document's UTF-8 bytes become the
-    * RGB raster of an 8-pixel-wide binary PPM (P6) image, zero-padded
-    * to fill the last row — the payload is a genuine encoded file
-    * ([[MediaCodec.encodePpm]] writes the actual header+raster bytes),
-    * so the decode side genuinely parses. Encoding runs per partition;
-    * nothing reaches the driver.
+  /** Each document's UTF-8 bytes as the RGB raster of an 8-pixel-wide
+    * image, zero-padded to fill the last row, written by `encode` —
+    * the payload is a genuine encoded file, so the decode side
+    * genuinely parses. The raster is identical for every codec, so
+    * decoded features are codec-invariant up to a lossy codec's error.
+    * Encoding runs per partition; nothing reaches the driver.
     */
-  def toPpmMedia(docs: DataFrame): Dataset[MediaFile] = {
+  private def rasterMedia(docs: DataFrame, mime: String)(
+      encode: (Int, Int, Array[Byte]) => Array[Byte]): Dataset[MediaFile] = {
     import docs.sparkSession.implicits._
     docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val data = text.getBytes("UTF-8")
-          val w = 8
-          val h = data.length / (w * 3) + 1
-          val pixels = java.util.Arrays.copyOf(data, w * h * 3)
-          MediaFile(id, MediaCodec.encodePpm(w, h, pixels),
-            "image/x-portable-pixmap")
-        }
-      }
+      .mapPartitions(_.map { case (id, text) =>
+        val data = text.getBytes("UTF-8")
+        val h = data.length / 24 + 1
+        MediaFile(id, encode(8, h, java.util.Arrays.copyOf(data, 24 * h)), mime)
+      })
   }
+
+  /** REAL-codec media table as binary PPM (P6) images
+    * ([[MediaCodec.encodePpm]] writes the actual header+raster bytes).
+    */
+  def toPpmMedia(docs: DataFrame): Dataset[MediaFile] =
+    rasterMedia(docs, "image/x-portable-pixmap")(MediaCodec.encodePpm)
 
   /** REAL-codec media table, PNG edition of [[toPpmMedia]]: the same
-    * zero-padded 8-wide RGB raster, deflate-compressed into a genuine
-    * PNG file ([[MediaCodec.encodePng]] — IHDR/IDAT/IEND with real
-    * CRC-32s; the payload opens in any viewer). Raster arithmetic is
-    * deliberately identical to the PPM path so decoded features are
-    * codec-invariant — what changes is the container and the
-    * compression, which the decode side must genuinely undo.
+    * raster, deflate-compressed into a genuine PNG file
+    * ([[MediaCodec.encodePng]] — IHDR/IDAT/IEND with real CRC-32s; the
+    * payload opens in any viewer). What changes is the container and
+    * the compression, which the decode side must genuinely undo.
     */
-  def toPngMedia(docs: DataFrame): Dataset[MediaFile] = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val data = text.getBytes("UTF-8")
-          val w = 8
-          val h = data.length / (w * 3) + 1
-          val pixels = java.util.Arrays.copyOf(data, w * h * 3)
-          MediaFile(id, MediaCodec.encodePng(w, h, pixels), "image/png")
-        }
-      }
-  }
+  def toPngMedia(docs: DataFrame): Dataset[MediaFile] =
+    rasterMedia(docs, "image/png")(MediaCodec.encodePng)
 
   /** REAL-codec media table, JPEG edition of [[toPpmMedia]]: the same
-    * zero-padded 8-wide RGB raster, DCT-transformed, quantized and
-    * Huffman-coded into a genuine baseline JFIF file
-    * ([[JpegCodec.encodeJpeg]]; the payload opens in any viewer). JPEG
-    * is LOSSY — dimensions survive exactly, pixel statistics to within
-    * quantization error, which is exactly what q146's bounded-error
-    * oracle certifies.
+    * raster, written as a JFIF file by the JDK's ImageIO JPEG writer at
+    * `quality` ([[MediaCodec.encodeJpeg]]). JPEG is LOSSY — dimensions
+    * survive exactly, pixel statistics to within quantization error,
+    * which is exactly what q146's bounded-error oracle certifies.
     */
-  def toJpegMedia(docs: DataFrame, quality: Int = 90): Dataset[MediaFile] = {
-    import docs.sparkSession.implicits._
-    docs.select(col("doc_id"), col("text")).as[(Long, String)]
-      .mapPartitions { it =>
-        it.map { case (id, text) =>
-          val data = text.getBytes("UTF-8")
-          val w = 8
-          val h = data.length / (w * 3) + 1
-          val pixels = java.util.Arrays.copyOf(data, w * h * 3)
-          MediaFile(id, JpegCodec.encodeJpeg(w, h, pixels, quality),
-            "image/jpeg")
-        }
-      }
-  }
+  def toJpegMedia(docs: DataFrame, quality: Int = 90): Dataset[MediaFile] =
+    rasterMedia(docs, "image/jpeg")(MediaCodec.encodeJpeg(_, _, _, quality))
 
   /** REAL image decode, dispatching on the FILE's magic bytes (not the
     * claimed mime): PNG signature → [[MediaCodec.decodePng]] (CRC
-    * walk, inflate, filter reversal), JPEG SOI → [[JpegCodec
-    * .decodeJpeg]] (marker walk, Huffman decode, dequantize, IDCT),
-    * `P6` → [[MediaCodec.decodePpm]]
+    * walk, inflate, filter reversal), JPEG SOI → [[MediaCodec
+    * .decodeJpeg]] (the JDK's ImageIO JPEG reader; any reader warning
+    * rejects the file), `P6` → [[MediaCodec.decodePpm]]
     * (header parse, exact raster length). Dimensions and brightness
     * come from the DECODED raster, not byte heuristics. Corrupt or
     * unrecognized payloads are dropped (the decoder's reason is
@@ -162,28 +138,28 @@ object Multimodal {
     import files.sparkSession.implicits._
     files.mapPartitions { it =>
       it.flatMap { m =>
-        val decoded: Either[String, (Int, Int, Array[Byte])] =
+        val decoded =
           if (m.payload.length >= 8 && (m.payload(0) & 0xff) == 0x89 &&
               m.payload(1) == 'P')
             MediaCodec.decodePng(m.payload)
-              .map(i => (i.width, i.height, i.pixels))
           else if (m.payload.length >= 2 && (m.payload(0) & 0xff) == 0xff &&
               (m.payload(1) & 0xff) == 0xd8)
-            JpegCodec.decodeJpeg(m.payload)
-              .map(i => (i.width, i.height, i.pixels))
+            MediaCodec.decodeJpeg(m.payload)
           else
             MediaCodec.decodePpm(m.payload)
-              .map(i => (i.width, i.height, i.pixels))
-        decoded match {
-          case Right((w, h, pixels)) =>
-            var sum = 0L
-            pixels.foreach(b => sum += (b & 0xff))
-            Some(MediaFeatures(m.media_id, m.mime, m.payload.length,
-              w, h, sum.toDouble / (pixels.length * 255.0)))
-          case Left(_) => None
-        }
+        decoded.toOption.map(img => imageFeatures(m, m.payload.length, img))
       }
     }
+  }
+
+  /** Features of a decoded raster: its dimensions and mean channel
+    * value in [0, 1]; `nBytes` is the size of the file it came from. */
+  private def imageFeatures(m: MediaFile, nBytes: Int,
+                            img: MediaCodec.Image): MediaFeatures = {
+    var sum = 0L
+    img.pixels.foreach(b => sum += (b & 0xff))
+    MediaFeatures(m.media_id, m.mime, nBytes, img.width, img.height,
+      sum.toDouble / (img.pixels.length * 255.0))
   }
 
   /** RESIZE inside the partition iterator — the preprocessing step of
@@ -221,13 +197,8 @@ object Multimodal {
             y += 1
           }
           val reenc = MediaCodec.encodePpm(nw, nh, out)
-          MediaCodec.decodePpm(reenc).toOption.map { r =>
-            var sum = 0L
-            r.pixels.foreach(b => sum += (b & 0xff))
-            MediaFeatures(m.media_id, m.mime, reenc.length,
-              r.width, r.height,
-              sum.toDouble / (r.pixels.length * 255.0))
-          }
+          MediaCodec.decodePpm(reenc).toOption
+            .map(r => imageFeatures(m, reenc.length, r))
         }
       }
     }

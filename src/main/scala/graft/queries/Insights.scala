@@ -1195,12 +1195,16 @@ object Insights {
   private def q137(s: SparkSession, d: String): DataFrame = Exec.scope { sc =>
     // eval sample: recall/precision are MEASUREMENTS — a fixed-size
     // deterministic sample is how an eval harness runs at corpus
-    // scale (the full-corpus dedup itself is graded by q36/q38). Both
-    // operators return kept checkpoints, so each pair list is built
-    // once per run and read three times below
+    // scale (the full-corpus dedup itself is graded by q36/q38). The
+    // LSH side reads the shared store: band keys are per-document and
+    // verification is exact Jaccard, so the pairs over the sample are
+    // the store's pairs with both ends in it, i.e. doc_b < 2500 since
+    // doc_a < doc_b (Q200KernelSpec pins the law). The exact operator
+    // returns a kept checkpoint, built once per run and read three
+    // times below
     val sample = Tables.documents(s, d).filter(col("doc_id") < 2500L)
-    val lsh = Dedup.minhashPairs(sample, "doc_id", "text", threshold = 0.8)
-      .select("doc_a", "doc_b")
+    val lsh = graft.Kernels.minhashPairs(s, d, threshold = 0.8)
+      .filter(col("doc_b") < 2500L).select("doc_a", "doc_b")
     val exact = Dedup.jaccardPairsExact(sample, "doc_id", "text",
         threshold = 0.8, maxShingleDf = 16)
       .select("doc_a", "doc_b")

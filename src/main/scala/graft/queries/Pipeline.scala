@@ -849,11 +849,11 @@ object Pipeline {
        ORDER BY media_id"""
 
   // --------------------------------------------------------------- q146
-  /** LOSSY-codec multimodal path: documents encoded as genuine baseline
-    * JPEGs ([[graft.operators.JpegCodec]] — DCT, quality-90 Annex-K
-    * quantization, Huffman entropy coding, JFIF markers), then DECODED
-    * for real (marker walk, Huffman decode, dequantize, IDCT, YCbCr→
-    * RGB). Unlike PNG (q142) the roundtrip is lossy, so decoded
+  /** LOSSY-codec multimodal path: documents encoded as JFIF JPEGs at
+    * quality 90 by the JDK's ImageIO JPEG writer, then DECODED by its
+    * reader ([[graft.operators.MediaCodec.encodeJpeg]]/[[graft.operators
+    * .MediaCodec.decodeJpeg]]; a reader warning rejects the file).
+    * Unlike PNG (q142) the roundtrip is lossy, so decoded
     * brightness carries quantization error; the query certifies the
     * q45/q133 error CONTRACT instead of the raw value — dimensions
     * exact, plus a `bright_ok` flag that the decoded brightness lies

@@ -81,17 +81,18 @@ class HarnessSpec extends SparkSpec {
     } finally Exec.deleteRecursively(out)
   }
 
+  private def occurrences(root: String, needle: String): Map[String, Int] = {
+    val re = java.util.regex.Pattern.quote(needle).r
+    val walk = Files.walk(Paths.get(root))
+    try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).map { p =>
+      p.toString -> re.findAllMatchIn(Files.readString(p)).size
+    }.filter(_._2 > 0).toMap
+    finally walk.close()
+  }
+
   // Source scan, like the SURVEY coverage test in QueriesSmokeSpec: the
   // single session factory and the single leak check stay single.
   test("one session builder, one leak check, no drain, no swallowed Throwable in main") {
-    def occurrences(root: String, needle: String): Map[String, Int] = {
-      val re = java.util.regex.Pattern.quote(needle).r
-      val walk = Files.walk(Paths.get(root))
-      try walk.iterator.asScala.filter(_.toString.endsWith(".scala")).map { p =>
-        p.toString -> re.findAllMatchIn(Files.readString(p)).size
-      }.filter(_._2 > 0).toMap
-      finally walk.close()
-    }
     // split so this file does not count itself
     assert(occurrences("src", "SparkSession" + ".builder") ===
       Map("src/main/scala/graft/Harness.scala" -> 1))
@@ -116,5 +117,16 @@ class HarnessSpec extends SparkSpec {
     }
     assert(occurrences("src/main", "TimestampNTZType").keySet ===
       Set("src/main/scala/graft/Tables.scala"))
+  }
+
+  // ImageIO's read/write shortcuts cache every stream in a temp file
+  // under java.io.tmpdir; MediaCodec's JPEG glue is the one ImageIO user
+  // and goes through in-memory streams
+  test("javax.imageio is used only by MediaCodec, never via ImageIO.read/write") {
+    assert(occurrences("src/main", "javax.imageio").keySet ===
+      Set("src/main/scala/graft/operators/MediaCodec.scala"))
+    Seq("ImageIO.read(", "ImageIO.write(").foreach { call =>
+      assert(occurrences("src/main", call).isEmpty, call)
+    }
   }
 }

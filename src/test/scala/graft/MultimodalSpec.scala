@@ -1,8 +1,14 @@
 package graft
 
+import java.awt.image.BufferedImage
+import java.io.ByteArrayOutputStream
+import javax.imageio.{IIOImage, ImageIO, ImageTypeSpecifier, ImageWriteParam}
+import javax.imageio.metadata.IIOMetadataNode
+import javax.imageio.stream.MemoryCacheImageOutputStream
+
 import org.apache.spark.sql.functions._
 
-import graft.operators.{JpegCodec, MediaCodec, MediaFile, Multimodal}
+import graft.operators.{MediaCodec, MediaFile, Multimodal}
 
 class MultimodalSpec extends SparkSpec {
   import spark.implicits._
@@ -166,10 +172,50 @@ class MultimodalSpec extends SparkSpec {
     assert(math.abs(out(1L).brightness - sum / (24.0 * 255.0)) < 1e-12)
   }
 
-  test("JPEG codec round-trips a smooth raster within quantization error") {
-    // smooth gradient: energy concentrates in low-frequency DCT
-    // coefficients, so a fine quantizer reconstructs almost exactly
-    val w = 24; val h = 16
+  // Test-side JPEG writer for the inputs MediaCodec.encodeJpeg does not
+  // emit: gray frames, restart intervals and progressive scans. Same
+  // writer and quality setting as encodeJpeg, so at equal quality both
+  // quantize an RGB raster identically.
+  private def writeJpeg(img: BufferedImage, quality: Float,
+                        restartInterval: Int = 0,
+                        progressive: Boolean = false): Array[Byte] = {
+    val writer = ImageIO.getImageWritersByFormatName("jpeg").next()
+    val bytes = new ByteArrayOutputStream()
+    val out = new MemoryCacheImageOutputStream(bytes)
+    try {
+      val param = writer.getDefaultWriteParam
+      param.setCompressionMode(ImageWriteParam.MODE_EXPLICIT)
+      param.setCompressionQuality(quality)
+      if (progressive) param.setProgressiveMode(ImageWriteParam.MODE_DEFAULT)
+      val meta = writer.getDefaultImageMetadata(new ImageTypeSpecifier(img), param)
+      if (restartInterval > 0) {
+        val fmt = "javax_imageio_jpeg_image_1.0"
+        val root = meta.getAsTree(fmt).asInstanceOf[IIOMetadataNode]
+        val dri = new IIOMetadataNode("dri")
+        dri.setAttribute("interval", restartInterval.toString)
+        val sof = root.getElementsByTagName("sof").item(0)
+        sof.getParentNode.insertBefore(dri, sof)
+        meta.setFromTree(fmt, root)
+      }
+      writer.setOutput(out)
+      writer.write(null, new IIOImage(img, null, meta), param)
+    } finally { writer.dispose(); out.close() }
+    bytes.toByteArray
+  }
+
+  private def rgbImage(w: Int, h: Int, rgb: Array[Byte]): BufferedImage = {
+    val img = new BufferedImage(w, h, BufferedImage.TYPE_3BYTE_BGR)
+    img.getRaster.setPixels(0, 0, w, h, rgb.map(_ & 0xff))
+    img
+  }
+
+  private def hasMarker(jpeg: Array[Byte], lo: Int, hi: Int): Boolean =
+    jpeg.sliding(2).exists(s =>
+      (s(0) & 0xff) == 0xff && (s(1) & 0xff) >= lo && (s(1) & 0xff) <= hi)
+
+  // smooth gradient: energy concentrates in low-frequency DCT
+  // coefficients, so a fine quantizer reconstructs almost exactly
+  private def smoothRaster(w: Int, h: Int): Array[Byte] = {
     val rgb = new Array[Byte](w * h * 3)
     for (y <- 0 until h; x <- 0 until w) {
       val o = (y * w + x) * 3
@@ -177,11 +223,12 @@ class MultimodalSpec extends SparkSpec {
       rgb(o + 1) = (60 + 5 * y).toByte
       rgb(o + 2) = (90 + 2 * x + 3 * y).toByte
     }
-    val enc = JpegCodec.encodeJpeg(w, h, rgb, quality = 95)
-    // a genuine JFIF container: SOI + APP0 "JFIF"
-    assert((enc(0) & 0xff) == 0xff && (enc(1) & 0xff) == 0xd8)
-    assert(new String(enc.slice(6, 10), "US-ASCII") == "JFIF")
-    val dec = JpegCodec.decodeJpeg(enc)
+    rgb
+  }
+
+  private def assertSmoothDecode(enc: Array[Byte], w: Int, h: Int,
+                                 rgb: Array[Byte]): Unit = {
+    val dec = MediaCodec.decodeJpeg(enc)
     assert(dec.isRight, dec)
     val img = dec.toOption.get
     assert(img.width == w && img.height == h)
@@ -192,16 +239,27 @@ class MultimodalSpec extends SparkSpec {
       s"mean pixel error ${errs.sum.toDouble / errs.length}")
   }
 
+  test("JPEG codec round-trips a smooth raster within quantization error") {
+    val w = 24; val h = 16
+    val rgb = smoothRaster(w, h)
+    val enc = MediaCodec.encodeJpeg(w, h, rgb, quality = 95)
+    // a genuine JFIF container: SOI + APP0 "JFIF"
+    assert((enc(0) & 0xff) == 0xff && (enc(1) & 0xff) == 0xd8)
+    assert(new String(enc.slice(6, 10), "US-ASCII") == "JFIF")
+    assertSmoothDecode(enc, w, h, rgb)
+  }
+
   test("JPEG grayscale frame round-trips through the 1-component path") {
     val w = 16; val h = 8
-    val rgb = new Array[Byte](w * h * 3)
-    for (y <- 0 until h; x <- 0 until w) {
-      val v = (16 + 8 * x + 4 * y).toByte
-      val o = (y * w + x) * 3
-      rgb(o) = v; rgb(o + 1) = v; rgb(o + 2) = v
-    }
-    val enc = JpegCodec.encodeJpeg(w, h, rgb, quality = 95, gray = true)
-    val dec = JpegCodec.decodeJpeg(enc)
+    val levels = Array.tabulate(w * h)(i => 16 + 8 * (i % w) + 4 * (i / w))
+    val gray = new BufferedImage(w, h, BufferedImage.TYPE_BYTE_GRAY)
+    gray.getRaster.setPixels(0, 0, w, h, levels)
+    val enc = writeJpeg(gray, quality = 0.95f)
+    // one component in the frame header: SOF0 length 11 = 8 + 3 * 1
+    val sof = enc.sliding(2).indexWhere(s =>
+      (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc0)
+    assert(sof > 0 && (enc(sof + 9) & 0xff) == 1)
+    val dec = MediaCodec.decodeJpeg(enc)
     assert(dec.isRight, dec)
     val img = dec.toOption.get
     assert(img.width == w && img.height == h)
@@ -210,21 +268,20 @@ class MultimodalSpec extends SparkSpec {
       assert(img.pixels(3 * i) == img.pixels(3 * i + 1) &&
         img.pixels(3 * i) == img.pixels(3 * i + 2))
     val errs = (0 until w * h).map(i =>
-      math.abs((img.pixels(3 * i) & 0xff) - (rgb(3 * i) & 0xff)))
+      math.abs((img.pixels(3 * i) & 0xff) - levels(i)))
     assert(errs.max <= 8, s"max gray error ${errs.max}")
   }
 
   test("JPEG restart markers resync and reproduce the no-restart decode") {
-    val w = 8; val h = 48 // 6 MCUs in one column
+    val w = 8; val h = 48 // 3 MCUs (16x16 at 4:2:0) in one column
     val rgb = Array.tabulate(w * h * 3)(i => ((i * 13 + 7) % 256).toByte)
-    val plain = JpegCodec.decodeJpeg(JpegCodec.encodeJpeg(w, h, rgb))
-    val withRst = JpegCodec.encodeJpeg(w, h, rgb, restartInterval = 2)
+    val plain = MediaCodec.decodeJpeg(MediaCodec.encodeJpeg(w, h, rgb))
+    val withRst = writeJpeg(rgbImage(w, h, rgb), quality = 0.9f,
+      restartInterval = 2)
     // the DRI segment and at least one RSTn marker are really present
-    assert(withRst.sliding(2).exists(s =>
-      (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xdd))
-    assert(withRst.sliding(2).exists(s =>
-      (s(0) & 0xff) == 0xff && (s(1) & 0xff) >= 0xd0 && (s(1) & 0xff) <= 0xd7))
-    val dec = JpegCodec.decodeJpeg(withRst)
+    assert(hasMarker(withRst, 0xdd, 0xdd))
+    assert(hasMarker(withRst, 0xd0, 0xd7))
+    val dec = MediaCodec.decodeJpeg(withRst)
     assert(dec.isRight, dec)
     // restart points change the entropy framing, not the pixels
     assert(dec.toOption.get.pixels.toSeq ==
@@ -233,25 +290,21 @@ class MultimodalSpec extends SparkSpec {
 
   test("JPEG decode rejects corrupt payloads with a reason, never garbage") {
     val rgb = Array.tabulate(8 * 8 * 3)(i => (i * 3 % 256).toByte)
-    val good = JpegCodec.encodeJpeg(8, 8, rgb)
-    assert(JpegCodec.decodeJpeg("not a jpeg".getBytes).isLeft)
-    assert(JpegCodec.decodeJpeg(good.dropRight(2)).isLeft)  // missing EOI
-    assert(JpegCodec.decodeJpeg(good.dropRight(40)).isLeft) // truncated scan
-    assert(JpegCodec.decodeJpeg(good.take(2)).isLeft)       // SOI only
-    def patched(f: Array[Byte] => Unit): Array[Byte] = {
-      val b = good.clone(); f(b); b
-    }
-    // find the SOF0 marker and patch inside it
-    val sof = good.sliding(2).indexWhere(s =>
-      (s(0) & 0xff) == 0xff && (s(1) & 0xff) == 0xc0)
-    assert(sof > 0)
-    // 4:2:0 sampling factors → unsupported, reasoned reject
-    // (marker(2) + len(2) + precision(1) + h(2) + w(2) + nf(1) + id(1))
-    assert(JpegCodec.decodeJpeg(
-      patched(_(sof + 11) = 0x22.toByte)).isLeft)
-    // progressive frame marker → unsupported, reasoned reject
-    assert(JpegCodec.decodeJpeg(
-      patched(_(sof + 1) = 0xc2.toByte)).isLeft)
+    val good = MediaCodec.encodeJpeg(8, 8, rgb)
+    assert(MediaCodec.decodeJpeg(good).isRight)
+    assert(MediaCodec.decodeJpeg("not a jpeg".getBytes).isLeft)
+    assert(MediaCodec.decodeJpeg(good.dropRight(2)).isLeft)  // missing EOI
+    assert(MediaCodec.decodeJpeg(good.dropRight(40)).isLeft) // truncated scan
+    assert(MediaCodec.decodeJpeg(good.take(2)).isLeft)       // SOI only
+  }
+
+  test("JPEG decode reads a progressive frame") {
+    val w = 24; val h = 16
+    val rgb = smoothRaster(w, h)
+    val enc = writeJpeg(rgbImage(w, h, rgb), quality = 0.95f,
+      progressive = true)
+    assert(hasMarker(enc, 0xc2, 0xc2) && !hasMarker(enc, 0xc0, 0xc0))
+    assertSmoothDecode(enc, w, h, rgb)
   }
 
   test("real JPEG pipeline: lossy compress, decode, bounded brightness error") {

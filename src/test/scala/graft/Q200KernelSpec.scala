@@ -88,6 +88,26 @@ class Q200KernelSpec extends SparkSpec {
     Kernels.clear()
   }
 
+  // q137 reads the store as `doc_b < 2500` (every pair has doc_a < doc_b).
+  // 2500 is q137's cutoff and keeps all 500 documents here; 250 splits
+  // this corpus, so the filter form is checked on a proper subset too.
+  test("minhash pair store filtered to doc_b < n == pairs over doc_id < n (q137)") {
+    Kernels.clear()
+    val store = Kernels.minhashPairs(spark, sf, threshold = 0.8)
+    Seq(2500L, 250L).foreach { n =>
+      val sample = Tables.documents(spark, sf).filter(col("doc_id") < n)
+      val direct = Dedup.minhashPairs(sample, "doc_id", "text", threshold = 0.8)
+        .select("doc_a", "doc_b", "jaccard")
+        .orderBy("doc_a", "doc_b").collect().toSeq
+      assert(direct.nonEmpty, s"no pairs under $n")
+      info(s"doc_id < $n: ${direct.size} pairs")
+      assert(store.filter(col("doc_b") < n)
+        .select("doc_a", "doc_b", "jaccard")
+        .orderBy("doc_a", "doc_b").collect().toSeq === direct)
+    }
+    Kernels.clear()
+  }
+
   test("q200 via kernels == inline replay of the pre-kernel pipeline") {
     Kernels.clear()
     val got = SparkEntry.queries("q200_e2e_curation")(spark, sf)

@@ -1,7 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.expressions.{JaroWinkler, NfcNormalize, RollingHash,
+  SimHash60, WordShingleArray}
 
 /** Column-level text primitives for the LLM-training-data pipeline
   * operators (SURVEY.md §2.11). Everything here composes built-in
@@ -20,20 +24,13 @@ object TextFunctions {
     * codegen'd [[expressions.JaroWinkler]]; semantics match DuckDB's
     * `jaro_winkler_similarity` exactly (see the expression's
     * Scaladoc for the verified conventions). */
-  def jaroWinkler(a: Column, b: Column): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.jaroWinklerName, a, b)
-  }
+  def jaroWinkler(a: Column, b: Column): Column =
+    column(JaroWinkler(expression(a), expression(b)))
 
   /** Unicode NFC canonical composition — backed by the native
     * codegen'd [[expressions.NfcNormalize]]; semantics match DuckDB's
     * `nfc_normalize` (both UAX#15). */
-  def nfc(a: Column): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.nfcName, a)
-  }
+  def nfc(a: Column): Column = column(NfcNormalize(expression(a)))
 
   /** Regex-based corpus cleanup (the standard LLM pre-training text
     * normalization): strip URLs and e-mail addresses, remove control
@@ -89,11 +86,8 @@ object TextFunctions {
     * interpreted lambda. Distinct-set semantics: wrap in
     * `array_distinct` (equals [[wordShingles]]).
     */
-  def wordShingleArray(text: Column, n: Int): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.wordShinglesName, text, lit(n))
-  }
+  def wordShingleArray(text: Column, n: Int): Column =
+    column(WordShingleArray(expression(text), n))
 
   /** Large prime modulus for the minhash permutation family (2^31−1). */
   val MinhashP: Long = 2147483647L
@@ -135,37 +129,13 @@ object TextFunctions {
   def token60(tok: Column): Column =
     conv(substring(md5(tok), 1, 15), 16, 10).cast("long")
 
-  /** 60-bit SimHash over a (distinct) token-hash array: bit i is set
-    * iff strictly more tokens have bit i set than clear. Built from
-    * lambda expressions only, so shift amounts can be lambda variables
-    * (the `functions.shiftright` Scala wrapper requires literals).
-    */
-  def simhash(tokenHashes: Column): Column =
-    aggregate(
-      transform(sequence(lit(0), lit(59)), i =>
-        when(size(filter(tokenHashes,
-            h => (shiftright(h, i) % 2) === 1)) * 2 > size(tokenHashes),
-          shiftleft(lit(1L), i)).otherwise(lit(0L))),
-      lit(0L), (acc, x) => acc + x)
-
-  // `shiftright`/`shiftleft` with a Column shift amount (needed inside
-  // the lambdas above) — the SQL expressions accept arbitrary child
-  // expressions even though the Scala wrappers only take Int literals.
-  private def shiftright(e: Column, n: Column): Column =
-    call_function("shiftright", e, n)
-  private def shiftleft(e: Column, n: Column): Column =
-    call_function("shiftleft", e, n)
-
   /** Native single-pass 60-bit SimHash over a token array (internally
-    * de-duplicates tokens) — backed by the codegen'd
-    * [[expressions.SimHash60]]; bit-identical to [[simhash]] over
-    * distinct token hashes and to the explode+aggregate formulation.
+    * de-duplicates tokens): bit i is set iff strictly more distinct
+    * tokens have bit i of their [[token60]] hash set than clear. Backed
+    * by the codegen'd [[expressions.SimHash60]]; bit-identical to the
+    * explode+aggregate formulation.
     */
-  def simhash60(tokens: Column): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.simhashName, tokens)
-  }
+  def simhash60(tokens: Column): Column = column(SimHash60(expression(tokens)))
 
   /** Hamming distance between two simhashes. */
   def hamming(a: Column, b: Column): Column =
@@ -174,11 +144,7 @@ object TextFunctions {
   /** Rabin–Karp polynomial rolling-hash fingerprint — backed by the
     * native codegen'd [[expressions.RollingHash]].
     */
-  def rollingHash(text: Column): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.rollingHashName, text)
-  }
+  def rollingHash(text: Column): Column = column(RollingHash(expression(text)))
 
   /** Mean word length: total word characters over word count (the
     * Gopher-rule formulation; whitespace excluded by construction).

@@ -1,7 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
+
+import graft.functions.expressions.{DotProduct, QuantStats}
 
 /** Column-level dense-vector primitives over `ArrayType(FloatType)`
   * embedding columns. Pure built-in lambda expressions (`zip_with`,
@@ -19,11 +22,8 @@ object VectorFunctions {
     * (`aggregate(zip_with(...))`) is semantically identical but
     * interpreted, an order of magnitude slower on ANN hot paths.
     */
-  def dot(a: Column, b: Column): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.dotName, a, b)
-  }
+  def dot(a: Column, b: Column): Column =
+    column(DotProduct(expression(a), expression(b)))
 
   def norm(a: Column): Column = sqrt(dot(a, a))
 
@@ -32,11 +32,7 @@ object VectorFunctions {
     * [[expressions.QuantStats]]; see its Scaladoc for why the lambda
     * formulation is quadratic in the vector dimension.
     */
-  def quantStats(a: Column): Column = {
-    expressions.GraftFunctions.ensureRegistered(
-      org.apache.spark.sql.SparkSession.active)
-    call_function(expressions.GraftFunctions.quantStatsName, a)
-  }
+  def quantStats(a: Column): Column = column(QuantStats(expression(a)))
 
   def cosine(a: Column, b: Column): Column =
     dot(a, b) / (norm(a) * norm(b))

@@ -1,7 +1,5 @@
 package graft.functions.expressions
 
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.FunctionIdentifier
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
@@ -122,86 +120,4 @@ case class DotProduct(left: Expression, right: Expression)
   override protected def withNewChildrenInternal(
       newLeft: Expression, newRight: Expression): Expression =
     copy(left = newLeft, right = newRight)
-}
-
-object GraftFunctions {
-  val dotName = "graft_dot"
-  val rollingHashName = "graft_rolling_hash"
-
-  val dotBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$dotName takes exactly 2 arguments")
-    DotProduct(exprs.head, exprs(1))
-  }
-
-  val rollingHashBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, s"$rollingHashName takes exactly 1 argument")
-    RollingHash(exprs.head)
-  }
-
-  val wordShinglesName = "graft_word_shingles"
-  val simhashName = "graft_simhash60"
-  val quantStatsName = "graft_quant_stats"
-  val jaroWinklerName = "graft_jaro_winkler"
-  val nfcName = "graft_nfc"
-  val boundedTopKName = "graft_bounded_topk"
-
-  val boundedTopKBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 4,
-      s"$boundedTopKName takes exactly 4 arguments (id, ord, pay, k)")
-    require(exprs(3).foldable, s"$boundedTopKName requires a literal k")
-    BoundedTopK(exprs.head, exprs(1), exprs(2),
-      exprs(3).eval().asInstanceOf[Number].intValue())
-  }
-
-  val nfcBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, s"$nfcName takes exactly 1 argument")
-    NfcNormalize(exprs.head)
-  }
-
-  val jaroWinklerBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2, s"$jaroWinklerName takes exactly 2 arguments")
-    JaroWinkler(exprs.head, exprs(1))
-  }
-
-  val quantStatsBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, s"$quantStatsName takes exactly 1 argument")
-    QuantStats(exprs.head)
-  }
-
-  val simhashBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 1, s"$simhashName takes exactly 1 argument")
-    SimHash60(exprs.head)
-  }
-
-  val wordShinglesBuilder: Seq[Expression] => Expression = { exprs =>
-    require(exprs.length == 2,
-      s"$wordShinglesName takes exactly 2 arguments (text, n)")
-    require(exprs(1).foldable,
-      s"$wordShinglesName requires a literal shingle size")
-    WordShingleArray(exprs.head,
-      exprs(1).eval().asInstanceOf[Number].intValue())
-  }
-
-  private val all: Seq[(String, Seq[Expression] => Expression)] = Seq(
-    dotName -> dotBuilder,
-    rollingHashName -> rollingHashBuilder,
-    wordShinglesName -> wordShinglesBuilder,
-    simhashName -> simhashBuilder,
-    quantStatsName -> quantStatsBuilder,
-    jaroWinklerName -> jaroWinklerBuilder,
-    nfcName -> nfcBuilder,
-    boundedTopKName -> boundedTopKBuilder)
-
-  /** Idempotent per-session registration, called where a plan uses
-    * the functions — the engine's one registration path, so it works
-    * in any session, including ones it did not build.
-    */
-  def ensureRegistered(spark: SparkSession): Unit = {
-    val reg = spark.sessionState.functionRegistry
-    all.foreach { case (name, builder) =>
-      if (!reg.functionExists(FunctionIdentifier(name))) {
-        reg.createOrReplaceTempFunction(name, builder, "built-in")
-      }
-    }
-  }
 }

@@ -29,8 +29,8 @@ object NfcNormalizeImpl {
   * but canonically identical. Semantics = Unicode canonical
   * composition, matching DuckDB's `nfc_normalize` (both implement
   * UAX#15 NFC). Spark has no built-in for this, so it's an Expression
-  * (not a UDF): null-safe, codegen'd, and usable from SQL as
-  * `graft_nfc(text)`. */
+  * (not a UDF): null-safe and codegen'd, reached from the Column API
+  * as [[graft.functions.TextFunctions.nfc]]. */
 case class NfcNormalize(child: Expression) extends UnaryExpression {
 
   override def prettyName: String = "graft_nfc"

@@ -69,10 +69,9 @@ object SimHashOps {
 
 /** Native codegen'd 60-bit SimHash over a token array — the hot-path
   * replacement for the explode + `array_distinct` + 60 conditional-sum
-  * aggregates pipeline (and for the pure-lambda
-  * [[graft.functions.TextFunctions.simhash]], which re-evaluates its
-  * token-hash argument twice per bit because Catalyst expression trees
-  * are not DAGs). One static call per row inside the scan projection:
+  * aggregates pipeline (and for a pure-lambda form, which would
+  * re-evaluate its token-hash argument twice per bit because Catalyst
+  * expression trees are not DAGs). One static call per row inside the scan projection:
   * no shuffle, no generate, no aggregate tree; the md5 and bit
   * arithmetic are bit-identical to the aggregate formulation, so the
   * DuckDB oracle is unchanged.

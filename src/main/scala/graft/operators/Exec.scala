@@ -32,16 +32,10 @@ private[graft] object Exec {
 
   /** Widen-only repartition: spread a narrow input across the cluster
     * before an expensive projection, but never funnel an already-wide
-    * input down. The explicit partition count is preserved by AQE.
+    * input down. The explicit partition count is preserved by AQE. A
+    * plan transform only: it changes no session state.
     */
   def widen(df: DataFrame, key: String): DataFrame = {
-    // register the native expressions on the session that will ANALYZE
-    // this operator's plan — inside foreachBatch the micro-batch runs
-    // on a CLONED session whose function registry was copied at stream
-    // start, so registering on SparkSession.active (the Column API's
-    // fallback) is not enough
-    graft.functions.expressions.GraftFunctions
-      .ensureRegistered(df.sparkSession)
     val target = df.sparkSession.sparkContext.defaultParallelism
     if (df.rdd.getNumPartitions < target) df.repartition(target, col(key))
     else df

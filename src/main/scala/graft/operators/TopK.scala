@@ -1,9 +1,10 @@
 package graft.operators
 
 import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.GraftSqlBridge.{column, expression}
 import org.apache.spark.sql.functions._
 
-import graft.functions.expressions.GraftFunctions
+import graft.functions.expressions.BoundedTopK
 
 /** Per-group top-k without sorting the groups — the aggregation-based
   * alternative to the `row_number() OVER (PARTITION BY …) <= k` window.
@@ -35,11 +36,10 @@ import graft.functions.expressions.GraftFunctions
   */
 object TopK {
 
-  private def bounded(id: Column, ord: Column, pay: Column, k: Int): Column = {
-    GraftFunctions.ensureRegistered(org.apache.spark.sql.SparkSession.active)
-    call_function(GraftFunctions.boundedTopKName,
-      id.cast("long"), ord.cast("double"), pay.cast("long"), lit(k))
-  }
+  private def bounded(id: Column, ord: Column, pay: Column, k: Int): Column =
+    column(BoundedTopK(expression(id.cast("long")),
+      expression(ord.cast("double")), expression(pay.cast("long")), k)
+      .toAggregateExpression())
 
   /** [[topKPerGroup]] with a LONG payload column carried through:
     * `(<keyCol>, <idCol>, <ordCol>, <payCol>, rk [, extras…])`. Same

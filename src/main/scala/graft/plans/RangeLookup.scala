@@ -194,9 +194,11 @@ object RangeLookup {
   }
 
   /** Idempotent per-session registration via the public
-    * `ExperimentalMethods` hook, called where a plan uses the node (the
-    * same call-time path as `GraftFunctions.ensureRegistered`), so it
-    * works in any session, including ones the engine did not build.
+    * `ExperimentalMethods` hook, called where a plan uses the node, so
+    * it works in any session, including ones the engine did not build.
+    * A planner strategy, unlike the native expressions (which bind to
+    * Columns directly through `GraftSqlBridge.column`), has no way to
+    * travel inside the plan: the session's planner must hold it.
     */
   def ensureStrategy(spark: SparkSession): Unit = synchronized {
     if (!spark.experimental.extraStrategies.contains(RangeLookupStrategy))

@@ -1,6 +1,7 @@
 package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
+import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one compilation unit that lives inside Spark's package scope.
@@ -9,12 +10,24 @@ import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
   * whole-operator extension path — SURVEY.md §2.9 preference rung (c))
   * requires `Dataset.ofRows`, which Spark scopes `private[sql]`; there
   * is no public constructor from a logical plan. This shim re-exports
-  * the two entry points the engine's custom plans need, the checkpoint
-  * handles [[graft.operators.Scope]] releases, and the listener-bus
-  * drain that job-counting tests read their counts after. Everything
-  * downstream (`graft.plans.*`) stays in the engine's own namespace.
+  * the two entry points the engine's custom plans need, the
+  * Column/Expression pair the native expressions bind through, the
+  * checkpoint handles [[graft.operators.Scope]] releases, and the
+  * listener-bus drain that job-counting tests read their counts after.
+  * Everything downstream (`graft.plans.*`) stays in the engine's own
+  * namespace.
   */
 object GraftSqlBridge {
+
+  /** A Column over a Catalyst expression — how the native expressions
+    * (`graft.functions.expressions`) reach the Column API. The node is
+    * embedded in the plan as is, so it resolves in every session with
+    * no per-session registration. */
+  def column(e: Expression): Column = classic.ExpressionUtils.column(e)
+
+  /** The (unresolved) Catalyst expression behind a Column — the child
+    * a native expression is built over. */
+  def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
 
   /** Wrap a (resolved) logical plan as a DataFrame on this session. */
   def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =

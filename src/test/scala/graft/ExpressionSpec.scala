@@ -240,14 +240,34 @@ class ExpressionSpec extends SparkSpec {
     assert(math.abs(compute(u("prefab"), u("prezzz")) - 2.0 / 3) < 1e-9)
   }
 
-  test("graft_jaro_winkler: null propagation and SQL registration") {
+  test("graft_jaro_winkler: null propagation") {
     import graft.functions.TextFunctions.jaroWinkler
     val df = Seq((Option("abc"), Option.empty[String])).toDF("a", "b")
     assert(df.select(jaroWinkler(col("a"), col("b"))).head().isNullAt(0))
-    graft.functions.expressions.GraftFunctions.ensureRegistered(spark)
-    val viaSql = spark.sql(
-      "SELECT graft_jaro_winkler('MARTHA', 'MARHTA') AS j").head()
-    assert(math.abs(viaSql.getDouble(0) - 0.9611111111) < 1e-9)
+  }
+
+  test("native expressions evaluate on a fresh session with no registration step") {
+    import graft.functions.TextFunctions.jaroWinkler
+    import graft.operators.TopK
+    // a session the engine never touched: its function registry holds
+    // nothing of graft's, so only a Column that carries the Catalyst
+    // node itself can resolve here
+    val fresh = spark.newSession()
+    val strs = fresh.createDataFrame(Seq(("MARTHA", "MARHTA")))
+      .toDF("a", "b")
+    val jw = strs.select(jaroWinkler(col("a"), col("b")))
+    assert(jw.columns.toSeq == Seq("graft_jaro_winkler(a, b)"))
+    assert(math.abs(jw.head().getDouble(0) - 0.9611111111) < 1e-9)
+    val vecs = fresh.createDataFrame(Seq((Seq(1.0f, 2.0f), Seq(3.0f, 4.0f))))
+      .toDF("a", "b")
+    assert(vecs.select(VectorFunctions.dot(col("a"), col("b"))).head()
+      .getDouble(0) == 11.0)
+    val scored = fresh.createDataFrame(Seq(
+        ("g", 1L, 0.5), ("g", 2L, 0.9), ("g", 3L, 0.7), ("h", 4L, 0.1)))
+      .toDF("key", "id", "score")
+    val top = TopK.topKPerGroup(scored, "key", "id", "score", 2)
+      .collect().map(r => (r.getString(0), r.getLong(1), r.getInt(3))).toSet
+    assert(top == Set(("g", 2L, 1), ("g", 3L, 2), ("h", 4L, 1)))
   }
 
   test("graft_nfc composes decomposed sequences, keeps NFC text intact") {
@@ -266,9 +286,8 @@ class ExpressionSpec extends SparkSpec {
     assert(out(2L) == "caf\u00e9")
     assert(out(3L) == "plain ascii")
     assert(out(4L) == null)
-    // registered for SQL text too
-    val viaSql = spark.sql("SELECT length(graft_nfc('nai\u0308ve')) AS l")
-      .head().getInt(0)
-    assert(viaSql == 5) // i + U+0308 composed into ï
+    val naive = Seq("nai\u0308ve").toDF("t")
+      .select(length(TextFunctions.nfc(col("t")))).head().getInt(0)
+    assert(naive == 5) // i + U+0308 composed into ï
   }
 }

@@ -129,4 +129,16 @@ class HarnessSpec extends SparkSpec {
       assert(occurrences("src/main", call).isEmpty, call)
     }
   }
+
+  // The native expressions reach Columns through GraftSqlBridge.column,
+  // never through a session's function registry: a registered name
+  // resolves only in the sessions it was written into
+  test("native expressions bind only through GraftSqlBridge, never a function registry") {
+    Seq("createOrReplaceTempFunction", "functionRegistry",
+        "call_function(\"graft_").foreach { call =>
+      assert(occurrences("src/main", call).isEmpty, call)
+    }
+    assert(occurrences("src/main", "ExpressionUtils").keySet ===
+      Set("src/main/scala/graft/plans/SqlBridge.scala"))
+  }
 }

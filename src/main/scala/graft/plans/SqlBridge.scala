@@ -2,19 +2,14 @@ package org.apache.spark.sql
 
 import org.apache.spark.SparkContext
 import org.apache.spark.sql.catalyst.expressions.Expression
-import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
 
 /** The one compilation unit that lives inside Spark's package scope.
   *
-  * Constructing a DataFrame from a custom [[LogicalPlan]] node (the
-  * whole-operator extension path — SURVEY.md §2.9 preference rung (c))
-  * requires `Dataset.ofRows`, which Spark scopes `private[sql]`; there
-  * is no public constructor from a logical plan. This shim re-exports
-  * the two entry points the engine's custom plans need, the
-  * Column/Expression pair the native expressions bind through, the
-  * checkpoint handles [[graft.operators.Scope]] releases, and the
-  * listener-bus drain that job-counting tests read their counts after.
-  * Everything downstream (`graft.plans.*`) stays in the engine's own
+  * Re-exports the few `private[sql]`/`private[spark]` entry points the
+  * engine needs: the Column/Expression pair the native expressions
+  * bind through, the checkpoint handles [[graft.operators.Scope]]
+  * releases, and the listener-bus drain that job-counting tests read
+  * their counts after. Everything downstream stays in the engine's own
   * namespace.
   */
 object GraftSqlBridge {
@@ -28,15 +23,6 @@ object GraftSqlBridge {
   /** The (unresolved) Catalyst expression behind a Column — the child
     * a native expression is built over. */
   def expression(c: Column): Expression = classic.ExpressionUtils.expression(c)
-
-  /** Wrap a (resolved) logical plan as a DataFrame on this session. */
-  def ofRows(spark: SparkSession, plan: LogicalPlan): DataFrame =
-    classic.Dataset.ofRows(spark.asInstanceOf[classic.SparkSession], plan)
-
-  /** The analyzed logical plan behind a DataFrame — the resolved
-    * attribute references custom plan nodes are built from. */
-  def analyzed(df: Dataset[_]): LogicalPlan =
-    df.asInstanceOf[classic.Dataset[_]].queryExecution.analyzed
 
   /** The materialized RDDs inside a Dataset's plan — every
     * [[execution.LogicalRDD]] leaf, i.e. the storage behind

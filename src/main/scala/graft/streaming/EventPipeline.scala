@@ -54,74 +54,23 @@ object EventPipeline {
            graft.functions.Rounding.roundTo(sum("value"), 3).as("sum_value"))
 
   /** Stateful streaming sessionization via `flatMapGroupsWithState`
-    * (SURVEY.md §2.10): per-user session counting with an inactivity
-    * gap, state = (sessions so far, events so far, last event time).
-    * The batch twin is `Relational.q23` (lag window). State is O(1)
-    * per key but retained for EVERY key seen (NoTimeout): right for
-    * bounded key domains (users of a product); an unbounded key stream
-    * needs GroupStateTimeout.EventTimeTimeout plus a watermark and
-    * hasTimedOut-driven eviction — a watermark alone does NOT clear
-    * flatMapGroupsWithState state. Events within a batch are sorted by
-    * event time before folding; a cross-batch late event older than the
-    * carried high-water mark cannot regress it (it may still be counted
-    * in the wrong session — exact late-data semantics need the
-    * event-time-timeout variant).
-    */
-  def sessionTallies(events: Dataset[SessionEvent],
-                     gapUs: Long): Dataset[SessionTally] = {
-    import events.sparkSession.implicits._
-    events.groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.NoTimeout) {
-        (user: Long, it: Iterator[SessionEvent],
-         state: GroupState[SessionState]) =>
-          val st = fold(state, it, gapUs)
-          Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
-      }
-  }
-
-  /** [[sessionTallies]] with BOUNDED state: `EventTimeTimeout` +
-    * watermark-driven eviction, the variant an UNBOUNDED key stream
-    * needs (a watermark alone never clears flatMapGroupsWithState
-    * state). Each update re-arms the key's timeout at
-    * `lastEvent + gap`; when the watermark passes it the key's final
-    * tally is emitted once more and the state is REMOVED — a later
-    * event for the same user starts a fresh session count, which is
-    * also the correct session semantics (the gap elapsed). Late events
+    * (SURVEY.md §2.10) in APPEND output mode: per-user session counting
+    * with an inactivity gap, state = (sessions so far, events so far,
+    * last event time), carried across micro-batches. Events within a
+    * batch are sorted by event time before folding; a cross-batch late
+    * event older than the carried high-water mark cannot regress it.
+    *
+    * State is BOUNDED: a watermark alone never clears
+    * flatMapGroupsWithState state, so each update re-arms the key's
+    * `EventTimeTimeout` at `lastEvent + gap`, and when the watermark
+    * passes it the key's tally is emitted and its state REMOVED — a
+    * later event for the same user starts a fresh count, which is also
+    * the correct session semantics (the gap elapsed). Late events
     * within `watermarkDelay` still fold normally.
-    */
-  def sessionTalliesEvicting(events: Dataset[SessionEvent], gapUs: Long,
-                             watermarkDelay: String): Dataset[SessionTally] = {
-    import events.sparkSession.implicits._
-    events
-      .withColumn("event_time", timestamp_micros(col("ts_us")))
-      .withWatermark("event_time", watermarkDelay)
-      .as[SessionEvent]
-      .groupByKey(_.user_id)
-      .flatMapGroupsWithState(OutputMode.Update,
-        GroupStateTimeout.EventTimeTimeout) {
-        (user: Long, it: Iterator[SessionEvent],
-         state: GroupState[SessionState]) =>
-          if (state.hasTimedOut) {
-            val st = state.get
-            state.remove()
-            Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
-          } else {
-            val st = fold(state, it, gapUs)
-            // evict when the watermark passes the session's gap horizon;
-            // ceiling division so µs→ms truncation can never arm the
-            // timeout before lastEvent+gap
-            state.setTimeoutTimestamp((st.lastTsUs + gapUs + 999L) / 1000L)
-            Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
-          }
-      }
-  }
-
-  /** [[sessionTalliesEvicting]] in APPEND output mode: emits a key's
-    * tally ONLY when the watermark evicts its state — each output row
-    * is one FINALIZED session segment (the cumulative count since the
-    * key's previous eviction), never a running update. Because the
-    * inactivity-gap fold inside the state counts sessions exactly and
+    *
+    * Each output row is one FINALIZED session segment (the cumulative
+    * count since the key's previous eviction), never a running update.
+    * Because the inactivity-gap fold counts sessions exactly and
     * eviction merely splits a user's timeline into segments at silent
     * gaps the watermark has passed, the per-user SUM of finalized
     * segment tallies equals batch sessionization (`Relational.q23`)
@@ -147,6 +96,8 @@ object EventPipeline {
             Iterator.single(SessionTally(user, st.nSessions, st.nEvents))
           } else {
             val st = fold(state, it, gapUs)
+            // ceiling division so µs→ms truncation can never arm the
+            // timeout before lastEvent+gap
             state.setTimeoutTimestamp((st.lastTsUs + gapUs + 999L) / 1000L)
             Iterator.empty
           }
@@ -155,7 +106,7 @@ object EventPipeline {
 
   /** Declarative sessionization via the built-in `session_window` gap
     * window (SURVEY.md §2.10) — the same inactivity-gap semantics as
-    * [[sessionTallies]]/`Relational.q23` expressed as a plain windowed
+    * [[sessionFinalTallies]]/`Relational.q23` expressed as a plain windowed
     * aggregation, so it runs unchanged in batch AND as a streaming
     * stateful agg (with `withWatermark` upstream bounding state
     * automatically — no hand-rolled eviction). Boundary note: a gap of

@@ -4,7 +4,8 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
 import graft.engine.Ols
-import graft.operators.{AsOf, Dedup, Similarity}
+import graft.operators.{AsOf, Dedup, Exec, Similarity}
+import graft.sources.PairSource
 
 /** Degenerate-input behavior: every operator must return an empty (or
   * NaN-weighted) result, never throw, on empty/singleton inputs.
@@ -98,12 +99,15 @@ class EdgeCaseSpec extends SparkSpec {
     assert(Sampling.stratifiedCap(emptyDocs, "doc_id", "text", 3).count() == 0)
   }
 
-  test("PairsV2 fails fast with a clear message on a missing path") {
-    val e = intercept[Exception] {
-      spark.read.format("graft.sources.PairsV2")
-        .load("/tmp/graft_no_such_dir_xyz").count()
-    }
-    assert(e.getMessage.contains("does not exist"))
+  test("PairSource fails naming the path on a missing path") {
+    val dir = Exec.scratchTempDir("pairs-missing").toString
+    try {
+      val missing = s"$dir/no_such_dir_xyz"
+      val e = intercept[Exception] {
+        PairSource.readPairs(spark, missing).count()
+      }
+      assert(e.getMessage.contains(missing), e.getMessage)
+    } finally Exec.deleteRecursively(dir)
   }
 
   test("Quality.profile rejects colliding rule names") {
@@ -120,12 +124,13 @@ class EdgeCaseSpec extends SparkSpec {
     assert(clash.getMessage.contains("collide"))
   }
 
-  test("PairsV2 on a directory of only malformed lines returns empty") {
-    val dir = java.nio.file.Files.createTempDirectory("pairs_bad")
-    java.nio.file.Files.writeString(dir.resolve("junk.txt"),
-      "no numbers\nhere either\n1.0\n")
-    assert(spark.read.format("graft.sources.PairsV2")
-      .load(dir.toString).count() == 0)
+  test("PairSource on a directory of only malformed lines returns empty") {
+    val dir = Exec.scratchTempDir("pairs-bad")
+    try {
+      java.nio.file.Files.writeString(dir.resolve("junk.txt"),
+        "no numbers\nhere either\n1.0\n")
+      assert(PairSource.readPairs(spark, dir.toString).count() == 0)
+    } finally Exec.deleteRecursively(dir.toString)
   }
 
   test("fitLinearExact on empty input yields NaN weights, no throw") {

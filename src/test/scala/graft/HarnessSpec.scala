@@ -141,4 +141,15 @@ class HarnessSpec extends SparkSpec {
     assert(occurrences("src/main", "ExpressionUtils").keySet ===
       Set("src/main/scala/graft/plans/SqlBridge.scala"))
   }
+
+  // No planner or connector plug-ins: a strategy or optimizer rule has
+  // to be written into each session's planner, and the range lookup and
+  // the pair reader are expressed with public Column and reader APIs
+  test("src/main adds no planner strategy, optimizer rule or DataSource V2 connector") {
+    Seq("spark.experimental", "extraStrategies", "extraOptimizations",
+        "SparkStrategy", "Rule[LogicalPlan]",
+        "org.apache.spark.sql.connector").foreach { api =>
+      assert(occurrences("src/main", api).isEmpty, api)
+    }
+  }
 }

@@ -1,27 +1,32 @@
 package graft
 
 import org.apache.spark.sql.functions._
+import graft.operators.Exec
 import graft.plans.RangeLookup
 
-/** The custom range-lookup join plan ([[graft.plans.RangeLookup]]):
-  * semantics vs the naive non-equi join, plan shape, partitioning
-  * preservation, and the documented failure modes.
+/** The broadcast range lookup ([[graft.plans.RangeLookup]]): semantics
+  * vs the naive non-equi join, plan shape, partitioning preservation,
+  * and the documented failure modes.
   */
 class RangeLookupSpec extends SparkSpec {
 
   private def bands = {
     val s = spark
     import s.implicits._
-    Seq((0.0, 10.0, "low"), (10.0, 25.0, "mid"), (25.0, 100.0, "high"))
+    // [100, 150) is a gap between two intervals
+    Seq((0.0, 10.0, "low"), (10.0, 25.0, "mid"), (25.0, 100.0, "high"),
+        (150.0, 200.0, "top"))
       .toDF("lo", "hi", "band")
   }
 
   private def facts = {
     val s = spark
     import s.implicits._
-    // values on boundaries, inside, outside, and null
-    (Seq(0.0, 5.5, 10.0, 24.999, 25.0, 99.999, 100.0, -3.0)
-      .map(Option(_)) :+ (None: Option[Double]))
+    // values on boundaries, inside, outside, null, in the gap, past
+    // the gap, NaN and -0.0
+    ((Seq(0.0, 5.5, 10.0, 24.999, 25.0, 99.999, 100.0, -3.0)
+      .map(Option(_)) :+ (None: Option[Double])) ++
+      Seq(120.0, 175.0, Double.NaN, -0.0).map(Option(_)))
       .zipWithIndex.map { case (v, i) => (i.toLong, v) }
       .toDF("id", "v")
   }
@@ -33,18 +38,24 @@ class RangeLookupSpec extends SparkSpec {
         col("v") >= col("lo") && col("v") < col("hi"))
       .select("id", "band").collect().map(r => (r.getLong(0), r.getString(1))).toSet
     assert(got == want)
-    // 100.0 is exclusive, -3 below all, null drops
-    assert(!got.exists(t => t._1 == 6 || t._1 == 7 || t._1 == 8))
-    // boundary 10.0 lands in "mid" (inclusive lo), 25.0 in "high"
+    // 100.0 is exclusive (and in the gap), -3 below all, null drops,
+    // 120 in the gap, NaN matches nothing
+    assert(!got.exists(t => Set(6L, 7L, 8L, 9L, 11L)(t._1)))
+    // boundary 10.0 lands in "mid" (inclusive lo), 25.0 in "high";
+    // past the gap 175 lands in "top"; -0.0 equals the 0.0 bound
     assert(got.contains((2L, "mid")) && got.contains((4L, "high")))
+    assert(got.contains((10L, "top")) && got.contains((12L, "low")))
   }
 
-  test("plans as RangeLookupJoin, not BroadcastNestedLoopJoin") {
+  test("plans with no join node") {
     val df = RangeLookup.rangeLookup(facts, bands, "v", "lo", "hi")
     val plan = df.queryExecution.executedPlan.toString
-    assert(plan.contains("RangeLookupJoin"))
-    assert(!plan.contains("BroadcastNestedLoop"))
-    assert(!plan.contains("CartesianProduct"))
+    Seq("Join", "BroadcastNestedLoop", "CartesianProduct").foreach { node =>
+      assert(!plan.contains(node), s"$node in\n$plan")
+    }
+    assert(df.columns.toSeq == Seq("id", "v", "lo", "hi", "band"))
+    assert(df.schema.map(_.dataType) ==
+      (facts.schema ++ bands.schema).map(_.dataType))
   }
 
   test("fact-side partitioning is preserved (no exchange above scan)") {
@@ -78,38 +89,53 @@ class RangeLookupSpec extends SparkSpec {
     }.getMessage.contains("nope"))
   }
 
+  test("a range side over MaxRanges fails on the cap, not an OOM") {
+    val big = spark.range(RangeLookup.MaxRanges + 1L)
+      .select(col("id").as("lo"), (col("id") + 1).as("hi"))
+    val e = intercept[IllegalArgumentException] {
+      RangeLookup.rangeLookup(facts, big, "v", "lo", "hi")
+    }
+    assert(e.getMessage.contains(s"cap ${RangeLookup.MaxRanges}"),
+      e.getMessage)
+  }
+
   test("filter above the join pushes down to the fact-side scan") {
     val s = spark
     import s.implicits._
-    val path = "/tmp/graft_rl_facts"
-    (0 until 100).map(i => (i.toLong, (i % 50).toDouble, s"p$i"))
-      .toDF("id", "v", "payload").write.mode("overwrite").parquet(path)
-    val pf = spark.read.parquet(path)
-    val df = RangeLookup.rangeLookup(pf, bands, "v", "lo", "hi")
-      .filter(col("id") > 90)
-    val plan = df.queryExecution.executedPlan.toString
-    // the id predicate must reach the parquet scan as a pushed filter,
-    // not sit above the custom join
-    assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,90)]"),
-      s"fact predicate did not reach the scan:\n$plan")
-    assert(df.count() == 9)
+    val path = Exec.scratchTempDir("range-lookup-facts").toString
+    try {
+      (0 until 100).map(i => (i.toLong, (i % 50).toDouble, s"p$i"))
+        .toDF("id", "v", "payload").write.mode("overwrite").parquet(path)
+      val pf = spark.read.parquet(path)
+      val df = RangeLookup.rangeLookup(pf, bands, "v", "lo", "hi")
+        .filter(col("id") > 90)
+      val plan = df.queryExecution.executedPlan.toString
+      // the id predicate must reach the parquet scan as a pushed
+      // filter, not sit above the lookup
+      assert(plan.contains("PushedFilters: [IsNotNull(id), GreaterThan(id,90)]"),
+        s"fact predicate did not reach the scan:\n$plan")
+      assert(df.count() == 9)
+    } finally Exec.deleteRecursively(path)
   }
 
   test("project above the join prunes the fact-side read schema") {
-    val path = "/tmp/graft_rl_facts2"
+    val path = Exec.scratchTempDir("range-lookup-facts").toString
     val s = spark
     import s.implicits._
-    (0 until 100).map(i => (i.toLong, (i % 50).toDouble, s"p$i"))
-      .toDF("id", "v", "payload").write.mode("overwrite").parquet(path)
-    val pf = spark.read.parquet(path)
-    val df = RangeLookup.rangeLookup(pf, bands, "v", "lo", "hi")
-      .select("id", "band")
-    val plan = df.queryExecution.executedPlan.toString
-    // payload is unused → must not be read; v is the join key → must be
-    assert(!plan.contains("payload"), s"unused column read:\n$plan")
-    assert(plan.contains("ReadSchema: struct<id:bigint,v:double>"),
-      s"fact scan not pruned:\n$plan")
-    assert(df.count() == 100)
+    try {
+      (0 until 100).map(i => (i.toLong, (i % 50).toDouble, s"p$i"))
+        .toDF("id", "v", "payload").write.mode("overwrite").parquet(path)
+      val pf = spark.read.parquet(path)
+      val df = RangeLookup.rangeLookup(pf, bands, "v", "lo", "hi")
+        .select("id", "band")
+      val plan = df.queryExecution.executedPlan.toString
+      // payload is unused → must not be read; v is the lookup key →
+      // must be
+      assert(!plan.contains("payload"), s"unused column read:\n$plan")
+      assert(plan.contains("ReadSchema: struct<id:bigint,v:double>"),
+        s"fact scan not pruned:\n$plan")
+      assert(df.count() == 100)
+    } finally Exec.deleteRecursively(path)
   }
 
   test("integer value/bound columns cast cleanly") {

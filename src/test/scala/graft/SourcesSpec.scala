@@ -3,6 +3,7 @@ package graft
 import java.nio.file.Files
 
 import graft.engine.Ols
+import graft.operators.Exec
 import graft.sources.PairSource
 
 class SourcesSpec extends SparkSpec {
@@ -18,30 +19,20 @@ class SourcesSpec extends SparkSpec {
     assert(math.abs(w.w1 - 2.0) < 1e-9 && math.abs(w.w0 - 1.0) < 1e-9)
   }
 
-  test("PairsV2 source equals PairSource and prunes unneeded columns") {
-    import org.apache.spark.sql.execution.datasources.v2.BatchScanExec
-    val dir = Files.createTempDirectory("pairsv2")
-    Files.writeString(dir.resolve("a.txt"), "1.0 3.0\n2.0 5.0\nbad line\n")
-    Files.writeString(dir.resolve("b.txt"), "3.0 7.0\n4.0 9.0\n")
-    val v2 = spark.read.format("graft.sources.PairsV2").load(dir.toString)
-    val v1 = PairSource.readPairs(spark, dir.toString)
-    // same rows (malformed dropped), same columns (the CSV source
-    // relaxes nullability, the V2 table keeps the declared not-null)
-    assert(v2.schema.map(f => (f.name, f.dataType))
-      == v1.schema.map(f => (f.name, f.dataType)))
-    assert(v2.collect().map(r => (r.getDouble(0), r.getDouble(1))).sorted.toSeq
-      == v1.collect().map(r => (r.getDouble(0), r.getDouble(1))).sorted.toSeq)
-    // one partition per file
-    assert(v2.rdd.getNumPartitions == 2)
-    // column pruning reaches the reader: a single-column projection
-    // scans struct<x:double>, never materializing y
-    val pruned = v2.select("x")
-    val scan = pruned.queryExecution.executedPlan.collectFirst {
-      case b: BatchScanExec => b
-    }.get
-    assert(scan.scan.readSchema().fieldNames.toSeq == Seq("x"))
-    assert(pruned.collect().map(_.getDouble(0)).sorted.toSeq
-      == Seq(1.0, 2.0, 3.0, 4.0))
+  test("PairSource reads q65's staged directory through a file:// URI") {
+    import org.apache.spark.sql.functions._
+    import spark.implicits._
+    val dir = Exec.scratchTempDir("pairs-uri").toString
+    try {
+      // q65's staging: one "key region" text line for each of 25 keys,
+      // written as one part file
+      (0 until 25).map(k => s"$k ${k % 5}").toDF("value")
+        .coalesce(1).write.mode("overwrite").text(dir)
+      val agg = PairSource.readPairs(spark, s"file://$dir")
+        .agg(count(lit(1)), sum("x"), avg("y")).head()
+      assert((agg.getLong(0), agg.getDouble(1), agg.getDouble(2)) ==
+        ((25L, 300.0, 2.0)))
+    } finally Exec.deleteRecursively(dir)
   }
 
   test("q45 approx_count_distinct stays within 5% of exact") {

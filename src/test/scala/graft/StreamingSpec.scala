@@ -42,21 +42,31 @@ class StreamingSpec extends SparkSpec {
   test("flatMapGroupsWithState sessionization carries state across batches") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SessionEvent]
-    val tallies = EventPipeline.sessionTallies(
-      mem.toDS(), gapUs = 30L * 60 * 1000000)
-    val q = tallies.writeStream.outputMode("update")
+    val tallies = EventPipeline.sessionFinalTallies(
+      mem.toDS(), gapUs = 30L * 60 * 1000000, watermarkDelay = "0 seconds")
+    val q = tallies.writeStream.outputMode("append")
       .format("memory").queryName("sess_out").start()
     try {
-      // batch 1: user 1 at t=0 and t+10min (same session)
-      mem.addData(SessionEvent(1L, 0L), SessionEvent(1L, 600L * 1000000))
+      val min = 60L * 1000000
+      // every event stays strictly above the watermark of its batch
+      val base = 1440 * min
+      // batch 1: user 1 at t and t+10min (same session)
+      mem.addData(SessionEvent(1L, base), SessionEvent(1L, base + 10 * min))
       q.processAllAvailable()
+      assert(spark.table("sess_out").count() == 0)
       // batch 2: user 1 two hours later (new session), user 2 appears
-      mem.addData(SessionEvent(1L, 7200L * 1000000), SessionEvent(2L, 0L))
+      mem.addData(SessionEvent(1L, base + 120 * min),
+        SessionEvent(2L, base + 60 * min))
       q.processAllAvailable()
-      val last = spark.table("sess_out").as[SessionTally].collect()
-        .groupBy(_.user_id).map { case (u, rows) => u -> rows.maxBy(_.n_events) }
-      assert(last(1L).n_sessions == 2 && last(1L).n_events == 3)
-      assert(last(2L).n_sessions == 1 && last(2L).n_events == 1)
+      // sweep both users out: the watermark lags one batch
+      mem.addData(SessionEvent(3L, base + 400 * min))
+      q.processAllAvailable()
+      mem.addData(SessionEvent(3L, base + 400 * min))
+      q.processAllAvailable()
+      // user 1's one finalized segment holds both batches' events
+      val rows = spark.table("sess_out").as[SessionTally].collect().toSet
+      assert(rows == Set(SessionTally(1L, 2L, 3L), SessionTally(2L, 1L, 1L)),
+        rows.toString)
     } finally q.stop()
   }
 
@@ -252,36 +262,39 @@ class StreamingSpec extends SparkSpec {
   test("EventTimeTimeout evicts session state once the watermark passes the gap") {
     implicit val sqlCtx = spark.sqlContext
     val mem = MemoryStream[SessionEvent]
-    val tallies = EventPipeline.sessionTalliesEvicting(
+    val tallies = EventPipeline.sessionFinalTallies(
       mem.toDS(), gapUs = 30L * 60 * 1000000, watermarkDelay = "0 seconds")
-    val q = tallies.writeStream.outputMode("update")
+    val q = tallies.writeStream.outputMode("append")
       .format("memory").queryName("evict_out").start()
+    def user1 = spark.table("evict_out").as[SessionTally].collect()
+      .filter(_.user_id == 1L).map(t => (t.n_sessions, t.n_events)).toSeq
+    // one micro-batch per call; watermarks lag one batch, so a repeat
+    // of the last event time runs a batch at the advanced watermark
+    // without moving it
+    def batch(events: SessionEvent*): Unit = {
+      mem.addData(events: _*)
+      q.processAllAvailable()
+    }
     try {
       val min = 60L * 1000000
       // keep every event strictly above the INITIAL watermark (epoch 0,
       // delay 0s) or it is dropped as late before the stateful operator
       val base = 1440 * min
-      // batch 1: user 1, two events in one session (watermark -> t+10min)
-      mem.addData(SessionEvent(1L, base), SessionEvent(1L, base + 10 * min))
-      q.processAllAvailable()
-      // batch 2: unrelated key far in the future; its max event time
-      // becomes the NEXT batch's watermark (watermarks lag one batch)
-      mem.addData(SessionEvent(2L, base + 100 * min))
-      q.processAllAvailable()
-      // batch 3: watermark is now t+100min > user 1's timeout at
-      // t+10min+30min -> user 1's state is emitted once more and REMOVED
-      mem.addData(SessionEvent(2L, base + 101 * min))
-      q.processAllAvailable()
-      // batch 4: user 1 returns -> must start a FRESH state
-      mem.addData(SessionEvent(1L, base + 200 * min))
-      q.processAllAvailable()
-      val rows = spark.table("evict_out").as[SessionTally].collect()
-        .filter(_.user_id == 1L).map(t => (t.n_sessions, t.n_events)).toSeq
-      // running tally (1,2) from batch 1, the SAME final tally on
-      // eviction, then the fresh-state tally (1,1) after re-appearance
-      // (state removed -> counts restart)
-      assert(rows.count(_ == ((1L, 2L))) == 2, s"rows=$rows")
-      assert(rows.last == ((1L, 1L)), s"rows=$rows")
+      // user 1: one session, last event at t+10min -> horizon t+40min
+      batch(SessionEvent(1L, base), SessionEvent(1L, base + 10 * min))
+      // watermark reaches the horizon exactly: state is kept
+      batch(SessionEvent(2L, base + 40 * min))
+      batch(SessionEvent(2L, base + 40 * min))
+      assert(user1.isEmpty, s"evicted at the horizon: $user1")
+      // watermark passes the horizon: state emitted once and REMOVED
+      batch(SessionEvent(2L, base + 41 * min))
+      batch(SessionEvent(2L, base + 41 * min))
+      assert(user1 == Seq((1L, 2L)))
+      // user 1 returns: a FRESH count, not (2 sessions, 3 events)
+      batch(SessionEvent(1L, base + 200 * min))
+      batch(SessionEvent(2L, base + 500 * min))
+      batch(SessionEvent(2L, base + 500 * min))
+      assert(user1.sorted == Seq((1L, 1L), (1L, 2L)), s"rows=$user1")
     } finally q.stop()
   }
 

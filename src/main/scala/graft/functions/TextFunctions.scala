@@ -89,23 +89,9 @@ object TextFunctions {
   def wordShingleArray(text: Column, n: Int): Column =
     column(WordShingleArray(expression(text), n))
 
-  /** Large prime modulus for the minhash permutation family (2^31−1). */
+  /** Large prime modulus for the minhash permutation family (2^31−1)
+    * of [[graft.operators.Dedup]]'s signatures. */
   val MinhashP: Long = 2147483647L
-
-  /** MinHash signature of a shingle set: ONE md5 per shingle reduced to
-    * a 60-bit integer, then K affine "permutations"
-    * `(2k+1)·h + 7919k mod P` (each a bijection on Z_P since 2k+1 and
-    * the prime P are coprime) with a min-reduce per k. One digest per
-    * shingle instead of K keeps the interpreted higher-order-function
-    * cost flat in K; the arithmetic mirrors exactly in DuckDB SQL, so
-    * the whole LSH pipeline stays oracle-checkable.
-    */
-  def minhashSignature(shingles: Column, k: Int): Column = {
-    val hs = transform(shingles, s => token60(s) % MinhashP)
-    transform(sequence(lit(0), lit(k - 1)), seed =>
-      array_min(transform(hs, h =>
-        pmod((seed * 2 + 1) * h + seed * lit(7919L), lit(MinhashP)))))
-  }
 
   /** LSH band keys: the signature is cut into `bands` bands of `rows`
     * hashes; each band is collapsed to one md5 key. Two documents are

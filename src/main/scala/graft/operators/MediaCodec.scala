@@ -360,11 +360,16 @@ object MediaCodec {
     buf.array()
   }
 
-  /** Real RIFF parser: walks chunks (tolerating extras like `LIST`),
-    * validates the PCM/mono/16-bit `fmt `, extracts `data` samples.
-    */
-  def decodeWav(bytes: Array[Byte]): Either[String, WavAudio] = {
-    if (bytes.length < 44) return Left("too short for a wav header")
+  /** The one RIFF/WAVE chunk walker of both WAV decoders: checks the
+    * RIFF and WAVE magics, then hands each chunk's id and body (a
+    * little-endian buffer over exactly that chunk) to `visit` until it
+    * returns a result (`Right(Some(_))`), a rejection, or fewer than 8
+    * bytes remain (`Right(None)`). A chunk longer than the bytes left
+    * is rejected; the pad byte after an odd-length chunk is skipped,
+    * or absent when the chunk ends the file. */
+  private def walkRiff[A](bytes: Array[Byte])(
+      visit: (String, ByteBuffer) => Either[String, Option[A]])
+      : Either[String, Option[A]] = {
     val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
     def tag(): String = {
       val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
@@ -372,41 +377,50 @@ object MediaCodec {
     if (tag() != "RIFF") return Left("bad RIFF magic")
     buf.getInt // riff size (trusted length is the array itself)
     if (tag() != "WAVE") return Left("bad WAVE magic")
-    var sampleRate = -1
-    var ok = false
-    var samples: Array[Short] = null
-    while (buf.remaining() >= 8 && samples == null) {
+    while (buf.remaining() >= 8) {
       val id = tag()
       val len = buf.getInt
-      if (len < 0 || len > buf.remaining()) return Left(s"bad chunk length $len in '$id'")
-      id match {
-        case "fmt " =>
-          if (len < 16) return Left("fmt chunk too short")
-          val fmtEnd = buf.position() + len
-          val audioFormat = buf.getShort
-          val channels = buf.getShort
-          sampleRate = buf.getInt
-          buf.getInt; buf.getShort // byte rate, block align
-          val bits = buf.getShort
-          if (audioFormat != 1) return Left(s"not PCM (format $audioFormat)")
-          if (channels != 1) return Left(s"not mono ($channels channels)")
-          if (bits != 16) return Left(s"not 16-bit ($bits)")
-          buf.position(fmtEnd)
-          ok = true
-        case "data" =>
-          if (!ok) return Left("data chunk before fmt")
-          if (len % 2 != 0) return Left("odd data length for 16-bit PCM")
-          val out = new Array[Short](len / 2)
-          var j = 0
-          while (j < out.length) { out(j) = buf.getShort; j += 1 }
-          samples = out
-        case _ => // skip unknown chunk (word-aligned; the pad byte may
-          // be absent when the chunk ends the file — clamp, don't throw)
+      if (len < 0 || len > buf.remaining())
+        return Left(s"bad chunk length $len in '$id'")
+      val body = buf.slice(buf.position(), len).order(ByteOrder.LITTLE_ENDIAN)
+      visit(id, body) match {
+        case Right(None) =>
           buf.position(math.min(buf.position() + len + (len & 1), buf.limit()))
+        case done => return done
       }
     }
-    if (samples == null) Left("no data chunk")
-    else Right(WavAudio(sampleRate, samples))
+    Right(None)
+  }
+
+  /** Real RIFF parser: walks chunks (tolerating extras like `LIST`),
+    * validates the PCM/mono/16-bit `fmt `, extracts `data` samples.
+    */
+  def decodeWav(bytes: Array[Byte]): Either[String, WavAudio] = {
+    if (bytes.length < 44) return Left("too short for a wav header")
+    var sampleRate = -1
+    var ok = false
+    walkRiff(bytes) {
+      case ("fmt ", body) if body.remaining < 16 => Left("fmt chunk too short")
+      case ("fmt ", body) =>
+        val audioFormat = body.getShort
+        val channels = body.getShort
+        sampleRate = body.getInt
+        body.getInt; body.getShort // byte rate, block align
+        val bits = body.getShort
+        ok = true
+        if (audioFormat != 1) Left(s"not PCM (format $audioFormat)")
+        else if (channels != 1) Left(s"not mono ($channels channels)")
+        else if (bits != 16) Left(s"not 16-bit ($bits)")
+        else Right(None)
+      case ("data", _) if !ok => Left("data chunk before fmt")
+      case ("data", body) if body.remaining % 2 != 0 =>
+        Left("odd data length for 16-bit PCM")
+      case ("data", body) =>
+        val out = new Array[Short](body.remaining / 2)
+        body.asShortBuffer.get(out)
+        Right(Some(WavAudio(sampleRate, out)))
+      case _ => Right(None)
+    }.flatMap(_.toRight("no data chunk"))
   }
 
   // ------------------------------------------------------------ IMA ADPCM
@@ -529,63 +543,49 @@ object MediaCodec {
     * rejection, never garbage samples. */
   def decodeWavAdpcm(bytes: Array[Byte]): Either[String, WavAudio] = {
     if (bytes.length < 60) return Left("too short for an adpcm wav")
-    val buf = ByteBuffer.wrap(bytes).order(ByteOrder.LITTLE_ENDIAN)
-    def tag(): String = {
-      val b = new Array[Byte](4); buf.get(b); new String(b, "US-ASCII")
-    }
-    if (tag() != "RIFF") return Left("bad RIFF magic")
-    buf.getInt
-    if (tag() != "WAVE") return Left("bad WAVE magic")
     var sampleRate = -1
     var blockAlign = -1
     var samplesPerBlock = -1
     var factSamples = -1
     var fmtOk = false
-    var data: Array[Byte] = null
-    while (buf.remaining() >= 8 && data == null) {
-      val id = tag()
-      val len = buf.getInt
-      if (len < 0 || len > buf.remaining())
-        return Left(s"bad chunk length $len in '$id'")
-      id match {
-        case "fmt " =>
-          if (len < 20) return Left("adpcm fmt chunk too short")
-          val fmtEnd = buf.position() + len
-          val audioFormat = buf.getShort
-          val channels = buf.getShort
-          sampleRate = buf.getInt
-          buf.getInt // byte rate
-          blockAlign = buf.getShort & 0xffff
-          val bits = buf.getShort
-          buf.getShort // cbSize
-          samplesPerBlock = buf.getShort & 0xffff
-          if (audioFormat != 0x11)
-            return Left(s"not IMA ADPCM (format $audioFormat)")
-          if (channels != 1) return Left(s"not mono ($channels channels)")
-          if (bits != 4) return Left(s"not 4-bit ($bits)")
-          if (blockAlign < 5 || samplesPerBlock != 1 + 2 * (blockAlign - 4))
-            return Left(
-              s"inconsistent block layout (align $blockAlign, " +
-                s"spb $samplesPerBlock)")
-          buf.position(fmtEnd)
-          fmtOk = true
-        case "fact" =>
-          if (len < 4) return Left("fact chunk too short")
-          val end = buf.position() + len + (len & 1)
-          factSamples = buf.getInt
-          buf.position(math.min(end, buf.limit()))
-        case "data" =>
-          if (!fmtOk) return Left("data chunk before fmt")
-          if (len % blockAlign != 0)
-            return Left(s"data length $len not a multiple of block $blockAlign")
-          data = new Array[Byte](len)
-          buf.get(data)
-        case _ =>
-          buf.position(
-            math.min(buf.position() + len + (len & 1), buf.limit()))
-      }
+    val walked = walkRiff(bytes) {
+      case ("fmt ", body) if body.remaining < 20 =>
+        Left("adpcm fmt chunk too short")
+      case ("fmt ", body) =>
+        val audioFormat = body.getShort
+        val channels = body.getShort
+        sampleRate = body.getInt
+        body.getInt // byte rate
+        blockAlign = body.getShort & 0xffff
+        val bits = body.getShort
+        body.getShort // cbSize
+        samplesPerBlock = body.getShort & 0xffff
+        fmtOk = true
+        if (audioFormat != 0x11) Left(s"not IMA ADPCM (format $audioFormat)")
+        else if (channels != 1) Left(s"not mono ($channels channels)")
+        else if (bits != 4) Left(s"not 4-bit ($bits)")
+        else if (blockAlign < 5 || samplesPerBlock != 1 + 2 * (blockAlign - 4))
+          Left(s"inconsistent block layout (align $blockAlign, " +
+            s"spb $samplesPerBlock)")
+        else Right(None)
+      case ("fact", body) if body.remaining < 4 => Left("fact chunk too short")
+      case ("fact", body) =>
+        factSamples = body.getInt
+        Right(None)
+      case ("data", _) if !fmtOk => Left("data chunk before fmt")
+      case ("data", body) if body.remaining % blockAlign != 0 => Left(
+        s"data length ${body.remaining} not a multiple of block $blockAlign")
+      case ("data", body) =>
+        val data = new Array[Byte](body.remaining)
+        body.get(data)
+        Right(Some(data))
+      case _ => Right(None)
     }
-    if (data == null) return Left("no data chunk")
+    val data = walked match {
+      case Right(Some(d)) => d
+      case Right(None) => return Left("no data chunk")
+      case Left(e) => return Left(e)
+    }
     if (factSamples < 0) return Left("no fact chunk (sample count unknown)")
     val nBlocks = data.length / blockAlign
     if (factSamples > nBlocks * samplesPerBlock)

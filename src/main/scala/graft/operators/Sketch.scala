@@ -100,6 +100,58 @@ object Sketch {
       .select(col(keyCol), est.as("cms_est"))
   }
 
+  /** HLL register table `(bucket, mreg)` — the sketch's mergeable
+    * state, exposed separately because a `groupBy(bucket).max` is also
+    * a valid STREAMING aggregation (complete/update mode, state bounded
+    * at 2^p rows regardless of stream cardinality): a live
+    * distinct-count monitor maintains exactly this table and reads
+    * [[hllEstimate]]'s arithmetic off it whenever asked.
+    */
+  def hllRegisters(items: DataFrame, keyCol: String, p: Int): DataFrame =
+    registers(items, keyCol, p)
+
+  /** Per-group HLL register tables `(grp, bucket, mreg)` — the
+    * pre-aggregation form that makes distinct-counting a ROLLUP
+    * operation at 100 TB: each ingest unit (day, source, partition)
+    * keeps its own 2^p-row register table, and any coarser-grained
+    * distinct count is a register-max merge over those tables
+    * ([[hllRollup]]), never a rescan of the raw keys. Same md5 kernel
+    * and exact integer rank arithmetic as [[hllRegisters]].
+    */
+  def hllRegistersBy(items: DataFrame, keyCol: String, groupCol: String,
+                     p: Int): DataFrame =
+    registers(items, keyCol, p, col(groupCol).as("grp"))
+
+  /** The one register builder: `(group…, bucket, mreg)` grouped by the
+    * `group` columns (none for a single table) and the bucket. */
+  private def registers(items: DataFrame, keyCol: String, p: Int,
+                        group: Column*): DataFrame = {
+    require(p >= 4 && p <= 16, "p in [4,16]: m = 2^p registers")
+    val maxRank = 60 - p + 1
+    val h = token60(col(keyCol))
+    val w = shiftright(h, p)
+    val rank = when(w === 0, lit(maxRank))
+      .otherwise(lit(maxRank) - length(bin(w)))
+    val ranked = items.select(
+      group :+ pmod(h, lit(1L << p)).as("bucket") :+ rank.as("r"): _*)
+    ranked.groupBy(ranked.columns.init.map(col).toSeq: _*)
+      .agg(max(col("r")).as("mreg"))
+  }
+
+  /** Merge finer-grained register tables ([[hllRegistersBy]] output)
+    * into coarser groups by register MAX — HLL's mergeability is
+    * EXACT: max-merged daily registers are bit-identical to registers
+    * built from the union of the days' keys — and evaluate the
+    * estimate per merged group. `toGroup` maps the `grp` column to the
+    * coarser key (e.g. day → epoch-week). Returns one row per merged
+    * group: `(grp, m, used, zeros, sum_scaled, hll_estimate)` with
+    * q133's exact integer-scaled harmonic sum and linear-counting
+    * fallback.
+    */
+  def hllRollup(regs: DataFrame, toGroup: Column, p: Int): DataFrame =
+    estimate(regs.groupBy(toGroup.as("grp"), col("bucket"))
+      .agg(max(col("mreg")).as("mreg")), p, col("grp"))
+
   /** Deterministic HyperLogLog distinct-count estimate (Flajolet et
     * al.) — unlike Spark's engine-internal `approx_count_distinct`
     * (whose registers are unreachable and whose hash is
@@ -125,97 +177,15 @@ object Sketch {
     *
     * One row: `(m, used, zeros, sum_scaled, hll_estimate)`.
     */
-  /** HLL register table `(bucket, mreg)` — the sketch's mergeable
-    * state, exposed separately because a `groupBy(bucket).max` is also
-    * a valid STREAMING aggregation (complete/update mode, state bounded
-    * at 2^p rows regardless of stream cardinality): a live
-    * distinct-count monitor maintains exactly this table and reads
-    * [[hllEstimate]]'s arithmetic off it whenever asked.
-    */
-  def hllRegisters(items: DataFrame, keyCol: String, p: Int): DataFrame = {
+  def hllEstimate(items: DataFrame, keyCol: String, p: Int): DataFrame =
+    estimate(hllRegisters(items, keyCol, p), p)
+
+  /** The one estimator over register rows `(group…, bucket, mreg)`: one
+    * row per group, or a single row when no `group` column is given. */
+  private def estimate(regs: DataFrame, p: Int, group: Column*): DataFrame = {
     require(p >= 4 && p <= 16, "p in [4,16]: m = 2^p registers")
     val m = 1 << p
     val maxRank = 60 - p + 1
-    val h = token60(col(keyCol))
-    val w = shiftright(h, p)
-    val rank = when(w === 0, lit(maxRank))
-      .otherwise(lit(maxRank) - length(bin(w)))
-    items
-      .select(pmod(h, lit(m.toLong)).as("bucket"), rank.as("r"))
-      .groupBy("bucket").agg(max(col("r")).as("mreg"))
-  }
-
-  /** Per-group HLL register tables `(grp, bucket, mreg)` — the
-    * pre-aggregation form that makes distinct-counting a ROLLUP
-    * operation at 100 TB: each ingest unit (day, source, partition)
-    * keeps its own 2^p-row register table, and any coarser-grained
-    * distinct count is a register-max merge over those tables
-    * ([[hllRollup]]), never a rescan of the raw keys. Same md5 kernel
-    * and exact integer rank arithmetic as [[hllRegisters]].
-    */
-  def hllRegistersBy(items: DataFrame, keyCol: String, groupCol: String,
-                     p: Int): DataFrame = {
-    require(p >= 4 && p <= 16, "p in [4,16]: m = 2^p registers")
-    val m = 1 << p
-    val maxRank = 60 - p + 1
-    val h = token60(col(keyCol))
-    val w = shiftright(h, p)
-    val rank = when(w === 0, lit(maxRank))
-      .otherwise(lit(maxRank) - length(bin(w)))
-    items
-      .select(col(groupCol).as("grp"),
-        pmod(h, lit(m.toLong)).as("bucket"), rank.as("r"))
-      .groupBy("grp", "bucket").agg(max(col("r")).as("mreg"))
-  }
-
-  /** Merge finer-grained register tables ([[hllRegistersBy]] output)
-    * into coarser groups by register MAX — HLL's mergeability is
-    * EXACT: max-merged daily registers are bit-identical to registers
-    * built from the union of the days' keys — and evaluate the
-    * estimate per merged group. `toGroup` maps the `grp` column to the
-    * coarser key (e.g. day → epoch-week). Returns one row per merged
-    * group: `(grp, m, used, zeros, sum_scaled, hll_estimate)` with
-    * q133's exact integer-scaled harmonic sum and linear-counting
-    * fallback.
-    */
-  def hllRollup(regs: DataFrame, toGroup: Column, p: Int): DataFrame = {
-    require(p >= 4 && p <= 16, "p in [4,16]: m = 2^p registers")
-    val m = 1 << p
-    val maxRank = 60 - p + 1
-    val merged = regs.groupBy(toGroup.as("grp"), col("bucket"))
-      .agg(max(col("mreg")).as("mreg"))
-    val scaledTerm = call_function("shiftleft", lit(1L),
-      lit(maxRank) - col("mreg"))
-    val alpha = lit(m match {
-      case 16 => 0.673
-      case 32 => 0.697
-      case 64 => 0.709
-      case _  => 0.7213 / (1.0 + 1.079 / m.toDouble)
-    })
-    val twoMax = math.pow(2.0, maxRank)
-    merged.groupBy("grp")
-      .agg(count(lit(1)).as("used"), sum(scaledTerm).as("sum_present"))
-      .select(col("grp"), lit(m).as("m"), col("used"),
-        (lit(m.toLong) - col("used")).as("zeros"),
-        (col("sum_present") +
-          (lit(m.toLong) - col("used")) * lit(1L << maxRank))
-          .as("sum_scaled"))
-      .withColumn("raw",
-        alpha * lit(m.toDouble * m) * lit(twoMax) /
-          col("sum_scaled").cast("double"))
-      .withColumn("hll_estimate",
-        graft.functions.Rounding.roundTo(
-          when(col("raw") <= lit(2.5 * m) && col("zeros") > 0,
-            lit(m.toDouble) *
-              log(lit(m.toDouble) / col("zeros").cast("double")))
-            .otherwise(col("raw")), 4))
-      .select("grp", "m", "used", "zeros", "sum_scaled", "hll_estimate")
-  }
-
-  def hllEstimate(items: DataFrame, keyCol: String, p: Int): DataFrame = {
-    val m = 1 << p
-    val maxRank = 60 - p + 1
-    val regs = hllRegisters(items, keyCol, p)
     val scaledTerm = call_function("shiftleft", lit(1L),
       lit(maxRank) - col("mreg"))
     // Flajolet et al.'s bias constants: the asymptotic alpha_m =
@@ -230,13 +200,13 @@ object Sketch {
       case _  => 0.7213 / (1.0 + 1.079 / m.toDouble)
     })
     val twoMax = math.pow(2.0, maxRank) // 2^maxRank ≤ 2^56: exact double
-    regs
+    regs.groupBy(group: _*)
       .agg(count(lit(1)).as("used"), sum(scaledTerm).as("sum_present"))
-      .select(lit(m).as("m"), col("used"),
+      .select(group ++ Seq(lit(m).as("m"), col("used"),
         (lit(m.toLong) - col("used")).as("zeros"),
         (col("sum_present") +
           (lit(m.toLong) - col("used")) * lit(1L << maxRank))
-          .as("sum_scaled"))
+          .as("sum_scaled")): _*)
       .withColumn("raw",
         alpha * lit(m.toDouble * m) * lit(twoMax) /
           col("sum_scaled").cast("double"))
@@ -246,6 +216,6 @@ object Sketch {
             lit(m.toDouble) *
               log(lit(m.toDouble) / col("zeros").cast("double")))
             .otherwise(col("raw")), 4))
-      .select("m", "used", "zeros", "sum_scaled", "hll_estimate")
+      .drop("raw")
   }
 }

@@ -2,8 +2,8 @@ package graft.plans
 
 import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.api.java.UDF1
-import org.apache.spark.sql.functions.{col, struct, udf}
-import org.apache.spark.sql.types.DoubleType
+import org.apache.spark.sql.functions.{col, inline, struct, udf}
+import org.apache.spark.sql.types.{ArrayType, DoubleType}
 
 /** RANGE-LOOKUP JOIN: enrich a fact table by mapping a numeric column
   * into a SMALL table of non-overlapping `[lo, hi)` intervals — price
@@ -17,10 +17,13 @@ import org.apache.spark.sql.types.DoubleType
   * range side is collected and validated once on the driver, sorted by
   * `lo`, broadcast as three flat arrays, and each fact row
   * binary-searches them inside one UDF — O(|facts|·log m), one pass,
-  * ZERO shuffle of the fact side. The plan is the fact scan plus a
-  * Filter and a Project, so Catalyst's own rules push fact-side
-  * predicates and column pruning down to the scan and the fact side
-  * keeps its partitioning.
+  * ZERO shuffle of the fact side. The UDF returns the matching range
+  * row as a 0-or-1-element array that `inline` expands (a miss emits
+  * no row), so it runs once per fact row: a struct result with an
+  * `isNotNull` filter would run twice, because Catalyst pushes the null
+  * check below the projection that reads the struct. Catalyst's own
+  * rules push fact-side predicates and column pruning through the
+  * Generate down to the scan, and the fact side keeps its partitioning.
   *
   * 100 TB posture: the fact side streams through map-side; the range
   * side must fit on the driver (same contract as any broadcast
@@ -78,11 +81,11 @@ object RangeLookup {
           "ambiguous")
     }
     val bc = facts.sparkSession.sparkContext.broadcast(
-      (entries.map(_._1), entries.map(_._2), entries.map(_._3)))
+      (entries.map(_._1), entries.map(_._2), entries.map(e => Seq(e._3))))
 
-    val lookup = udf(new UDF1[java.lang.Double, Row] {
-      override def call(v: java.lang.Double): Row =
-        if (v == null) null
+    val lookup = udf(new UDF1[java.lang.Double, Seq[Row]] {
+      override def call(v: java.lang.Double): Seq[Row] =
+        if (v == null) Nil
         else {
           val (los, his, rows) = bc.value
           val d = v.doubleValue + 0.0
@@ -90,14 +93,10 @@ object RangeLookup {
           // the overlap check rejects a repeated lo)
           var i = java.util.Arrays.binarySearch(los, d)
           if (i < 0) i = -i - 2
-          if (i >= 0 && d < his(i)) rows(i) else null
+          if (i >= 0 && d < his(i)) rows(i) else Nil
         }
-    }, ranges.schema)
+    }, ArrayType(ranges.schema, containsNull = false))
 
-    val hit = "__range"
-    facts.withColumn(hit, lookup(facts(valueCol).cast(DoubleType)))
-      .filter(col(hit).isNotNull)
-      .select(col("*"), col(s"$hit.*"))
-      .drop(hit)
+    facts.select(col("*"), inline(lookup(facts(valueCol).cast(DoubleType))))
   }
 }

@@ -18,8 +18,6 @@ import graft.operators.{Bpe, Funnel, Fuzzy, History, Lake, Quality, Rank,
   * unique-key ordering).
   */
 object Analytics {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q97
   /** BM25 retrieval ([[Rank.bm25]]): score every document against a
     * 5-term keyword query, top 50. Term matching is a codegen'd isin
@@ -688,41 +686,22 @@ object Analytics {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q260_tokenizer_fertility" -> (q260 _),
-    "q97_bm25" -> (q97 _),
-    "q98_char_entropy" -> (q98 _),
-    "q99_weighted_sample" -> (q99 _),
-    "q100_cms_freq" -> (q100 _),
-    "q101_mad_outliers" -> (q101 _),
-    "q102_distribution_windows" -> (q102 _),
-    "q103_gap_fill" -> (q103 _),
-    "q104_fuzzy_join" -> (q104 _),
-    "q228_blocking_quality" -> (q228 _),
-    "q105_funnel" -> (q105 _),
-    "q106_change_history" -> (q106 _),
-    "q107_markov_transitions" -> (q107 _),
-    "q108_skew_report" -> (q108 _),
-    "q109_bpe_merges" -> (q109 _),
-    "q110_bpe_encode" -> (q110 _),
-    "q111_zorder_key" -> (q111 _))
-
-  val oracles: Map[String, String] = Map(
-    "q260_tokenizer_fertility" -> q260Sql,
-    "q97_bm25" -> q97Sql,
-    "q98_char_entropy" -> q98Sql,
-    "q99_weighted_sample" -> q99Sql,
-    "q100_cms_freq" -> q100Sql,
-    "q101_mad_outliers" -> q101Sql,
-    "q102_distribution_windows" -> q102Sql,
-    "q103_gap_fill" -> q103Sql,
-    "q104_fuzzy_join" -> q104Sql,
-    "q228_blocking_quality" -> q228Sql,
-    "q105_funnel" -> q105Sql,
-    "q106_change_history" -> q106Sql,
-    "q107_markov_transitions" -> q107Sql,
-    "q108_skew_report" -> q108Sql,
-    "q109_bpe_merges" -> q109Sql,
-    "q110_bpe_encode" -> q110Sql,
-    "q111_zorder_key" -> q111Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q260_tokenizer_fertility", q260, q260Sql),
+    Query("q97_bm25", q97, q97Sql),
+    Query("q98_char_entropy", q98, q98Sql),
+    Query("q99_weighted_sample", q99, q99Sql),
+    Query("q100_cms_freq", q100, q100Sql),
+    Query("q101_mad_outliers", q101, q101Sql),
+    Query("q102_distribution_windows", q102, q102Sql),
+    Query("q103_gap_fill", q103, q103Sql),
+    Query("q104_fuzzy_join", q104, q104Sql),
+    Query("q228_blocking_quality", q228, q228Sql),
+    Query("q105_funnel", q105, q105Sql),
+    Query("q106_change_history", q106, q106Sql),
+    Query("q107_markov_transitions", q107, q107Sql),
+    Query("q108_skew_report", q108, q108Sql),
+    Query("q109_bpe_merges", q109, q109Sql),
+    Query("q110_bpe_encode", q110, q110Sql),
+    Query("q111_zorder_key", q111, q111Sql))
 }

@@ -26,8 +26,6 @@ import graft.operators.{Packing, Sampling}
   * orders by a unique key.
   */
 object Curation {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q73
   /** Benchmark decontamination: every 20th document plays the held-out
     * benchmark; the rest of the corpus is scanned for 3-gram overlap
@@ -488,31 +486,17 @@ object Curation {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q73_decontam" -> (q73 _),
-    "q74_gopher_rules" -> (q74 _),
-    "q75_sequence_packing" -> (q75 _),
-    "q76_source_mixing" -> (q76 _),
-    "q77_pii_redaction" -> (q77 _),
-    "q78_zipf_vocab" -> (q78 _),
-    "q79_embedding_quant" -> (q79 _),
-    "q80_stratified_cap" -> (q80 _),
-    "q81_bigram_logprob" -> (q81 _),
-    "q84_incremental_dedup" -> (q84 _),
-    "q86_dup_ngram_frac" -> (q86 _),
-    "q87_token_histogram" -> (q87 _))
-
-  val oracles: Map[String, String] = Map(
-    "q73_decontam" -> q73Sql,
-    "q74_gopher_rules" -> q74Sql,
-    "q75_sequence_packing" -> q75Sql,
-    "q76_source_mixing" -> q76Sql,
-    "q77_pii_redaction" -> q77Sql,
-    "q78_zipf_vocab" -> q78Sql,
-    "q79_embedding_quant" -> q79Sql,
-    "q80_stratified_cap" -> q80Sql,
-    "q81_bigram_logprob" -> q81Sql,
-    "q84_incremental_dedup" -> q84Sql,
-    "q86_dup_ngram_frac" -> q86Sql,
-    "q87_token_histogram" -> q87Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q73_decontam", q73, q73Sql),
+    Query("q74_gopher_rules", q74, q74Sql),
+    Query("q75_sequence_packing", q75, q75Sql),
+    Query("q76_source_mixing", q76, q76Sql),
+    Query("q77_pii_redaction", q77, q77Sql),
+    Query("q78_zipf_vocab", q78, q78Sql),
+    Query("q79_embedding_quant", q79, q79Sql),
+    Query("q80_stratified_cap", q80, q80Sql),
+    Query("q81_bigram_logprob", q81, q81Sql),
+    Query("q84_incremental_dedup", q84, q84Sql),
+    Query("q86_dup_ngram_frac", q86, q86Sql),
+    Query("q87_token_histogram", q87, q87Sql))
 }

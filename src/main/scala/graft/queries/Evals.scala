@@ -28,8 +28,6 @@ import graft.functions.TextFunctions.words
   * is a total order both engines agree on.
   */
 object Evals {
-  type Q = (SparkSession, String) => DataFrame
-
   private val dec = "decimal(38,0)"
 
   // --------------------------------------------------------------- q214
@@ -3370,85 +3368,44 @@ object Evals {
                       * 1e6 + 0.5) / 1e6 END AS eo_gap
        FROM r ORDER BY segment"""
 
-  val queries: Map[String, Q] = Map(
-    "q268_fairness_audit" -> (q268 _),
-    "q270_iv_wald" -> (q270 _),
-    "q276_krippendorff" -> (q276 _),
-    "q278_conformal" -> (q278 _),
-    "q280_markov_accuracy" -> (q280 _),
-    "q214_auc_roc" -> (q214 _),
-    "q215_cohens_kappa" -> (q215 _),
-    "q216_source_divergence" -> (q216 _),
-    "q217_gini_concentration" -> (q217 _),
-    "q218_ann_recall" -> (q218 _),
-    "q219_fdr_bh" -> (q219 _),
-    "q220_markov_attribution" -> (q220 _),
-    "q221_neyman_allocation" -> (q221 _),
-    "q222_bcubed_eval" -> (q222 _),
-    "q223_mi_ranking" -> (q223 _),
-    "q224_pr_curve" -> (q224 _),
-    "q225_spearman" -> (q225 _),
-    "q229_uplift_deciles" -> (q229 _),
-    "q230_hll_intersection" -> (q230 _),
-    "q232_auc_folds" -> (q232 _),
-    "q233_shapley_attribution" -> (q233 _),
-    "q234_ht_estimate" -> (q234 _),
-    "q235_retrieval_eval" -> (q235 _),
-    "q236_emd_drift" -> (q236 _),
-    "q237_lagged_xcorr" -> (q237 _),
-    "q239_qte" -> (q239 _),
-    "q240_feature_drift" -> (q240 _),
-    "q241_aa_control" -> (q241 _),
-    "q244_cmh_stratified" -> (q244 _),
-    "q245_power_mde" -> (q245 _),
-    "q246_chisq_independence" -> (q246 _),
-    "q247_mann_whitney" -> (q247 _),
-    "q248_ndcg" -> (q248 _),
-    "q251_bootstrap_ci" -> (q251 _),
-    "q252_ratio_metric_ci" -> (q252 _),
-    "q253_ipf_raking" -> (q253 _),
-    "q261_two_proportion_z" -> (q261 _),
-    "q262_overdispersion" -> (q262 _),
-    "q263_label_balance" -> (q263 _))
-
-  val oracles: Map[String, String] = Map(
-    "q268_fairness_audit" -> q268Sql,
-    "q270_iv_wald" -> q270Sql,
-    "q276_krippendorff" -> q276Sql,
-    "q278_conformal" -> q278Sql,
-    "q280_markov_accuracy" -> q280Sql,
-    "q214_auc_roc" -> q214Sql,
-    "q215_cohens_kappa" -> q215Sql,
-    "q216_source_divergence" -> q216Sql,
-    "q217_gini_concentration" -> q217Sql,
-    "q218_ann_recall" -> q218Sql,
-    "q219_fdr_bh" -> q219Sql,
-    "q220_markov_attribution" -> q220Sql,
-    "q221_neyman_allocation" -> q221Sql,
-    "q222_bcubed_eval" -> q222Sql,
-    "q223_mi_ranking" -> q223Sql,
-    "q224_pr_curve" -> q224Sql,
-    "q225_spearman" -> q225Sql,
-    "q229_uplift_deciles" -> q229Sql,
-    "q230_hll_intersection" -> q230Sql,
-    "q232_auc_folds" -> q232Sql,
-    "q233_shapley_attribution" -> q233Sql,
-    "q234_ht_estimate" -> q234Sql,
-    "q235_retrieval_eval" -> q235Sql,
-    "q236_emd_drift" -> q236Sql,
-    "q237_lagged_xcorr" -> q237Sql,
-    "q239_qte" -> q239Sql,
-    "q240_feature_drift" -> q240Sql,
-    "q241_aa_control" -> q241Sql,
-    "q244_cmh_stratified" -> q244Sql,
-    "q245_power_mde" -> q245Sql,
-    "q246_chisq_independence" -> q246Sql,
-    "q247_mann_whitney" -> q247Sql,
-    "q248_ndcg" -> q248Sql,
-    "q251_bootstrap_ci" -> q251Sql,
-    "q252_ratio_metric_ci" -> q252Sql,
-    "q253_ipf_raking" -> q253Sql,
-    "q261_two_proportion_z" -> q261Sql,
-    "q262_overdispersion" -> q262Sql,
-    "q263_label_balance" -> q263Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q268_fairness_audit", q268, q268Sql),
+    Query("q270_iv_wald", q270, q270Sql),
+    Query("q276_krippendorff", q276, q276Sql),
+    Query("q278_conformal", q278, q278Sql),
+    Query("q280_markov_accuracy", q280, q280Sql),
+    Query("q214_auc_roc", q214, q214Sql),
+    Query("q215_cohens_kappa", q215, q215Sql),
+    Query("q216_source_divergence", q216, q216Sql),
+    Query("q217_gini_concentration", q217, q217Sql),
+    Query("q218_ann_recall", q218, q218Sql),
+    Query("q219_fdr_bh", q219, q219Sql),
+    Query("q220_markov_attribution", q220, q220Sql),
+    Query("q221_neyman_allocation", q221, q221Sql),
+    Query("q222_bcubed_eval", q222, q222Sql),
+    Query("q223_mi_ranking", q223, q223Sql),
+    Query("q224_pr_curve", q224, q224Sql),
+    Query("q225_spearman", q225, q225Sql),
+    Query("q229_uplift_deciles", q229, q229Sql),
+    Query("q230_hll_intersection", q230, q230Sql),
+    Query("q232_auc_folds", q232, q232Sql),
+    Query("q233_shapley_attribution", q233, q233Sql),
+    Query("q234_ht_estimate", q234, q234Sql),
+    Query("q235_retrieval_eval", q235, q235Sql),
+    Query("q236_emd_drift", q236, q236Sql),
+    Query("q237_lagged_xcorr", q237, q237Sql),
+    Query("q239_qte", q239, q239Sql),
+    Query("q240_feature_drift", q240, q240Sql),
+    Query("q241_aa_control", q241, q241Sql),
+    Query("q244_cmh_stratified", q244, q244Sql),
+    Query("q245_power_mde", q245, q245Sql),
+    Query("q246_chisq_independence", q246, q246Sql),
+    Query("q247_mann_whitney", q247, q247Sql),
+    Query("q248_ndcg", q248, q248Sql),
+    Query("q251_bootstrap_ci", q251, q251Sql),
+    Query("q252_ratio_metric_ci", q252, q252Sql),
+    Query("q253_ipf_raking", q253, q253Sql),
+    Query("q261_two_proportion_z", q261, q261Sql),
+    Query("q262_overdispersion", q262, q262Sql),
+    Query("q263_label_balance", q263, q263Sql))
 }

@@ -18,8 +18,6 @@ import graft.operators.{Assoc, Chunks, Dedup, Experiment, Fuzzy, Graph,
   * unique-key ordering).
   */
 object Insights {
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q112
   /** Blocked sorted-neighborhood linkage ([[Fuzzy.sortedNeighborhoodPairs]]):
     * DISTINCT part names (min-partkey representative) plus, for every
@@ -3248,133 +3246,68 @@ object Insights {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q279_boosted_stumps" -> (q279 _),
-    "q258_forecast_backtest" -> (q258 _),
-    "q243_benford_audit" -> (q243 _),
-    "q250_theil_sen" -> (q250 _),
-    "q254_weighted_quantiles" -> (q254 _),
-    "q255_durbin_watson" -> (q255 _),
-    "q256_jl_projection" -> (q256 _),
-    "q177_streaming_hll" -> (q177 _),
-    "q178_hits" -> (q178 _),
-    "q179_attribution" -> (q179 _),
-    "q180_hll_intersection" -> (q180 _),
-    "q190_calibration" -> (q190 _),
-    "q338_brier_decomposition" -> (q338 _),
-    "q238_calibration_error" -> (q238 _),
-    "q162_logreg_gd" -> (q162 _),
-    "q163_adamic_adar" -> (q163 _),
-    "q164_decision_stump" -> (q164 _),
-    "q165_hll_rollup" -> (q165 _),
-    "q166_golden_record" -> (q166 _),
-    "q167_semdedup" -> (q167 _),
-    "q168_cusum_changepoint" -> (q168 _),
-    "q169_mixture_weights" -> (q169 _),
-    "q170_iterative_median" -> (q170 _),
-    "q171_source_overlap" -> (q171 _),
-    "q172_rolling_corr" -> (q172 _),
-    "q173_feature_ranking" -> (q173 _),
-    "q174_holt_forecast" -> (q174 _),
-    "q175_rolling_uniques" -> (q175 _),
-    "q176_personalized_pagerank" -> (q176 _),
-    "q112_snm_linkage" -> (q112 _),
-    "q113_retention_cohorts" -> (q113 _),
-    "q114_rolling_anomaly" -> (q114 _),
-    "q115_rrf_fusion" -> (q115 _),
-    "q116_rag_chunks" -> (q116 _),
-    "q117_equidepth_hist" -> (q117 _),
-    "q118_triangle_count" -> (q118 _),
-    "q119_selfjoin_forecast" -> (q119 _),
-    "q120_welch_ab" -> (q120 _),
-    "q121_hard_negatives" -> (q121 _),
-    "q122_snapshot_diff" -> (q122 _),
-    "q123_label_propagation" -> (q123 _),
-    "q124_psi_drift" -> (q124 _),
-    "q158_ks_drift" -> (q158 _),
-    "q160_jw_linkage" -> (q160 _),
-    "q161_bfs_hops" -> (q161 _),
-    "q125_top_paths" -> (q125 _),
-    "q126_srm_check" -> (q126 _),
-    "q127_containment" -> (q127 _),
-    "q152_repeated_passages" -> (q152 _),
-    "q128_negative_sample" -> (q128 _),
-    "q129_pmi_pairs" -> (q129 _),
-    "q130_seasonality" -> (q130 _),
-    "q131_skipgram_pmi" -> (q131 _),
-    "q132_vocab_coverage" -> (q132 _),
-    "q133_hll_distinct" -> (q133 _),
-    "q134_ridge_regression" -> (q134 _),
-    "q135_percentile_bands" -> (q135 _),
-    "q136_rfm_segmentation" -> (q136 _),
-    "q137_dedup_eval" -> (q137 _),
-    "q138_trigram_interp" -> (q138 _),
-    "q139_centroid_similarity" -> (q139 _),
-    "q140_ridge_two_feature" -> (q140 _),
-    "q141_source_report" -> (q141 _))
-
-  val oracles: Map[String, String] = Map(
-    "q258_forecast_backtest" -> q258Sql,
-    "q243_benford_audit" -> q243Sql,
-    "q250_theil_sen" -> q250Sql,
-    "q254_weighted_quantiles" -> q254Sql,
-    "q255_durbin_watson" -> q255Sql,
-    "q256_jl_projection" -> q256Sql,
-    "q177_streaming_hll" -> q177Sql,
-    "q178_hits" -> q178Sql,
-    "q179_attribution" -> q179Sql,
-    "q180_hll_intersection" -> q180Sql,
-    "q190_calibration" -> q190Sql,
-    "q338_brier_decomposition" -> q338Sql,
-    "q238_calibration_error" -> q238Sql,
-    "q162_logreg_gd" -> q162Sql,
-    "q163_adamic_adar" -> q163Sql,
-    "q164_decision_stump" -> q164Sql,
-    "q279_boosted_stumps" -> q279Sql,
-    "q165_hll_rollup" -> q165Sql,
-    "q166_golden_record" -> q166Sql,
-    "q167_semdedup" -> q167Sql,
-    "q168_cusum_changepoint" -> q168Sql,
-    "q169_mixture_weights" -> q169Sql,
-    "q170_iterative_median" -> q170Sql,
-    "q171_source_overlap" -> q171Sql,
-    "q172_rolling_corr" -> q172Sql,
-    "q173_feature_ranking" -> q173Sql,
-    "q174_holt_forecast" -> q174Sql,
-    "q175_rolling_uniques" -> q175Sql,
-    "q176_personalized_pagerank" -> q176Sql,
-    "q112_snm_linkage" -> q112Sql,
-    "q113_retention_cohorts" -> q113Sql,
-    "q114_rolling_anomaly" -> q114Sql,
-    "q115_rrf_fusion" -> q115Sql,
-    "q116_rag_chunks" -> q116Sql,
-    "q117_equidepth_hist" -> q117Sql,
-    "q118_triangle_count" -> q118Sql,
-    "q119_selfjoin_forecast" -> q119Sql,
-    "q120_welch_ab" -> q120Sql,
-    "q121_hard_negatives" -> q121Sql,
-    "q122_snapshot_diff" -> q122Sql,
-    "q123_label_propagation" -> q123Sql,
-    "q124_psi_drift" -> q124Sql,
-    "q158_ks_drift" -> q158Sql,
-    "q160_jw_linkage" -> q160Sql,
-    "q161_bfs_hops" -> q161Sql,
-    "q125_top_paths" -> q125Sql,
-    "q126_srm_check" -> q126Sql,
-    "q127_containment" -> q127Sql,
-    "q152_repeated_passages" -> q152Sql,
-    "q128_negative_sample" -> q128Sql,
-    "q129_pmi_pairs" -> q129Sql,
-    "q130_seasonality" -> q130Sql,
-    "q131_skipgram_pmi" -> q131Sql,
-    "q132_vocab_coverage" -> q132Sql,
-    "q133_hll_distinct" -> q133Sql,
-    "q134_ridge_regression" -> q134Sql,
-    "q135_percentile_bands" -> q135Sql,
-    "q136_rfm_segmentation" -> q136Sql,
-    "q137_dedup_eval" -> q137Sql,
-    "q138_trigram_interp" -> q138Sql,
-    "q139_centroid_similarity" -> q139Sql,
-    "q140_ridge_two_feature" -> q140Sql,
-    "q141_source_report" -> q141Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q279_boosted_stumps", q279, q279Sql),
+    Query("q258_forecast_backtest", q258, q258Sql),
+    Query("q243_benford_audit", q243, q243Sql),
+    Query("q250_theil_sen", q250, q250Sql),
+    Query("q254_weighted_quantiles", q254, q254Sql),
+    Query("q255_durbin_watson", q255, q255Sql),
+    Query("q256_jl_projection", q256, q256Sql),
+    Query("q177_streaming_hll", q177, q177Sql),
+    Query("q178_hits", q178, q178Sql),
+    Query("q179_attribution", q179, q179Sql),
+    Query("q180_hll_intersection", q180, q180Sql),
+    Query("q190_calibration", q190, q190Sql),
+    Query("q338_brier_decomposition", q338, q338Sql),
+    Query("q238_calibration_error", q238, q238Sql),
+    Query("q162_logreg_gd", q162, q162Sql),
+    Query("q163_adamic_adar", q163, q163Sql),
+    Query("q164_decision_stump", q164, q164Sql),
+    Query("q165_hll_rollup", q165, q165Sql),
+    Query("q166_golden_record", q166, q166Sql),
+    Query("q167_semdedup", q167, q167Sql),
+    Query("q168_cusum_changepoint", q168, q168Sql),
+    Query("q169_mixture_weights", q169, q169Sql),
+    Query("q170_iterative_median", q170, q170Sql),
+    Query("q171_source_overlap", q171, q171Sql),
+    Query("q172_rolling_corr", q172, q172Sql),
+    Query("q173_feature_ranking", q173, q173Sql),
+    Query("q174_holt_forecast", q174, q174Sql),
+    Query("q175_rolling_uniques", q175, q175Sql),
+    Query("q176_personalized_pagerank", q176, q176Sql),
+    Query("q112_snm_linkage", q112, q112Sql),
+    Query("q113_retention_cohorts", q113, q113Sql),
+    Query("q114_rolling_anomaly", q114, q114Sql),
+    Query("q115_rrf_fusion", q115, q115Sql),
+    Query("q116_rag_chunks", q116, q116Sql),
+    Query("q117_equidepth_hist", q117, q117Sql),
+    Query("q118_triangle_count", q118, q118Sql),
+    Query("q119_selfjoin_forecast", q119, q119Sql),
+    Query("q120_welch_ab", q120, q120Sql),
+    Query("q121_hard_negatives", q121, q121Sql),
+    Query("q122_snapshot_diff", q122, q122Sql),
+    Query("q123_label_propagation", q123, q123Sql),
+    Query("q124_psi_drift", q124, q124Sql),
+    Query("q158_ks_drift", q158, q158Sql),
+    Query("q160_jw_linkage", q160, q160Sql),
+    Query("q161_bfs_hops", q161, q161Sql),
+    Query("q125_top_paths", q125, q125Sql),
+    Query("q126_srm_check", q126, q126Sql),
+    Query("q127_containment", q127, q127Sql),
+    Query("q152_repeated_passages", q152, q152Sql),
+    Query("q128_negative_sample", q128, q128Sql),
+    Query("q129_pmi_pairs", q129, q129Sql),
+    Query("q130_seasonality", q130, q130Sql),
+    Query("q131_skipgram_pmi", q131, q131Sql),
+    Query("q132_vocab_coverage", q132, q132Sql),
+    Query("q133_hll_distinct", q133, q133Sql),
+    Query("q134_ridge_regression", q134, q134Sql),
+    Query("q135_percentile_bands", q135, q135Sql),
+    Query("q136_rfm_segmentation", q136, q136Sql),
+    Query("q137_dedup_eval", q137, q137Sql),
+    Query("q138_trigram_interp", q138, q138Sql),
+    Query("q139_centroid_similarity", q139, q139Sql),
+    Query("q140_ridge_two_feature", q140, q140Sql),
+    Query("q141_source_report", q141, q141Sql))
 }

@@ -23,8 +23,6 @@ import graft.functions.TextFunctions.words
   * quantization), total-order ranks on every top-k.
   */
 object Lifecycle {
-  type Q = (SparkSession, String) => DataFrame
-
 
   // --------------------------------------------------------------- q205
   /** Kaplan-Meier survival curve over customer lifetimes (orders
@@ -1710,41 +1708,22 @@ object Lifecycle {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q259_late_data_audit" -> (q259 _),
-    "q231_streaming_tws" -> (q231 _),
-    "q226_streaming_dedup" -> (q226 _),
-    "q211_streaming_sessions" -> (q211 _),
-    "q212_perplexity_filter" -> (q212 _),
-    "q213_split_leakage" -> (q213 _),
-    "q205_kaplan_meier" -> (q205 _),
-    "q206_assoc_rules" -> (q206 _),
-    "q207_kcore" -> (q207 _),
-    "q208_dsir_weights" -> (q208 _),
-    "q209_diff_in_diff" -> (q209 _),
-    "q210_l_diversity" -> (q210 _),
-    "q265_t_closeness" -> (q265 _),
-    "q266_logrank" -> (q266 _),
-    "q277_checkpoint_recovery" -> (q277 _),
-    "q302_cox_ph" -> (q302 _),
-    "q305_rmst" -> (q305 _))
-
-  val oracles: Map[String, String] = Map(
-    "q259_late_data_audit" -> q259Sql,
-    "q231_streaming_tws" -> q231Sql,
-    "q226_streaming_dedup" -> q226Sql,
-    "q211_streaming_sessions" -> q211Sql,
-    "q212_perplexity_filter" -> q212Sql,
-    "q213_split_leakage" -> q213Sql,
-    "q205_kaplan_meier" -> q205Sql,
-    "q206_assoc_rules" -> q206Sql,
-    "q207_kcore" -> q207Sql,
-    "q208_dsir_weights" -> q208Sql,
-    "q209_diff_in_diff" -> q209Sql,
-    "q210_l_diversity" -> q210Sql,
-    "q265_t_closeness" -> q265Sql,
-    "q266_logrank" -> q266Sql,
-    "q277_checkpoint_recovery" -> q277Sql,
-    "q302_cox_ph" -> q302Sql,
-    "q305_rmst" -> q305Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q259_late_data_audit", q259, q259Sql),
+    Query("q231_streaming_tws", q231, q231Sql),
+    Query("q226_streaming_dedup", q226, q226Sql),
+    Query("q211_streaming_sessions", q211, q211Sql),
+    Query("q212_perplexity_filter", q212, q212Sql),
+    Query("q213_split_leakage", q213, q213Sql),
+    Query("q205_kaplan_meier", q205, q205Sql),
+    Query("q206_assoc_rules", q206, q206Sql),
+    Query("q207_kcore", q207, q207Sql),
+    Query("q208_dsir_weights", q208, q208Sql),
+    Query("q209_diff_in_diff", q209, q209Sql),
+    Query("q210_l_diversity", q210, q210Sql),
+    Query("q265_t_closeness", q265, q265Sql),
+    Query("q266_logrank", q266, q266Sql),
+    Query("q277_checkpoint_recovery", q277, q277Sql),
+    Query("q302_cox_ph", q302, q302Sql),
+    Query("q305_rmst", q305, q305Sql))
 }

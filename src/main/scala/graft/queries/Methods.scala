@@ -28,8 +28,6 @@ import graft.operators.{Quality, Rank, Sampling}
   * label×dim) in ONE scan before any window/self-join runs.
   */
 object Methods {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Floor a divisor away from zero INSIDE the division (ANSI + CSE
     * hazard — see the object Scaladoc); mirrored as
     * `greatest(x, 1e-12)` on the oracle side. */
@@ -2760,71 +2758,37 @@ object Methods {
        FROM nrm"""
 
   // ------------------------------------------------------------ registry
-  val queries: Map[String, Q] = Map(
-    "q281_mcnemar" -> (q281 _),
-    "q282_ljung_box" -> (q282 _),
-    "q283_segmented_trend" -> (q283 _),
-    "q284_kendall_tau" -> (q284 _),
-    "q285_cramers_v" -> (q285 _),
-    "q286_msprt" -> (q286 _),
-    "q287_silhouette" -> (q287 _),
-    "q288_brown_forsythe" -> (q288 _),
-    "q289_partial_corr" -> (q289 _),
-    "q290_seasonal_decompose" -> (q290 _),
-    "q292_token_budget_fill" -> (q292 _),
-    "q293_largest_remainder" -> (q293 _),
-    "q294_drawdown" -> (q294 _),
-    "q295_cohens_d" -> (q295 _),
-    "q296_cochran_armitage" -> (q296 _),
-    "q297_mann_kendall" -> (q297 _),
-    "q298_unseen_mass" -> (q298 _),
-    "q299_heaps_law" -> (q299 _),
-    "q300_isotonic_calibration" -> (q300 _),
-    "q301_pareto_frontier" -> (q301 _),
-    "q303_bradley_terry" -> (q303 _),
-    "q304_rbo_overlap" -> (q304 _),
-    "q306_kneser_ney" -> (q306 _),
-    "q307_loso_influence" -> (q307 _),
-    "q308_cka_quantization" -> (q308 _),
-    "q309_greedy_coverage" -> (q309 _),
-    "q310_snips_offpolicy" -> (q310 _),
-    "q311_caliper_matching" -> (q311 _),
-    "q312_doubly_robust" -> (q312 _),
-    "q313_nelson_aalen" -> (q313 _),
-    "q314_effective_rank" -> (q314 _),
-    "q351_seasonal_strength" -> (q351 _))
-
-  val oracles: Map[String, String] = Map(
-    "q281_mcnemar" -> q281Sql,
-    "q282_ljung_box" -> q282Sql,
-    "q283_segmented_trend" -> q283Sql,
-    "q284_kendall_tau" -> q284Sql,
-    "q285_cramers_v" -> q285Sql,
-    "q286_msprt" -> q286Sql,
-    "q287_silhouette" -> q287Sql,
-    "q288_brown_forsythe" -> q288Sql,
-    "q289_partial_corr" -> q289Sql,
-    "q290_seasonal_decompose" -> q290Sql,
-    "q292_token_budget_fill" -> q292Sql,
-    "q293_largest_remainder" -> q293Sql,
-    "q294_drawdown" -> q294Sql,
-    "q295_cohens_d" -> q295Sql,
-    "q296_cochran_armitage" -> q296Sql,
-    "q297_mann_kendall" -> q297Sql,
-    "q298_unseen_mass" -> q298Sql,
-    "q299_heaps_law" -> q299Sql,
-    "q300_isotonic_calibration" -> q300Sql,
-    "q301_pareto_frontier" -> q301Sql,
-    "q303_bradley_terry" -> q303Sql,
-    "q304_rbo_overlap" -> q304Sql,
-    "q306_kneser_ney" -> q306Sql,
-    "q307_loso_influence" -> q307Sql,
-    "q308_cka_quantization" -> q308Sql,
-    "q309_greedy_coverage" -> q309Sql,
-    "q310_snips_offpolicy" -> q310Sql,
-    "q311_caliper_matching" -> q311Sql,
-    "q312_doubly_robust" -> q312Sql,
-    "q313_nelson_aalen" -> q313Sql,
-    "q314_effective_rank" -> q314Sql,
-    "q351_seasonal_strength" -> q351Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q281_mcnemar", q281, q281Sql),
+    Query("q282_ljung_box", q282, q282Sql),
+    Query("q283_segmented_trend", q283, q283Sql),
+    Query("q284_kendall_tau", q284, q284Sql),
+    Query("q285_cramers_v", q285, q285Sql),
+    Query("q286_msprt", q286, q286Sql),
+    Query("q287_silhouette", q287, q287Sql),
+    Query("q288_brown_forsythe", q288, q288Sql),
+    Query("q289_partial_corr", q289, q289Sql),
+    Query("q290_seasonal_decompose", q290, q290Sql),
+    Query("q292_token_budget_fill", q292, q292Sql),
+    Query("q293_largest_remainder", q293, q293Sql),
+    Query("q294_drawdown", q294, q294Sql),
+    Query("q295_cohens_d", q295, q295Sql),
+    Query("q296_cochran_armitage", q296, q296Sql),
+    Query("q297_mann_kendall", q297, q297Sql),
+    Query("q298_unseen_mass", q298, q298Sql),
+    Query("q299_heaps_law", q299, q299Sql),
+    Query("q300_isotonic_calibration", q300, q300Sql),
+    Query("q301_pareto_frontier", q301, q301Sql),
+    Query("q303_bradley_terry", q303, q303Sql),
+    Query("q304_rbo_overlap", q304, q304Sql),
+    Query("q306_kneser_ney", q306, q306Sql),
+    Query("q307_loso_influence", q307, q307Sql),
+    Query("q308_cka_quantization", q308, q308Sql),
+    Query("q309_greedy_coverage", q309, q309Sql),
+    Query("q310_snips_offpolicy", q310, q310Sql),
+    Query("q311_caliper_matching", q311, q311Sql),
+    Query("q312_doubly_robust", q312, q312Sql),
+    Query("q313_nelson_aalen", q313, q313Sql),
+    Query("q314_effective_rank", q314, q314Sql),
+    Query("q351_seasonal_strength", q351, q351Sql))
 }

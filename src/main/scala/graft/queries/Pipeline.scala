@@ -21,8 +21,6 @@ import graft.operators.{Dedup, MediaFile, Multimodal, Sampling, Similarity}
   * Scala) get the driver's rows-only check plus ScalaTest coverage.
   */
 object Pipeline {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q30
   /** Corpus statistics per (lang, source). */
   private def q30(s: SparkSession, d: String): DataFrame =
@@ -1573,81 +1571,42 @@ object Pipeline {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q269_lof_outliers" -> (q269 _),
-    "q273_nfc_audit" -> (q273 _),
-    "q274_mutual_nn" -> (q274 _),
-    "q275_embargo_split" -> (q275 _),
-    "q249_readability" -> (q249 _),
-    "q257_multimodal_resize" -> (q257 _),
-    "q264_cluster_safe_split" -> (q264 _),
-    "q291_dedup_discounted_mix" -> (q291 _),
-    "q315_lsh_planner" -> (q315 _),
-    "q30_text_stats" -> (q30 _),
-    "q31_token_counts" -> (q31 _),
-    "q32_quality_score" -> (q32 _),
-    "q33_lang_id" -> (q33 _),
-    "q34_fingerprint" -> (q34 _),
-    "q35_dedup_exact" -> (q35 _),
-    "q36_dedup_minhash" -> (q36 _),
-    "q37_dedup_simhash" -> (q37 _),
-    "q38_ngram_jaccard" -> (q38 _),
-    "q39_embedding_neardup" -> (q39 _),
-    "q40_knn_bruteforce" -> (q40 _),
-    "q41_knn_lsh" -> (q41 _),
-    "q42_multimodal_frames" -> (q42 _),
-    "q43_multimodal_decode" -> (q43 _),
-    "q44_embedding_centroids" -> (q44 _),
-    "q47_rolling_fingerprint" -> (q47 _),
-    "q52_knn_ivf" -> (q52 _),
-    "q53_embedding_neardup_lsh" -> (q53 _),
-    "q59_multimodal_ppm" -> (q59 _),
-    "q142_multimodal_png" -> (q142 _),
-    "q146_multimodal_jpeg" -> (q146 _),
-    "q147_multimodal_adpcm" -> (q147 _),
-    "q155_multimodal_y4m" -> (q155 _),
-    "q60_tfidf" -> (q60 _),
-    "q69_dataset_split" -> (q69 _),
-    "q70_text_cleanup" -> (q70 _),
-    "q71_dedup_clusters" -> (q71 _),
-    "q72_unigram_logprob" -> (q72 _))
-
-  val oracles: Map[String, String] = Map(
-    "q269_lof_outliers" -> q269Sql,
-    "q273_nfc_audit" -> q273Sql,
-    "q274_mutual_nn" -> q274Sql,
-    "q275_embargo_split" -> q275Sql,
-    "q249_readability" -> q249Sql,
-    "q257_multimodal_resize" -> q257Sql,
-    "q264_cluster_safe_split" -> q264Sql,
-    "q291_dedup_discounted_mix" -> q291Sql,
-    "q315_lsh_planner" -> q315Sql,
-    "q30_text_stats" -> q30Sql,
-    "q31_token_counts" -> q31Sql,
-    "q32_quality_score" -> q32Sql,
-    "q33_lang_id" -> q33Sql,
-    "q34_fingerprint" -> q34Sql,
-    "q35_dedup_exact" -> q35Sql,
-    "q36_dedup_minhash" -> q36Sql,
-    "q37_dedup_simhash" -> q37Sql,
-    "q38_ngram_jaccard" -> q38Sql,
-    "q39_embedding_neardup" -> q39Sql,
-    "q40_knn_bruteforce" -> q40Sql,
-    "q41_knn_lsh" -> q41Sql,
-    "q42_multimodal_frames" -> q42Sql,
-    "q43_multimodal_decode" -> q43Sql,
-    "q44_embedding_centroids" -> q44Sql,
-    "q47_rolling_fingerprint" -> q47Sql,
-    "q52_knn_ivf" -> q52Sql,
-    "q53_embedding_neardup_lsh" -> q53Sql,
-    "q59_multimodal_ppm" -> q59Sql,
-    "q142_multimodal_png" -> q142Sql,
-    "q146_multimodal_jpeg" -> q146Sql,
-    "q147_multimodal_adpcm" -> q147Sql,
-    "q155_multimodal_y4m" -> q155Sql,
-    "q60_tfidf" -> q60Sql,
-    "q69_dataset_split" -> q69Sql,
-    "q70_text_cleanup" -> q70Sql,
-    "q71_dedup_clusters" -> q71Sql,
-    "q72_unigram_logprob" -> q72Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q269_lof_outliers", q269, q269Sql),
+    Query("q273_nfc_audit", q273, q273Sql),
+    Query("q274_mutual_nn", q274, q274Sql),
+    Query("q275_embargo_split", q275, q275Sql),
+    Query("q249_readability", q249, q249Sql),
+    Query("q257_multimodal_resize", q257, q257Sql),
+    Query("q264_cluster_safe_split", q264, q264Sql),
+    Query("q291_dedup_discounted_mix", q291, q291Sql),
+    Query("q315_lsh_planner", q315, q315Sql),
+    Query("q30_text_stats", q30, q30Sql),
+    Query("q31_token_counts", q31, q31Sql),
+    Query("q32_quality_score", q32, q32Sql),
+    Query("q33_lang_id", q33, q33Sql),
+    Query("q34_fingerprint", q34, q34Sql),
+    Query("q35_dedup_exact", q35, q35Sql),
+    Query("q36_dedup_minhash", q36, q36Sql),
+    Query("q37_dedup_simhash", q37, q37Sql),
+    Query("q38_ngram_jaccard", q38, q38Sql),
+    Query("q39_embedding_neardup", q39, q39Sql),
+    Query("q40_knn_bruteforce", q40, q40Sql),
+    Query("q41_knn_lsh", q41, q41Sql),
+    Query("q42_multimodal_frames", q42, q42Sql),
+    Query("q43_multimodal_decode", q43, q43Sql),
+    Query("q44_embedding_centroids", q44, q44Sql),
+    Query("q47_rolling_fingerprint", q47, q47Sql),
+    Query("q52_knn_ivf", q52, q52Sql),
+    Query("q53_embedding_neardup_lsh", q53, q53Sql),
+    Query("q59_multimodal_ppm", q59, q59Sql),
+    Query("q142_multimodal_png", q142, q142Sql),
+    Query("q146_multimodal_jpeg", q146, q146Sql),
+    Query("q147_multimodal_adpcm", q147, q147Sql),
+    Query("q155_multimodal_y4m", q155, q155Sql),
+    Query("q60_tfidf", q60, q60Sql),
+    Query("q69_dataset_split", q69, q69Sql),
+    Query("q70_text_cleanup", q70, q70Sql),
+    Query("q71_dedup_clusters", q71, q71Sql),
+    Query("q72_unigram_logprob", q72, q72Sql))
 }

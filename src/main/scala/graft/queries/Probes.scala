@@ -34,8 +34,6 @@ import graft.Tables
   * are either PARTITIONed by group or run on calendar-bounded tables.
   */
 object Probes {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Floor a divisor away from zero INSIDE the division; mirrored as
     * `greatest(x, 1e-12)` on the oracle side. */
   private def safe(c: Column): Column = greatest(c, lit(1e-12))
@@ -2667,71 +2665,37 @@ object Probes {
          AND est.flag = wt.flag AND est.status = wt.status
        ORDER BY est.level, est.flag, est.status"""
 
-  val queries: Map[String, Q] = Map(
-    "q383_weighted_sketch_rollup" -> (q383 _),
-    "q352_mood_scale" -> (q352 _),
-    "q353_cvm_two_sample" -> (q353 _),
-    "q354_pettitt_changepoint" -> (q354 _),
-    "q355_pacf" -> (q355 _),
-    "q356_granger" -> (q356 _),
-    "q357_chow_break" -> (q357 _),
-    "q358_cronbach_alpha" -> (q358 _),
-    "q359_icc" -> (q359 _),
-    "q360_cochran_q" -> (q360 _),
-    "q361_kendalls_w" -> (q361 _),
-    "q362_fuzzy_decontam" -> (q362 _),
-    "q363_canonical_dedup" -> (q363 _),
-    "q364_theils_u" -> (q364 _),
-    "q365_stuart_maxwell" -> (q365 _),
-    "q366_yuen_trimmed" -> (q366 _),
-    "q367_grubbs_outlier" -> (q367 _),
-    "q368_duplication_profile" -> (q368 _),
-    "q369_term_dispersion" -> (q369 _),
-    "q370_prefix_sharing" -> (q370 _),
-    "q371_bowker_symmetry" -> (q371 _),
-    "q372_jonckheere" -> (q372 _),
-    "q373_cliffs_delta" -> (q373 _),
-    "q374_sign_test" -> (q374 _),
-    "q375_median_test" -> (q375 _),
-    "q376_cross_lingual_dup" -> (q376 _),
-    "q377_dup_selection_bias" -> (q377 _),
-    "q378_ngram_entropy" -> (q378 _),
-    "q379_pipeline_order_bias" -> (q379 _),
-    "q380_ann_lake_roundtrip" -> (q380 _),
-    "q381_lsh_recall" -> (q381 _),
-    "q382_quantile_sketch_rollup" -> (q382 _))
-
-  val oracles: Map[String, String] = Map(
-    "q352_mood_scale" -> q352Sql,
-    "q353_cvm_two_sample" -> q353Sql,
-    "q354_pettitt_changepoint" -> q354Sql,
-    "q355_pacf" -> q355Sql,
-    "q356_granger" -> q356Sql,
-    "q357_chow_break" -> q357Sql,
-    "q358_cronbach_alpha" -> q358Sql,
-    "q359_icc" -> q359Sql,
-    "q360_cochran_q" -> q360Sql,
-    "q361_kendalls_w" -> q361Sql,
-    "q362_fuzzy_decontam" -> q362Sql,
-    "q363_canonical_dedup" -> q363Sql,
-    "q364_theils_u" -> q364Sql,
-    "q365_stuart_maxwell" -> q365Sql,
-    "q366_yuen_trimmed" -> q366Sql,
-    "q367_grubbs_outlier" -> q367Sql,
-    "q368_duplication_profile" -> q368Sql,
-    "q369_term_dispersion" -> q369Sql,
-    "q370_prefix_sharing" -> q370Sql,
-    "q371_bowker_symmetry" -> q371Sql,
-    "q372_jonckheere" -> q372Sql,
-    "q373_cliffs_delta" -> q373Sql,
-    "q374_sign_test" -> q374Sql,
-    "q375_median_test" -> q375Sql,
-    "q376_cross_lingual_dup" -> q376Sql,
-    "q377_dup_selection_bias" -> q377Sql,
-    "q378_ngram_entropy" -> q378Sql,
-    "q379_pipeline_order_bias" -> q379Sql,
-    "q380_ann_lake_roundtrip" -> q380Sql,
-    "q381_lsh_recall" -> q381Sql,
-    "q382_quantile_sketch_rollup" -> q382Sql,
-    "q383_weighted_sketch_rollup" -> q383Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q383_weighted_sketch_rollup", q383, q383Sql),
+    Query("q352_mood_scale", q352, q352Sql),
+    Query("q353_cvm_two_sample", q353, q353Sql),
+    Query("q354_pettitt_changepoint", q354, q354Sql),
+    Query("q355_pacf", q355, q355Sql),
+    Query("q356_granger", q356, q356Sql),
+    Query("q357_chow_break", q357, q357Sql),
+    Query("q358_cronbach_alpha", q358, q358Sql),
+    Query("q359_icc", q359, q359Sql),
+    Query("q360_cochran_q", q360, q360Sql),
+    Query("q361_kendalls_w", q361, q361Sql),
+    Query("q362_fuzzy_decontam", q362, q362Sql),
+    Query("q363_canonical_dedup", q363, q363Sql),
+    Query("q364_theils_u", q364, q364Sql),
+    Query("q365_stuart_maxwell", q365, q365Sql),
+    Query("q366_yuen_trimmed", q366, q366Sql),
+    Query("q367_grubbs_outlier", q367, q367Sql),
+    Query("q368_duplication_profile", q368, q368Sql),
+    Query("q369_term_dispersion", q369, q369Sql),
+    Query("q370_prefix_sharing", q370, q370Sql),
+    Query("q371_bowker_symmetry", q371, q371Sql),
+    Query("q372_jonckheere", q372, q372Sql),
+    Query("q373_cliffs_delta", q373, q373Sql),
+    Query("q374_sign_test", q374, q374Sql),
+    Query("q375_median_test", q375, q375Sql),
+    Query("q376_cross_lingual_dup", q376, q376Sql),
+    Query("q377_dup_selection_bias", q377, q377Sql),
+    Query("q378_ngram_entropy", q378, q378Sql),
+    Query("q379_pipeline_order_bias", q379, q379Sql),
+    Query("q380_ann_lake_roundtrip", q380, q380Sql),
+    Query("q381_lsh_recall", q381, q381Sql),
+    Query("q382_quantile_sketch_rollup", q382, q382Sql))
 }

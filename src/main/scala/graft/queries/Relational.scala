@@ -25,8 +25,6 @@ import graft.functions.Rounding
   *    name before hashing).
   */
 object Relational {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q01
   /** TPC-H Q1-style pricing summary: scan → filter → hash agg. */
   private def q01(s: SparkSession, d: String): DataFrame =
@@ -1882,133 +1880,68 @@ object Relational {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q82_salted_join" -> (q82 _),
-    "q83_ols_multi" -> (q83 _),
-    "q85_range_frame" -> (q85 _),
-    "q01_pricing_summary" -> (q01 _),
-    "q02_filter_project" -> (q02 _),
-    "q03_top_revenue_orders" -> (q03 _),
-    "q04_semi_join_priority" -> (q04 _),
-    "q05_star_join_revenue" -> (q05 _),
-    "q06_forecast_revenue" -> (q06 _),
-    "q07_semi_join_urgent" -> (q07 _),
-    "q08_anti_join_no_orders" -> (q08 _),
-    "q09_outer_join_late" -> (q09 _),
-    "q10_window_topk" -> (q10 _),
-    "q11_running_total" -> (q11 _),
-    "q12_lag_gaps" -> (q12 _),
-    "q13_rollup" -> (q13 _),
-    "q14_cube" -> (q14 _),
-    "q15_grouping_sets" -> (q15 _),
-    "q16_set_ops" -> (q16 _),
-    "q17_count_distinct" -> (q17 _),
-    "q18_topn_orders" -> (q18 _),
-    "q19_string_funcs" -> (q19 _),
-    "q20_date_funcs" -> (q20 _),
-    "q21_json_props" -> (q21 _),
-    "q22_event_windows" -> (q22 _),
-    "q23_sessionization" -> (q23 _),
-    "q24_regr_builtin" -> (q24 _),
-    "q25_ols_aggregator" -> (q25 _),
-    "q26_ols_meta" -> (q26 _),
-    "q27_iterative_ema" -> (q27 _),
-    "q28_asof_join" -> (q28 _),
-    "q29_range_join_followups" -> (q29 _),
-    "q45_approx_distinct" -> (q45 _),
-    "q46_window_suite" -> (q46 _),
-    "q48_percentiles" -> (q48 _),
-    "q49_stat_moments" -> (q49 _),
-    "q50_interval_overlap" -> (q50 _),
-    "q51_array_agg" -> (q51 _),
-    "q54_right_outer" -> (q54 _),
-    "q55_full_outer" -> (q55 _),
-    "q56_json_typed" -> (q56 _),
-    "q57_pair_ingest" -> (q57 _),
-    "q58_session_windows" -> (q58 _),
-    "q61_pivot" -> (q61 _),
-    "q62_correlated_subquery" -> (q62 _),
-    "q63_unpivot" -> (q63 _),
-    "q64_json_source" -> (q64 _),
-    "q143_csv_source" -> (q143 _),
-    "q144_orc_source" -> (q144 _),
-    "q148_avro_source" -> (q148 _),
-    "q149_merge_upsert" -> (q149 _),
-    "q150_scd2" -> (q150 _),
-    "q227_point_in_time" -> (q227 _),
-    "q151_compaction" -> (q151 _),
-    "q242_sized_writes" -> (q242 _),
-    "q153_schema_evolution" -> (q153 _),
-    "q154_range_lookup" -> (q154 _),
-    "q159_incremental_agg" -> (q159 _),
-    "q145_sql_text" -> (q145 _),
-    "q65_pairs_dsv2" -> (q65 _),
-    "q66_approx_percentile" -> (q66 _),
-    "q67_cogroup" -> (q67 _),
-    "q68_data_quality" -> (q68 _))
-
-  val oracles: Map[String, String] = Map(
-    "q45_approx_distinct" -> q45Sql,
-    "q143_csv_source" -> q143Sql,
-    "q144_orc_source" -> q144Sql,
-    "q148_avro_source" -> q148Sql,
-    "q149_merge_upsert" -> q149Sql,
-    "q150_scd2" -> q150Sql,
-    "q227_point_in_time" -> q227Sql,
-    "q151_compaction" -> q151Sql,
-    "q242_sized_writes" -> q242Sql,
-    "q153_schema_evolution" -> q153Sql,
-    "q154_range_lookup" -> q154Sql,
-    "q159_incremental_agg" -> q159Sql,
-    "q145_sql_text" -> q145Sql,
-    "q82_salted_join" -> q82Sql,
-    "q83_ols_multi" -> q83Sql,
-    "q85_range_frame" -> q85Sql,
-    "q01_pricing_summary" -> q01Sql,
-    "q02_filter_project" -> q02Sql,
-    "q03_top_revenue_orders" -> q03Sql,
-    "q04_semi_join_priority" -> q04Sql,
-    "q05_star_join_revenue" -> q05Sql,
-    "q06_forecast_revenue" -> q06Sql,
-    "q07_semi_join_urgent" -> q07Sql,
-    "q08_anti_join_no_orders" -> q08Sql,
-    "q09_outer_join_late" -> q09Sql,
-    "q10_window_topk" -> q10Sql,
-    "q11_running_total" -> q11Sql,
-    "q12_lag_gaps" -> q12Sql,
-    "q13_rollup" -> q13Sql,
-    "q14_cube" -> q14Sql,
-    "q15_grouping_sets" -> q15Sql,
-    "q16_set_ops" -> q16Sql,
-    "q17_count_distinct" -> q17Sql,
-    "q18_topn_orders" -> q18Sql,
-    "q19_string_funcs" -> q19Sql,
-    "q20_date_funcs" -> q20Sql,
-    "q21_json_props" -> q21Sql,
-    "q22_event_windows" -> q22Sql,
-    "q23_sessionization" -> q23Sql,
-    "q24_regr_builtin" -> q24Sql,
-    "q25_ols_aggregator" -> q25Sql,
-    "q26_ols_meta" -> q26Sql,
-    "q27_iterative_ema" -> q27Sql,
-    "q28_asof_join" -> q28Sql,
-    "q29_range_join_followups" -> q29Sql,
-    "q46_window_suite" -> q46Sql,
-    "q48_percentiles" -> q48Sql,
-    "q49_stat_moments" -> q49Sql,
-    "q50_interval_overlap" -> q50Sql,
-    "q51_array_agg" -> q51Sql,
-    "q54_right_outer" -> q54Sql,
-    "q55_full_outer" -> q55Sql,
-    "q56_json_typed" -> q56Sql,
-    "q57_pair_ingest" -> q57Sql,
-    "q58_session_windows" -> q58Sql,
-    "q61_pivot" -> q61Sql,
-    "q62_correlated_subquery" -> q62Sql,
-    "q63_unpivot" -> q63Sql,
-    "q64_json_source" -> q64Sql,
-    "q65_pairs_dsv2" -> q65Sql,
-    "q66_approx_percentile" -> q66Sql,
-    "q67_cogroup" -> q67Sql,
-    "q68_data_quality" -> q68Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q82_salted_join", q82, q82Sql),
+    Query("q83_ols_multi", q83, q83Sql),
+    Query("q85_range_frame", q85, q85Sql),
+    Query("q01_pricing_summary", q01, q01Sql),
+    Query("q02_filter_project", q02, q02Sql),
+    Query("q03_top_revenue_orders", q03, q03Sql),
+    Query("q04_semi_join_priority", q04, q04Sql),
+    Query("q05_star_join_revenue", q05, q05Sql),
+    Query("q06_forecast_revenue", q06, q06Sql),
+    Query("q07_semi_join_urgent", q07, q07Sql),
+    Query("q08_anti_join_no_orders", q08, q08Sql),
+    Query("q09_outer_join_late", q09, q09Sql),
+    Query("q10_window_topk", q10, q10Sql),
+    Query("q11_running_total", q11, q11Sql),
+    Query("q12_lag_gaps", q12, q12Sql),
+    Query("q13_rollup", q13, q13Sql),
+    Query("q14_cube", q14, q14Sql),
+    Query("q15_grouping_sets", q15, q15Sql),
+    Query("q16_set_ops", q16, q16Sql),
+    Query("q17_count_distinct", q17, q17Sql),
+    Query("q18_topn_orders", q18, q18Sql),
+    Query("q19_string_funcs", q19, q19Sql),
+    Query("q20_date_funcs", q20, q20Sql),
+    Query("q21_json_props", q21, q21Sql),
+    Query("q22_event_windows", q22, q22Sql),
+    Query("q23_sessionization", q23, q23Sql),
+    Query("q24_regr_builtin", q24, q24Sql),
+    Query("q25_ols_aggregator", q25, q25Sql),
+    Query("q26_ols_meta", q26, q26Sql),
+    Query("q27_iterative_ema", q27, q27Sql),
+    Query("q28_asof_join", q28, q28Sql),
+    Query("q29_range_join_followups", q29, q29Sql),
+    Query("q45_approx_distinct", q45, q45Sql),
+    Query("q46_window_suite", q46, q46Sql),
+    Query("q48_percentiles", q48, q48Sql),
+    Query("q49_stat_moments", q49, q49Sql),
+    Query("q50_interval_overlap", q50, q50Sql),
+    Query("q51_array_agg", q51, q51Sql),
+    Query("q54_right_outer", q54, q54Sql),
+    Query("q55_full_outer", q55, q55Sql),
+    Query("q56_json_typed", q56, q56Sql),
+    Query("q57_pair_ingest", q57, q57Sql),
+    Query("q58_session_windows", q58, q58Sql),
+    Query("q61_pivot", q61, q61Sql),
+    Query("q62_correlated_subquery", q62, q62Sql),
+    Query("q63_unpivot", q63, q63Sql),
+    Query("q64_json_source", q64, q64Sql),
+    Query("q143_csv_source", q143, q143Sql),
+    Query("q144_orc_source", q144, q144Sql),
+    Query("q148_avro_source", q148, q148Sql),
+    Query("q149_merge_upsert", q149, q149Sql),
+    Query("q150_scd2", q150, q150Sql),
+    Query("q227_point_in_time", q227, q227Sql),
+    Query("q151_compaction", q151, q151Sql),
+    Query("q242_sized_writes", q242, q242Sql),
+    Query("q153_schema_evolution", q153, q153Sql),
+    Query("q154_range_lookup", q154, q154Sql),
+    Query("q159_incremental_agg", q159, q159Sql),
+    Query("q145_sql_text", q145, q145Sql),
+    Query("q65_pairs_dsv2", q65, q65Sql),
+    Query("q66_approx_percentile", q66, q66Sql),
+    Query("q67_cogroup", q67, q67Sql),
+    Query("q68_data_quality", q68, q68Sql))
 }

@@ -16,8 +16,6 @@ import graft.operators.{Bloom, Frequent, KMeans, Spans}
   * integer casts, unique-key ordering).
   */
 object Scale {
-  type Q = (SparkSession, String) => DataFrame
-
   // ---------------------------------------------------------------- q88
   /** Corpus-level exact span dedup ([[Spans.dropRepeatedSpans]]): the
     * corpus has no natural verbatim boilerplate, so the query
@@ -345,9 +343,9 @@ object Scale {
   /** One-pass covariance matrix of the embedding corpus
     * ([[Linalg.covariance]], the distributed moment computation under
     * PCA/whitening): all 2080 upper-triangle entries value-checked.
-    * The eigensolve on top of this matrix is driver-side O(d²) and
-    * spec-tested ([[graft.operators.Linalg.topEigen]]); the corpus
-    * never feeds anything bigger than these moments. */
+    * q271's integer power iteration is the eigensolve on top of this
+    * matrix, driver-side O(d²); the corpus never feeds anything bigger
+    * than these moments. */
   private def q93(s: SparkSession, d: String): DataFrame =
     // + 0.0 collapses signed zeros: a near-zero covariance entry
     // rounds to ±0.0 with a sign set by parallel partial-sum order
@@ -370,11 +368,10 @@ object Scale {
 
   // --------------------------------------------------------------- q271
   /** PCA top component, ORACLE-GRADED END TO END — q93 grades the
-    * covariance moments and [[graft.operators.Linalg.topEigen]] is
-    * spec-tested, but the eigensolve itself had no driver-checked row.
-    * This one does: 12 rounds of power iteration run ENTIRELY in
-    * integer arithmetic on the 1e-6-unit quantized covariance (the
-    * iterate lives on a 1e-12 grid, each round renormalizes by
+    * covariance moments ([[Linalg.covariance]]) and this query grades
+    * the engine's eigensolve: 12 rounds of power iteration run
+    * ENTIRELY in integer arithmetic on the 1e-6-unit quantized
+    * covariance (the iterate lives on a 1e-12 grid, each round renormalizes by
     * max|w| with integer round-half-up `(2·|w|·10¹² + mw) DIV (2·mw)`
     * times the sign — floor-vs-truncate division never sees a
     * negative), so the DuckDB oracle can UNROLL the identical 12
@@ -547,31 +544,17 @@ object Scale {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q88_span_dedup" -> (q88 _),
-    "q89_heavy_hitters" -> (q89 _),
-    "q90_kmeans" -> (q90 _),
-    "q156_pq_codebook" -> (q156 _),
-    "q157_pq_adc" -> (q157 _),
-    "q91_bloom_decontam" -> (q91 _),
-    "q92_pagerank" -> (q92 _),
-    "q93_embedding_cov" -> (q93 _),
-    "q271_pca_power" -> (q271 _),
-    "q94_topk_agg" -> (q94 _),
-    "q95_winsorize" -> (q95 _),
-    "q96_embedding_clusters" -> (q96 _))
-
-  val oracles: Map[String, String] = Map(
-    "q88_span_dedup" -> q88Sql,
-    "q89_heavy_hitters" -> q89Sql,
-    "q90_kmeans" -> q90Sql,
-    "q156_pq_codebook" -> q156Sql,
-    "q157_pq_adc" -> q157Sql,
-    "q91_bloom_decontam" -> q91Sql,
-    "q92_pagerank" -> q92Sql,
-    "q93_embedding_cov" -> q93Sql,
-    "q271_pca_power" -> q271Sql,
-    "q94_topk_agg" -> q94Sql,
-    "q95_winsorize" -> q95Sql,
-    "q96_embedding_clusters" -> q96Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q88_span_dedup", q88, q88Sql),
+    Query("q89_heavy_hitters", q89, q89Sql),
+    Query("q90_kmeans", q90, q90Sql),
+    Query("q156_pq_codebook", q156, q156Sql),
+    Query("q157_pq_adc", q157, q157Sql),
+    Query("q91_bloom_decontam", q91, q91Sql),
+    Query("q92_pagerank", q92, q92Sql),
+    Query("q93_embedding_cov", q93, q93Sql),
+    Query("q271_pca_power", q271, q271Sql),
+    Query("q94_topk_agg", q94, q94Sql),
+    Query("q95_winsorize", q95, q95Sql),
+    Query("q96_embedding_clusters", q96, q96Sql))
 }

@@ -18,8 +18,6 @@ import graft.operators.{Sampling, Series}
   * integer-exact graded sums, total-order ranks.
   */
 object Signals {
-  type Q = (SparkSession, String) => DataFrame
-
   // --------------------------------------------------------------- q181
   /** Holt-Winters by decomposition ([[Series.holtWintersDaily]]):
     * per-type DAILY volumes split into a closed-form day-of-week
@@ -1795,57 +1793,30 @@ object Signals {
 
   // ----------------------------------------------------------------
 
-  val queries: Map[String, Q] = Map(
-    "q181_holt_winters" -> (q181 _),
-    "q182_woe_iv" -> (q182 _),
-    "q183_fk_audit" -> (q183 _),
-    "q184_matryoshka" -> (q184 _),
-    "q185_bucketed_join" -> (q185 _),
-    "q186_parquet_roundtrip" -> (q186 _),
-    "q187_debounce" -> (q187 _),
-    "q188_growth_accounting" -> (q188 _),
-    "q189_revenue_concentration" -> (q189 _),
-    "q191_decayed_popularity" -> (q191 _),
-    "q192_target_encoding" -> (q192 _),
-    "q193_k_anonymity" -> (q193 _),
-    "q194_corr_matrix" -> (q194 _),
-    "q195_conversion_latency" -> (q195 _),
-    "q196_kcenter_coreset" -> (q196 _),
-    "q197_fanout_profile" -> (q197 _),
-    "q198_nearest_event" -> (q198 _),
-    "q199_linear_attribution" -> (q199 _),
-    "q200_e2e_curation" -> (q200 _),
-    "q201_cuped" -> (q201 _),
-    "q202_domain_census" -> (q202 _),
-    "q203_burst_detection" -> (q203 _),
-    "q204_stream_stream_join" -> (q204 _),
-    "q267_stream_static_join" -> (q267 _),
-    "q272_stream_outer_join" -> (q272 _))
-
-  val oracles: Map[String, String] = Map(
-    "q181_holt_winters" -> q181Sql,
-    "q182_woe_iv" -> q182Sql,
-    "q183_fk_audit" -> q183Sql,
-    "q184_matryoshka" -> q184Sql,
-    "q185_bucketed_join" -> q185Sql,
-    "q186_parquet_roundtrip" -> q186Sql,
-    "q187_debounce" -> q187Sql,
-    "q188_growth_accounting" -> q188Sql,
-    "q189_revenue_concentration" -> q189Sql,
-    "q191_decayed_popularity" -> q191Sql,
-    "q192_target_encoding" -> q192Sql,
-    "q193_k_anonymity" -> q193Sql,
-    "q194_corr_matrix" -> q194Sql,
-    "q195_conversion_latency" -> q195Sql,
-    "q196_kcenter_coreset" -> q196Sql,
-    "q197_fanout_profile" -> q197Sql,
-    "q198_nearest_event" -> q198Sql,
-    "q199_linear_attribution" -> q199Sql,
-    "q200_e2e_curation" -> q200Sql,
-    "q201_cuped" -> q201Sql,
-    "q202_domain_census" -> q202Sql,
-    "q203_burst_detection" -> q203Sql,
-    "q204_stream_stream_join" -> q204Sql,
-    "q267_stream_static_join" -> q267Sql,
-    "q272_stream_outer_join" -> q272Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q181_holt_winters", q181, q181Sql),
+    Query("q182_woe_iv", q182, q182Sql),
+    Query("q183_fk_audit", q183, q183Sql),
+    Query("q184_matryoshka", q184, q184Sql),
+    Query("q185_bucketed_join", q185, q185Sql),
+    Query("q186_parquet_roundtrip", q186, q186Sql),
+    Query("q187_debounce", q187, q187Sql),
+    Query("q188_growth_accounting", q188, q188Sql),
+    Query("q189_revenue_concentration", q189, q189Sql),
+    Query("q191_decayed_popularity", q191, q191Sql),
+    Query("q192_target_encoding", q192, q192Sql),
+    Query("q193_k_anonymity", q193, q193Sql),
+    Query("q194_corr_matrix", q194, q194Sql),
+    Query("q195_conversion_latency", q195, q195Sql),
+    Query("q196_kcenter_coreset", q196, q196Sql),
+    Query("q197_fanout_profile", q197, q197Sql),
+    Query("q198_nearest_event", q198, q198Sql),
+    Query("q199_linear_attribution", q199, q199Sql),
+    Query("q200_e2e_curation", q200, q200Sql),
+    Query("q201_cuped", q201, q201Sql),
+    Query("q202_domain_census", q202, q202Sql),
+    Query("q203_burst_detection", q203, q203Sql),
+    Query("q204_stream_stream_join", q204, q204Sql),
+    Query("q267_stream_static_join", q267, q267Sql),
+    Query("q272_stream_outer_join", q272, q272Sql))
 }

@@ -28,8 +28,6 @@ import graft.Tables
   * in one scan before any window or self-join runs.
   */
 object Studies {
-  type Q = (SparkSession, String) => DataFrame
-
   /** Floor a divisor away from zero INSIDE the division; mirrored as
     * `greatest(x, 1e-12)` on the oracle side. */
   private def safe(c: Column): Column = greatest(c, lit(1e-12))
@@ -3349,75 +3347,39 @@ object Studies {
            AS sttr_25
        FROM per ORDER BY source"""
 
-  val queries: Map[String, Q] = Map(
-    "q316_kruskal_wallis" -> (q316 _),
-    "q317_friedman" -> (q317 _),
-    "q318_fleiss_kappa" -> (q318 _),
-    "q319_competing_risks" -> (q319 _),
-    "q320_meta_analysis" -> (q320 _),
-    "q321_naive_bayes" -> (q321 _),
-    "q322_distance_corr" -> (q322 _),
-    "q323_jackknife_ratio" -> (q323 _),
-    "q324_topic_coherence" -> (q324 _),
-    "q325_dirichlet_lm" -> (q325 _),
-    "q326_platt_scaling" -> (q326 _),
-    "q327_entropy_rate" -> (q327 _),
-    "q328_dunn_posthoc" -> (q328 _),
-    "q329_capture_recapture" -> (q329 _),
-    "q330_mcc_f1" -> (q330 _),
-    "q331_hill_tail" -> (q331 _),
-    "q332_propensity_overlap" -> (q332 _),
-    "q333_ngram_novelty" -> (q333 _),
-    "q334_embedding_js" -> (q334 _),
-    "q335_optimal_threshold" -> (q335 _),
-    "q336_sequential_patterns" -> (q336 _),
-    "q337_poisson_trend" -> (q337 _),
-    "q339_wilcoxon_signed_rank" -> (q339 _),
-    "q340_delong_auc" -> (q340 _),
-    "q341_c_index" -> (q341 _),
-    "q342_storey_qvalues" -> (q342 _),
-    "q343_mmd_linear" -> (q343 _),
-    "q344_gmm_em" -> (q344 _),
-    "q345_runs_test" -> (q345 _),
-    "q346_jarque_bera" -> (q346 _),
-    "q347_page_trend" -> (q347 _),
-    "q348_breusch_pagan" -> (q348 _),
-    "q349_source_diversity" -> (q349 _),
-    "q350_sttr" -> (q350 _))
-
-  val oracles: Map[String, String] = Map(
-    "q316_kruskal_wallis" -> q316Sql,
-    "q317_friedman" -> q317Sql,
-    "q318_fleiss_kappa" -> q318Sql,
-    "q319_competing_risks" -> q319Sql,
-    "q320_meta_analysis" -> q320Sql,
-    "q321_naive_bayes" -> q321Sql,
-    "q322_distance_corr" -> q322Sql,
-    "q323_jackknife_ratio" -> q323Sql,
-    "q324_topic_coherence" -> q324Sql,
-    "q325_dirichlet_lm" -> q325Sql,
-    "q326_platt_scaling" -> q326Sql,
-    "q327_entropy_rate" -> q327Sql,
-    "q328_dunn_posthoc" -> q328Sql,
-    "q329_capture_recapture" -> q329Sql,
-    "q330_mcc_f1" -> q330Sql,
-    "q331_hill_tail" -> q331Sql,
-    "q332_propensity_overlap" -> q332Sql,
-    "q333_ngram_novelty" -> q333Sql,
-    "q334_embedding_js" -> q334Sql,
-    "q335_optimal_threshold" -> q335Sql,
-    "q336_sequential_patterns" -> q336Sql,
-    "q337_poisson_trend" -> q337Sql,
-    "q339_wilcoxon_signed_rank" -> q339Sql,
-    "q340_delong_auc" -> q340Sql,
-    "q341_c_index" -> q341Sql,
-    "q342_storey_qvalues" -> q342Sql,
-    "q343_mmd_linear" -> q343Sql,
-    "q344_gmm_em" -> q344Sql,
-    "q345_runs_test" -> q345Sql,
-    "q346_jarque_bera" -> q346Sql,
-    "q347_page_trend" -> q347Sql,
-    "q348_breusch_pagan" -> q348Sql,
-    "q349_source_diversity" -> q349Sql,
-    "q350_sttr" -> q350Sql)
+  val entries: Seq[Query] = Seq(
+    Query("q316_kruskal_wallis", q316, q316Sql),
+    Query("q317_friedman", q317, q317Sql),
+    Query("q318_fleiss_kappa", q318, q318Sql),
+    Query("q319_competing_risks", q319, q319Sql),
+    Query("q320_meta_analysis", q320, q320Sql),
+    Query("q321_naive_bayes", q321, q321Sql),
+    Query("q322_distance_corr", q322, q322Sql),
+    Query("q323_jackknife_ratio", q323, q323Sql),
+    Query("q324_topic_coherence", q324, q324Sql),
+    Query("q325_dirichlet_lm", q325, q325Sql),
+    Query("q326_platt_scaling", q326, q326Sql),
+    Query("q327_entropy_rate", q327, q327Sql),
+    Query("q328_dunn_posthoc", q328, q328Sql),
+    Query("q329_capture_recapture", q329, q329Sql),
+    Query("q330_mcc_f1", q330, q330Sql),
+    Query("q331_hill_tail", q331, q331Sql),
+    Query("q332_propensity_overlap", q332, q332Sql),
+    Query("q333_ngram_novelty", q333, q333Sql),
+    Query("q334_embedding_js", q334, q334Sql),
+    Query("q335_optimal_threshold", q335, q335Sql),
+    Query("q336_sequential_patterns", q336, q336Sql),
+    Query("q337_poisson_trend", q337, q337Sql),
+    Query("q339_wilcoxon_signed_rank", q339, q339Sql),
+    Query("q340_delong_auc", q340, q340Sql),
+    Query("q341_c_index", q341, q341Sql),
+    Query("q342_storey_qvalues", q342, q342Sql),
+    Query("q343_mmd_linear", q343, q343Sql),
+    Query("q344_gmm_em", q344, q344Sql),
+    Query("q345_runs_test", q345, q345Sql),
+    Query("q346_jarque_bera", q346, q346Sql),
+    Query("q347_page_trend", q347, q347Sql),
+    Query("q348_breusch_pagan", q348, q348Sql),
+    Query("q349_source_diversity", q349, q349Sql),
+    Query("q350_sttr", q350, q350Sql))
 }

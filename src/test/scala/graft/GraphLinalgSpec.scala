@@ -110,14 +110,6 @@ class GraphLinalgSpec extends SparkSpec {
     assert(out((0, 0)) == exp && out((1, 1)) == exp && out((0, 1)) == exp)
   }
 
-  test("topEigen recovers the dominant eigenpair of a known matrix") {
-    val m = Array(Array(3.0, 0.0), Array(0.0, 1.0))
-    val (l, v) = Linalg.topEigen(m)
-    assert(math.abs(l - 3.0) < 1e-9)
-    assert(math.abs(math.abs(v(0)) - 1.0) < 1e-9 && math.abs(v(1)) < 1e-6)
-    assert(v(0) > 0) // sign convention: first nonzero component positive
-  }
-
   test("q271 integer power iteration recovers a known dominant axis exactly") {
     // cov = diag(2.5, 0.01, 0, 0): loading e0 = 1, the rest decay to
     // the 1e-12 grid's zero; lambda = 2.5, evr = 2.5/2.51
@@ -135,24 +127,6 @@ class GraphLinalgSpec extends SparkSpec {
     assert(rows(1)._1 == 0.0 && rows(2)._1 == 0.0 && rows(3)._1 == 0.0)
     assert(rows(0)._2 == 2.5, s"lambda ${rows(0)._2}")
     assert(rows(0)._3 == math.floor(2.5 / 2.51 * 1e6 + 0.5) / 1e6)
-  }
-
-  test("distributed moments + driver eigensolve = consistent PCA on real embeddings") {
-    val emb = Tables.embeddings(spark, "/root/testdata/sf0.001")
-    val cov = Linalg.collectCov(Linalg.covariance(emb, "embedding"), 64)
-    val (l, v) = Linalg.topEigen(cov)
-    assert(l > 0)
-    // eigen residual |Av - lv| small relative to lv
-    val av = cov.map(row => row.zip(v).map { case (a, b) => a * b }.sum)
-    val resid = math.sqrt(av.zip(v).map { case (a, b) =>
-      val dlt = a - l * b; dlt * dlt
-    }.sum)
-    assert(resid < 1e-6 * math.max(1.0, l), s"residual $resid vs lambda $l")
-    // the variance of the projected coordinate ≈ lambda (it IS the
-    // Rayleigh quotient of the same covariance, up to quantization)
-    val proj = Linalg.project(emb, "embedding", Seq(v))
-    val varr = proj.agg(var_pop(col("pc0"))).head().getDouble(0)
-    assert(math.abs(varr - l) < 0.01 * l, s"projected var $varr vs $l")
   }
 
   test("bfsHops: shortest distances on a chain with a shortcut") {

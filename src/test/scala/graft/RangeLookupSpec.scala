@@ -1,5 +1,6 @@
 package graft
 
+import org.apache.spark.sql.catalyst.expressions.ScalaUDF
 import org.apache.spark.sql.functions._
 import graft.operators.Exec
 import graft.plans.RangeLookup
@@ -136,6 +137,32 @@ class RangeLookupSpec extends SparkSpec {
         s"fact scan not pruned:\n$plan")
       assert(df.count() == 100)
     } finally Exec.deleteRecursively(path)
+  }
+
+  test("q154 runs the lookup UDF once per row; fact predicates reach the scan") {
+    val s = spark
+    import s.implicits._
+    val d = Exec.scratchTempDir("range-lookup-q154").toString
+    def udfs(df: org.apache.spark.sql.DataFrame): Int =
+      df.queryExecution.optimizedPlan
+        .flatMap(_.expressions.flatMap(_.collect { case u: ScalaUDF => u }))
+        .size
+    try {
+      Seq((1L, 10L, 20000.0), (2L, 11L, 75000.0), (3L, 10L, 400000.0))
+        .toDF("o_orderkey", "o_custkey", "o_totalprice")
+        .write.parquet(s"$d/orders.parquet")
+      val q154 = SparkEntry.queries("q154_range_lookup")(spark, d)
+      assert(udfs(q154) == 1, q154.queryExecution.optimizedPlan.toString)
+      assert(q154.collect().map(_.getString(0)).toSeq == Seq("s", "xl", "xs"))
+      val pushed = RangeLookup.rangeLookup(Tables.orders(spark, d), bands,
+          "o_totalprice", "lo", "hi")
+        .filter(col("o_custkey") > 10)
+      assert(udfs(pushed) == 1, pushed.queryExecution.optimizedPlan.toString)
+      val plan = pushed.queryExecution.executedPlan.toString
+      assert("PushedFilters: \\[[^\\]]*GreaterThan\\(o_custkey,10\\)".r
+          .findFirstIn(plan).isDefined,
+        s"fact predicate did not reach the scan:\n$plan")
+    } finally Exec.deleteRecursively(d)
   }
 
   test("integer value/bound columns cast cleanly") {

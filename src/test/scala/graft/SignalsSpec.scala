@@ -2,8 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.queries.Signals
-
 /** Unit-level checks for the round-7 signal operators, on hand-
   * computable inputs (the query-level DuckDB gate covers the corpus
   * path; these pin the kernels' semantics).
@@ -106,10 +104,5 @@ class SignalsSpec extends SparkSpec {
       spark, dir).collect()
       .map(r => (r.getLong(1), r.getLong(2), r.getLong(3), r.getLong(4)))
     assert(rows.toSeq == Seq((2L, 1L, 1L, 2L)), rows.toSeq.toString)
-  }
-
-  test("Signals query registry is consistent") {
-    assert(Signals.queries.keySet == Signals.oracles.keySet)
-    assert(Signals.queries.keys.forall(_.matches("q\\d{3}_[a-z0-9_]+")))
   }
 }

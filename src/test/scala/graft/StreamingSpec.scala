@@ -124,7 +124,7 @@ class StreamingSpec extends SparkSpec {
         "30 minutes")
       .groupBy("user_id")
       .agg(count(lit(1)).as("n_sessions"), sum("n_events").as("n_events"))
-    val q23 = queries.Relational.queries("q23_sessionization")(spark, d)
+    val q23 = SparkEntry.queries("q23_sessionization")(spark, d)
     val joined = perUser.as("a")
       .join(q23.as("b"), col("a.user_id") === col("b.user_id"))
     assert(joined.count() == q23.count())
